@@ -29,10 +29,11 @@ object Bench {
     // the stages in isolation
     "q_chain_grd")
 
-  private def session(cpus: Int): SparkSession = {
+  /** The benchmark session; BenchExtra uses it too, so its plans are the ones timed here. */
+  private[graft] def session(cpus: Int, appName: String): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
-      .appName(s"graft-bench-$cpus")
+      .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -152,7 +153,7 @@ object Bench {
     val doScaling = sys.env.getOrElse("SPARK_GRAFT_SCALING", "1") == "1"
     val doHeadline = sys.env.getOrElse("SPARK_GRAFT_HEADLINE", "1") == "1"
 
-    var spark = session(cpus)
+    var spark = session(cpus, s"graft-bench-$cpus")
     gen.Fixtures.ensure(spark, sfDir) // fixture generation excluded from timing
 
     val contentionBefore = contention()

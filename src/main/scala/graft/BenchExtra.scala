@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Optimization-round instrumentation main (guide §1: measure first; §1.4 noop
  * sink). NOT part of the frozen driver contract — Bench.scala is the graded
@@ -18,34 +16,13 @@ import org.apache.spark.sql.SparkSession
  *     times each named query (default: the Bench headline) with the noop sink —
  *     full evaluation of every column, no sink cost — and prints one JSON line
  *     {"name": [secs...]} per query.
- *
- * Session config matches Bench.session exactly so measured plans are the ones
- * the driver times.
  */
 object BenchExtra {
-
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-benchextra-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "131072")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/graft-tmp")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = session(cpus)
+    val spark = Bench.session(cpus, s"graft-benchextra-$cpus")
     gen.Fixtures.ensure(spark, sfDir)
     val mode = if (args.nonEmpty) args(0) else "explain"
 

@@ -1,1354 +1,436 @@
 package graft.exprs
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.{CreateArray, Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.graftshim.GraftColumn
 import org.apache.spark.sql.types._
 
 /**
- * Native Catalyst expressions for the hot tile kernels (SURVEY.md §7.3). Each one
- * codegens to a single static call into graft.exprs.Kernels — the expression stays
- * inside whole-stage codegen and the per-pixel loop is JIT-compiled scalar code,
- * replacing the round-1 interpreted higher-order-function path.
+ * Columns for the hot tile kernels (SURVEY.md §7.3). Each one is a Catalyst
+ * StaticInvoke of one graft.exprs.Kernels method: it codegens to a single static
+ * call, so the expression stays inside whole-stage codegen and the per-pixel loop
+ * is JIT-compiled scalar code (replacing the round-1 interpreted
+ * higher-order-function path); its interpreted eval calls the same method by
+ * reflection.
  */
-abstract class StaticKernelExpr extends Expression {
-
-  /** Java expression computing the result from the child value java expressions. */
-  protected def javaCall(args: Seq[String]): String
-
-  /** Interpreted twin of javaCall. */
-  protected def kernelEval(args: IndexedSeq[Any]): Any
-
-  override def nullable: Boolean = children.exists(_.nullable)
-
-  /** Expensive kernels opt out of optimizer duplication by reporting
-   * nondeterminism: Catalyst freely substitutes a Project's expressions into
-   * pushed-down filters and join conditions (and infers size()>0 filters below
-   * Generate), re-evaluating the kernel once per reference — measured as the
-   * zero-Doppler bisection running 3x inside a join condition in the
-   * terrain-correction plan, and blockMeans running twice in multilook's
-   * inferred pre-Generate filter. The kernels ARE pure (a retried task
-   * recomputes identical values), so the flag only pins single evaluation;
-   * it does not change results. */
-  protected def optimizerBarrier: Boolean = false
-  override lazy val deterministic: Boolean =
-    !optimizerBarrier && children.forall(_.deterministic)
-
-  override def eval(input: InternalRow): Any = {
-    val args = children.map(_.eval(input)).toIndexedSeq
-    if (args.contains(null)) null else kernelEval(args)
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val evs = children.map(_.genCode(ctx))
-    val childCode = evs.map(_.code.toString).mkString("\n")
-    val isNullExpr =
-      if (children.exists(_.nullable)) evs.map(_.isNull.toString).mkString(" || ")
-      else "false"
-    val javaType = CodeGenerator.javaType(dataType)
-    val call = javaCall(evs.map(_.value.toString))
-    ev.copy(code =
-      code"""
-         |$childCode
-         |boolean ${ev.isNull} = $isNullExpr;
-         |$javaType ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
-         |if (!${ev.isNull}) { ${ev.value} = ($javaType) $call; }
-       """.stripMargin)
-  }
-}
-
-/** Windowed speckle filter: halo (w+2m)x(h+2m) -> filtered w*h array. enl/damping are
- * expression children so a data-estimated per-tile ENL can drive the kernel
- * (SpeckleFilter.java:227-321 estimateENL mode). */
-case class SpeckleFilterExpr(halo: Expression, enl: Expression, damping: Expression,
-    mode: String, w: Int, h: Int, margin: Int) extends StaticKernelExpr {
-  private val m = Kernels.modeId(mode)
-  override def children: Seq[Expression] = Seq(halo, enl, damping)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.speckle(${args(0)}, $m, $w, $h, $margin, ${args(1)}, ${args(2)})"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.speckle(args(0).asInstanceOf[ArrayData], m, w, h, margin,
-      args(1).asInstanceOf[Double], args(2).asInstanceOf[Double])
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(halo = c(0), enl = c(1), damping = c(2))
-}
-
-/** MuLoG ADMM filter over a clipped halo buffer (Kernels.mulogTile). */
-case class MulogExpr(halo: Expression, tileX: Expression, tileY: Expression,
-    w: Int, h: Int, margin: Int, tilesX: Int, tilesY: Int,
-    enl: Double, rho: Double, iters: Int, searchR: Int, patchR: Int, nlmH: Double)
-    extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(halo, tileX, tileY)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.mulogTile(${args(0)}, $w, $h, $margin, ${args(1)}, ${args(2)}, " +
-      s"$tilesX, $tilesY, $enl, $rho, $iters, $searchR, $patchR, $nlmH)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.mulogTile(args(0).asInstanceOf[ArrayData], w, h, margin,
-      args(1).asInstanceOf[Int], args(2).asInstanceOf[Int], tilesX, tilesY,
-      enl, rho, iters, searchR, patchR, nlmH)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(halo = c(0), tileX = c(1), tileY = c(2))
-}
-
-/** Window moment struct-of-arrays (n, s1, s2, cp) from a halo. */
-case class WindowMomentsExpr(halo: Expression, w: Int, h: Int, haloM: Int, winR: Int)
-    extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(halo)
-  override def dataType: DataType = WindowMomentsExpr.schema
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.windowMoments(${args.head}, $w, $h, $haloM, $winR)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.windowMoments(args(0).asInstanceOf[ArrayData], w, h, haloM, winR)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(halo = c(0))
-}
-object WindowMomentsExpr {
-  val schema: StructType = StructType(Seq("n", "s1", "s2", "cp").map(f =>
-    StructField(f, ArrayType(DoubleType, containsNull = false), nullable = false)))
-}
-
-/** Neighbor-strip slice for the halo exchange: only the margin-wide band a neighbor
- * actually contributes is shuffled (role 4 = the full tile itself). */
-case class HaloStripExpr(arr: Expression, role: Expression, w: Int, h: Int, m: Int)
-    extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(arr, role)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.haloStrip(${args(0)}, ${args(1)}, $w, $h, $m)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.haloStrip(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[Int], w, h, m)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(arr = c(0), role = c(1))
-}
-
-/** Halo assembly from collected neighbor strips (one compiled copy pass). */
-case class HaloAssembleExpr(contribs: Expression, w: Int, h: Int, m: Int)
-    extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(contribs)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.haloAssemble(${args.head}, $w, $h, $m)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.haloAssemble(args(0).asInstanceOf[ArrayData], w, h, m)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(contribs = c(0))
-}
-
-/** Windowed dual-pol C2 product (m-delta / DpRVI / anisotropy / entropy). */
-case class C2WindowExpr(c11: Expression, c22: Expression, c12r: Expression,
-    c12i: Expression, w: Int, h: Int, m: Int, mode: Int) extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(c11, c22, c12r, c12i)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.c2Window(${args.mkString(", ")}, $w, $h, $m, $mode)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.c2Window(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      args(2).asInstanceOf[ArrayData], args(3).asInstanceOf[ArrayData], w, h, m, mode)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c11 = c(0), c22 = c(1), c12r = c(2), c12i = c(3))
-}
-
-/** Per-tile dark-pixel count (oil-spill detection). */
-case class DarkCountExpr(halo: Expression, w: Int, h: Int, m: Int, k: Double)
-    extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(halo)
-  override def dataType: DataType = LongType
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.darkCount(${args.head}, $w, $h, $m, ${k}D)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.darkCount(args(0).asInstanceOf[ArrayData], w, h, m, k)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(halo = c(0))
-}
-
-/** Per-tile multilook block sums (array<struct<n:long, s:double>>, row-major blocks). */
-case class BlockMeansExpr(v: Expression, w: Int, h: Int, looks: Int)
-    extends StaticKernelExpr {
-  override protected def optimizerBarrier: Boolean = true
-  override def children: Seq[Expression] = Seq(v)
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("s", DoubleType, nullable = false))), containsNull = false)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.blockMeans(${args.head}, $w, $h, $looks)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.blockMeans(args(0).asInstanceOf[ArrayData], w, h, looks)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(v = c(0))
-}
-
-/** Chain-multilook block statistics: per-pixel quantize-to-long then block sum,
- * one compiled pass referencing the (possibly deeply chained) input array
- * exactly once (array<struct<n:long, s:long>>). */
-case class BlockStatsQExpr(v: Expression, w: Int, h: Int, looks: Int, q: Double)
-    extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(v)
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("s", LongType, nullable = false))), containsNull = false)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.blockStatsQ(${args.head}, $w, $h, $looks, ${q}D)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.blockStatsQ(args(0).asInstanceOf[ArrayData], w, h, looks, q)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(v = c(0))
-}
-
-/** Per-tile mosaic partial aggregation (array<struct<cell_x,cell_y,n_px,sum_q>>). */
-case class MosaicCellsExpr(v: Expression, tileX: Expression, tileY: Expression,
-    lon1: Expression, lat1: Expression, lon2: Expression, lon4: Expression,
-    lat4: Expression, lon0: Expression, lat0: Expression,
-    w: Int, h: Int, samplesPerBurst: Int, linesPerBurst: Int, cell: Double)
-    extends StaticKernelExpr {
-  override def children: Seq[Expression] =
-    Seq(v, tileX, tileY, lon1, lat1, lon2, lon4, lat4, lon0, lat0)
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("cell_x", IntegerType, nullable = false),
-    StructField("cell_y", IntegerType, nullable = false),
-    StructField("n_px", LongType, nullable = false),
-    StructField("sum_q", LongType, nullable = false))), containsNull = false)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.mosaicCells(${args.mkString(", ")}, $w, $h, $samplesPerBurst, $linesPerBurst, ${cell}D)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.mosaicCells(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[Int],
-      args(2).asInstanceOf[Int], args(3).asInstanceOf[Double], args(4).asInstanceOf[Double],
-      args(5).asInstanceOf[Double], args(6).asInstanceOf[Double], args(7).asInstanceOf[Double],
-      args(8).asInstanceOf[Double], args(9).asInstanceOf[Double],
-      w, h, samplesPerBurst, linesPerBurst, cell)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(v = c(0), tileX = c(1), tileY = c(2), lon1 = c(3), lat1 = c(4), lon2 = c(5),
-      lon4 = c(6), lat4 = c(7), lon0 = c(8), lat0 = c(9))
-}
-
-/** RPCA change detection per tile: (n, count |S_e| > tau per epoch). */
-case class RpcaExpr(chs: Seq[Expression], tau: Double) extends StaticKernelExpr {
-  override def children: Seq[Expression] = chs
-  override def dataType: DataType = StructType(
-    StructField("n", LongType, nullable = false) +:
-      chs.indices.map(e => StructField(s"c$e", LongType, nullable = false)))
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.rpcaTile(new org.apache.spark.sql.catalyst.util.ArrayData[] {${args.mkString(", ")}}, ${tau}D)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.rpcaTile(args.map(_.asInstanceOf[ArrayData]).toArray, tau)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(chs = c)
-}
-
-/** Sparse above-threshold pixel indices of one tile. */
-/** CMOD5 wind-speed grid-search inversion per tile (tile-mean NRCS). */
-case class Cmod5Expr(v: Expression, theta: Expression, cosFi: Expression)
-    extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(v, theta, cosFi)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("idx", LongType, nullable = false)))
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.cmod5Tile(${args.mkString(", ")})"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.cmod5Tile(args(0).asInstanceOf[ArrayData],
-      args(1).asInstanceOf[Double], args(2).asInstanceOf[Double])
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(v = c(0), theta = c(1), cosFi = c(2))
-}
-
-/** Dark-pixel indices of a tile (center below k * window mean, margin-m halo). */
-case class DarkKsExpr(halo: Expression, w: Int, h: Int, m: Int, k: Double)
-    extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(halo)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.darkKs(${args.head}, $w, $h, $m, ${k}D)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.darkKs(args(0).asInstanceOf[ArrayData], w, h, m, k)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(halo = c(0))
-}
-
-case class AboveThrExpr(v: Expression, thr: Double) extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(v)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.aboveThr(${args.head}, ${thr}D)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.aboveThr(args(0).asInstanceOf[ArrayData], thr)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(v = c(0))
-}
-
-/** Per-tile per-row first/last above-threshold column (GRD border-noise scan). */
-case class RowScanExpr(v: Expression, w: Int, h: Int, thr: Double) extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(v)
-  override def dataType: DataType = StructType(Seq(
-    StructField("firsts", ArrayType(IntegerType, containsNull = false), nullable = false),
-    StructField("lasts", ArrayType(IntegerType, containsNull = false), nullable = false)))
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.rowScan(${args.head}, $w, $h, ${thr}D)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.rowScan(args(0).asInstanceOf[ArrayData], w, h, thr)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(v = c(0))
-}
-
-/** Phase Linking per tile: (n, sum_q of linked phases vs epoch 0). */
-case class PhaseLinkExpr(chs: Seq[Expression], w: Int, h: Int, m: Int)
-    extends StaticKernelExpr {
-  override def children: Seq[Expression] = chs
-  override def dataType: DataType = StructType(
-    StructField("n", LongType, nullable = false) +:
-      (1 until Kernels.PhaseLinkEpochs).map(e =>
-        StructField(s"ph${e}_q", LongType, nullable = false)))
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.phaseLinkTile(new org.apache.spark.sql.catalyst.util.ArrayData[] {${args.mkString(", ")}}, $w, $h, $m)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.phaseLinkTile(args.map(_.asInstanceOf[ArrayData]).toArray, w, h, m)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(chs = c)
-}
-
-/** Zero-Doppler bisection on a Lagrange-interpolated orbit: (t_zd, slant). */
-case class ZeroDopplerExpr(chs: Seq[Expression]) extends StaticKernelExpr {
-  override protected def optimizerBarrier: Boolean = true
-  override def children: Seq[Expression] = chs
-  override def dataType: DataType = StructType(Seq(
-    StructField("tzd", DoubleType, nullable = false),
-    StructField("slant", DoubleType, nullable = false)))
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.zeroDopplerBisect(${args.mkString(", ")})"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.zeroDopplerBisect(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      args(2).asInstanceOf[ArrayData], args(3).asInstanceOf[ArrayData],
-      args(4).asInstanceOf[ArrayData], args(5).asInstanceOf[ArrayData],
-      args(6).asInstanceOf[ArrayData], args(7).asInstanceOf[Double],
-      args(8).asInstanceOf[Double], args(9).asInstanceOf[Double])
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(chs = c)
-}
-
-/** Quad-pol per-tile T3 integer sums: (n, s11..s23i) from the 8 i/q channels. */
-case class T3SumsExpr(chs: Seq[Expression]) extends StaticKernelExpr {
-  override def children: Seq[Expression] = chs
-  override def dataType: DataType = StructType(
-    StructField("n", LongType, nullable = false) +:
-      Seq("s11", "s22", "s33", "s12r", "s12i", "s13r", "s13i", "s23r", "s23i")
-        .map(f => StructField(f, LongType, nullable = false)))
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.t3Sums(${args.mkString(", ")})"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.t3Sums(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      args(2).asInstanceOf[ArrayData], args(3).asInstanceOf[ArrayData],
-      args(4).asInstanceOf[ArrayData], args(5).asInstanceOf[ArrayData],
-      args(6).asInstanceOf[ArrayData], args(7).asInstanceOf[ArrayData])
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(chs = c)
-}
-
-/** Polarimetric Refined Lee: span-driven edge window applied to all 9 T3 channels. */
-case class PolRefinedLeeExpr(chs: Seq[Expression], w: Int, h: Int, m: Int, enl: Double)
-    extends StaticKernelExpr {
-  override def children: Seq[Expression] = chs
-  override def dataType: DataType = StructType(
-    StructField("n", LongType, nullable = false) +:
-      Seq("s11", "s22", "s33", "s12r", "s12i", "s13r", "s13i", "s23r", "s23i")
-        .map(f => StructField(f, LongType, nullable = false)))
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.polRefinedLee(${args.mkString(", ")}, $w, $h, $m, ${enl}D)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.polRefinedLee(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      args(2).asInstanceOf[ArrayData], args(3).asInstanceOf[ArrayData],
-      args(4).asInstanceOf[ArrayData], args(5).asInstanceOf[ArrayData],
-      args(6).asInstanceOf[ArrayData], args(7).asInstanceOf[ArrayData], w, h, m, enl)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(chs = c)
-}
-
-/** Quad-pol per-tile H-A-alpha rollup over margin-m windowed T3. */
-case class HAlphaExpr(chs: Seq[Expression], w: Int, h: Int, m: Int)
-    extends StaticKernelExpr {
-  override def children: Seq[Expression] = chs
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("h_q", LongType, nullable = false),
-    StructField("a_q", LongType, nullable = false),
-    StructField("al_q", LongType, nullable = false)))
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.hAlphaTile(${args.mkString(", ")}, $w, $h, $m)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.hAlphaTile(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      args(2).asInstanceOf[ArrayData], args(3).asInstanceOf[ArrayData],
-      args(4).asInstanceOf[ArrayData], args(5).asInstanceOf[ArrayData],
-      args(6).asInstanceOf[ArrayData], args(7).asInstanceOf[ArrayData], w, h, m)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(chs = c)
-}
-
-/** One Wishart pass per tile: 9 rows (zone, cnt, 9 quantized channel sums);
- * empty `centers` array = H-alpha seed mode, else argmin-distance assignment. */
-case class WishartExpr(chs: Seq[Expression], centers: Expression, w: Int, h: Int, m: Int)
-    extends StaticKernelExpr {
-  override def children: Seq[Expression] = chs :+ centers
-  override def dataType: DataType = ArrayType(StructType(
-    StructField("zone", IntegerType, nullable = false) +:
-      StructField("cnt", LongType, nullable = false) +:
-      Seq("s11", "s22", "s33", "s12r", "s12i", "s13r", "s13i", "s23r", "s23i")
-        .map(f => StructField(f, LongType, nullable = false))), containsNull = false)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.wishartTile(${args.mkString(", ")}, $w, $h, $m)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.wishartTile(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      args(2).asInstanceOf[ArrayData], args(3).asInstanceOf[ArrayData],
-      args(4).asInstanceOf[ArrayData], args(5).asInstanceOf[ArrayData],
-      args(6).asInstanceOf[ArrayData], args(7).asInstanceOf[ArrayData],
-      args(8).asInstanceOf[ArrayData], w, h, m)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(chs = c.init, centers = c.last)
-}
-
-/** Integer-exact rollup struct (n, s, mn, mx) of a filtered array (one compiled pass). */
-/** Compiled cosine over two FLOAT or DOUBLE embedding arrays (Kernels.cosine);
- * the per-child element type is resolved from the child's dataType so the SQL
- * CAST-to-double upcast is reproduced exactly. */
-case class CosineExpr(a: Expression, b: Expression) extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(a, b)
-  override def dataType: DataType = DoubleType
-  private def isFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case ArrayType(DoubleType, _) => false
-    case t => throw new IllegalArgumentException(s"cosine over $t")
-  }
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.cosine(${args(0)}, ${args(1)}, ${isFloat(a)}, ${isFloat(b)})"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.cosine(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      isFloat(a), isFloat(b))
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(a = c(0), b = c(1))
-}
-
-/** Compiled 3-word-shingle h60 hashes from a words array (Kernels.shingleH60). */
-case class ShingleH60Expr(ws: Expression) extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(ws)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.shingleH60(${args.head})"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.shingleH60(args(0).asInstanceOf[ArrayData])
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(ws = c(0))
-}
-
-/** Compiled per-pixel binary map (Kernels.pixelMap2): the hot zip_with lambdas
- * (calibration apply, noise subtraction, interferogram phase) as one static
- * call per tile — bit-identical to the interpreted HOF they replace
- * (KernelSpec pins the equality per mode). */
-case class PixelMap2Expr(a: Expression, b: Expression, mode: Int, p: Double)
-    extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(a, b)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.pixelMap2(${args(0)}, ${args(1)}, $mode, ${p}D)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.pixelMap2(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData], mode, p)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(a = c(0), b = c(1))
-}
-
-/** Compiled index-dependent per-pixel map (Kernels.pixelMapIdx): the lambda
- * reads the pixel's global range sample gx = tile_x*tw + k%tw (antenna-pattern
- * gain, incidence-angle calibrator classes, per-row noise floor). `p` is an
- * expression child so a per-row scalar (noise floor) or a parsed mission
- * constant can drive the same kernel. */
-case class PixelMapIdxExpr(v: Expression, tileX: Expression, p: Expression,
-    mode: Int, tw: Int, spb: Int) extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(v, tileX, p)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.pixelMapIdx(${args(0)}, ${args(1)}, ${args(2)}, $mode, $tw, $spb)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.pixelMapIdx(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[Int],
-      args(2).asInstanceOf[Double], mode, tw, spb)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(v = c(0), tileX = c(1), p = c(2))
-}
-
-/** Compiled wrapped phase-subtraction over an (a, b) channel pair
- * (Kernels.phaseSubPair): ph = atan2(b, a) (d-quantized first in EAP mode),
- * out = atan2(sin(ph - f), cos(ph - f)) with f the closed-form surface at the
- * pixel's global coordinates (topo surface / EAP elevation profile). */
-case class PhaseSubPairExpr(a: Expression, b: Expression, tileX: Expression,
-    tileY: Expression, mode: Int, d: Double, tw: Int, th: Int, spb: Int,
-    p1: Double = 0.0, p2: Double = 0.0)
-    extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(a, b, tileX, tileY)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.phaseSubPair(${args(0)}, ${args(1)}, ${args(2)}, ${args(3)}, $mode, ${d}D, $tw, $th, $spb, ${p1}D, ${p2}D)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.phaseSubPair(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      args(2).asInstanceOf[Int], args(3).asInstanceOf[Int], mode, d, tw, th, spb, p1, p2)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(a = c(0), b = c(1), tileX = c(2), tileY = c(3))
-}
-
-/** Chain TopoPhaseRemoval map over an already-computed wrapped-phase array —
- * unary so a deeply chained upstream `v` expression is referenced exactly once. */
-case class PhaseSubVExpr(v: Expression, tileX: Expression, tileY: Expression,
-    tw: Int, th: Int) extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(v, tileX, tileY)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.phaseSubV(${args(0)}, ${args(1)}, ${args(2)}, $tw, $th)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.phaseSubV(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[Int],
-      args(2).asInstanceOf[Int], tw, th)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(v = c(0), tileX = c(1), tileY = c(2))
-}
-
-/** S1-ETAD timing-correction map: gx + dR/DR (pure arithmetic — exact). */
-case class EtadMapExpr(v: Expression, lut: Expression, tileX: Expression,
-    dr: Double, tw: Int) extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(v, lut, tileX)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.etadMap(${args(0)}, ${args(1)}, ${args(2)}, ${dr}D, $tw)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.etadMap(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      args(2).asInstanceOf[Int], dr, tw)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(v = c(0), lut = c(1), tileX = c(2))
-}
-
-/** GRD azimuth thermal-noise lerp-subtract map (pure arithmetic — exact). */
-case class NoiseAzMapExpr(v: Expression, lutA: Expression, azlut: Expression,
-    burstIdx: Expression, tileY: Expression, lp: Int, tw: Int, th: Int)
-    extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(v, lutA, azlut, burstIdx, tileY)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.noiseAzMap(${args(0)}, ${args(1)}, ${args(2)}, ${args(3)}, ${args(4)}, $lp, $tw, $th)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.noiseAzMap(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      args(2).asInstanceOf[ArrayData], args(3).asInstanceOf[Int], args(4).asInstanceOf[Int],
-      lp, tw, th)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(v = c(0), lutA = c(1), azlut = c(2), burstIdx = c(3), tileY = c(4))
-}
-
-/** Chain Subset pixel-exact crop mask (pure comparisons — exact). */
-case class SubsetMaskExpr(v: Expression, tileX: Expression, tileY: Expression,
-    x0: Int, x1: Int, y0: Int, y1: Int, tw: Int, th: Int) extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(v, tileX, tileY)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.subsetMask(${args(0)}, ${args(1)}, ${args(2)}, $x0, $x1, $y0, $y1, $tw, $th)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.subsetMask(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[Int],
-      args(2).asInstanceOf[Int], x0, x1, y0, y1, tw, th)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(v = c(0), tileX = c(1), tileY = c(2))
-}
-
-/** Compiled dyadic intensity v = i^2+q^2 (Raster.intensityTiles' zip_with). */
-case class IntensityExpr(i: Expression, q: Expression, d: Double, dv: Double)
-    extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(i, q)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.intensity(${args(0)}, ${args(1)}, ${d}D, ${dv}D)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.intensity(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData], d, dv)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(i = c(0), q = c(1))
-}
-
-/** Compiled per-element dyadic snap x -> floor(x*d)/d. */
-case class QuantizeExpr(a: Expression, d: Double) extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(a)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.quantize(${args(0)}, ${d}D)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.quantize(args(0).asInstanceOf[ArrayData], d)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(a = c(0))
-}
-
-/** Two-moment rollup (n, s, s2, mn, mx) — Data-Analysis per-tile partials. */
-case class Rollup2QExpr(arr: Expression, q: Double) extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(arr)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("s", LongType, nullable = false),
-    StructField("s2", LongType, nullable = false),
-    StructField("mn", LongType, nullable = true),
-    StructField("mx", LongType, nullable = true)))
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.rollup2Q(${args.head}, ${q}D)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.rollup2Q(args(0).asInstanceOf[ArrayData], q)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(arr = c(0))
-}
-
-/** Quantized-sum fold over one or two pixel arrays (Kernels.sumQ modes). */
-case class SumQExpr(a: Expression, b: Expression, mode: Int, k: Double, q: Double)
-    extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(a, b)
-  override def dataType: DataType = LongType
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.sumQ(${args(0)}, ${args(1)}, $mode, ${k}D, ${q}D)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.sumQ(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData], mode, k, q)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(a = c(0), b = c(1))
-}
-
-case class RollupQExpr(arr: Expression, q: Double) extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(arr)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("s", LongType, nullable = false),
-    StructField("mn", LongType, nullable = true),
-    StructField("mx", LongType, nullable = true)))
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.rollupQ(${args.head}, ${q}D)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.rollupQ(args(0).asInstanceOf[ArrayData], q)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(arr = c(0))
-}
-
-/** Full split-spectrum ionospheric correction over one burst raster (coherence
- * threshold + separable weighted Gaussian + wrap(phiF - filtered)); per-tile
- * (n, iono_q, corr_q) sums (IonosphericCorrectionOp.java:289-480). */
-case class IonoSmoothExpr(cre: Expression, cim: Expression, tilesX: Int, tilesY: Int,
-    tileW: Int, tileH: Int, sigma: Int, thr: Double) extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(cre, cim)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", ArrayType(LongType, containsNull = false), nullable = false),
-    StructField("iono_q", ArrayType(LongType, containsNull = false), nullable = false),
-    StructField("corr_q", ArrayType(LongType, containsNull = false), nullable = false)))
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.ionoSmooth(${args(0)}, ${args(1)}, $tilesX, $tilesY, $tileW, $tileH, $sigma, ${thr}D)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.ionoSmooth(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      tilesX, tilesY, tileW, tileH, sigma, thr)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(cre = c(0), cim = c(1))
-}
-
-/** Full Goldstein block pipeline over one burst raster (75%-overlap 64x64 FFT
- * blocks, adaptive alpha, smoothed-magnitude^alpha, triangular accumulation);
- * per-tile (n, phase_q) sums (GoldsteinFilterOp.java:330-826). */
-case class GoldsteinFullExpr(cre: Expression, cim: Expression, tilesX: Int, tilesY: Int,
-    tileW: Int, tileH: Int, alphaMin: Double, alphaMax: Double, alphaDef: Double)
-    extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(cre, cim)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", ArrayType(LongType, containsNull = false), nullable = false),
-    StructField("ph_q", ArrayType(LongType, containsNull = false), nullable = false)))
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.goldsteinFull(${args(0)}, ${args(1)}, $tilesX, $tilesY, $tileW, $tileH, ${alphaMin}D, ${alphaMax}D, ${alphaDef}D)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.goldsteinFull(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      tilesX, tilesY, tileW, tileH, alphaMin, alphaMax, alphaDef)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(cre = c(0), cim = c(1))
-}
-
-/** jlinda const-fDC azimuth filter over one burst raster (inverse-Hamming
- * de-weight at fDC_m, new-Hamming re-weight at fDC_mean, per-column FFT);
- * per-tile (n, re_q, im_q) sums (AzimuthFilter.java:130-157). */
-case class AzFilterExpr(cre: Expression, cim: Expression, fdcM: Expression,
-    fdcS: Expression, prf: Expression, tilesX: Int, tilesY: Int, tileW: Int, tileH: Int,
-    abw: Double, alpha: Double) extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(cre, cim, fdcM, fdcS, prf)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", ArrayType(LongType, containsNull = false), nullable = false),
-    StructField("re_q", ArrayType(LongType, containsNull = false), nullable = false),
-    StructField("im_q", ArrayType(LongType, containsNull = false), nullable = false)))
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.azFilter(${args(0)}, ${args(1)}, $tilesX, $tilesY, $tileW, $tileH, ${args(2)}, ${args(3)}, ${args(4)}, ${abw}D, ${alpha}D)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.azFilter(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      tilesX, tilesY, tileW, tileH, args(2).asInstanceOf[Double], args(3).asInstanceOf[Double],
-      args(4).asInstanceOf[Double], abw, alpha)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(cre = c(0), cim = c(1), fdcM = c(2), fdcS = c(3), prf = c(4))
-}
-
-/** jlinda adaptive range filter over one burst raster pair (fringe shift from
- * the 15-row-mean interferometric spectrum peak, shifted/narrowed Hamming x
- * inverse Hamming per line, applied to the master rows); per-tile (n, re_q,
- * im_q) sums (RangeFilter.java:104-230). */
-case class RangeFilterExpr(mre: Expression, mim: Expression, xre: Expression,
-    xim: Expression, tilesX: Int, tilesY: Int, tileW: Int, tileH: Int)
-    extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(mre, mim, xre, xim)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", ArrayType(LongType, containsNull = false), nullable = false),
-    StructField("re_q", ArrayType(LongType, containsNull = false), nullable = false),
-    StructField("im_q", ArrayType(LongType, containsNull = false), nullable = false)))
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.rangeFilter(${args(0)}, ${args(1)}, ${args(2)}, ${args(3)}, $tilesX, $tilesY, $tileW, $tileH)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.rangeFilter(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      args(2).asInstanceOf[ArrayData], args(3).asInstanceOf[ArrayData], tilesX, tilesY, tileW, tileH)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(mre = c(0), mim = c(1), xre = c(2), xim = c(3))
-}
-
-/** 16-entry minhash signature from a doc's base-hash array (one compiled pass). */
-case class Minhash16Expr(hs: Expression) extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(hs)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.minhash16(${args.head})"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.minhash16(args(0).asInstanceOf[ArrayData])
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(hs = c(0))
-}
-
-/** Per-pixel bilinear LUT interpolation from bracketing calibration vectors. */
-case class LutInterpExpr(vecs: Expression, burstIdx: Expression, tileX: Expression,
-    tileY: Expression, w: Int, h: Int, linesPerBurst: Int) extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(vecs, burstIdx, tileX, tileY)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.lutInterp(${args(0)}, ${args(1)}, ${args(2)}, ${args(3)}, $w, $h, $linesPerBurst)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.lutInterp(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[Int],
-      args(2).asInstanceOf[Int], args(3).asInstanceOf[Int], w, h, linesPerBurst)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(vecs = c(0), burstIdx = c(1), tileX = c(2), tileY = c(3))
-}
-
-/** Complex cross products (cre, cim, p1, p2) of two complex tiles, one pass. */
-case class ComplexCrossExpr(i1: Expression, q1: Expression, i2: Expression, q2: Expression)
-    extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(i1, q1, i2, q2)
-  override def dataType: DataType = ComplexCrossExpr.schema
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.complexCross(${args.mkString(", ")})"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.complexCross(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      args(2).asInstanceOf[ArrayData], args(3).asInstanceOf[ArrayData])
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(i1 = c(0), q1 = c(1), i2 = c(2), q2 = c(3))
-}
-object ComplexCrossExpr {
-  val schema: StructType = StructType(Seq("cre", "cim", "p1", "p2").map(f =>
-    StructField(f, ArrayType(DoubleType, containsNull = false), nullable = false)))
-}
-
-/** Windowed coherence from 4 halo channels. */
-case class CoherenceExpr(cre: Expression, cim: Expression, p1: Expression, p2: Expression,
-    w: Int, h: Int, margin: Int) extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(cre, cim, p1, p2)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.coherence(${args.mkString(", ")}, $w, $h, $margin)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.coherence(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      args(2).asInstanceOf[ArrayData], args(3).asInstanceOf[ArrayData], w, h, margin)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(cre = c(0), cim = c(1), p1 = c(2), p2 = c(3))
-}
-
-/** Whole-tile CFAR: one static call -> struct(n_detect, max_t). */
-case class CfarExpr(halo: Expression, w: Int, h: Int, m: Int, g: Int, thr: Double)
-    extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(halo)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_detect", LongType, nullable = false),
-    StructField("max_t", DoubleType, nullable = true)))
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.cfar(${args.head}, $w, $h, $m, $g, ${thr}D)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.cfar(args(0).asInstanceOf[ArrayData], w, h, m, g, thr)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(halo = c(0))
-}
-
-/** Frequency-domain range oversampling x2. */
-case class OversampleExpr(arr: Expression, w: Int, h: Int) extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(arr)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.oversampleRange(${args.head}, $w, $h)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.oversampleRange(args(0).asInstanceOf[ArrayData], w, h)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(arr = c(0))
-}
-
-/** WSS deburst overlap-strip fold: flat (n, pk, pki, av) x ov rows. */
-case class WssOverlapExpr(va: Expression, ia: Expression, vb: Expression, ib: Expression,
-    tileX: Expression, w: Int, h: Int, ov: Int, margin: Int, wTotal: Int, q: Double)
-    extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(va, ia, vb, ib, tileX)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.wssOverlap(${args(0)}, ${args(1)}, ${args(2)}, ${args(3)}, ${args(4)}, $w, $h, $ov, $margin, $wTotal, ${q}D)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.wssOverlap(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      args(2).asInstanceOf[ArrayData], args(3).asInstanceOf[ArrayData],
-      args(4).asInstanceOf[Int], w, h, ov, margin, wTotal, q)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(va = c(0), ia = c(1), vb = c(2), ib = c(3), tileX = c(4))
-}
-
-/** WSS deburst pass-through fold: flat (n, pk, pki, av) x h rows. */
-case class WssPassExpr(v: Expression, id: Expression, tileX: Expression,
-    w: Int, h: Int, margin: Int, wTotal: Int, q: Double) extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(v, id, tileX)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.wssPass(${args(0)}, ${args(1)}, ${args(2)}, $w, $h, $margin, $wTotal, ${q}D)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.wssPass(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      args(2).asInstanceOf[Int], w, h, margin, wTotal, q)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(v = c(0), id = c(1), tileX = c(2))
-}
-
-/** Azimuth power spectrum of the deramped complex tile (per-column FFT). */
-case class AzSpectrumExpr(di: Expression, dq: Expression, w: Int, h: Int)
-    extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(di, dq)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.azSpectrum(${args(0)}, ${args(1)}, $w, $h)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.azSpectrum(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData], w, h)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(di = c(0), dq = c(1))
-}
-
-/** FFT-NCC tie-point match with iterative subpixel refinement. */
-case class FftXcorrExpr(refTiles: Expression, secTiles: Expression, cx: Expression,
-    cy: Expression, half: Int, searchR: Int, tw: Int, th: Int) extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(refTiles, secTiles, cx, cy)
-  override def dataType: DataType = StructType(Seq(
-    StructField("est_dx", DoubleType), StructField("est_dy", DoubleType),
-    StructField("peak_ncc", DoubleType)))
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.fftXcorrMatch(${args(0)}, ${args(1)}, ${args(2)}, ${args(3)}, $half, $searchR, $tw, $th)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.fftXcorrMatch(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      args(2).asInstanceOf[Int], args(3).asInstanceOf[Int], half, searchR, tw, th)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(refTiles = c(0), secTiles = c(1), cx = c(2), cy = c(3))
-}
-
-/** Integer SSD lattice match. */
-case class SsdMatchExpr(refTiles: Expression, secTiles: Expression, cx: Expression,
-    cy: Expression, half: Int, searchR: Int, tw: Int, th: Int) extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(refTiles, secTiles, cx, cy)
-  override def dataType: DataType = StructType(Seq(
-    StructField("est_dx", IntegerType), StructField("est_dy", IntegerType),
-    StructField("ssd_min", DoubleType)))
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.ssdMatch(${args(0)}, ${args(1)}, ${args(2)}, ${args(3)}, $half, $searchR, $tw, $th)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.ssdMatch(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      args(2).asInstanceOf[Int], args(3).asInstanceOf[Int], half, searchR, tw, th)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(refTiles = c(0), secTiles = c(1), cx = c(2), cy = c(3))
-}
-
-/** Aligned-stack per-tile diff against gathered covering secondary tiles. */
-case class AlignDiffExpr(refArr: Expression, secTiles: Expression, tileX: Expression,
-    tileY: Expression, sdx: Expression, sdy: Expression, tw: Int, th: Int)
-    extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(refArr, secTiles, tileX, tileY, sdx, sdy)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", LongType), StructField("max_abs", DoubleType)))
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.alignDiff(${args.mkString(", ")}, $tw, $th)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.alignDiff(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      args(2).asInstanceOf[Int], args(3).asInstanceOf[Int],
-      args(4).asInstanceOf[Int], args(5).asInstanceOf[Int], tw, th)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(refArr = c(0), secTiles = c(1), tileX = c(2), tileY = c(3), sdx = c(4), sdy = c(5))
-}
-
-/** Per-tile quantized-sum rollup of one scalar quad-pol alias (orientation angle,
- * Faraday rotation, Freeman-Durden, span/pedestal/RVI, cross-channel SNR). */
-case class QuadScalarExpr(chs: Seq[Expression], w: Int, h: Int, m: Int, mode: Int)
-    extends StaticKernelExpr {
-  override def children: Seq[Expression] = chs
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("s1", LongType, nullable = false),
-    StructField("s2", LongType, nullable = false),
-    StructField("s3", LongType, nullable = false)))
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.quadScalar(${args.mkString(", ")}, $w, $h, $m, $mode)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.quadScalar(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      args(2).asInstanceOf[ArrayData], args(3).asInstanceOf[ArrayData],
-      args(4).asInstanceOf[ArrayData], args(5).asInstanceOf[ArrayData],
-      args(6).asInstanceOf[ArrayData], args(7).asInstanceOf[ArrayData], w, h, m, mode)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(chs = c)
-}
-
-/** Per-tile integer-exact C2 sums of the simulated RCH compact-pol scattering vector. */
-case class CpC2SumsExpr(chs: Seq[Expression]) extends StaticKernelExpr {
-  override def children: Seq[Expression] = chs
-  override def dataType: DataType = StructType(
-    StructField("n", LongType, nullable = false) +:
-      Seq("s11", "s22", "s12r", "s12i").map(f => StructField(f, LongType, nullable = false)))
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.cpC2Sums(${args.mkString(", ")})"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.cpC2Sums(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      args(2).asInstanceOf[ArrayData], args(3).asInstanceOf[ArrayData],
-      args(4).asInstanceOf[ArrayData], args(5).asInstanceOf[ArrayData],
-      args(6).asInstanceOf[ArrayData], args(7).asInstanceOf[ArrayData])
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(chs = c)
-}
-
-/** PQ encode: argmin codeword id per subspace over the flattened codebook. */
-case class PqEncodeExpr(v: Expression, cb: Expression) extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(v, cb)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.pqEncode(${args(0)}, ${args(1)})"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.pqEncode(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData])
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(v = c(0), cb = c(1))
-}
-
-/** PQ ADC distance table dt[s*K + c] per query vector. */
-case class PqDistTableExpr(v: Expression, cb: Expression) extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(v, cb)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.pqDistTable(${args(0)}, ${args(1)})"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.pqDistTable(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData])
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(v = c(0), cb = c(1))
-}
-
-/** 5-point truncated-sinc range resample at per-row fractional shift d. */
-case class BisincRangeExpr(halo: Expression, d: Expression,
-    w: Int, h: Int, m: Int) extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(halo, d)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.bisincRange(${args(0)}, $w, $h, $m, ${args(1)})"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.bisincRange(args(0).asInstanceOf[ArrayData], w, h, m,
-      args(1).asInstanceOf[Double])
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(halo = c(0), d = c(1))
-}
-
-/** Nearest-neighbor polynomial warp gather over a margin-m halo (deskew / cross). */
-case class WarpGatherExpr(halo: Expression, tileX: Expression, tileY: Expression,
-    w: Int, h: Int, m: Int, coeffs: Seq[Double]) extends StaticKernelExpr {
-  require(coeffs.size == 6)
-  override def children: Seq[Expression] = Seq(halo, tileX, tileY)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.warpGather(${args(0)}, $w, $h, $m, ${args(1)}, ${args(2)}, " +
-      coeffs.map(c => s"${c}D").mkString(", ") + ")"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.warpGather(args(0).asInstanceOf[ArrayData], w, h, m,
-      args(1).asInstanceOf[Int], args(2).asInstanceOf[Int],
-      coeffs(0), coeffs(1), coeffs(2), coeffs(3), coeffs(4), coeffs(5))
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(halo = c(0), tileX = c(1), tileY = c(2))
-}
-
-/** IEM LUT nearest-neighbor inversion rollup per tile. */
-case class IemInvertExpr(s1: Expression, s2: Expression, theta: Expression,
-    lut: Expression) extends StaticKernelExpr {
-  override def children: Seq[Expression] = Seq(s1, s2, theta, lut)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("rms_q", LongType, nullable = false),
-    StructField("rdc_q", LongType, nullable = false)))
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.iemInvertTile(${args.mkString(", ")})"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.iemInvertTile(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      args(2).asInstanceOf[ArrayData], args(3).asInstanceOf[ArrayData])
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(s1 = c(0), s2 = c(1), theta = c(2), lut = c(3))
-}
-
-/** IEM Hybrid LUT inversion rollup: AM/PM sigma pairs + per-image theta. */
-case class IemHybridExpr(chs: Seq[Expression]) extends StaticKernelExpr {
-  require(chs.size == 7)
-  override def children: Seq[Expression] = chs
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("rms_q", LongType, nullable = false),
-    StructField("rdc_q", LongType, nullable = false)))
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.iemHybridTile(${args.mkString(", ")})"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.iemHybridTile(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      args(2).asInstanceOf[ArrayData], args(3).asInstanceOf[ArrayData],
-      args(4).asInstanceOf[ArrayData], args(5).asInstanceOf[ArrayData],
-      args(6).asInstanceOf[ArrayData])
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(chs = c)
-}
-
-/** Per-tile exact covariance sums for the Quegan polarimetric calibration solve. */
-case class PolCalCovExpr(chs: Seq[Expression]) extends StaticKernelExpr {
-  require(chs.size == 8)
-  override def children: Seq[Expression] = chs
-  override def dataType: DataType = StructType(
-    StructField("n", LongType, nullable = false) +:
-      Seq("c00", "c33", "c01r", "c01i", "c02r", "c02i", "c03r", "c03i",
-        "c13r", "c13i", "c23r", "c23i").map(f => StructField(f, DoubleType, nullable = false)))
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.polCalCovTile(${args.mkString(", ")})"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.polCalCovTile(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      args(2).asInstanceOf[ArrayData], args(3).asInstanceOf[ArrayData],
-      args(4).asInstanceOf[ArrayData], args(5).asInstanceOf[ArrayData],
-      args(6).asInstanceOf[ArrayData], args(7).asInstanceOf[ArrayData])
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(chs = c)
-}
-
-/** Quegan distortion-inverse apply: 8 channel arrays + 8 crosstalk-delta doubles. */
-case class PolCalApplyExpr(chs: Seq[Expression]) extends StaticKernelExpr {
-  require(chs.size == 16)
-  override def children: Seq[Expression] = chs
-  override def dataType: DataType = StructType(
-    StructField("n", LongType, nullable = false) +:
-      Seq("hhr", "hhi", "hvr", "hvi", "vhr", "vhi", "vvr", "vvi")
-        .map(f => StructField(s"s_$f", LongType, nullable = false)))
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.polCalApplyTile(${args.mkString(", ")})"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.polCalApplyTile(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      args(2).asInstanceOf[ArrayData], args(3).asInstanceOf[ArrayData],
-      args(4).asInstanceOf[ArrayData], args(5).asInstanceOf[ArrayData],
-      args(6).asInstanceOf[ArrayData], args(7).asInstanceOf[ArrayData],
-      args(8).asInstanceOf[Double], args(9).asInstanceOf[Double],
-      args(10).asInstanceOf[Double], args(11).asInstanceOf[Double],
-      args(12).asInstanceOf[Double], args(13).asInstanceOf[Double],
-      args(14).asInstanceOf[Double], args(15).asInstanceOf[Double])
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(chs = c)
-}
-
-/** Two-epoch polarimetric change statistic rollup: 16 halo channels (8 per epoch). */
-case class PolChangeExpr(chs: Seq[Expression], w: Int, h: Int, m: Int)
-    extends StaticKernelExpr {
-  require(chs.size == 16)
-  override def children: Seq[Expression] = chs
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("s_q", LongType, nullable = false)))
-  override protected def javaCall(args: Seq[String]): String = {
-    val a1 = args.take(8).mkString(", ")
-    val a2 = args.drop(8).mkString(", ")
-    s"graft.exprs.Kernels.polChangeTile(new org.apache.spark.sql.catalyst.util.ArrayData[]{$a1}, " +
-      s"new org.apache.spark.sql.catalyst.util.ArrayData[]{$a2}, $w, $h, $m)"
-  }
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.polChangeTile(args.take(8).map(_.asInstanceOf[ArrayData]).toArray,
-      args.drop(8).map(_.asInstanceOf[ArrayData]).toArray, w, h, m)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(chs = c)
-}
-
-/** Pass A of the dual-pol index family: per-pixel slope-masked |Stokes| arrays
- * over the margin-m windowed C2 (feeds the per-scene percentile stage). */
-case class DpStokesExpr(chs: Seq[Expression], w: Int, h: Int, m: Int)
-    extends StaticKernelExpr {
-  require(chs.size == 5)
-  override def children: Seq[Expression] = chs
-  override def dataType: DataType = StructType(
-    Seq("g1a", "g2a", "g3a", "g1s").map(f =>
-      StructField(f, ArrayType(DoubleType, containsNull = false), nullable = false)))
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.dpStokesTile(${args.mkString(", ")}, $w, $h, $m)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.dpStokesTile(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      args(2).asInstanceOf[ArrayData], args(3).asInstanceOf[ArrayData],
-      args(4).asInstanceOf[ArrayData], w, h, m)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(chs = c)
-}
-
-/** Pass B of the dual-pol index family: per-tile quantized rollup of
- * DPRBI/DPRSI/powers/factorization given the per-scene percentile stats. */
-case class DpIndexExpr(chs: Seq[Expression], w: Int, h: Int, m: Int, mode: Int)
-    extends StaticKernelExpr {
-  require(chs.size == 13) // 5 halo arrays + 8 stat doubles
-  override def children: Seq[Expression] = chs
-  override def dataType: DataType = StructType(
-    Seq("n", "s1", "s2", "s3", "s4").map(f => StructField(f, LongType, nullable = false)))
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.dpIndexTile(${args.mkString(", ")}, $w, $h, $m, $mode)"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.dpIndexTile(args(0).asInstanceOf[ArrayData], args(1).asInstanceOf[ArrayData],
-      args(2).asInstanceOf[ArrayData], args(3).asInstanceOf[ArrayData],
-      args(4).asInstanceOf[ArrayData],
-      args(5).asInstanceOf[Double], args(6).asInstanceOf[Double],
-      args(7).asInstanceOf[Double], args(8).asInstanceOf[Double],
-      args(9).asInstanceOf[Double], args(10).asInstanceOf[Double],
-      args(11).asInstanceOf[Double], args(12).asInstanceOf[Double], w, h, m, mode)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(chs = c)
-}
-
-/** Convex-quad x axis-aligned-rect Sutherland–Hodgman clip area (q_clip_area):
- * 12 double children (4 quad corners + rect bounds, pair-local fp lattice) →
- * quantized |2·area|·2^16 as LONG. */
-case class ClipAreaExpr(chs: Seq[Expression]) extends StaticKernelExpr {
-  override def children: Seq[Expression] = chs
-  override def dataType: DataType = LongType
-  override protected def javaCall(args: Seq[String]): String =
-    s"graft.exprs.Kernels.clipAreaQ(${args.mkString(", ")})"
-  override protected def kernelEval(args: IndexedSeq[Any]): Any =
-    Kernels.clipAreaQ(
-      args(0).asInstanceOf[Double], args(1).asInstanceOf[Double],
-      args(2).asInstanceOf[Double], args(3).asInstanceOf[Double],
-      args(4).asInstanceOf[Double], args(5).asInstanceOf[Double],
-      args(6).asInstanceOf[Double], args(7).asInstanceOf[Double],
-      args(8).asInstanceOf[Double], args(9).asInstanceOf[Double],
-      args(10).asInstanceOf[Double], args(11).asInstanceOf[Double])
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(chs = c)
-}
-
 object KernelExprs {
   import GraftColumn.{column => toCol, expression => toExpr}
 
-  def clipAreaQ(chs: Seq[Column]): Column = toCol(ClipAreaExpr(chs.map(toExpr)))
+  /**
+   * `Kernels.fn(args)`. Arguments follow the method's parameter order; constants
+   * (mode ids, tile sizes, thresholds) are literals.
+   *
+   * Null rule: any null argument gives a null result, and the result is nullable
+   * exactly when an argument is. For noiseAzMap this differs from the `transform`
+   * HOF it replaced: there a null argument made each pixel's term null, which
+   * `greatest(0D, ...)` turned into 0, so the HOF returned an array of 0 (and ND)
+   * values where the kernel returns null.
+   *
+   * barrier: expensive kernels opt out of optimizer duplication by reporting
+   * nondeterminism. Catalyst freely substitutes a Project's expressions into
+   * pushed-down filters and join conditions (and infers size()>0 filters below
+   * Generate), re-evaluating the kernel once per reference — measured as the
+   * zero-Doppler bisection running 3x inside a join condition in the
+   * terrain-correction plan, and blockMeans running twice in multilook's inferred
+   * pre-Generate filter. The kernels ARE pure (a retried task recomputes identical
+   * values), so the flag only pins single evaluation; it does not change results.
+   */
+  private def invoke(fn: String, dataType: DataType, args: Seq[Expression],
+      barrier: Boolean = false, returnNullable: Boolean = false): Expression =
+    StaticInvoke(Kernels.getClass, dataType, fn, args, propagateNull = true,
+      returnNullable = returnNullable, isDeterministic = !barrier)
 
-  def dpStokes(chs: Seq[Column], w: Int, h: Int, m: Int): Column =
-    toCol(DpStokesExpr(chs.map(toExpr), w, h, m))
+  /** invoke over Column arguments and Int/Double/Boolean constants. Pass constants
+   * one by one or in a Seq[Any]: a Seq(...) literal mixing Int and Double widens
+   * the Ints to Double, and the Kernels method is then not found at run time. */
+  private def kernel(fn: String, dataType: DataType, barrier: Boolean = false)(args: Any*): Column =
+    toCol(invoke(fn, dataType, args.map {
+      case c: Column => toExpr(c)
+      case v => Literal(v)
+    }, barrier))
 
-  def dpIndex(chs: Seq[Column], w: Int, h: Int, m: Int, mode: Int): Column =
-    toCol(DpIndexExpr(chs.map(toExpr), w, h, m, mode))
+  /**
+   * The one custom Expression left. A Column is built before analysis, so it
+   * cannot state a StaticInvoke whose arguments or nullability depend on resolved
+   * child types: cosine's float/double element flags (Ann.cosCol runs over both
+   * FLOAT and DOUBLE vectors, and the SQL CAST-to-double upcast must be reproduced
+   * per side), and the channel-stack kernels' nullability, which follows their
+   * channels'. Once the children resolve, the optimizer (ReplaceExpressions)
+   * swaps in `build(children)`, a plain StaticInvoke.
+   */
+  private[exprs] case class ResolvedKernel(children: Seq[Expression],
+      build: Seq[Expression] => Expression) extends Expression with RuntimeReplaceable {
+    override lazy val replacement: Expression = build(children)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
+      copy(children = c)
+  }
 
+  /** A kernel over a stack of channels passed as one array<array<double>>. The
+   * kernel returns null when a channel is null, so the result is nullable exactly
+   * when a channel is (the null rule above). */
+  private def channelKernel(fn: String, dataType: DataType)(chs: Seq[Column], consts: Any*): Column =
+    toCol(ResolvedKernel(chs.map(toExpr), cs =>
+      invoke(fn, dataType, CreateArray(cs) +: consts.map(Literal(_)),
+        returnNullable = cs.exists(_.nullable))))
+
+  private val Doubles = ArrayType(DoubleType, containsNull = false)
+  /** Per-pixel maps (their HOF twins produced nullable elements). */
+  private val Pixels = ArrayType(DoubleType, containsNull = true)
+  private val Longs = ArrayType(LongType, containsNull = false)
+  private val Ints = ArrayType(IntegerType, containsNull = false)
+  private val T3 = Seq("s11", "s22", "s33", "s12r", "s12i", "s13r", "s13i", "s23r", "s23i")
+  private def struct(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) })
+  private def longs(names: String*): StructType = struct(names.map(_ -> LongType): _*)
+  private def nullableStruct(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t) })
+
+  /** Convex-quad x axis-aligned-rect Sutherland–Hodgman clip area (q_clip_area):
+   * 12 doubles (4 quad corners + rect bounds, pair-local fp lattice) → quantized
+   * |2·area|·2^16. */
+  def clipAreaQ(chs: Seq[Column]): Column = kernel("clipAreaQ", LongType)(chs: _*)
+
+  /** Pass A of the dual-pol index family: per-pixel slope-masked |Stokes| arrays
+   * over the margin-m windowed C2 (feeds the per-scene percentile stage). */
+  def dpStokes(chs: Seq[Column], w: Int, h: Int, m: Int): Column = {
+    require(chs.size == 5)
+    kernel("dpStokesTile", struct(Seq("g1a", "g2a", "g3a", "g1s").map(_ -> Doubles): _*))(
+      chs ++ Seq(w, h, m): _*)
+  }
+
+  /** Pass B of the dual-pol index family: per-tile quantized rollup of
+   * DPRBI/DPRSI/powers/factorization given the per-scene percentile stats. */
+  def dpIndex(chs: Seq[Column], w: Int, h: Int, m: Int, mode: Int): Column = {
+    require(chs.size == 13) // 5 halo arrays + 8 stat doubles
+    kernel("dpIndexTile", longs("n", "s1", "s2", "s3", "s4"))(chs ++ Seq(w, h, m, mode): _*)
+  }
+
+  /** Per-tile quantized-sum rollup of one scalar quad-pol alias (orientation angle,
+   * Faraday rotation, Freeman-Durden, span/pedestal/RVI, cross-channel SNR). */
   def quadScalar(chs: Seq[Column], w: Int, h: Int, m: Int, mode: Int): Column =
-    toCol(QuadScalarExpr(chs.map(toExpr), w, h, m, mode))
+    kernel("quadScalar", longs("n", "s1", "s2", "s3"))(chs ++ Seq(w, h, m, mode): _*)
 
-  def cpC2Sums(chs: Seq[Column]): Column = toCol(CpC2SumsExpr(chs.map(toExpr)))
+  /** Per-tile integer-exact C2 sums of the simulated RCH compact-pol scattering vector. */
+  def cpC2Sums(chs: Seq[Column]): Column =
+    kernel("cpC2Sums", longs("n", "s11", "s22", "s12r", "s12i"))(chs: _*)
 
-  def polChange(chs: Seq[Column], w: Int, h: Int, m: Int): Column =
-    toCol(PolChangeExpr(chs.map(toExpr), w, h, m))
+  /** Two-epoch polarimetric change statistic rollup: 16 halo channels (8 per epoch). */
+  def polChange(chs: Seq[Column], w: Int, h: Int, m: Int): Column = {
+    require(chs.size == 16)
+    channelKernel("polChangeTile", longs("n", "s_q"))(chs, w, h, m)
+  }
 
-  def polCalCov(chs: Seq[Column]): Column = toCol(PolCalCovExpr(chs.map(toExpr)))
+  /** Per-tile exact covariance sums for the Quegan polarimetric calibration solve. */
+  def polCalCov(chs: Seq[Column]): Column = {
+    require(chs.size == 8)
+    kernel("polCalCovTile", struct(("n" -> LongType) +: Seq("c00", "c33", "c01r", "c01i",
+      "c02r", "c02i", "c03r", "c03i", "c13r", "c13i", "c23r", "c23i").map(_ -> DoubleType): _*))(
+      chs: _*)
+  }
 
+  /** Nearest-neighbor polynomial warp gather over a margin-m halo (deskew / cross). */
   def warpGather(halo: Column, tileX: Column, tileY: Column,
-      w: Int, h: Int, m: Int, coeffs: Seq[Double]): Column =
-    toCol(WarpGatherExpr(toExpr(halo), toExpr(tileX), toExpr(tileY), w, h, m, coeffs))
+      w: Int, h: Int, m: Int, coeffs: Seq[Double]): Column = {
+    require(coeffs.size == 6)
+    kernel("warpGather", Doubles)(Seq(halo, w, h, m, tileX, tileY) ++ coeffs: _*)
+  }
 
+  /** 5-point truncated-sinc range resample at per-row fractional shift d. */
   def bisincRange(halo: Column, d: Column, w: Int, h: Int, m: Int): Column =
-    toCol(BisincRangeExpr(toExpr(halo), toExpr(d), w, h, m))
+    kernel("bisincRange", Doubles)(halo, w, h, m, d)
 
-  def pqEncode(v: Column, cb: Column): Column = toCol(PqEncodeExpr(toExpr(v), toExpr(cb)))
+  /** PQ encode: argmin codeword id per subspace over the flattened codebook. */
+  def pqEncode(v: Column, cb: Column): Column = kernel("pqEncode", Longs)(v, cb)
 
-  def pqDistTable(v: Column, cb: Column): Column = toCol(PqDistTableExpr(toExpr(v), toExpr(cb)))
+  /** PQ ADC distance table dt[s*K + c] per query vector. */
+  def pqDistTable(v: Column, cb: Column): Column = kernel("pqDistTable", Doubles)(v, cb)
 
+  /** IEM LUT nearest-neighbor inversion rollup per tile. */
   def iemInvert(s1: Column, s2: Column, theta: Column, lut: Column): Column =
-    toCol(IemInvertExpr(toExpr(s1), toExpr(s2), toExpr(theta), toExpr(lut)))
+    kernel("iemInvertTile", longs("n", "rms_q", "rdc_q"))(s1, s2, theta, lut)
 
-  def iemHybrid(chs: Seq[Column]): Column = toCol(IemHybridExpr(chs.map(toExpr)))
+  /** IEM Hybrid LUT inversion rollup: AM/PM sigma pairs + per-image theta. */
+  def iemHybrid(chs: Seq[Column]): Column = {
+    require(chs.size == 7)
+    kernel("iemHybridTile", longs("n", "rms_q", "rdc_q"))(chs: _*)
+  }
 
-  def polCalApply(chs: Seq[Column]): Column = toCol(PolCalApplyExpr(chs.map(toExpr)))
+  /** Quegan distortion-inverse apply: 8 channel arrays + 8 crosstalk-delta doubles. */
+  def polCalApply(chs: Seq[Column]): Column = {
+    require(chs.size == 16)
+    kernel("polCalApplyTile", longs("n" +: Seq("hhr", "hhi", "hvr", "hvi", "vhr", "vhi", "vvr",
+      "vvi").map("s_" + _): _*))(chs: _*)
+  }
 
+  /** Windowed speckle filter: halo (w+2m)x(h+2m) -> filtered w*h array. enl/damping are
+   * columns so a data-estimated per-tile ENL can drive the kernel
+   * (SpeckleFilter.java:227-321 estimateENL mode). */
   def speckleFilter(halo: Column, mode: String, w: Int, h: Int, margin: Int,
       enl: Column, damping: Column): Column =
-    toCol(SpeckleFilterExpr(toExpr(halo), toExpr(enl), toExpr(damping), mode, w, h, margin))
+    kernel("speckle", Doubles)(halo, Kernels.modeId(mode), w, h, margin, enl, damping)
 
+  /** MuLoG ADMM filter over a clipped halo buffer (Kernels.mulogTile). */
   def mulog(halo: Column, tileX: Column, tileY: Column, w: Int, h: Int, margin: Int,
       tilesX: Int, tilesY: Int, enl: Double, rho: Double, iters: Int,
       searchR: Int, patchR: Int, nlmH: Double): Column =
-    toCol(MulogExpr(toExpr(halo), toExpr(tileX), toExpr(tileY), w, h, margin,
-      tilesX, tilesY, enl, rho, iters, searchR, patchR, nlmH))
+    kernel("mulogTile", Doubles)(halo, w, h, margin, tileX, tileY, tilesX, tilesY,
+      enl, rho, iters, searchR, patchR, nlmH)
 
+  /** Neighbor-strip slice for the halo exchange: only the margin-wide band a neighbor
+   * actually contributes is shuffled (role 4 = the full tile itself). */
   def haloStrip(arr: Column, role: Column, w: Int, h: Int, m: Int): Column =
-    toCol(HaloStripExpr(toExpr(arr), toExpr(role), w, h, m))
+    kernel("haloStrip", Doubles)(arr, role, w, h, m)
 
+  /** Halo assembly from collected neighbor strips (one compiled copy pass). */
   def haloAssemble(contribs: Column, w: Int, h: Int, m: Int): Column =
-    toCol(HaloAssembleExpr(toExpr(contribs), w, h, m))
+    kernel("haloAssemble", Doubles)(contribs, w, h, m)
 
+  /** Windowed dual-pol C2 product (m-delta / DpRVI / anisotropy / entropy). */
   def c2Window(c11: Column, c22: Column, c12r: Column, c12i: Column,
       w: Int, h: Int, m: Int, mode: Int): Column =
-    toCol(C2WindowExpr(toExpr(c11), toExpr(c22), toExpr(c12r), toExpr(c12i), w, h, m, mode))
+    kernel("c2Window", Doubles)(c11, c22, c12r, c12i, w, h, m, mode)
 
+  /** Per-tile dark-pixel count (oil-spill detection). */
   def darkCount(halo: Column, w: Int, h: Int, m: Int, k: Double): Column =
-    toCol(DarkCountExpr(toExpr(halo), w, h, m, k))
+    kernel("darkCount", LongType)(halo, w, h, m, k)
 
+  /** Per-tile multilook block sums (array<struct<n:long, s:double>>, row-major blocks). */
   def blockMeans(v: Column, w: Int, h: Int, looks: Int): Column =
-    toCol(BlockMeansExpr(toExpr(v), w, h, looks))
+    kernel("blockMeans", ArrayType(struct("n" -> LongType, "s" -> DoubleType),
+      containsNull = false), barrier = true)(v, w, h, looks)
 
+  /** Chain-multilook block statistics: per-pixel quantize-to-long then block sum,
+   * one compiled pass referencing the (possibly deeply chained) input array
+   * exactly once (array<struct<n:long, s:long>>). */
   def blockStatsQ(v: Column, w: Int, h: Int, looks: Int, q: Double): Column =
-    toCol(BlockStatsQExpr(toExpr(v), w, h, looks, q))
+    kernel("blockStatsQ", ArrayType(longs("n", "s"), containsNull = false))(v, w, h, looks, q)
 
+  /** Per-tile mosaic partial aggregation (array<struct<cell_x,cell_y,n_px,sum_q>>). */
   def mosaicCells(v: Column, tileX: Column, tileY: Column, lon1: Column, lat1: Column,
       lon2: Column, lon4: Column, lat4: Column, lon0: Column, lat0: Column,
       w: Int, h: Int, samplesPerBurst: Int, linesPerBurst: Int, cell: Double): Column =
-    toCol(MosaicCellsExpr(toExpr(v), toExpr(tileX), toExpr(tileY), toExpr(lon1),
-      toExpr(lat1), toExpr(lon2), toExpr(lon4), toExpr(lat4), toExpr(lon0), toExpr(lat0),
-      w, h, samplesPerBurst, linesPerBurst, cell))
+    kernel("mosaicCells", ArrayType(struct("cell_x" -> IntegerType, "cell_y" -> IntegerType,
+      "n_px" -> LongType, "sum_q" -> LongType), containsNull = false))(
+      v, tileX, tileY, lon1, lat1, lon2, lon4, lat4, lon0, lat0,
+      w, h, samplesPerBurst, linesPerBurst, cell)
 
-  def minhash16(hs: Column): Column = toCol(Minhash16Expr(toExpr(hs)))
+  /** 16-entry minhash signature from a doc's base-hash array (one compiled pass). */
+  def minhash16(hs: Column): Column = kernel("minhash16", Longs)(hs)
 
-  def rollupQ(arr: Column, q: Double): Column = toCol(RollupQExpr(toExpr(arr), q))
+  /** Integer-exact rollup struct (n, s, mn, mx) of a filtered array (one compiled pass). */
+  def rollupQ(arr: Column, q: Double): Column =
+    kernel("rollupQ", StructType(longs("n", "s").fields ++
+      nullableStruct("mn" -> LongType, "mx" -> LongType).fields))(arr, q)
 
-  def rollup2Q(arr: Column, q: Double): Column = toCol(Rollup2QExpr(toExpr(arr), q))
+  /** Two-moment rollup (n, s, s2, mn, mx) — Data-Analysis per-tile partials. */
+  def rollup2Q(arr: Column, q: Double): Column =
+    kernel("rollup2Q", StructType(longs("n", "s", "s2").fields ++
+      nullableStruct("mn" -> LongType, "mx" -> LongType).fields))(arr, q)
 
+  /** Quantized-sum fold over one or two pixel arrays (Kernels.sumQ modes). */
   def sumQ(a: Column, b: Column, mode: Int, k: Double = 0.0, q: Double = 1.0e6): Column =
-    toCol(SumQExpr(toExpr(a), toExpr(b), mode, k, q))
+    kernel("sumQ", LongType)(a, b, mode, k, q)
 
+  /** Compiled per-pixel binary map (Kernels.pixelMap2): the hot zip_with lambdas
+   * (calibration apply, noise subtraction, interferogram phase) as one static
+   * call per tile — bit-identical to the interpreted HOF they replace
+   * (RasterOpsSpec pins the equality per mode). */
   def pixelMap2(a: Column, b: Column, mode: Int, p: Double = 0.0): Column =
-    toCol(PixelMap2Expr(toExpr(a), toExpr(b), mode, p))
+    kernel("pixelMap2", Pixels)(a, b, mode, p)
 
+  /** Compiled dyadic intensity v = i^2+q^2 (Raster.intensityTiles' zip_with). */
   def intensity(i: Column, q: Column, d: Double, dv: Double): Column =
-    toCol(IntensityExpr(toExpr(i), toExpr(q), d, dv))
+    kernel("intensity", Pixels)(i, q, d, dv)
 
+  /** Compiled index-dependent per-pixel map (Kernels.pixelMapIdx): the lambda
+   * reads the pixel's global range sample gx = tile_x*tw + k%tw (antenna-pattern
+   * gain, incidence-angle calibrator classes, per-row noise floor). `p` is a
+   * column so a per-row scalar (noise floor) or a parsed mission constant can
+   * drive the same kernel. */
   def pixelMapIdx(v: Column, tileX: Column, p: Column, mode: Int, tw: Int, spb: Int): Column =
-    toCol(PixelMapIdxExpr(toExpr(v), toExpr(tileX), toExpr(p), mode, tw, spb))
+    kernel("pixelMapIdx", Pixels)(v, tileX, p, mode, tw, spb)
 
+  /** S1-ETAD timing-correction map: gx + dR/DR (pure arithmetic — exact). */
   def etadMap(v: Column, lut: Column, tileX: Column, dr: Double, tw: Int): Column =
-    toCol(EtadMapExpr(toExpr(v), toExpr(lut), toExpr(tileX), dr, tw))
+    kernel("etadMap", Pixels)(v, lut, tileX, dr, tw)
 
+  /** Compiled wrapped phase-subtraction over an (a, b) channel pair
+   * (Kernels.phaseSubPair): ph = atan2(b, a) (d-quantized first in EAP mode),
+   * out = atan2(sin(ph - f), cos(ph - f)) with f the closed-form surface at the
+   * pixel's global coordinates (topo surface / EAP elevation profile). */
   def phaseSubPair(a: Column, b: Column, tileX: Column, tileY: Column,
       mode: Int, d: Double, tw: Int, th: Int, spb: Int,
       p1: Double = 0.0, p2: Double = 0.0): Column =
-    toCol(PhaseSubPairExpr(toExpr(a), toExpr(b), toExpr(tileX), toExpr(tileY),
-      mode, d, tw, th, spb, p1, p2))
+    kernel("phaseSubPair", Pixels)(a, b, tileX, tileY, mode, d, tw, th, spb, p1, p2)
 
+  /** Chain TopoPhaseRemoval map over an already-computed wrapped-phase array —
+   * unary so a deeply chained upstream `v` expression is referenced exactly once. */
   def phaseSubV(v: Column, tileX: Column, tileY: Column, tw: Int, th: Int): Column =
-    toCol(PhaseSubVExpr(toExpr(v), toExpr(tileX), toExpr(tileY), tw, th))
+    kernel("phaseSubV", Pixels)(v, tileX, tileY, tw, th)
 
+  /** GRD azimuth thermal-noise lerp-subtract map (pure arithmetic — exact). */
   def noiseAzMap(v: Column, lutA: Column, azlut: Column, burstIdx: Column,
       tileY: Column, lp: Int, tw: Int, th: Int): Column =
-    toCol(NoiseAzMapExpr(toExpr(v), toExpr(lutA), toExpr(azlut), toExpr(burstIdx),
-      toExpr(tileY), lp, tw, th))
+    kernel("noiseAzMap", Pixels)(v, lutA, azlut, burstIdx, tileY, lp, tw, th)
 
+  /** Chain Subset pixel-exact crop mask (pure comparisons — exact). */
   def subsetMask(v: Column, tileX: Column, tileY: Column,
       x0: Int, x1: Int, y0: Int, y1: Int, tw: Int, th: Int): Column =
-    toCol(SubsetMaskExpr(toExpr(v), toExpr(tileX), toExpr(tileY), x0, x1, y0, y1, tw, th))
+    kernel("subsetMask", Pixels)(v, tileX, tileY, x0, x1, y0, y1, tw, th)
 
-  def quantize(a: Column, d: Double): Column = toCol(QuantizeExpr(toExpr(a), d))
+  /** Compiled per-element dyadic snap x -> floor(x*d)/d. */
+  def quantize(a: Column, d: Double): Column = kernel("quantize", Pixels)(a, d)
 
-  def shingleH60(ws: Column): Column = toCol(ShingleH60Expr(toExpr(ws)))
+  /** Compiled 3-word-shingle h60 hashes from a words array (Kernels.shingleH60). */
+  def shingleH60(ws: Column): Column = kernel("shingleH60", Longs)(ws)
 
-  def cosine(a: Column, b: Column): Column = toCol(CosineExpr(toExpr(a), toExpr(b)))
+  /** Compiled cosine over two FLOAT or DOUBLE embedding arrays (Kernels.cosine);
+   * each side's element type is read from its resolved type, so the SQL
+   * CAST-to-double upcast is reproduced exactly. */
+  def cosine(a: Column, b: Column): Column = {
+    def isFloat(e: Expression): Boolean = e.dataType match {
+      case ArrayType(FloatType, _) => true
+      case ArrayType(DoubleType, _) => false
+      case t => throw new IllegalArgumentException(s"cosine over $t")
+    }
+    toCol(ResolvedKernel(Seq(toExpr(a), toExpr(b)), cs =>
+      invoke("cosine", DoubleType, cs ++ cs.map(c => Literal(isFloat(c))))))
+  }
 
+  /** Full split-spectrum ionospheric correction over one burst raster (coherence
+   * threshold + separable weighted Gaussian + wrap(phiF - filtered)); per-tile
+   * (n, iono_q, corr_q) sums (IonosphericCorrectionOp.java:289-480). */
   def ionoSmooth(cre: Column, cim: Column, tilesX: Int, tilesY: Int,
       tileW: Int, tileH: Int, sigma: Int, thr: Double): Column =
-    toCol(IonoSmoothExpr(toExpr(cre), toExpr(cim), tilesX, tilesY, tileW, tileH, sigma, thr))
+    kernel("ionoSmooth", struct(Seq("n", "iono_q", "corr_q").map(_ -> Longs): _*))(
+      cre, cim, tilesX, tilesY, tileW, tileH, sigma, thr)
 
+  /** Full Goldstein block pipeline over one burst raster (75%-overlap 64x64 FFT
+   * blocks, adaptive alpha, smoothed-magnitude^alpha, triangular accumulation);
+   * per-tile (n, phase_q) sums (GoldsteinFilterOp.java:330-826). */
   def goldsteinFull(cre: Column, cim: Column, tilesX: Int, tilesY: Int,
       tileW: Int, tileH: Int, alphaMin: Double, alphaMax: Double, alphaDef: Double): Column =
-    toCol(GoldsteinFullExpr(toExpr(cre), toExpr(cim), tilesX, tilesY, tileW, tileH,
-      alphaMin, alphaMax, alphaDef))
+    kernel("goldsteinFull", struct("n" -> Longs, "ph_q" -> Longs))(
+      cre, cim, tilesX, tilesY, tileW, tileH, alphaMin, alphaMax, alphaDef)
 
+  /** jlinda const-fDC azimuth filter over one burst raster (inverse-Hamming
+   * de-weight at fDC_m, new-Hamming re-weight at fDC_mean, per-column FFT);
+   * per-tile (n, re_q, im_q) sums (AzimuthFilter.java:130-157). */
   def azFilter(cre: Column, cim: Column, fdcM: Column, fdcS: Column, prf: Column,
       tilesX: Int, tilesY: Int, tileW: Int, tileH: Int, abw: Double, alpha: Double): Column =
-    toCol(AzFilterExpr(toExpr(cre), toExpr(cim), toExpr(fdcM), toExpr(fdcS), toExpr(prf),
-      tilesX, tilesY, tileW, tileH, abw, alpha))
+    kernel("azFilter", struct(Seq("n", "re_q", "im_q").map(_ -> Longs): _*))(
+      cre, cim, tilesX, tilesY, tileW, tileH, fdcM, fdcS, prf, abw, alpha)
 
+  /** jlinda adaptive range filter over one burst raster pair (fringe shift from
+   * the 15-row-mean interferometric spectrum peak, shifted/narrowed Hamming x
+   * inverse Hamming per line, applied to the master rows); per-tile (n, re_q,
+   * im_q) sums (RangeFilter.java:104-230). */
   def rangeFilter(mre: Column, mim: Column, xre: Column, xim: Column,
       tilesX: Int, tilesY: Int, tileW: Int, tileH: Int): Column =
-    toCol(RangeFilterExpr(toExpr(mre), toExpr(mim), toExpr(xre), toExpr(xim),
-      tilesX, tilesY, tileW, tileH))
+    kernel("rangeFilter", struct(Seq("n", "re_q", "im_q").map(_ -> Longs): _*))(
+      mre, mim, xre, xim, tilesX, tilesY, tileW, tileH)
 
-  def t3Sums(chs: Seq[Column]): Column = toCol(T3SumsExpr(chs.map(toExpr)))
+  /** Quad-pol per-tile T3 integer sums: (n, s11..s23i) from the 8 i/q channels. */
+  def t3Sums(chs: Seq[Column]): Column = kernel("t3Sums", longs("n" +: T3: _*))(chs: _*)
 
-  def aboveThr(v: Column, thr: Double): Column = toCol(AboveThrExpr(toExpr(v), thr))
+  /** Sparse above-threshold pixel indices of one tile. */
+  def aboveThr(v: Column, thr: Double): Column = kernel("aboveThr", Ints)(v, thr)
 
+  /** CMOD5 wind-speed grid-search inversion per tile (tile-mean NRCS). */
   def cmod5(v: Column, theta: Column, cosFi: Column): Column =
-    toCol(Cmod5Expr(toExpr(v), toExpr(theta), toExpr(cosFi)))
+    kernel("cmod5Tile", longs("n", "idx"))(v, theta, cosFi)
 
+  /** Dark-pixel indices of a tile (center below k * window mean, margin-m halo). */
   def darkKs(halo: Column, w: Int, h: Int, m: Int, k: Double): Column =
-    toCol(DarkKsExpr(toExpr(halo), w, h, m, k))
+    kernel("darkKs", Ints)(halo, w, h, m, k)
 
-  def rpca(chs: Seq[Column], tau: Double): Column = toCol(RpcaExpr(chs.map(toExpr), tau))
+  /** RPCA change detection per tile: (n, count |S_e| > tau per epoch). */
+  def rpca(chs: Seq[Column], tau: Double): Column =
+    channelKernel("rpcaTile", longs("n" +: chs.indices.map(e => s"c$e"): _*))(chs, tau)
 
+  /** Per-tile per-row first/last above-threshold column (GRD border-noise scan). */
   def rowScan(v: Column, w: Int, h: Int, thr: Double): Column =
-    toCol(RowScanExpr(toExpr(v), w, h, thr))
+    kernel("rowScan", struct("firsts" -> Ints, "lasts" -> Ints))(v, w, h, thr)
 
+  /** Phase Linking per tile: (n, sum_q of linked phases vs epoch 0). */
   def phaseLink(chs: Seq[Column], w: Int, h: Int, m: Int): Column =
-    toCol(PhaseLinkExpr(chs.map(toExpr), w, h, m))
+    channelKernel("phaseLinkTile",
+      longs("n" +: (1 until Kernels.PhaseLinkEpochs).map(e => s"ph${e}_q"): _*))(chs, w, h, m)
 
+  /** Zero-Doppler bisection on a Lagrange-interpolated orbit: (t_zd, slant). */
   def zeroDoppler(ts: Column, xs: Column, ys: Column, zs: Column,
       vxs: Column, vys: Column, vzs: Column, tx: Column, ty: Column, h: Column): Column =
-    toCol(ZeroDopplerExpr(Seq(ts, xs, ys, zs, vxs, vys, vzs, tx, ty, h).map(toExpr)))
+    kernel("zeroDopplerBisect", struct("tzd" -> DoubleType, "slant" -> DoubleType),
+      barrier = true)(ts, xs, ys, zs, vxs, vys, vzs, tx, ty, h)
 
+  /** Polarimetric Refined Lee: span-driven edge window applied to all 9 T3 channels. */
   def polRefinedLee(chs: Seq[Column], w: Int, h: Int, m: Int, enl: Double): Column =
-    toCol(PolRefinedLeeExpr(chs.map(toExpr), w, h, m, enl))
+    kernel("polRefinedLee", longs("n" +: T3: _*))(chs ++ Seq[Any](w, h, m, enl): _*)
 
+  /** Quad-pol per-tile H-A-alpha rollup over margin-m windowed T3. */
   def hAlpha(chs: Seq[Column], w: Int, h: Int, m: Int): Column =
-    toCol(HAlphaExpr(chs.map(toExpr), w, h, m))
+    kernel("hAlphaTile", longs("n", "h_q", "a_q", "al_q"))(chs ++ Seq(w, h, m): _*)
 
+  /** One Wishart pass per tile: 9 rows (zone, cnt, 9 quantized channel sums);
+   * empty `centers` array = H-alpha seed mode, else argmin-distance assignment. */
   def wishart(chs: Seq[Column], centers: Column, w: Int, h: Int, m: Int): Column =
-    toCol(WishartExpr(chs.map(toExpr), toExpr(centers), w, h, m))
+    kernel("wishartTile", ArrayType(struct(Seq("zone" -> IntegerType, "cnt" -> LongType) ++
+      T3.map(_ -> LongType): _*), containsNull = false))(chs ++ Seq(centers, w, h, m): _*)
 
-  def windowMoments(halo: Column, w: Int, h: Int, haloM: Int, winR: Int): Column =
-    toCol(WindowMomentsExpr(toExpr(halo), w, h, haloM, winR))
-
+  /** Per-pixel bilinear LUT interpolation from bracketing calibration vectors. */
   def lutInterp(vecs: Column, burstIdx: Column, tileX: Column, tileY: Column,
       w: Int, h: Int, linesPerBurst: Int): Column =
-    toCol(LutInterpExpr(toExpr(vecs), toExpr(burstIdx), toExpr(tileX), toExpr(tileY),
-      w, h, linesPerBurst))
+    kernel("lutInterp", Doubles)(vecs, burstIdx, tileX, tileY, w, h, linesPerBurst)
 
+  /** Complex cross products (cre, cim, p1, p2) of two complex tiles, one pass. */
   def complexCross(i1: Column, q1: Column, i2: Column, q2: Column): Column =
-    toCol(ComplexCrossExpr(toExpr(i1), toExpr(q1), toExpr(i2), toExpr(q2)))
+    kernel("complexCross", struct(Seq("cre", "cim", "p1", "p2").map(_ -> Doubles): _*))(
+      i1, q1, i2, q2)
 
+  /** Windowed coherence from 4 halo channels. */
   def coherence(cre: Column, cim: Column, p1: Column, p2: Column,
       w: Int, h: Int, margin: Int): Column =
-    toCol(CoherenceExpr(toExpr(cre), toExpr(cim), toExpr(p1), toExpr(p2), w, h, margin))
+    kernel("coherence", Doubles)(cre, cim, p1, p2, w, h, margin)
 
+  /** Whole-tile CFAR: one static call -> struct(n_detect, max_t). */
   def cfar(halo: Column, w: Int, h: Int, m: Int, g: Int, thr: Double): Column =
-    toCol(CfarExpr(toExpr(halo), w, h, m, g, thr))
+    kernel("cfar", StructType(Seq(StructField("n_detect", LongType, nullable = false),
+      StructField("max_t", DoubleType))))(halo, w, h, m, g, thr)
 
+  /** Frequency-domain range oversampling x2. */
   def oversample(arr: Column, w: Int, h: Int): Column =
-    toCol(OversampleExpr(toExpr(arr), w, h))
+    kernel("oversampleRange", Doubles)(arr, w, h)
 
+  /** Azimuth power spectrum of the deramped complex tile (per-column FFT). */
   def azSpectrum(di: Column, dq: Column, w: Int, h: Int): Column =
-    toCol(AzSpectrumExpr(toExpr(di), toExpr(dq), w, h))
+    kernel("azSpectrum", Doubles)(di, dq, w, h)
 
+  /** WSS deburst overlap-strip fold: flat (n, pk, pki, av) x ov rows. */
   def wssOverlap(va: Column, ia: Column, vb: Column, ib: Column, tileX: Column,
       w: Int, h: Int, ov: Int, margin: Int, wTotal: Int, q: Double): Column =
-    toCol(WssOverlapExpr(toExpr(va), toExpr(ia), toExpr(vb), toExpr(ib), toExpr(tileX),
-      w, h, ov, margin, wTotal, q))
+    kernel("wssOverlap", Longs)(va, ia, vb, ib, tileX, w, h, ov, margin, wTotal, q)
 
+  /** WSS deburst pass-through fold: flat (n, pk, pki, av) x h rows. */
   def wssPass(v: Column, id: Column, tileX: Column, w: Int, h: Int,
       margin: Int, wTotal: Int, q: Double): Column =
-    toCol(WssPassExpr(toExpr(v), toExpr(id), toExpr(tileX), w, h, margin, wTotal, q))
+    kernel("wssPass", Longs)(v, id, tileX, w, h, margin, wTotal, q)
 
+  /** FFT-NCC tie-point match with iterative subpixel refinement. */
   def fftXcorr(refTiles: Column, secTiles: Column, cx: Column, cy: Column,
       half: Int, searchR: Int, tw: Int, th: Int): Column =
-    toCol(FftXcorrExpr(toExpr(refTiles), toExpr(secTiles), toExpr(cx), toExpr(cy),
-      half, searchR, tw, th))
+    kernel("fftXcorrMatch", nullableStruct("est_dx" -> DoubleType, "est_dy" -> DoubleType,
+      "peak_ncc" -> DoubleType))(refTiles, secTiles, cx, cy, half, searchR, tw, th)
 
+  /** Integer SSD lattice match. */
   def ssdMatch(refTiles: Column, secTiles: Column, cx: Column, cy: Column,
       half: Int, searchR: Int, tw: Int, th: Int): Column =
-    toCol(SsdMatchExpr(toExpr(refTiles), toExpr(secTiles), toExpr(cx), toExpr(cy),
-      half, searchR, tw, th))
+    kernel("ssdMatch", nullableStruct("est_dx" -> IntegerType, "est_dy" -> IntegerType,
+      "ssd_min" -> DoubleType))(refTiles, secTiles, cx, cy, half, searchR, tw, th)
 
+  /** Aligned-stack per-tile diff against gathered covering secondary tiles. */
   def alignDiff(refArr: Column, secTiles: Column, tileX: Column, tileY: Column,
       sdx: Column, sdy: Column, tw: Int, th: Int): Column =
-    toCol(AlignDiffExpr(toExpr(refArr), toExpr(secTiles), toExpr(tileX), toExpr(tileY),
-      toExpr(sdx), toExpr(sdy), tw, th))
+    kernel("alignDiff", nullableStruct("n" -> LongType, "max_abs" -> DoubleType))(
+      refArr, secTiles, tileX, tileY, sdx, sdy, tw, th)
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 
 /**
  * Compiled kernel loops for the hot per-tile operators. Each method is invoked from a
- * native Catalyst Expression's doGenCode as ONE static call per row, so the plan stays
+ * Catalyst StaticInvoke (KernelExprs) as ONE static call per row, so the plan stays
  * inside whole-stage codegen and the inner loop runs as JIT-compiled scalar code over
  * primitive arrays — replacing the interpreted higher-order-function path (the round-1
  * GC bottleneck: boxed structs per pixel).
@@ -998,12 +998,22 @@ object Kernels {
   /** GRD azimuth thermal-noise subtraction (Grd.thermalNoiseAzQuery's HOF, verbatim):
    * per pixel k, gline = (burstIdx-1)*lp + tileY*th + k div tw, b = gline div lp,
    * az = azlut(b) + ((gline - b*lp)/lp) * (azlut(b+1) - azlut(b)),
-   * out = greatest(0, v - lutA(k)*az) with the ND passthrough. Pure +,-,*,/ — exact. */
+   * out = greatest(0, v - lutA(k)*az) with the ND passthrough. Pure +,-,*,/ — exact.
+   * azlut must hold one more knot than the last burst index b the tile reaches
+   * (checked at entry; the replaced SQL's element_at read NULL there and degraded
+   * to 0). */
   def noiseAzMap(vD: ArrayData, lutAD: ArrayData, azD: ArrayData,
       burstIdx: Int, tileY: Int, lp: Int, tw: Int, th: Int): ArrayData = {
     val v = vD.toDoubleArray(); val lutA = lutAD.toDoubleArray(); val az = azD.toDoubleArray()
     val out = new Array[Double](v.length)
     val base = (burstIdx - 1) * lp + tileY * th
+    if (v.length > 0) {
+      require(base >= 0, s"noiseAzMap: first line index $base < 0 (burst_idx must be >= 1)")
+      val lastB = (base + (v.length - 1) / tw) / lp
+      require(az.length >= lastB + 2,
+        s"noiseAzMap: azlut needs one more knot than the last burst index reached " +
+          s"($lastB), so ${lastB + 2} knots; got ${az.length}")
+    }
     var k = 0
     while (k < v.length) {
       val x = v(k)
@@ -2335,6 +2345,19 @@ object Kernels {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
+  /** The channels of an array<array<double>> kernel argument as primitive arrays,
+   * or null when any channel is null (the kernel then returns a null row). */
+  private def channels(chD: ArrayData): Array[Array[Double]] = {
+    val out = new Array[Array[Double]](chD.numElements())
+    var c = 0
+    while (c < out.length) {
+      if (chD.isNullAt(c)) return null
+      out(c) = chD.getArray(c).toDoubleArray()
+      c += 1
+    }
+    out
+  }
+
   // --------------------------------------------------------- RPCA change detection
 
   /** RPCA quantization grid for the per-tile Gram matrix (exact integer sums). */
@@ -2351,9 +2374,10 @@ object Kernels {
    * of |S_e| > tau per epoch (+ valid pixel count). The Gram entries are exact
    * integers, so both engines iterate on identical doubles.
    */
-  def rpcaTile(chD: Array[ArrayData], tau: Double): InternalRow = {
-    val K = chD.length
-    val ch = chD.map(_.toDoubleArray())
+  def rpcaTile(chD: ArrayData, tau: Double): InternalRow = {
+    val ch = channels(chD)
+    if (ch == null) return null
+    val K = ch.length
     val len = ch(0).length
     val g = Array.ofDim[Long](K, K)
     var i = 0
@@ -2480,10 +2504,11 @@ object Kernels {
   val PhaseLinkEpochs = 5
   val PhaseLinkIters = 20
 
-  def phaseLinkTile(chD: Array[ArrayData], w: Int, h: Int, m: Int): InternalRow = {
+  def phaseLinkTile(chD: ArrayData, w: Int, h: Int, m: Int): InternalRow = {
     val K = PhaseLinkEpochs
     val hw = w + 2 * m
-    val ch = chD.map(_.toDoubleArray()) // i0, q0, i1, q1, ...
+    val ch = channels(chD) // i0, q0, i1, q1, ...
+    if (ch == null) return null
     // window-summed Hermitian C per pixel: diag(K) + upper-triangle complex
     val d = new Array[Double](K)
     val cr = Array.ofDim[Double](K, K)
@@ -3670,11 +3695,11 @@ object Kernels {
    * (the omnibus likelihood-ratio core of PolarimetricChangeDetectionOp.java:316-351).
    * Returns per-tile struct(n, s_q sum).
    */
-  def polChangeTile(ch1D: Array[ArrayData], ch2D: Array[ArrayData],
-      w: Int, h: Int, m: Int): InternalRow = {
+  def polChangeTile(chD: ArrayData, w: Int, h: Int, m: Int): InternalRow = {
     val hw = w + 2 * m
-    val ch1 = ch1D.map(_.toDoubleArray())
-    val ch2 = ch2D.map(_.toDoubleArray())
+    val ch = channels(chD) // 8 channels of epoch 1, then 8 of epoch 2
+    if (ch == null) return null
+    val (ch1, ch2) = ch.splitAt(8)
     val t = new Array[Double](9)
     val w1 = new Array[Double](10)
     val w2 = new Array[Double](10)

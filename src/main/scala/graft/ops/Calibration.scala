@@ -29,7 +29,7 @@ object Calibration {
         .as("vecs"))
 
   /** Tile df + broadcast LUT -> per-pixel interpolated LUT array column "lut_a".
-   * Native codegen'd kernel (graft.exprs.LutInterpExpr -> Kernels.lutInterp): cached
+   * Native codegen'd kernel (KernelExprs.lutInterp -> Kernels.lutInterp): cached
    * binary-search bracketing + bilinear, one static call per tile — the reference's
    * getCalibrationVectorIndex/getPixelIndex interval lookups
    * (Sentinel1Calibrator.java:464-477, 586-593) as a compiled loop. */

@@ -60,11 +60,11 @@ object Raster {
    * Generalized halo exchange over several per-pixel value arrays at once. Plan shape
    * (the scale-critical path — every windowed operator rides on it):
    *  1. each tile emits 9 contribution rows, but neighbors are SLICED to the
-   *     margin-wide strip the target actually needs (compiled HaloStripExpr) — the
+   *     margin-wide strip the target actually needs (compiled KernelExprs.haloStrip) — the
    *     shuffle carries ~(1 + 2m(W+H)/(WH))x the pixel volume, not 9x;
    *  2. ONE aggregation per target key collects the strips (partial-aggregated
    *     map-side like any collect_list);
-   *  3. one compiled HaloAssembleExpr call per tile per column builds the
+   *  3. one compiled KernelExprs.haloAssemble call per tile per column builds the
    *     (W+2m)x(H+2m) halo array `halo_c` — no interpreted per-element lambdas.
    * Out-of-raster cells hold the no-data sentinel (reference getNeighborValues
    * semantics: out-of-image -> noDataValue, SpeckleFilter.java:95-144). Valid for

@@ -25,7 +25,7 @@ import graft.exprs.KernelExprs
  *
  * Execution shape: ONE halo-exchange shuffle (Raster.withHaloMulti, margin = window
  * radius) then a native codegen'd kernel expression per tile row
- * (graft.exprs.SpeckleFilterExpr -> Kernels.speckle: one static call per tile,
+ * (KernelExprs.speckleFilter -> Kernels.speckle: one static call per tile,
  * JIT-compiled loop over primitive arrays — no interpreted HOFs, no explode).
  */
 object Speckle {

@@ -398,6 +398,20 @@ class KernelSpec extends AnyFunSuite {
     assert(out(0) == 10.0)
   }
 
+  test("noiseAzMap names the azlut knot invariant instead of reading past the knots") {
+    val tw = 4; val th = 2; val lp = 4
+    val v = arr(Array.fill(tw * th)(1.0)); val lutA = arr(Array.fill(tw * th)(0.5))
+    // burst 2, tile row 1: lines 6..7 lie in burst index 1, so knots 0..2 are read
+    assert(Kernels.noiseAzMap(v, lutA, arr(Array(1.0, 2.0, 3.0)), 2, 1, lp, tw, th)
+      .numElements() == tw * th)
+    val e = intercept[IllegalArgumentException] {
+      Kernels.noiseAzMap(v, lutA, arr(Array(1.0, 2.0)), 2, 1, lp, tw, th)
+    }
+    assert(e.getMessage.contains(
+      "azlut needs one more knot than the last burst index reached (1), so 3 knots; got 2"),
+      e.getMessage)
+  }
+
   test("pqEncode/pqDistTable match the straight-loop argmin/table oracles") {
     val r = new scala.util.Random(77)
     val cb = Array.fill(8 * 16 * 8)(r.nextDouble() * 2 - 1)

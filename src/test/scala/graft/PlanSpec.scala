@@ -66,6 +66,54 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.linesIterator.exists(l => l.contains("Generate") && l.contains(" v#")), p.take(2000))
   }
 
+  test("kernel calls run inside compiled code; barrier kernels are evaluated once") {
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    def kernelCalls(es: Seq[Expression]): Seq[String] = es.flatMap(_.collect {
+      case s: StaticInvoke if s.objectName == "graft.exprs.Kernels" => s.functionName
+    })
+    // (kernel calls in interpreted hosts, all kernel calls). A call is compiled
+    // inside a whole-stage codegen stage, or in the result expressions of an
+    // ObjectHashAggregate (no whole-stage codegen, but its result projection is a
+    // generated UnsafeProjection) — where the halo-assembled kernels of the
+    // windowed operators run.
+    def walk(p: SparkPlan, inCodegen: Boolean): (Seq[String], Seq[String]) = {
+      val parts: Seq[(Seq[String], Seq[String])] = p match {
+        case a: AdaptiveSparkPlanExec => Seq(walk(a.executedPlan, false))
+        case q: QueryStageExec => Seq(walk(q.plan, false))
+        case r: ReusedExchangeExec => Seq(walk(r.child, false))
+        case w: WholeStageCodegenExec => Seq(walk(w.child, true))
+        case i: InputAdapter => Seq(walk(i.child, false))
+        case _ =>
+          val own = kernelCalls(p.expressions)
+          val compiled = inCodegen || p.isInstanceOf[ObjectHashAggregateExec]
+          (if (compiled) Nil else own.map(k => s"${p.nodeName}: $k"), own) +:
+            (p.children.map(walk(_, inCodegen)) ++ p.subqueries.map(walk(_, false)))
+      }
+      (parts.flatMap(_._1), parts.flatMap(_._2))
+    }
+    for (name <- Seq("q_calibration_sigma0", "q_speckle_lee", "q_multilook",
+        "q_terrain_correction", "q_chain_grd")) {
+      val df = SparkEntry.queries(name)(spark, sf)
+      df.queryExecution.toRdd.count() // AQE finalizes the executed plan
+      val (interpreted, all) = walk(df.queryExecution.executedPlan, false)
+      assert(all.nonEmpty, s"$name: no kernel call in the executed plan")
+      assert(interpreted.isEmpty, s"$name: kernels outside compiled code: $interpreted\n" +
+        df.queryExecution.executedPlan.toString.take(3000))
+    }
+    for ((name, fn) <- Seq("q_terrain_correction" -> "zeroDopplerBisect",
+        "q_multilook" -> "blockMeans")) {
+      val optimized = SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan
+      val n = optimized.collectWithSubqueries { case p => kernelCalls(p.expressions) }
+        .flatten.count(_ == fn)
+      assert(n == 1, s"$name: $fn evaluated $n times\n${optimized.toString.take(3000)}")
+    }
+  }
+
   test("mosaic plan pre-aggregates cells per tile before the only shuffle") {
     val p = plan(ops.Geocode.mosaicQuery(spark, sf))
     // exactly one shuffle (the cell-key aggregation); no posexplode of pixel arrays

@@ -178,7 +178,7 @@ class RasterOpsSpec extends AnyFunSuite {
         Array.fill(n)(400.0 + r.nextDouble() * 400.0))
     }
     val df = rows.toDF("a", "b", "lut")
-    def check(kernel: org.apache.spark.sql.Column, sql: String): Unit = {
+    def check(kernel: org.apache.spark.sql.Column, sql: String): Unit = TestSpark.onBothEvalPaths {
       val out = df.select(kernel.as("k"), expr(sql).as("s")).collect()
       out.foreach { row =>
         val k = row.getSeq[Double](0); val s = row.getSeq[Double](1)
@@ -236,7 +236,7 @@ class RasterOpsSpec extends AnyFunSuite {
     // same JIT phases). The gate's integer quantizer (1e6 buckets over O(1)
     // values) sits ~11 orders of magnitude above this few-ulp band; a second
     // assertion pins that no element moves across a quantizer boundary.
-    def check(kernel: org.apache.spark.sql.Column, sql: String, ulpTol: Int = 0): Unit = {
+    def check(kernel: org.apache.spark.sql.Column, sql: String, ulpTol: Int = 0): Unit = TestSpark.onBothEvalPaths {
       val out = df.select(kernel.as("k"), expr(sql).as("s")).collect()
       out.foreach { row =>
         val k = row.getSeq[Double](0); val s = row.getSeq[Double](1)
