@@ -91,6 +91,10 @@ object KernelExprs {
    * |2·area|·2^16. */
   def clipAreaQ(chs: Seq[Column]): Column = kernel("clipAreaQ", LongType)(chs: _*)
 
+  /** Separating-axis convex-quad x convex-quad intersection (the TOPSAR-Split
+   * refine): 16 doubles, a's x and y corners then b's, in ring order → boolean. */
+  def quadIntersectsSAT(chs: Seq[Column]): Column = kernel("quadIntersectsSAT", BooleanType)(chs: _*)
+
   /** Pass A of the dual-pol index family: per-pixel slope-masked |Stokes| arrays
    * over the margin-m windowed C2 (feeds the per-scene percentile stage). */
   def dpStokes(chs: Seq[Column], w: Int, h: Int, m: Int): Column = {

@@ -2,7 +2,8 @@ package graft.exprs
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
 
 /**
  * Compiled kernel loops for the hot per-tile operators. Each method is invoked from a
@@ -2445,7 +2446,11 @@ object Kernels {
       }
       i += 1
     }
-    InternalRow(n, cnt(0), cnt(1), cnt(2), cnt(3), cnt(4))
+    val out = new Array[Any](K + 1)
+    out(0) = n
+    var e = 0
+    while (e < K) { out(e + 1) = cnt(e); e += 1 }
+    new GenericInternalRow(out)
   }
 
   // ----------------------------------------------------------- sparse detection
@@ -5049,5 +5054,56 @@ object Kernels {
     }
     val a = if (s < 0) -s else s
     (a * 65536.0).toLong
+  }
+
+  /**
+   * Exact convex-quad x convex-quad intersection by the separating-axis theorem
+   * (the TOPSAR-Split refine, Geo.quadIntersectsSAT): the quads are disjoint iff
+   * one of the 8 edge normals (-(dy), dx) separates their projected corner
+   * intervals. Corners in ring order: a's x then y, then b's x then y.
+   *
+   * Bit-identical to the Column tree it replaced, NaN included: each normal and
+   * projection is computed in that tree's operation order, and least, greatest
+   * and `<` follow Spark's double order (compareDoubles: NaN is the largest
+   * value, -0.0 equals 0.0).
+   */
+  def quadIntersectsSAT(
+      ax1: Double, ax2: Double, ax3: Double, ax4: Double,
+      ay1: Double, ay2: Double, ay3: Double, ay4: Double,
+      bx1: Double, bx2: Double, bx3: Double, bx4: Double,
+      by1: Double, by2: Double, by3: Double, by4: Double): Boolean = {
+    def separates(xi: Double, yi: Double, xj: Double, yj: Double): Boolean = {
+      val nx = (yj - yi) * -1.0
+      val ny = xj - xi
+      val pa1 = nx * ax1 + ny * ay1; val pa2 = nx * ax2 + ny * ay2
+      val pa3 = nx * ax3 + ny * ay3; val pa4 = nx * ax4 + ny * ay4
+      val pb1 = nx * bx1 + ny * by1; val pb2 = nx * bx2 + ny * by2
+      val pb3 = nx * bx3 + ny * by3; val pb4 = nx * bx4 + ny * by4
+      compareDoubles(greatest4(pa1, pa2, pa3, pa4), least4(pb1, pb2, pb3, pb4)) < 0 ||
+        compareDoubles(greatest4(pb1, pb2, pb3, pb4), least4(pa1, pa2, pa3, pa4)) < 0
+    }
+    !(separates(ax1, ay1, ax2, ay2) || separates(ax2, ay2, ax3, ay3) ||
+      separates(ax3, ay3, ax4, ay4) || separates(ax4, ay4, ax1, ay1) ||
+      separates(bx1, by1, bx2, by2) || separates(bx2, by2, bx3, by3) ||
+      separates(bx3, by3, bx4, by4) || separates(bx4, by4, bx1, by1))
+  }
+
+  /** Spark's `least` over four non-null doubles: a later value replaces the
+   * running one only when strictly smaller in Spark's double order. */
+  private def least4(p1: Double, p2: Double, p3: Double, p4: Double): Double = {
+    var r = p1
+    if (compareDoubles(r, p2) > 0) r = p2
+    if (compareDoubles(r, p3) > 0) r = p3
+    if (compareDoubles(r, p4) > 0) r = p4
+    r
+  }
+
+  /** Spark's `greatest` over four non-null doubles (see least4). */
+  private def greatest4(p1: Double, p2: Double, p3: Double, p4: Double): Double = {
+    var r = p1
+    if (compareDoubles(p2, r) > 0) r = p2
+    if (compareDoubles(p3, r) > 0) r = p3
+    if (compareDoubles(p4, r) > 0) r = p4
+    r
   }
 }

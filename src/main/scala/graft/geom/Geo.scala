@@ -4,9 +4,10 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.locationtech.jts.geom.Geometry
 import org.locationtech.jts.io.WKTReader
+import graft.exprs.KernelExprs
 
 /**
- * Spatial predicates, exposed as pure Column expressions (codegen'd, UDF-free) for the
+ * Spatial predicates, exposed as Column expressions (codegen'd, UDF-free) for the
  * hot join paths, plus a JTS oracle for tests (the reference's own exactness authority:
  * TOPSARSplitOp.java:261-306 builds JTS polygons per burst and tests aoi.intersects).
  *
@@ -32,26 +33,13 @@ object Geo {
   /**
    * Exact convex-quad x convex-quad intersection by the separating-axis theorem:
    * the quads are disjoint iff some edge normal (8 candidate axes) separates the
-   * projected corner intervals. Exact for convex shapes, pure arithmetic.
+   * projected corner intervals. Exact for convex shapes, pure arithmetic, compiled
+   * as one kernel call (Kernels.quadIntersectsSAT); a null corner gives null.
    */
   def quadIntersectsSAT(ax: Seq[Column], ay: Seq[Column],
       bx: Seq[Column], by: Seq[Column]): Column = {
     require(ax.size == 4 && bx.size == 4)
-    def axes(xs: Seq[Column], ys: Seq[Column]): Seq[(Column, Column)] =
-      (0 until 4).map { i =>
-        val j = (i + 1) % 4
-        (ys(j) - ys(i)) * -1 -> (xs(j) - xs(i)) // normal of edge i->j: (-(dy), dx)
-      }
-    val allAxes = axes(ax, ay) ++ axes(bx, by)
-    val separated = allAxes.map { case (nx, ny) =>
-      def proj(xs: Seq[Column], ys: Seq[Column]): Seq[Column] =
-        (0 until 4).map(i => nx * xs(i) + ny * ys(i))
-      val pa = proj(ax, ay); val pb = proj(bx, by)
-      val aMin = least(pa: _*); val aMax = greatest(pa: _*)
-      val bMin = least(pb: _*); val bMax = greatest(pb: _*)
-      (aMax < bMin) || (bMax < aMin)
-    }.reduce(_ || _)
-    !separated
+    KernelExprs.quadIntersectsSAT(ax ++ ay ++ bx ++ by)
   }
 
   /** Axis-aligned-rect convenience: corners of (lonMin,latMin,lonMax,latMax). */

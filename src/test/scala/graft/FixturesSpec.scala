@@ -1,0 +1,91 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.scalatest.funsuite.AnyFunSuite
+import graft.gen.Fixtures
+
+/** Fixture reads: each table's schema is inferred once per JVM and path, and a
+ * regeneration of the fixture dir drops the cached schemas. */
+class FixturesSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+
+  private val Mark = "graft.test.jobsDuring"
+
+  /** Spark jobs started while `f` runs. Listener events arrive asynchronously but
+   * in order, so two marked jobs, run before and after `f`, bound the count. */
+  private def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val begun = new CountDownLatch(1)
+    val ended = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(Mark))) match {
+          case Some("begin") => begun.countDown()
+          case Some("end") => ended.countDown()
+          case _ => if (begun.getCount == 0 && ended.getCount == 1) jobs.incrementAndGet()
+        }
+    }
+    def marker(m: String): Unit = {
+      sc.setLocalProperty(Mark, m)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(Mark, null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("begin")
+      f
+      marker("end")
+      assert(begun.await(60, TimeUnit.SECONDS) && ended.await(60, TimeUnit.SECONDS),
+        "listener never saw the marker jobs")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** What the benchmark does by reflection (perfbench FixtureRoot): forget that
+   * a dir was verified in this JVM, so the next `ensure` checks it again. */
+  private def forgetVerified(dir: String): Unit = {
+    val f = Fixtures.getClass.getDeclaredField("verifiedDirs")
+    f.setAccessible(true)
+    f.set(null, f.get(null).asInstanceOf[Set[String]] - dir)
+  }
+
+  test("a fixture table's schema is inferred once per JVM; regeneration drops it") {
+    // a copy of the test fixtures under a scale tag of its own (unknown tags are
+    // sf0.001-sized), so the first read of its docs table is the first in this JVM
+    val src = Paths.get(Fixtures.ensure(spark, TestSpark.Sf))
+    val sf = "/tmp/sf_schema_probe"
+    val dir = Paths.get(Fixtures.dir(sf))
+    def rmDir(): Unit = if (Files.exists(dir)) FileUtils.deleteDirectory(dir.toFile)
+    rmDir()
+    FileUtils.copyDirectory(src.toFile, dir.toFile)
+    try {
+      Fixtures.ensure(spark, sf) // the copy's fingerprints match: no regeneration
+      assert(jobsDuring(Fixtures.table(spark, sf, "docs")) == 1) // the inference job
+      var docs: DataFrame = null
+      assert(jobsDuring { docs = Fixtures.table(spark, sf, "docs") } == 0)
+      assert(docs.schema == spark.read.parquet(s"$dir/docs.parquet").schema)
+      // re-verifying the fingerprints keeps the schemas
+      forgetVerified(dir.toString)
+      Fixtures.ensure(spark, sf)
+      assert(jobsDuring(Fixtures.table(spark, sf, "docs")) == 0)
+      // a marker that no longer matches regenerates the dir, which drops them
+      Files.list(dir).iterator.asScala.filter(_.getFileName.toString.startsWith("_COMPLETE"))
+        .foreach(Files.writeString(_, "stale"))
+      forgetVerified(dir.toString)
+      Fixtures.ensure(spark, sf)
+      assert(jobsDuring(Fixtures.table(spark, sf, "docs")) == 1)
+      assert(jobsDuring(Fixtures.table(spark, sf, "docs")) == 0)
+    } finally {
+      rmDir()
+      forgetVerified(dir.toString)
+    }
+  }
+}

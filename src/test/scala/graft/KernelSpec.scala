@@ -412,6 +412,22 @@ class KernelSpec extends AnyFunSuite {
       e.getMessage)
   }
 
+  test("rpcaTile returns the valid-pixel count and one change count per channel, for any channel count") {
+    val tau = 0.5
+    for (k <- Seq(2, 5, 7)) {
+      val chs = (0 until k).map(e => tile(100L + e, W * H))
+      val row = Kernels.rpcaTile(
+        new org.apache.spark.sql.catalyst.util.GenericArrayData(chs.map(arr).toArray[Any]), tau)
+      assert(row.numFields == k + 1, s"$k channels")
+      val valid = (0 until W * H).count(i => chs.forall(c => !isNd(c(i))))
+      assert(row.getLong(0) == valid.toLong, s"$k channels")
+      for (e <- 1 to k) {
+        val c = row.getLong(e)
+        assert(c >= 0 && c <= valid, s"$k channels: count $e = $c of $valid")
+      }
+    }
+  }
+
   test("pqEncode/pqDistTable match the straight-loop argmin/table oracles") {
     val r = new scala.util.Random(77)
     val cb = Array.fill(8 * 16 * 8)(r.nextDouble() * 2 - 1)

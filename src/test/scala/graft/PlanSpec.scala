@@ -6,6 +6,13 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.cells.CellIndex
 import graft.exprs.CellId
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+import org.apache.spark.sql.execution.debug.codegenStringSeq
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 
 /** Physical-plan shape assertions (the judge-facing scale story) + the native
  * codegen'd CellId expression vs its Column-composed reference. */
@@ -66,44 +73,46 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.linesIterator.exists(l => l.contains("Generate") && l.contains(" v#")), p.take(2000))
   }
 
-  test("kernel calls run inside compiled code; barrier kernels are evaluated once") {
-    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
-    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-    import org.apache.spark.sql.catalyst.expressions.Expression
-    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-    def kernelCalls(es: Seq[Expression]): Seq[String] = es.flatMap(_.collect {
-      case s: StaticInvoke if s.objectName == "graft.exprs.Kernels" => s.functionName
-    })
-    // (kernel calls in interpreted hosts, all kernel calls). A call is compiled
-    // inside a whole-stage codegen stage, or in the result expressions of an
-    // ObjectHashAggregate (no whole-stage codegen, but its result projection is a
-    // generated UnsafeProjection) — where the halo-assembled kernels of the
-    // windowed operators run.
-    def walk(p: SparkPlan, inCodegen: Boolean): (Seq[String], Seq[String]) = {
-      val parts: Seq[(Seq[String], Seq[String])] = p match {
-        case a: AdaptiveSparkPlanExec => Seq(walk(a.executedPlan, false))
-        case q: QueryStageExec => Seq(walk(q.plan, false))
-        case r: ReusedExchangeExec => Seq(walk(r.child, false))
-        case w: WholeStageCodegenExec => Seq(walk(w.child, true))
-        case i: InputAdapter => Seq(walk(i.child, false))
-        case _ =>
-          val own = kernelCalls(p.expressions)
-          val compiled = inCodegen || p.isInstanceOf[ObjectHashAggregateExec]
-          (if (compiled) Nil else own.map(k => s"${p.nodeName}: $k"), own) +:
-            (p.children.map(walk(_, inCodegen)) ++ p.subqueries.map(walk(_, false)))
-      }
-      (parts.flatMap(_._1), parts.flatMap(_._2))
+  private def kernelCalls(es: Seq[Expression]): Seq[String] = es.flatMap(_.collect {
+    case s: StaticInvoke if s.objectName == "graft.exprs.Kernels" => s.functionName
+  })
+
+  /** Every Kernels call in an executed plan: (host node, kernel, whether the host
+   * sits inside a whole-stage codegen stage). */
+  private def kernelSites(p: SparkPlan, inCodegen: Boolean = false): Seq[(SparkPlan, String, Boolean)] =
+    p match {
+      case a: AdaptiveSparkPlanExec => kernelSites(a.executedPlan)
+      case q: QueryStageExec => kernelSites(q.plan)
+      case r: ReusedExchangeExec => kernelSites(r.child)
+      case w: WholeStageCodegenExec => kernelSites(w.child, inCodegen = true)
+      case i: InputAdapter => kernelSites(i.child)
+      case _ =>
+        kernelCalls(p.expressions).map((p, _, inCodegen)) ++
+          p.children.flatMap(kernelSites(_, inCodegen)) ++ p.subqueries.flatMap(kernelSites(_))
     }
+
+  /** The query's executed plan after one run, so AQE has finalized every stage. */
+  private def finalPlan(name: String): SparkPlan = {
+    val df = SparkEntry.queries(name)(spark, sf)
+    df.queryExecution.toRdd.count()
+    df.queryExecution.executedPlan
+  }
+
+  test("kernel calls run inside compiled code; barrier kernels are evaluated once") {
+    // A call is compiled inside a whole-stage codegen stage, or in the result
+    // expressions of an ObjectHashAggregate (no whole-stage codegen, but its
+    // result projection is a generated UnsafeProjection) — where the
+    // halo-assembled kernels of the windowed operators run.
     for (name <- Seq("q_calibration_sigma0", "q_speckle_lee", "q_multilook",
         "q_terrain_correction", "q_chain_grd")) {
-      val df = SparkEntry.queries(name)(spark, sf)
-      df.queryExecution.toRdd.count() // AQE finalizes the executed plan
-      val (interpreted, all) = walk(df.queryExecution.executedPlan, false)
-      assert(all.nonEmpty, s"$name: no kernel call in the executed plan")
+      val plan = finalPlan(name)
+      val sites = kernelSites(plan)
+      val interpreted = sites.collect {
+        case (p, k, false) if !p.isInstanceOf[ObjectHashAggregateExec] => s"${p.nodeName}: $k"
+      }
+      assert(sites.nonEmpty, s"$name: no kernel call in the executed plan")
       assert(interpreted.isEmpty, s"$name: kernels outside compiled code: $interpreted\n" +
-        df.queryExecution.executedPlan.toString.take(3000))
+        plan.toString.take(3000))
     }
     for ((name, fn) <- Seq("q_terrain_correction" -> "zeroDopplerBisect",
         "q_multilook" -> "blockMeans")) {
@@ -111,6 +120,29 @@ class PlanSpec extends AnyFunSuite {
       val n = optimized.collectWithSubqueries { case p => kernelCalls(p.expressions) }
         .flatten.count(_ == fn)
       assert(n == 1, s"$name: $fn evaluated $n times\n${optimized.toString.take(3000)}")
+    }
+  }
+
+  test("benchmark queries generate JIT-able code; the SAT refine runs in whole-stage codegen") {
+    // HotSpot compiles no method over 8,000 bytes of bytecode (HugeMethodLimit):
+    // a larger generated method runs interpreted on every row
+    for (name <- Seq("q_span_cells", "q_topsar_split", "q_aoi_doc_tiles",
+        "q_calibration_sigma0", "q_speckle_lee", "q_multilook", "q_terrain_correction",
+        "q_chain_grd")) {
+      val plan = finalPlan(name)
+      val stages = codegenStringSeq(plan)
+      assert(stages.nonEmpty, s"$name: no whole-stage codegen\n${plan.toString.take(3000)}")
+      val huge = stages.collect { case (subtree, _, stats) if stats.maxMethodCodeSize > 8000 ||
+          stats.maxMethodCodeSize < 0 => // < 0: the stage did not compile
+        s"${stats.maxMethodCodeSize} bytes: ${subtree.linesIterator.next()}"
+      }
+      assert(huge.isEmpty, s"$name: generated methods over 8000 bytes: ${huge.mkString("; ")}")
+      if (name == "q_topsar_split" || name == "q_aoi_doc_tiles") {
+        val sat = kernelSites(plan).filter(_._2 == "quadIntersectsSAT")
+        assert(sat.nonEmpty, s"$name: no SAT kernel call\n${plan.toString.take(3000)}")
+        assert(sat.forall(_._3), s"$name: SAT kernel outside whole-stage codegen: " +
+          sat.map(_._1.nodeName).mkString(", "))
+      }
     }
   }
 
