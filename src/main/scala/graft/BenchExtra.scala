@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+
 /**
  * Optimization-round instrumentation main (guide §1: measure first; §1.4 noop
  * sink). NOT part of the frozen driver contract — Bench.scala is the graded
@@ -11,13 +14,34 @@ import java.nio.file.{Files, Paths}
  * Usage:
  *   sbt "runMain graft.BenchExtra explain <outDir> [q1 q2 ...]"
  *     dumps .explain("formatted") of each named query (default: every declared
- *     query) to <outDir>/<name>.txt
+ *     query) to <outDir>/<name>.txt, and its canonicalized optimized logical
+ *     plan (expression ids normalized, no codegen ids, commutative operands in
+ *     text order) to <outDir>/<name>.canon.txt, so plans diff across builds
+ *     without id noise
  *   sbt "runMain graft.BenchExtra time <reps> [q1 q2 ...]"
  *     times each named query (default: the Bench headline) with the noop sink —
  *     full evaluation of every column, no sink cost — and prints one JSON line
  *     {"name": [secs...]} per query.
  */
 object BenchExtra {
+
+  /** Puts the operands of every commutative expression of a canonicalized plan
+   * in text order. Canonicalization orders them by hashCode, and some
+   * expressions hash by identity (a StaticInvoke's target class, for one), so
+   * that order can change from one JVM to the next for the same plan. */
+  private def textOrdered(plan: LogicalPlan): LogicalPlan = plan.transform { case node =>
+    def outOfOrder(a: Expression, b: Expression) = a.toString > b.toString
+    node.transformExpressionsUp {
+      case e @ (_: MultiCommutativeOp | _: Add | _: Multiply | _: And | _: Or | _: BitwiseAnd |
+          _: BitwiseOr | _: BitwiseXor | _: Greatest | _: Least | _: EqualTo | _: EqualNullSafe) =>
+        e.withNewChildren(e.children.sortBy(_.toString))
+      case e: In => e.copy(list = e.list.sortBy(_.toString))
+      case GreaterThan(l, r) if outOfOrder(l, r) => LessThan(r, l)
+      case LessThan(l, r) if outOfOrder(l, r) => GreaterThan(r, l)
+      case GreaterThanOrEqual(l, r) if outOfOrder(l, r) => LessThanOrEqual(r, l)
+      case LessThanOrEqual(l, r) if outOfOrder(l, r) => GreaterThanOrEqual(r, l)
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -43,6 +67,9 @@ object BenchExtra {
             val plan = df.queryExecution.explainString(
               org.apache.spark.sql.execution.FormattedMode)
             Files.writeString(outDir.resolve(s"$name.txt"), plan)
+            Files.writeString(outDir.resolve(s"$name.canon.txt"),
+              textOrdered(df.queryExecution.optimizedPlan.canonicalized)
+                .treeString(verbose = true, maxFields = Int.MaxValue))
           } catch {
             case e: Exception =>
               Files.writeString(outDir.resolve(s"$name.ERROR.txt"), e.toString)
@@ -92,46 +119,6 @@ object BenchExtra {
             SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
           }
           println(f"""{"$name":{"build":$tBuild%.3f,"plan":$tPlan%.3f,"exec1":$tE1%.3f,"exec2":$tE2%.3f,"exec3":$tE3%.3f,"rebuild_exec":$tRebuild%.3f}}""")
-        }
-
-      // decompose q_terrain_correction: time the resolve stage alone vs the
-      // full resolve+gather+rollup query (both noop-sunk, 2nd-run numbers)
-      case "tcprobe" =>
-        def t(f: => Unit): Double = {
-          val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-        }
-        def noop(df: org.apache.spark.sql.DataFrame): Unit =
-          df.write.format("noop").mode("overwrite").save()
-        val resolve = () => ops.TerrainCorrection.resolveCellsProbe(spark, sfDir)
-        val full = () => SparkEntry.queries("q_terrain_correction")(spark, sfDir)
-        val r1 = t(noop(resolve())); val r2 = t(noop(resolve()))
-        val f1 = t(noop(full())); val f2 = t(noop(full()))
-        println(f"""{"resolve":[$r1%.3f,$r2%.3f],"full":[$f1%.3f,$f2%.3f]}""")
-
-      // decompose q_aoi_doc_tiles: selection side, span side, join, full
-      case "aoiprobe" =>
-        import org.apache.spark.sql.functions.{col, broadcast}
-        def t(f: => Unit): Double = {
-          val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-        }
-        def noop(df: org.apache.spark.sql.DataFrame): Unit =
-          df.write.format("noop").mode("overwrite").save()
-        def sel() = ops.Split.topsarSplitQuery(spark, sfDir)
-        def spans() = ops.Spans.parseMediaRef(ops.Spans.explodeSpans(
-          gen.Fixtures.table(spark, sfDir, "docs"))).where(col("kind") === "media")
-        def joined() = {
-          val s = sel().select("aoi_id", "scene_id", "subswath", "first_burst", "last_burst")
-          val sp = spans()
-          sp.join(broadcast(s), sp("scene_id") === s("scene_id") &&
-            sp("subswath") === s("subswath") &&
-            sp("burst_idx").between(col("first_burst"), col("last_burst")))
-        }
-        def full() = SparkEntry.queries("q_aoi_doc_tiles")(spark, sfDir)
-        Seq("sel" -> (() => noop(sel())), "spans" -> (() => noop(spans())),
-          "joined" -> (() => noop(joined())), "full" -> (() => noop(full()))).foreach {
-          case (n, f) =>
-            val a = t(f()); val b = t(f()); val c = t(f())
-            println(f"""{"$n":[$a%.3f,$b%.3f,$c%.3f]}""")
         }
 
       case other =>

@@ -1,5 +1,7 @@
 package graft
 
+import graft.gen.OracleFixtures.fx
+
 /**
  * DuckDB twins for the spatial-join-engine gates (geom/Spatial.scala,
  * lineage/Checkpoint.scala). All four are integer-exact or identical-IEEE
@@ -12,8 +14,6 @@ package graft
  */
 object GeoOracles {
 
-  private val FIX = "/root/repo/fixtures/sf0.01"
-  private def fx(t: String) = s"read_parquet('$FIX/$t.parquet/*.parquet')"
   private def h60(e: String) = s"('0x' || substr(md5($e), 1, 15))::BIGINT"
 
   /** q_spatial_knn: brute-force exact kNN (integer microdegree metric). */

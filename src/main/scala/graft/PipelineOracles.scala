@@ -1,5 +1,6 @@
 package graft
 
+import graft.gen.OracleFixtures.fx
 import graft.text.TextAnalysis
 
 /**
@@ -10,7 +11,6 @@ import graft.text.TextAnalysis
  */
 object PipelineOracles {
 
-  private val FIX = "/root/repo/fixtures/sf0.01"
   private def h60(e: String) = s"('0x' || substr(md5($e), 1, 15))::BIGINT"
 
   /** The same deterministic corpus augmentation as Dedup.augmented. */
@@ -490,9 +490,7 @@ object PipelineOracles {
        |  CAST(regexp_extract(content::VARCHAR, 'W=([0-9]+)', 1) AS INT) AS width,
        |  CAST(regexp_extract(content::VARCHAR, 'H=([0-9]+)', 1) AS INT) AS height,
        |  md5(content::VARCHAR) AS content_md5
-       |FROM read_parquet('$FIX/media.parquet/*.parquet') ORDER BY media_ref""".stripMargin
-
-  private val mediaFx = s"read_parquet('$FIX/media.parquet/*.parquet')"
+       |FROM ${fx("media")} ORDER BY media_ref""".stripMargin
 
   /** q_media_resize: aspect-preserving metadata fit into MaxDim. */
   val mediaResize: String =
@@ -500,7 +498,7 @@ object PipelineOracles {
        |  SELECT media_ref, kind,
        |    CAST(regexp_extract(content::VARCHAR, 'W=([0-9]+)', 1) AS INT) AS width,
        |    CAST(regexp_extract(content::VARCHAR, 'H=([0-9]+)', 1) AS INT) AS height
-       |  FROM $mediaFx),
+       |  FROM ${fx("media")}),
        |s AS (SELECT *,
        |  CASE WHEN greatest(width, height) > ${graft.media.Multimodal.MaxDim}
        |       THEN CAST(${graft.media.Multimodal.MaxDim} AS DOUBLE) / greatest(width, height)
@@ -515,7 +513,7 @@ object PipelineOracles {
     s"""WITH m AS (
        |  SELECT media_ref, content::VARCHAR AS header,
        |    least(4, greatest(1, CAST(octet_length(content) AS INT) // 32)) AS n
-       |  FROM $mediaFx),
+       |  FROM ${fx("media")}),
        |f AS (SELECT media_ref, header, unnest(range(n)) AS frame_idx FROM m)
        |SELECT media_ref, CAST(frame_idx AS INT) AS frame_idx,
        |  CAST(frame_idx * 32 AS INT) AS frame_off,
@@ -531,7 +529,7 @@ object PipelineOracles {
     val checksum = (0 until 16)
       .map(j => s"CAST(floor(0.031415926535897934 + (${fAt(j)}) * 1.0E6) AS BIGINT)")
       .mkString(" + ")
-    s"""WITH m AS (SELECT media_ref, md5(content::VARCHAR) AS h FROM $mediaFx)
+    s"""WITH m AS (SELECT media_ref, md5(content::VARCHAR) AS h FROM ${fx("media")})
        |SELECT media_ref, ${fAt(0)} AS f0, ${fAt(1)} AS f1, ${fAt(2)} AS f2, ${fAt(3)} AS f3,
        |  ($checksum) AS feat_sum_q
        |FROM m""".stripMargin

@@ -1,5 +1,6 @@
 package graft
 
+import graft.gen.OracleFixtures.fx
 import graft.model.Layout
 import graft.exprs.Kernels
 
@@ -10,8 +11,6 @@ import graft.exprs.Kernels
  */
 object SarOracles10 {
 
-  private val FIX = "/root/repo/fixtures/sf0.01"
-  private def fx(t: String) = s"read_parquet('$FIX/$t.parquet/*.parquet')"
   private val W = Layout.TileW
   private val N = Layout.TileW * Layout.TileH
   private val rollup = SarOracles.rollupSql(1.0)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.gen.OracleFixtures.fx
 import graft.model.Layout
 import graft.ops.{Detection, TerrainCorrection}
 
@@ -12,8 +13,6 @@ import graft.ops.{Detection, TerrainCorrection}
  */
 object SarOracles2 {
 
-  private val FIX = "/root/repo/fixtures/sf0.01"
-  private def fx(t: String) = s"read_parquet('$FIX/$t.parquet/*.parquet')"
   private val W = Layout.TileW
   private val N = Layout.TileW * Layout.TileH
 

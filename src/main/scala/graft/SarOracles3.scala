@@ -1,13 +1,12 @@
 package graft
 
+import graft.gen.OracleFixtures.fx
 import graft.model.Layout
 import graft.ops.Utility
 
 /** DuckDB oracles for the utility / detection / tracking operators. */
 object SarOracles3 {
 
-  private val FIX = "/root/repo/fixtures/sf0.01"
-  private def fx(t: String) = s"read_parquet('$FIX/$t.parquet/*.parquet')"
   private val W = Layout.TileW
   private val N = Layout.TileW * Layout.TileH
 

@@ -1,5 +1,6 @@
 package graft
 
+import graft.gen.OracleFixtures.fx
 import graft.model.Layout
 
 /**
@@ -15,8 +16,6 @@ import graft.model.Layout
  */
 object SarOraclesQuad {
 
-  private val FIX = "/root/repo/fixtures/sf0.01"
-  private def fx(t: String) = s"read_parquet('$FIX/$t.parquet/*.parquet')"
   private val W = Layout.TileW
   private val N = Layout.TileW * Layout.TileH
 

@@ -1,5 +1,6 @@
 package graft
 
+import graft.gen.OracleFixtures.fx
 import graft.model.Layout
 import graft.ops.TerrainCorrection
 
@@ -13,9 +14,6 @@ import graft.ops.TerrainCorrection
  * bisection trajectories on the curved orbit.
  */
 object SarOraclesTc {
-
-  private val FIX = "/root/repo/fixtures/sf0.01"
-  private def fx(t: String) = s"read_parquet('$FIX/$t.parquet/*.parquet')"
 
   /** One Lagrange interpolation block: from a relation carrying (lo, hi | tzd) +
    * the sv lists, compute xv/yv/zv/vxv/vyv/vzv at time `ttExpr`. */

@@ -1,5 +1,6 @@
 package graft
 
+import graft.gen.OracleFixtures.fx
 import graft.model.Layout
 
 /**
@@ -10,8 +11,6 @@ import graft.model.Layout
  */
 object SarOraclesUtil {
 
-  private val FIX = "/root/repo/fixtures/sf0.01"
-  private def fx(t: String) = s"read_parquet('$FIX/$t.parquet/*.parquet')"
   private val W = Layout.TileW
   private val N = Layout.TileW * Layout.TileH
   private def q6(e: String) = s"CAST(floor(0.031415926535897934 + ($e) * 1.0E6) AS BIGINT)"

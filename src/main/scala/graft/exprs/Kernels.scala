@@ -1240,46 +1240,6 @@ object Kernels {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  // ------------------------------------------------------------- window stats (shared)
-
-  /** Per-pixel window moment struct stream (n, s1, s2, cp) packed as 4 flat double
-   * arrays in one struct row — the native twin of Raster.windowStatsSql for operators
-   * that need raw moments (CFAR, flood, dual-pol). `haloM` is the halo margin the
-   * input was assembled with; `winR` (<= haloM) is the moment window radius, so ring
-   * statistics come from two calls (full minus guard) with EXACT dyadic sums. */
-  def windowMoments(halo: ArrayData, w: Int, h: Int, haloM: Int, winR: Int): InternalRow = {
-    val hw = w + 2 * haloM
-    val a = halo.toDoubleArray()
-    val nA = new Array[Double](w * h)
-    val s1A = new Array[Double](w * h)
-    val s2A = new Array[Double](w * h)
-    val cpA = new Array[Double](w * h)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        var n = 0; var s1 = 0.0; var s2 = 0.0
-        var dy = -winR
-        while (dy <= winR) {
-          var dx = -winR
-          while (dx <= winR) {
-            val v = a((y + haloM + dy) * hw + (x + haloM + dx))
-            if (!isNd(v)) { n += 1; s1 += v; s2 += v * v }
-            dx += 1
-          }
-          dy += 1
-        }
-        val k = y * w + x
-        nA(k) = n; s1A(k) = s1; s2A(k) = s2; cpA(k) = a((y + haloM) * hw + (x + haloM))
-        x += 1
-      }
-      y += 1
-    }
-    InternalRow(
-      UnsafeArrayData.fromPrimitiveArray(nA), UnsafeArrayData.fromPrimitiveArray(s1A),
-      UnsafeArrayData.fromPrimitiveArray(s2A), UnsafeArrayData.fromPrimitiveArray(cpA))
-  }
-
   /** Two-parameter CFAR over one margin-m halo (AdaptiveThresholdingOp.java:59-148):
    * background ring = (2m+1)^2 window minus the (2g+1)^2 guard, t = (cp - mean)/std,
    * returns struct(n_detect:long, max_t:double|null) for the tile. All sums are exact

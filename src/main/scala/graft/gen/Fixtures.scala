@@ -673,3 +673,14 @@ object Fixtures {
     df.write.mode("overwrite").parquet(path)
   }
 }
+
+/** The sf0.01 fixture tables as the DuckDB oracle SQL names them (sf0.01 is the
+ * verify scale). Derived from `Fixtures.Root`, so the oracles and the engine read
+ * one directory. A separate object keeps `Fixtures`' class file, and with it
+ * `generatorHash`, unchanged by edits here. */
+object OracleFixtures {
+  val Dir: String = s"${Fixtures.Root}/sf0.01"
+
+  /** DuckDB scan of one fixture table's parquet files. */
+  def fx(t: String): String = s"read_parquet('$Dir/$t.parquet/*.parquet')"
+}

@@ -657,7 +657,6 @@ object Spatial {
   val RasterXBits = 25
   val RasterYBits = 24
   private val SubX = 1L << (RasterXBits - CellIndex.DefaultLevel) // 2^14
-  private val SubY = 1L << (RasterYBits - CellIndex.DefaultLevel) // 2^13
 
   private def fpx(lon: Column): Column =
     least(lit((1L << RasterXBits) - 1), greatest(lit(0L),

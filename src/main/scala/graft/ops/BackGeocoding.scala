@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.gen.Fixtures
-import graft.model.Layout
 
 /**
  * Full-fidelity Back-Geocoding / DEM-assisted coregistration
@@ -66,25 +65,13 @@ object BackGeocoding {
       col("burst_first_line_time"), col("doppler_rate"), col("doppler_centroid"),
       col("reference_time"), col("azimuth_time_interval"), col("remod_ph"))
     // 4 bilinear corners over the DERAMPED secondary complex image
-    val corners = resolved
-      .withColumn("cyx", expr("explode(array(struct(0 AS cy, 0 AS cx), struct(0 AS cy, 1 AS cx), " +
-        "struct(1 AS cy, 0 AS cx), struct(1 AS cy, 1 AS cx)))"))
-      .withColumn("line", col("l0") + col("cyx.cy"))
-      .withColumn("samp", col("x0") + col("cyx.cx"))
-      .withColumn("w", expr("(CASE WHEN cyx.cy = 0 THEN 1.0D - wl ELSE wl END) * " +
-        "(CASE WHEN cyx.cx = 0 THEN 1.0D - wx ELSE wx END)"))
-      .withColumn("t_c", expr("burst_first_line_time + line * azimuth_time_interval"))
-      .withColumn("ph_c", expr(phaseSql("t_c")))
-      .withColumn("tile_y", expr(s"line div ${Layout.TileH}"))
-      .withColumn("tile_x", expr(s"samp div ${Layout.TileW}"))
-      .withColumn("px", expr(s"CAST((line % ${Layout.TileH}) * ${Layout.TileW} + samp % ${Layout.TileW} AS INT)"))
+    val corners = tc.bilinearCorners(resolved, _
+        .withColumn("t_c", expr("burst_first_line_time + line * azimuth_time_interval"))
+        .withColumn("ph_c", expr(phaseSql("t_c"))))
       .select("sec_scene_id", "subswath", "burst_idx", "tile_x", "tile_y",
         "scene_id", "ci", "cj", "m_subswath", "m_burst_idx", "px", "w", "ph_c",
         "lf_m", "xf_m", "lf_s", "xf_s", "remod_ph")
-    val secTiles = Fixtures.table(spark, sfDir, "tiles")
-      .where(col("pol") === "VV")
-      .select(col("scene_id").as("sec_scene_id"), col("subswath"), col("burst_idx"),
-        col("tile_x"), col("tile_y"), col("i"), col("q"))
+    val secTiles = tc.vvTiles(spark, sfDir).withColumnRenamed("scene_id", "sec_scene_id")
     val d = Raster.Dyadic
     def q6(e: String) = s"CAST(floor(0.031415926535897934 + ($e) * 1.0E6) AS BIGINT)"
     secTiles

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.exprs.KernelExprs
 import graft.gen.Fixtures
@@ -29,16 +28,7 @@ object Deburst {
    * when deburst follows a Split (the split product's burst list IS the
    * product, TOPSARDeburstOp computing targetFirstLineTime from it). */
   def fromBursts(spark: SparkSession, sfDir: String, burstsIn: DataFrame): DataFrame = {
-    val w = Window.partitionBy("scene_id", "subswath").orderBy("burst_idx")
-    val bursts = burstsIn
-      .select("scene_id", "subswath", "burst_idx", "burst_first_line_time", "burst_last_line_time")
-      .withColumn("own_from", // exclusive
-        when(lag("burst_idx", 1).over(w).isNull, lit(Double.NegativeInfinity))
-          .otherwise((lag("burst_last_line_time", 1).over(w) + col("burst_first_line_time")) / 2))
-      .withColumn("own_to", // inclusive
-        when(lead("burst_idx", 1).over(w).isNull, lit(Double.PositiveInfinity))
-          .otherwise((col("burst_last_line_time") + lead("burst_first_line_time", 1).over(w)) / 2))
-
+    val bursts = TerrainCorrection.burstOwnership(burstsIn)
     val grid = burstsIn
       .groupBy("scene_id", "subswath")
       .agg(min("burst_first_line_time").as("t0"), max("burst_last_line_time").as("t1"))
@@ -93,9 +83,6 @@ object Deburst {
     val tiles = Raster.intensityTiles(spark, sfDir)
       .withColumn("id", expr(s"transform(i, a -> if(a = ${Raster.ND} or isnan(a), ${Raster.ND}, floor(a * ${Raster.Dyadic}) / ${Raster.Dyadic}))"))
     val maxBurst = Layout.BurstsPerSubswath
-
-    // margin-masked per-pixel validity is a pure column condition on gx
-    def gxOf(tx: String, c: String) = s"($tx * $W + $c)"
 
     // ---- overlap strips: last `ov` rows of burst b (tile_y = lastTy) vs first
     // `ov` rows of burst b+1 (tile_y = 0), per tile_x ----

@@ -45,7 +45,7 @@ object Detection {
            |    if(a = $ND, b, if(b = $ND, a, (a + b) / 2D))))""".stripMargin)))
 
   /** CFAR: per-tile detection count + max test statistic. The background ring
-   * (9x9 minus the 3x3 guard) comes from TWO native windowMoments passes over one
+   * (9x9 minus the 3x3 guard) comes from one compiled Kernels.cfar pass over one
    * margin-4 halo — full minus guard, with EXACT dyadic sums (the previous 320-term
    * HOF expression blew past the codegen size limit once CollapseProject inlined it,
    * falling back to hours of interpreted eval). */

@@ -50,29 +50,15 @@ object Geocode {
   val SrgrPolyDeg = 5
   val SrgrPolyTol = 30.0
 
-  /**
-   * Polynomial SRGR (reference SRGROp.java:45): degree-SrgrPolyDeg LS fit of ground range
-   * vs normalized slant range over the swath samples. Normal-equation moments
-   * aggregate DISTRIBUTED per scene; only the 4x4 matrix reaches the driver
-   * (LinSolve). Gate: the cubic predicts the closed-form ground range to within
-   * SrgrPolyTol meters at probe samples (planted-recovery boolean, like
-   * q_warp_poly).
-   */
-  /** First orbit state vector per scene (the SRGR reference geometry). */
-  private[ops] def orbit0(spark: SparkSession, sfDir: String): DataFrame =
-    Fixtures.table(spark, sfDir, "orbit")
-      .withColumn("rn", row_number().over(Window.partitionBy("scene_id").orderBy("t_sec")))
-      .where(col("rn") === 1)
-      .select(col("scene_id"), col("x").as("orb_x"), col("z").as("orb_z"))
-
   /** Distributed degree-SrgrPolyDeg LS fit of ground range vs normalized slant
    * index per scene: moments aggregate distributed, the tiny (deg+1)^2 system
    * solves on the driver. Returns scene_id -> (n_samples, coefficients). */
   private[ops] def srgrPolyFit(spark: SparkSession, sfDir: String): Seq[(String, Long, Seq[Double])] = {
     val nS = 3 * Layout.SamplesPerBurst
+    val orbit0 = TerrainCorrection.orbit0(spark, sfDir).select("scene_id", "orb_x", "orb_z")
     val samples = spark.range(0L, nS)
       .select(col("id").cast("int").as("s_idx"))
-      .join(broadcast(orbit0(spark, sfDir)))
+      .join(broadcast(orbit0))
       .withColumn("r0", expr("sqrt(orb_x * orb_x + orb_z * orb_z)"))
       .withColumn("slant", col("r0") + col("s_idx") * TerrainCorrection.DR)
       .withColumn("u", col("s_idx") / lit((nS - 1).toDouble))
@@ -93,11 +79,19 @@ object Geocode {
     }
   }
 
+  /**
+   * Polynomial SRGR (reference SRGROp.java:45): degree-SrgrPolyDeg LS fit of ground range
+   * vs normalized slant range over the swath samples. Normal-equation moments
+   * aggregate DISTRIBUTED per scene; only the 4x4 matrix reaches the driver
+   * (LinSolve). Gate: the cubic predicts the closed-form ground range to within
+   * SrgrPolyTol meters at probe samples (planted-recovery boolean, like
+   * q_warp_poly).
+   */
   def srgrPolyQuery(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val nS = 3 * Layout.SamplesPerBurst
     val nb = SrgrPolyDeg + 1
-    val orbit0Df = orbit0(spark, sfDir)
+    val orbit0Df = TerrainCorrection.orbit0(spark, sfDir).select("scene_id", "orb_x", "orb_z")
     val fitted = srgrPolyFit(spark, sfDir).toDF("scene_id", "n_samples", "c")
     val probeIdx = Seq(0, 95, 191, 287, 383)
     fitted.join(broadcast(orbit0Df), Seq("scene_id"))
@@ -122,13 +116,7 @@ object Geocode {
     val scenes = Fixtures.table(spark, sfDir, "scenes").select("scene_id", "lon0", "lat0")
     val bursts = Fixtures.table(spark, sfDir, "bursts")
       .select("scene_id", "subswath", "burst_idx", "lon1", "lat1", "lon2", "lon4", "lat4")
-    val cells = spark.range(0L, tc.GridNx.toLong * tc.GridNy)
-      .select(expr(s"CAST(id div ${tc.GridNy} AS INT)").as("ci"),
-        expr(s"CAST(id % ${tc.GridNy} AS INT)").as("cj"))
-    val resolved = cells
-      .join(broadcast(scenes))
-      .withColumn("lon", col("lon0") + (col("ci") + 0.5) * tc.CellDeg)
-      .withColumn("lat", col("lat0") + (col("cj") + 0.5) * tc.CellDeg)
+    val resolved = tc.cellCentres(tc.targetCells(spark), scenes)
       .join(broadcast(bursts), Seq("scene_id"))
       .withColumn("vv", (col("lat") - col("lat1")) / (col("lat4") - col("lat1")))
       .withColumn("u", (col("lon") - col("lon1") - col("vv") * (col("lon4") - col("lon1"))) / (col("lon2") - col("lon1")))
@@ -142,21 +130,13 @@ object Geocode {
       .withColumn("tile_y", expr(s"line div ${Layout.TileH}"))
       .withColumn("px", expr(s"CAST((line % ${Layout.TileH}) * ${Layout.TileW} + x % ${Layout.TileW} AS INT)"))
       .select("scene_id", "subswath", "burst_idx", "tile_x", "tile_y", "ci", "cj", "line", "x", "px")
-    val tiles = Fixtures.table(spark, sfDir, "tiles")
-      .where(col("pol") === "VV")
-      .select(col("scene_id"), col("subswath"), col("burst_idx"),
-        col("tile_x"), col("tile_y"), col("i"), col("q"))
-    val d = Raster.Dyadic; val dv = Raster.DyadicV
-    tiles
+    tc.vvTiles(spark, sfDir)
       .join(broadcast(resolved), Seq("scene_id", "subswath", "burst_idx", "tile_x", "tile_y"))
       .withColumn("pa", expr("element_at(i, px + 1)"))
       .withColumn("pb", expr("element_at(q, px + 1)"))
       .select(col("scene_id"), col("ci"), col("cj"), col("subswath"), col("burst_idx"),
         col("line"), col("x"),
-        expr(
-          s"""round(if(pa = -9999.0D or pb = -9999.0D or isnan(pa) or isnan(pb), -9999.0D,
-             |  floor(((floor(pa * $d) / $d) * (floor(pa * $d) / $d)
-             |         + (floor(pb * $d) / $d) * (floor(pb * $d) / $d)) * $dv) / $dv), 6)""".stripMargin).as("value"))
+        expr(s"round(if(${tc.GatherNd}, -9999.0D, ${tc.GatherI}), 6)").as("value"))
   }
 
   /**
@@ -179,11 +159,7 @@ object Geocode {
 
   /** Slant-range sample -> ground range (closed-form inverse of the TC slant eq). */
   def srgrQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val orbit0 = Fixtures.table(spark, sfDir, "orbit")
-      .withColumn("rn", row_number().over(Window.partitionBy("scene_id").orderBy("t_sec")))
-      .where(col("rn") === 1)
-      .select(col("scene_id"), col("x").as("orb_x"), col("z").as("orb_z"))
-    orbit0
+    TerrainCorrection.orbit0(spark, sfDir).select("scene_id", "orb_x", "orb_z")
       .withColumn("s_idx", explode(sequence(lit(0), lit(3 * Layout.SamplesPerBurst - 1))))
       .withColumn("r0", expr("sqrt(orb_x * orb_x + orb_z * orb_z)"))
       .withColumn("slant", col("r0") + col("s_idx") * TerrainCorrection.DR)

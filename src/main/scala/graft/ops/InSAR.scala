@@ -137,11 +137,7 @@ object InSAR {
   def phaseToElevationQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val spb = Layout.SamplesPerBurst
     val bx = TerrainCorrection.SecBx; val bz = TerrainCorrection.SecBz
-    val orbit0 = Fixtures.table(spark, sfDir, "orbit")
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("scene_id").orderBy("t_sec")))
-      .where(col("rn") === 1)
-      .select(col("scene_id"), col("x").as("orb_x"), col("z").as("orb_z"))
+    val orbit0 = TerrainCorrection.orbit0(spark, sfDir).select("scene_id", "orb_x", "orb_z")
     // per-column look geometry (computeLookAngles; slantRangeTime/incidence TPG analogs)
     val alphaSql =
       s"""(-(sr * sin_inc) / (2 * (2 * pi() / $Wavelength)

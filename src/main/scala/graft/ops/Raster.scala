@@ -43,20 +43,6 @@ object Raster {
         col("i"), col("q"), Dyadic.toDouble, DyadicV.toDouble))
 
   /**
-   * Halo exchange: for each tile, gather the 9 (self + 8 neighbor) intensity arrays of the
-   * same (scene, subswath, pol, burst) raster and assemble one (W+2)x(H+2) halo array.
-   * Out-of-raster cells become the no-data sentinel (reference getNeighborValues semantics:
-   * out-of-image -> noDataValue, :95-144). The raster bounds are the burst raster
-   * (TilesX*W x TilesY*H).
-   *
-   * Implementation: each source tile is broadcast to its 9 target positions (one narrow
-   * explode), then a single hash aggregation per target key pivots the 9 roles into
-   * columns. One shuffle total, independent of window size.
-   */
-  def withHalo(tiles: DataFrame): DataFrame =
-    withHaloMulti(tiles, Seq("v"), 1).withColumnRenamed("halo_v", "halo")
-
-  /**
    * Generalized halo exchange over several per-pixel value arrays at once. Plan shape
    * (the scale-critical path — every windowed operator rides on it):
    *  1. each tile emits 9 contribution rows, but neighbors are SLICED to the
@@ -100,30 +86,6 @@ object Raster {
   /** element_at into the margin-1 halo at window offset (dy, dx) of pixel k. */
   def haloEl(dy: Int, dx: Int): String =
     s"element_at(halo, CAST((k div $W + 1 + $dy) * $HW + (k % $W + 1 + $dx) + 1 AS INT))"
-
-  /**
-   * SQL: per-pixel window moments over the margin-1 halo — struct(n, s1, s2, cp),
-   * n = valid count, s1/s2 = sum / sum-of-squares of valid neighbors in (dy, dx)
-   * row-major order, cp = raw center (the reference uses the *raw* center,
-   * Lee.java:185). One neighbor-array build per pixel, then aggregate folds —
-   * minimal expression-node count for the interpreted HOF path.
-   */
-  def windowStatsSql: String = {
-    val els = (for (dy <- -1 to 1; dx <- -1 to 1) yield haloEl(dy, dx)).mkString(", ")
-    s"""transform(sequence(0, ${W * H - 1}), k ->
-       |  aggregate(array($els),
-       |    struct(0 AS n, 0D AS s1, 0D AS s2, CAST(${haloEl(0, 0)} AS DOUBLE) AS cp),
-       |    (a, x) -> if(isnan(x) or x = $ND, a,
-       |      struct(a.n + 1 AS n, a.s1 + x AS s1, a.s2 + x * x AS s2, a.cp AS cp))))""".stripMargin
-  }
-
-  /** SQL: per-pixel sorted valid-neighbor arrays (median only — pays for its sort
-   * and array allocation here, not in the shared stats pass). */
-  def windowSortedSql: String = {
-    val els = (for (dy <- -1 to 1; dx <- -1 to 1) yield haloEl(dy, dx)).mkString(", ")
-    s"""transform(sequence(0, ${W * H - 1}), k ->
-       |  array_sort(filter(array($els), nv -> not(isnan(nv) or nv = $ND))))""".stripMargin
-  }
 
   /** Per-tile rollup of a filtered array named `out` (no-data excluded). The compared
    * quantities are INTEGER-EXACT: each per-pixel value (a deterministic double both

@@ -21,25 +21,6 @@ object Split {
   private def burstXs = Seq(col("lon1"), col("lon2"), col("lon3"), col("lon4"))
   private def burstYs = Seq(col("lat1"), col("lat2"), col("lat3"), col("lat4"))
 
-  /** aoi x bursts exact intersection pairs via cell prefilter + SAT. */
-  def aoiBurstPairs(aoi: DataFrame, bursts: DataFrame): DataFrame = {
-    val aoiCells = aoi
-      .withColumn("cell", explode(CellIndex.coverCol(
-        col("lon_min"), col("lat_min"), col("lon_max"), col("lat_max"))))
-    val burstCells = bursts
-      .withColumn("blon_min", least(burstXs: _*))
-      .withColumn("blon_max", greatest(burstXs: _*))
-      .withColumn("blat_min", least(burstYs: _*))
-      .withColumn("blat_max", greatest(burstYs: _*))
-      .withColumn("cell", explode(CellIndex.coverCol(
-        col("blon_min"), col("blat_min"), col("blon_max"), col("blat_max"))))
-    val (rx, ry) = Geo.rectCorners(col("lon_min"), col("lat_min"), col("lon_max"), col("lat_max"))
-    burstCells.join(broadcast(aoiCells), Seq("cell"))
-      .where(Geo.quadIntersectsSAT(rx, ry, burstXs, burstYs))
-      .select("aoi_id", "scene_id", "subswath", "burst_idx")
-      .distinct()
-  }
-
   /** Query: burst selection per (aoi, scene, subswath) with min..max contiguity.
    * The cover-cell duplicates are collapsed INSIDE the aggregation (distinct
    * burst_idx per group) rather than by a standalone .distinct(): one exchange

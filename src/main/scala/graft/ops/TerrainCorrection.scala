@@ -16,9 +16,11 @@ import graft.model.Layout
  * with burst ownership (the deburst midTime rule), (5) gather the source pixel.
  *
  * Spark shape: the map grid is generated (no input scan), DEM + orbit + burst tables
- * broadcast; the only shuffle is the final *gather join* keyed by tile id against the
- * tile table — range-partitionable, AQE-skew-splittable, exactly the north rule's
- * geometry-keyed redistribution.
+ * broadcast. The *gather join* keyed by tile id then broadcasts the tile side (one
+ * row per tile) onto the resolved corner rows (`tileGather`), and the per-cell
+ * rollup after it is the shuffle. Each geocoding step the Range-Doppler family
+ * shares (orbit0, burstOwnership, targetCells, sourcePosition, bilinearCorners,
+ * vvTiles, the gathered-intensity SQL) is defined once here.
  */
 object TerrainCorrection {
 
@@ -31,44 +33,46 @@ object TerrainCorrection {
   val DR = 520.0 // slant-range sample spacing (m)
   val DemStep = 0.05
 
-  /** target grid with DEM height and scene/orbit constants joined (all broadcastable). */
-  def targetGrid(spark: SparkSession, sfDir: String): DataFrame = {
-    val scenes = Fixtures.table(spark, sfDir, "scenes")
-      .select("scene_id", "first_line_time", "azimuth_time_interval", "lon0", "lat0")
-    val orbit0 = Fixtures.table(spark, sfDir, "orbit")
+  /** First orbit state vector per scene: the linear-ephemeris reference geometry
+   * (time, position, along-track velocity). Callers select the columns they use. */
+  private[ops] def orbit0(spark: SparkSession, sfDir: String): DataFrame =
+    Fixtures.table(spark, sfDir, "orbit")
       .withColumn("rn", row_number().over(Window.partitionBy("scene_id").orderBy("t_sec")))
       .where(col("rn") === 1)
       .select(col("scene_id"), col("t_sec").as("orb_t"), col("x").as("orb_x"),
         col("y").as("orb_y"), col("z").as("orb_z"), col("vy").as("orb_vy"))
-    val dem = Fixtures.table(spark, sfDir, "dem")
-      .select("scene_id", "lat_idx", "lon_idx", "height")
-    // the grid is generated DISTRIBUTED: spark.range partitions the cell ids across
-    // the cluster and the tiny scene/orbit/DEM dims broadcast onto them — exploding
-    // off the one-file scenes table ran the whole geometry pipeline in a single task
-    // (the scaling job's serial floor, BENCH r3 probe)
-    val cells = spark.range(0L, GridNx.toLong * GridNy)
+
+  /** The generated (ci, cj) target map grid. It is generated DISTRIBUTED:
+   * spark.range partitions the cell ids across the cluster and the tiny
+   * scene/orbit/DEM dims broadcast onto them — exploding off the one-file scenes
+   * table ran the whole geometry pipeline in a single task (the scaling job's
+   * serial floor, BENCH r3 probe). */
+  private[ops] def targetCells(spark: SparkSession): DataFrame =
+    spark.range(0L, GridNx.toLong * GridNy)
       .select(expr(s"CAST(id div $GridNy AS INT)").as("ci"),
         expr(s"CAST(id % $GridNy AS INT)").as("cj"))
-    cells.join(broadcast(scenes.join(orbit0, Seq("scene_id"))))
+
+  /** Grid cells joined to the broadcast per-scene `dims` (which carry the scene
+   * origin lon0/lat0), with each cell's centre lon/lat. */
+  private[ops] def cellCentres(cells: DataFrame, dims: DataFrame): DataFrame =
+    cells.join(broadcast(dims))
       .withColumn("lon", col("lon0") + (col("ci") + 0.5) * CellDeg)
       .withColumn("lat", col("lat0") + (col("cj") + 0.5) * CellDeg)
+
+  /** target grid with DEM height and scene/orbit constants joined (all broadcastable). */
+  def targetGrid(spark: SparkSession, sfDir: String): DataFrame = {
+    val scenes = Fixtures.table(spark, sfDir, "scenes")
+      .select("scene_id", "first_line_time", "azimuth_time_interval", "lon0", "lat0")
+    val dem = Fixtures.table(spark, sfDir, "dem")
+      .select("scene_id", "lat_idx", "lon_idx", "height")
+    cellCentres(targetCells(spark), scenes.join(orbit0(spark, sfDir), Seq("scene_id")))
       .withColumn("lat_idx", expr(s"CAST(round((lat - lat0) / $DemStep, 0) AS INT)"))
       .withColumn("lon_idx", expr(s"CAST(round((lon - lon0) / $DemStep, 0) AS INT)"))
       .join(broadcast(dem), Seq("scene_id", "lat_idx", "lon_idx"))
   }
 
   /** target cells resolved to (subswath, burst, tile, pixel) source keys. */
-  def resolvedTargets(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy("scene_id", "subswath").orderBy("burst_idx")
-    val bursts = Fixtures.table(spark, sfDir, "bursts")
-      .select("scene_id", "subswath", "burst_idx", "burst_first_line_time", "burst_last_line_time")
-      .withColumn("own_from",
-        when(lag("burst_idx", 1).over(w).isNull, lit(Double.NegativeInfinity))
-          .otherwise((lag("burst_last_line_time", 1).over(w) + col("burst_first_line_time")) / 2))
-      .withColumn("own_to",
-        when(lead("burst_idx", 1).over(w).isNull, lit(Double.PositiveInfinity))
-          .otherwise((col("burst_last_line_time") + lead("burst_first_line_time", 1).over(w)) / 2))
-
+  def resolvedTargets(spark: SparkSession, sfDir: String): DataFrame =
     targetGrid(spark, sfDir)
       // local tangent coords (m); zero-Doppler solve on the linear ephemeris
       .withColumn("tx_m", (col("lon") - col("lon0")) * XMetersPerDeg)
@@ -81,7 +85,7 @@ object TerrainCorrection {
       .where(col("s_idx") >= 0 && col("s_idx") < 3 * Layout.SamplesPerBurst)
       .withColumn("subswath", concat(lit("IW"), expr(s"s_idx div ${Layout.SamplesPerBurst} + 1")))
       .withColumn("x_in_sw", expr(s"CAST(s_idx % ${Layout.SamplesPerBurst} AS INT)"))
-      .join(broadcast(bursts), Seq("scene_id", "subswath"))
+      .join(broadcast(burstOwnership(Fixtures.table(spark, sfDir, "bursts"))), Seq("scene_id", "subswath"))
       .where(col("t_zd") > col("own_from") && col("t_zd") <= col("own_to") &&
         col("t_zd") >= col("burst_first_line_time") - col("azimuth_time_interval") / 2 &&
         col("t_zd") <= col("burst_last_line_time") + col("azimuth_time_interval") / 2)
@@ -91,7 +95,6 @@ object TerrainCorrection {
       .withColumn("tile_y", expr(s"local_line div ${Layout.TileH}"))
       .withColumn("tile_x", expr(s"x_in_sw div ${Layout.TileW}"))
       .withColumn("px", expr(s"CAST((local_line % ${Layout.TileH}) * ${Layout.TileW} + x_in_sw % ${Layout.TileW} AS INT)"))
-  }
 
   /**
    * Apply-Orbit-File (reference ApplyOrbitFileOp.java:60-101): degree-3 Lagrange
@@ -202,12 +205,7 @@ object TerrainCorrection {
   def terrainFlatteningQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val scenes = Fixtures.table(spark, sfDir, "scenes")
       .select("scene_id", "azimuth_time_interval", "lon0", "lat0")
-    val orbit0 = Fixtures.table(spark, sfDir, "orbit")
-      .withColumn("rn", row_number().over(Window.partitionBy("scene_id").orderBy("t_sec")))
-      .where(col("rn") === 1)
-      .select(col("scene_id"), col("t_sec").as("orb_t"), col("x").as("orb_x"),
-        col("y").as("orb_y"), col("z").as("orb_z"), col("vy").as("orb_vy"))
-    val dims = broadcast(scenes.join(orbit0, Seq("scene_id")))
+    val sceneOrbit = scenes.join(orbit0(spark, sfDir), Seq("scene_id"))
     val dem = Fixtures.table(spark, sfDir, "dem").select("scene_id", "lat_idx", "lon_idx", "height")
     // one broadcast self-alias of the DEM per facet corner (inner joins = the
     // reference's demNoDataValue corner guard, computeIlluminatedArea:1306-1312)
@@ -216,13 +214,8 @@ object TerrainCorrection {
           col("lon_idx").as("d_lo"), col("height").as(h))),
         col("scene_id") === col("d_sid") && col(liCol) === col("d_li") && col(loCol) === col("d_lo"))
         .drop("d_sid", "d_li", "d_lo")
-    val cells = spark.range(0L, GridNx.toLong * GridNy)
-      .select(expr(s"CAST(id div $GridNy AS INT)").as("ci"),
-        expr(s"CAST(id % $GridNy AS INT)").as("cj"))
     val withCorners = corner(corner(corner(corner(
-      cells.join(dims)
-        .withColumn("lon", col("lon0") + (col("ci") + 0.5) * CellDeg)
-        .withColumn("lat", col("lat0") + (col("cj") + 0.5) * CellDeg)
+      cellCentres(targetCells(spark), sceneOrbit)
         // nearest-neighbour DEM resample indices for the 4 facet corners
         .withColumn("li0", expr(s"CAST(round((lat - lat0) / $DemStep, 0) AS INT)"))
         .withColumn("lo0", expr(s"CAST(round((lon - lon0) / $DemStep, 0) AS INT)"))
@@ -270,30 +263,10 @@ object TerrainCorrection {
       .withColumn("r0", expr("sqrt(orb_x * orb_x + orb_z * orb_z)"))
       .withColumn("t_zd", col("orb_t") + (col("ty0") - col("orb_y")) / col("orb_vy"))
       .withColumn("xfg", expr(s"(slant - r0) / $DR"))
-      .where(col("xfg") >= 0 && col("xfg") < 3 * Layout.SamplesPerBurst - 1)
-      .withColumn("s0", expr("CAST(floor(xfg) AS INT)"))
-      .withColumn("x0", expr(s"CAST(s0 % ${Layout.SamplesPerBurst} AS INT)"))
-      .where(col("x0") < Layout.SamplesPerBurst - 1) // both range corners in one subswath
-      .withColumn("subswath", concat(lit("IW"), expr(s"s0 div ${Layout.SamplesPerBurst} + 1")))
-      .withColumn("wx", col("xfg") - expr("floor(xfg)"))
-      .join(broadcast(burstOwnership(spark, sfDir)), Seq("scene_id", "subswath"))
-      .where(col("t_zd") > col("own_from") && col("t_zd") <= col("own_to"))
-      .withColumn("lf", (col("t_zd") - col("burst_first_line_time")) / col("azimuth_time_interval"))
-      .where(col("lf") >= 0 && col("lf") < Layout.LinesPerBurst - 1)
-      .withColumn("l0", expr("CAST(floor(lf) AS INT)"))
-      .withColumn("wl", col("lf") - expr("floor(lf)"))
+      .transform(sourcePosition(spark, sfDir, "xfg"))
     // bilinear 4-neighbour area scatter (saveIlluminationArea:1181-1226); each
     // weighted contribution quantized pre-sum -> exact order-independent combine
-    val pxSums = resolved
-      .withColumn("cyx", expr("explode(array(struct(0 AS cy, 0 AS cx), struct(0 AS cy, 1 AS cx), " +
-        "struct(1 AS cy, 0 AS cx), struct(1 AS cy, 1 AS cx)))"))
-      .withColumn("line", col("l0") + col("cyx.cy"))
-      .withColumn("samp", col("x0") + col("cyx.cx"))
-      .withColumn("w", expr("(CASE WHEN cyx.cy = 0 THEN 1.0D - wl ELSE wl END) * " +
-        "(CASE WHEN cyx.cx = 0 THEN 1.0D - wx ELSE wx END)"))
-      .withColumn("tile_y", expr(s"line div ${Layout.TileH}"))
-      .withColumn("tile_x", expr(s"samp div ${Layout.TileW}"))
-      .withColumn("px", expr(s"CAST((line % ${Layout.TileH}) * ${Layout.TileW} + samp % ${Layout.TileW} AS INT)"))
+    val pxSums = bilinearCorners(resolved)
       .groupBy("scene_id", "subswath", "burst_idx", "tile_y", "tile_x", "px")
       .agg(count(lit(1)).as("n_facets"),
         sum(expr("CAST(floor(0.031415926535897934 + w * gamma_area * 1.0E2) AS BIGINT)")).as("garea_q"),
@@ -301,13 +274,8 @@ object TerrainCorrection {
     // normalization (outputNormalizedImage:896-958): gamma0 = beta0 / (simVal/aBeta)
     // where simVal > threshold * aBeta / tan(inc); beta0 from the source tiles via
     // the rdGeocode gather discipline (broadcast the grid-bounded aggregate side)
-    val d = Raster.Dyadic; val dv = Raster.DyadicV
-    val tiles = Fixtures.table(spark, sfDir, "tiles")
-      .where(col("pol") === "VV")
-      .select(col("scene_id"), col("subswath"), col("burst_idx"),
-        col("tile_x"), col("tile_y"), col("i"), col("q"))
-    tiles
-      .join(broadcast(pxSums.join(dims, Seq("scene_id"))),
+    vvTiles(spark, sfDir)
+      .join(broadcast(pxSums.join(broadcast(sceneOrbit), Seq("scene_id"))),
         Seq("scene_id", "subswath", "burst_idx", "tile_x", "tile_y"))
       .withColumn("pa", expr("element_at(i, px + 1)"))
       .withColumn("pb", expr("element_at(q, px + 1)"))
@@ -317,11 +285,9 @@ object TerrainCorrection {
         s"sqrt(orb_x * orb_x + orb_z * orb_z) + ((CAST(substring(subswath, 3, 1) AS INT) - 1) * ${Layout.SamplesPerBurst} + tile_x * ${Layout.TileW} + px % ${Layout.TileW}) * $DR"))
       .withColumn("tan_inc", expr("sqrt(greatest(0D, slant_px * slant_px - orb_z * orb_z)) / orb_z"))
       .withColumn("g0_q", expr(
-        s"""if(pa = -9999.0D or pb = -9999.0D or isnan(pa) or isnan(pb)
+        s"""if($GatherNd
            |   or sim_val <= $TfThreshold * a_beta / tan_inc, CAST(null AS BIGINT),
-           |  CAST(floor(0.031415926535897934 +
-           |    (floor(((floor(pa * $d) / $d) * (floor(pa * $d) / $d)
-           |      + (floor(pb * $d) / $d) * (floor(pb * $d) / $d)) * $dv) / $dv)
+           |  CAST(floor(0.031415926535897934 + ($GatherI)
            |    / (sim_val / a_beta) * 1.0E4) AS BIGINT))""".stripMargin))
       .groupBy("scene_id", "subswath", "burst_idx", "tile_y", "tile_x")
       .agg(count(lit(1)).as("n_px"), sum("n_facets").as("n_facets"),
@@ -393,14 +359,11 @@ object TerrainCorrection {
   /** Scan cells with layover/shadow flags — shared by the rollup and scatter gates. */
   private def lsMaskedCells(spark: SparkSession, sfDir: String): DataFrame = {
     val scenes = Fixtures.table(spark, sfDir, "scenes").select("scene_id")
-    val orbit0 = Fixtures.table(spark, sfDir, "orbit")
-      .withColumn("rn", row_number().over(Window.partitionBy("scene_id").orderBy("t_sec")))
-      .where(col("rn") === 1)
-      .select(col("scene_id"), col("x").as("orb_x"), col("z").as("orb_z"))
     val cells = spark.range(0L, LsNx.toLong * LsNy)
       .select(expr(s"CAST(id % $LsNx AS INT)").as("ci"),
         expr(s"CAST(id div $LsNx AS INT)").as("cj"))
-    val g = cells.join(broadcast(scenes.join(orbit0, Seq("scene_id"))))
+    val g = cells.join(broadcast(scenes.join(
+        orbit0(spark, sfDir).select("scene_id", "orb_x", "orb_z"), Seq("scene_id"))))
       .withColumn("h", expr(
         "100.0 + 4000.0 * greatest(0.0, 1.0 - abs(ci - 80) / 20.0) + 20.0 * cos(cj * 0.3)"))
       .withColumn("tx", expr("ci * 50.0"))
@@ -469,17 +432,99 @@ object TerrainCorrection {
         expr("transform(svs, e -> e.vy)").as("vys"),
         expr("transform(svs, e -> e.vz)").as("vzs"))
 
-  /** Burst azimuth-ownership intervals (deburst midTime rule), broadcastable. */
-  private def burstOwnership(spark: SparkSession, sfDir: String): DataFrame = {
+  /** Burst azimuth-ownership intervals (deburst midTime rule), broadcastable: each
+   * burst owns the times in (own_from, own_to], bounded by the mid-times of its
+   * overlaps with the previous and next burst of its subswath. Takes the bursts
+   * frame, so the chain Deburst can pass its Split-pruned bursts. */
+  private[ops] def burstOwnership(bursts: DataFrame): DataFrame = {
     val w = Window.partitionBy("scene_id", "subswath").orderBy("burst_idx")
-    Fixtures.table(spark, sfDir, "bursts")
+    bursts
       .select("scene_id", "subswath", "burst_idx", "burst_first_line_time", "burst_last_line_time")
-      .withColumn("own_from",
+      .withColumn("own_from", // exclusive
         when(lag("burst_idx", 1).over(w).isNull, lit(Double.NegativeInfinity))
           .otherwise((lag("burst_last_line_time", 1).over(w) + col("burst_first_line_time")) / 2))
-      .withColumn("own_to",
+      .withColumn("own_to", // inclusive
         when(lead("burst_idx", 1).over(w).isNull, lit(Double.PositiveInfinity))
           .otherwise((col("burst_last_line_time") + lead("burst_first_line_time", 1).over(w)) / 2))
+  }
+
+  /** Fractional range sample `xf` (a column of `df`, which also carries the
+   * zero-Doppler time t_zd) -> source position: the subswath, in-subswath sample
+   * x0 with range weight wx, the owning burst and its fractional line lf, line l0
+   * with azimuth weight wl. Keeps the positions whose 2x2 bilinear footprint lies
+   * in one subswath and one burst. */
+  private def sourcePosition(spark: SparkSession, sfDir: String, xf: String)(df: DataFrame): DataFrame =
+    df.where(col(xf) >= 0 && col(xf) < 3 * Layout.SamplesPerBurst - 1)
+      .withColumn("s0", expr(s"CAST(floor($xf) AS INT)"))
+      .withColumn("x0", expr(s"CAST(s0 % ${Layout.SamplesPerBurst} AS INT)"))
+      .where(col("x0") < Layout.SamplesPerBurst - 1) // both range corners in one subswath
+      .withColumn("subswath", concat(lit("IW"), expr(s"s0 div ${Layout.SamplesPerBurst} + 1")))
+      .withColumn("wx", col(xf) - expr(s"floor($xf)"))
+      .join(broadcast(burstOwnership(Fixtures.table(spark, sfDir, "bursts"))), Seq("scene_id", "subswath"))
+      .where(col("t_zd") > col("own_from") && col("t_zd") <= col("own_to"))
+      .withColumn("lf", (col("t_zd") - col("burst_first_line_time")) / col("azimuth_time_interval"))
+      .where(col("lf") >= 0 && col("lf") < Layout.LinesPerBurst - 1) // both az corners in burst
+      .withColumn("l0", expr("CAST(floor(lf) AS INT)"))
+      .withColumn("wl", col("lf") - expr("floor(lf)"))
+
+  /** The 4 bilinear corners of each source position (l0, x0, wl, wx): one row per
+   * corner cyx = (cy, cx) with its burst-local (line, samp), weight w, and source
+   * tile key (tile_y, tile_x, px). `at` runs before the key is taken from (line,
+   * samp): SARSim-TC shifts and bounds the corners there, Back-Geocoding adds each
+   * corner's deramp phase. For dyadic wl and wx the four weights sum exactly to 1. */
+  private[graft] def bilinearCorners(df: DataFrame,
+      at: DataFrame => DataFrame = identity): DataFrame =
+    at(df
+      .withColumn("cyx", expr("explode(array(struct(0 AS cy, 0 AS cx), struct(0 AS cy, 1 AS cx), " +
+        "struct(1 AS cy, 0 AS cx), struct(1 AS cy, 1 AS cx)))"))
+      .withColumn("line", col("l0") + col("cyx.cy"))
+      .withColumn("samp", col("x0") + col("cyx.cx"))
+      .withColumn("w", expr("(CASE WHEN cyx.cy = 0 THEN 1.0D - wl ELSE wl END) * " +
+        "(CASE WHEN cyx.cx = 0 THEN 1.0D - wx ELSE wx END)")))
+      .withColumn("tile_y", expr(s"line div ${Layout.TileH}"))
+      .withColumn("tile_x", expr(s"samp div ${Layout.TileW}"))
+      .withColumn("px", expr(s"CAST((line % ${Layout.TileH}) * ${Layout.TileW} + samp % ${Layout.TileW} AS INT)"))
+
+  /** The VV i/q tile side of a gather (`table`: tiles, or tiles_sec for SARSim-TC). */
+  private[ops] def vvTiles(spark: SparkSession, sfDir: String, table: String = "tiles"): DataFrame =
+    Fixtures.table(spark, sfDir, table)
+      .where(col("pol") === "VV")
+      .select(col("scene_id"), col("subswath"), col("burst_idx"),
+        col("tile_x"), col("tile_y"), col("i"), col("q"))
+
+  /** No-data/NaN guard over a gathered pixel's (pa, pb) = (i, q) pair. */
+  private[ops] val GatherNd = "pa = -9999.0D or pb = -9999.0D or isnan(pa) or isnan(pb)"
+
+  /** Dyadic intensity of a gathered (pa, pb) pair: the Raster.intensity snap,
+   * restated verbatim by the DuckDB twins. */
+  private[ops] val GatherI: String = {
+    val d = Raster.Dyadic; val dv = Raster.DyadicV
+    s"floor(((floor(pa * $d) / $d) * (floor(pa * $d) / $d) + (floor(pb * $d) / $d) * (floor(pb * $d) / $d)) * $dv) / $dv"
+  }
+
+  /** The gather join: each corner row meets its source tile on the tile key.
+   * The TILE side is broadcast: it is the small row set (one row per tile vs 4
+   * corner rows per resolved map cell), so the per-pass driver collect + hash
+   * relation build shrinks ~300x in rows and the resolve side streams through
+   * the join instead of being collected into a broadcast (guide §3.1: broadcast
+   * the side that fits — rows, not just bytes, set the build cost). */
+  private def tileGather(corners: DataFrame, tiles: DataFrame): DataFrame =
+    corners.join(broadcast(tiles), Seq("scene_id", "subswath", "burst_idx", "tile_x", "tile_y"))
+
+  /** Gather each corner's source pixel and sum the quantized, weighted dyadic
+   * intensities per target cell (n_corners valid corners, value_q). With
+   * `normalize`, each term is divided by snorm^2 at a finer quantum. */
+  private def gatherCells(corners: DataFrame, tiles: DataFrame, normalize: Boolean): DataFrame = {
+    val (factor, quantum) =
+      if (normalize) ("/ (snorm * snorm)", "1E9") else ("", "1E6")
+    tileGather(corners, tiles)
+      .withColumn("pa", expr("element_at(i, px + 1)"))
+      .withColumn("pb", expr("element_at(q, px + 1)"))
+      .withColumn("term_q", expr(
+        s"""if($GatherNd, CAST(null AS BIGINT),
+           |  CAST(floor(0.031415926535897934 + w * ($GatherI) $factor * $quantum) AS BIGINT))""".stripMargin))
+      .groupBy("scene_id", "ci", "cj", "subswath", "burst_idx")
+      .agg(count(col("term_q")).as("n_corners"), sum(col("term_q")).as("value_q"))
   }
 
   /**
@@ -528,7 +573,7 @@ object TerrainCorrection {
       .mkString(" + ")
     cells
       .join(broadcast(coeffs), Seq("scene_id"))
-      .join(broadcast(Geocode.orbit0(spark, sfDir)), Seq("scene_id"))
+      .join(broadcast(orbit0(spark, sfDir).select("scene_id", "orb_x", "orb_z")), Seq("scene_id"))
       // normalized slant index in the FIT's geometry (the SRGR reference orbit's
       // r0) — resolveCells' xf normalizes by the curved orbit's first SV instead
       .withColumn("u", expr(
@@ -554,10 +599,6 @@ object TerrainCorrection {
       .select("scene_id", "azimuth_time_interval", "lon0", "lat0")
     val dem = Fixtures.table(spark, sfDir, "dem")
       .select("scene_id", "lat_idx", "lon_idx", "height")
-    val cells = spark.range(0L, GridNx.toLong * GridNy)
-      .select(expr(s"CAST(id div $GridNy AS INT)").as("ci"),
-        expr(s"CAST(id % $GridNy AS INT)").as("cj"))
-      .where(col("ci") < ciMax)
     val (xsC, zsC) =
       if (perturb) (expr(s"transform(xs, v -> v + ${SecBx}D)"), expr(s"transform(zs, v -> v + ${SecBz}D)"))
       else (col("xs"), col("zs"))
@@ -568,10 +609,7 @@ object TerrainCorrection {
       if (perturb)
         s"sqrt((element_at(xs, 1) + ${SecBx}D) * (element_at(xs, 1) + ${SecBx}D) + (element_at(zs, 1) + ${SecBz}D) * (element_at(zs, 1) + ${SecBz}D))"
       else "sqrt(element_at(xs, 1) * element_at(xs, 1) + element_at(zs, 1) * element_at(zs, 1))"
-    val gridded = cells
-      .join(broadcast(scenes))
-      .withColumn("lon", col("lon0") + (col("ci") + 0.5) * CellDeg)
-      .withColumn("lat", col("lat0") + (col("cj") + 0.5) * CellDeg)
+    val gridded = cellCentres(targetCells(spark).where(col("ci") < ciMax), scenes)
     val withHeight =
       if (useDem)
         gridded
@@ -587,31 +625,19 @@ object TerrainCorrection {
       .withColumn("r0", expr(r0Sql))
       .withColumn("t_zd", col("zd.tzd"))
       .withColumn("xf", (col("zd.slant") - col("r0")) / DR)
-      .where(col("xf") >= 0 && col("xf") < 3 * Layout.SamplesPerBurst - 1)
-      .withColumn("s0", expr("CAST(floor(xf) AS INT)"))
-      .withColumn("x0", expr(s"CAST(s0 % ${Layout.SamplesPerBurst} AS INT)"))
-      .where(col("x0") < Layout.SamplesPerBurst - 1) // both range corners in one subswath
-      .withColumn("subswath", concat(lit("IW"), expr(s"s0 div ${Layout.SamplesPerBurst} + 1")))
-      .withColumn("wx", col("xf") - expr("floor(xf)"))
-      .join(broadcast(burstOwnership(spark, sfDir)), Seq("scene_id", "subswath"))
-      .where(col("t_zd") > col("own_from") && col("t_zd") <= col("own_to"))
-      .withColumn("lf", (col("t_zd") - col("burst_first_line_time")) / col("azimuth_time_interval"))
-      .where(col("lf") >= 0 && col("lf") < Layout.LinesPerBurst - 1) // both az corners in burst
-      .withColumn("l0", expr("CAST(floor(lf) AS INT)"))
-      .withColumn("wl", col("lf") - expr("floor(lf)"))
+      .transform(sourcePosition(spark, sfDir, "xf"))
       .withColumn("slant", col("zd.slant"))
       .select("scene_id", "subswath", "burst_idx", "ci", "cj", "l0", "x0", "wl", "wx", "lf", "xf", "slant")
   }
 
-  /** BenchExtra probe hook: the resolve stage as the bench would see it. */
+  /** The resolve stage of q_terrain_correction on its own: the benchmark's
+   * traced `tc.resolve` layer times it. */
   def resolveCellsProbe(spark: SparkSession, sfDir: String): DataFrame =
     resolveCells(spark, sfDir, useDem = true)
 
   private def rdGeocode(spark: SparkSession, sfDir: String, useDem: Boolean,
       ciMax: Int = GridNx, normalize: Boolean = false): DataFrame =
-    rdGeocodeFrom(spark, sfDir,
-      Fixtures.table(spark, sfDir, "tiles").where(col("pol") === "VV"),
-      useDem, ciMax, normalize)
+    rdGeocodeFrom(spark, sfDir, vvTiles(spark, sfDir), useDem, ciMax, normalize)
 
   /** Input-driven Range-Doppler geocoding over a caller-provided tile frame —
    * the chain Terrain-Correction node's entry: identical geometry, resolve and
@@ -631,38 +657,12 @@ object TerrainCorrection {
       else resolved0.withColumn("snorm", expr(
         s"500.0D + 0.1D * ((burst_idx - 1) * ${Layout.LinesPerBurst} + l0 + wl) + 0.05D * (x0 + wx)"))
     // 4 bilinear corners, each with its own tile key and weight
-    val corners = resolved
-      .withColumn("cyx", expr("explode(array(struct(0 AS cy, 0 AS cx), struct(0 AS cy, 1 AS cx), " +
-        "struct(1 AS cy, 0 AS cx), struct(1 AS cy, 1 AS cx)))"))
-      .withColumn("line", col("l0") + col("cyx.cy"))
-      .withColumn("samp", col("x0") + col("cyx.cx"))
-      .withColumn("w", expr("(CASE WHEN cyx.cy = 0 THEN 1.0D - wl ELSE wl END) * " +
-        "(CASE WHEN cyx.cx = 0 THEN 1.0D - wx ELSE wx END)"))
-      .withColumn("tile_y", expr(s"line div ${Layout.TileH}"))
-      .withColumn("tile_x", expr(s"samp div ${Layout.TileW}"))
-      .withColumn("px", expr(s"CAST((line % ${Layout.TileH}) * ${Layout.TileW} + samp % ${Layout.TileW} AS INT)"))
+    val corners = bilinearCorners(resolved)
       .select("scene_id", "subswath", "burst_idx", "tile_x", "tile_y", "ci", "cj", "px", "w", "snorm")
     val tiles = tilesIn
       .select(col("scene_id"), col("subswath"), col("burst_idx"),
         col("tile_x"), col("tile_y"), col("i"), col("q"))
-    val d = Raster.Dyadic; val dv = Raster.DyadicV
-    val (factor, quantum) =
-      if (normalize) ("/ (snorm * snorm)", "1E9") else ("", "1E6")
-    // broadcast the TILE side: it is the small row set (one row per tile vs 4
-    // corner rows per resolved map cell), so the per-pass driver collect + hash
-    // relation build shrinks ~300x in rows and the resolve side streams through
-    // the join instead of being collected into a broadcast (guide §3.1:
-    // broadcast the side that fits — rows, not just bytes, set the build cost)
-    corners
-      .join(broadcast(tiles), Seq("scene_id", "subswath", "burst_idx", "tile_x", "tile_y"))
-      .withColumn("pa", expr("element_at(i, px + 1)"))
-      .withColumn("pb", expr("element_at(q, px + 1)"))
-      .withColumn("term_q", expr(
-        s"""if(pa = -9999.0D or pb = -9999.0D or isnan(pa) or isnan(pb), CAST(null AS BIGINT),
-           |  CAST(floor(0.031415926535897934 + w * (floor(((floor(pa * $d) / $d) * (floor(pa * $d) / $d)
-           |    + (floor(pb * $d) / $d) * (floor(pb * $d) / $d)) * $dv) / $dv) $factor * $quantum) AS BIGINT))""".stripMargin))
-      .groupBy("scene_id", "ci", "cj", "subswath", "burst_idx")
-      .agg(count(col("term_q")).as("n_corners"), sum(col("term_q")).as("value_q"))
+    gatherCells(corners, tiles, normalize)
   }
 
   /** Terrain-Correction WITH radiometric normalization (the applyRadiometric-
@@ -728,16 +728,7 @@ object TerrainCorrection {
       .withColumn("cq", expr(s"floor(cos(phr) * $dv) / $dv"))
       .withColumn("sq", expr(s"floor(sin(phr) * $dv) / $dv"))
       .select("scene_id", "subswath", "burst_idx", "ci", "cj", "l0", "x0", "wl", "wx", "cq", "sq")
-    val corners = resolved
-      .withColumn("cyx", expr("explode(array(struct(0 AS cy, 0 AS cx), struct(0 AS cy, 1 AS cx), " +
-        "struct(1 AS cy, 0 AS cx), struct(1 AS cy, 1 AS cx)))"))
-      .withColumn("line", col("l0") + col("cyx.cy"))
-      .withColumn("samp", col("x0") + col("cyx.cx"))
-      .withColumn("w", expr("(CASE WHEN cyx.cy = 0 THEN 1.0D - wl ELSE wl END) * " +
-        "(CASE WHEN cyx.cx = 0 THEN 1.0D - wx ELSE wx END)"))
-      .withColumn("tile_y", expr(s"line div ${Layout.TileH}"))
-      .withColumn("tile_x", expr(s"samp div ${Layout.TileW}"))
-      .withColumn("px", expr(s"CAST((line % ${Layout.TileH}) * ${Layout.TileW} + samp % ${Layout.TileW} AS INT)"))
+    val corners = bilinearCorners(resolved)
       // TOPS deramp phase at the source corner's azimuth line (the deramp model
       // the TOPSAR-DerampDemod gate pins, InSAR.derampQuery)
       .join(broadcast(bursts), Seq("scene_id", "subswath", "burst_idx"))
@@ -750,12 +741,7 @@ object TerrainCorrection {
       .withColumn("sd", expr(s"floor(sin(phdr) * $dv) / $dv"))
       .select("scene_id", "subswath", "burst_idx", "tile_x", "tile_y", "ci", "cj",
         "px", "w", "cq", "sq", "cd", "sd")
-    val tiles = Fixtures.table(spark, sfDir, "tiles")
-      .where(col("pol") === "VV")
-      .select(col("scene_id"), col("subswath"), col("burst_idx"),
-        col("tile_x"), col("tile_y"), col("i"), col("q"))
-    corners
-      .join(broadcast(tiles), Seq("scene_id", "subswath", "burst_idx", "tile_x", "tile_y"))
+    tileGather(corners, vvTiles(spark, sfDir))
       .withColumn("iv", expr(s"floor(element_at(i, px + 1) * $d) / $d"))
       .withColumn("qv", expr(s"floor(element_at(q, px + 1) * $d) / $d"))
       .withColumn("bad", expr("element_at(i, px + 1) = -9999.0D or element_at(q, px + 1) = -9999.0D " +
@@ -787,34 +773,13 @@ object TerrainCorrection {
         expr("CAST(round(avg(est_dy), 0) AS INT)").as("sdy"))
     val resolved = resolveCells(spark, sfDir, useDem = true, ciMax = GeoVarCiMax)
       .join(broadcast(shifts), Seq("scene_id"))
-    val corners = resolved
-      .withColumn("cyx", expr("explode(array(struct(0 AS cy, 0 AS cx), struct(0 AS cy, 1 AS cx), " +
-        "struct(1 AS cy, 0 AS cx), struct(1 AS cy, 1 AS cx)))"))
-      .withColumn("line", col("l0") + col("cyx.cy") + col("sdy"))
-      .withColumn("samp", col("x0") + col("cyx.cx") + col("sdx"))
-      .where(col("line") >= 0 && col("line") < Layout.LinesPerBurst &&
-        col("samp") >= 0 && col("samp") < Layout.SamplesPerBurst)
-      .withColumn("w", expr("(CASE WHEN cyx.cy = 0 THEN 1.0D - wl ELSE wl END) * " +
-        "(CASE WHEN cyx.cx = 0 THEN 1.0D - wx ELSE wx END)"))
-      .withColumn("tile_y", expr(s"line div ${Layout.TileH}"))
-      .withColumn("tile_x", expr(s"samp div ${Layout.TileW}"))
-      .withColumn("px", expr(s"CAST((line % ${Layout.TileH}) * ${Layout.TileW} + samp % ${Layout.TileW} AS INT)"))
+    val corners = bilinearCorners(resolved, _
+        .withColumn("line", col("line") + col("sdy"))
+        .withColumn("samp", col("samp") + col("sdx"))
+        .where(col("line") >= 0 && col("line") < Layout.LinesPerBurst &&
+          col("samp") >= 0 && col("samp") < Layout.SamplesPerBurst))
       .select("scene_id", "subswath", "burst_idx", "tile_x", "tile_y", "ci", "cj", "px", "w")
-    val tiles = Fixtures.table(spark, sfDir, "tiles_sec")
-      .where(col("pol") === "VV")
-      .select(col("scene_id"), col("subswath"), col("burst_idx"),
-        col("tile_x"), col("tile_y"), col("i"), col("q"))
-    val d = Raster.Dyadic; val dv = Raster.DyadicV
-    corners
-      .join(broadcast(tiles), Seq("scene_id", "subswath", "burst_idx", "tile_x", "tile_y"))
-      .withColumn("pa", expr("element_at(i, px + 1)"))
-      .withColumn("pb", expr("element_at(q, px + 1)"))
-      .withColumn("term_q", expr(
-        s"""if(pa = -9999.0D or pb = -9999.0D or isnan(pa) or isnan(pb), CAST(null AS BIGINT),
-           |  CAST(floor(0.031415926535897934 + w * (floor(((floor(pa * $d) / $d) * (floor(pa * $d) / $d)
-           |    + (floor(pb * $d) / $d) * (floor(pb * $d) / $d)) * $dv) / $dv) * 1E6) AS BIGINT))""".stripMargin))
-      .groupBy("scene_id", "ci", "cj", "subswath", "burst_idx")
-      .agg(count(col("term_q")).as("n_corners"), sum(col("term_q")).as("value_q"))
+    gatherCells(corners, vvTiles(spark, sfDir, "tiles_sec"), normalize = false)
   }
 
   /** The nearest-neighbor gather on the linear-ephemeris shortcut (kept as its own
@@ -829,10 +794,7 @@ object TerrainCorrection {
     // deriving v up front let CollapseProject re-evaluate the 1024-element
     // intensity lambda once per matched TARGET row after the join (the plan-shape
     // cost the round-3 probe measured at ~3.5 s of the 5 s query)
-    val tiles = Fixtures.table(spark, sfDir, "tiles")
-      .where(col("pol") === "VV")
-      .select(col("scene_id"), col("subswath"), col("burst_idx"),
-        col("tile_x"), col("tile_y"), col("i"), col("q"))
+    val tiles = vvTiles(spark, sfDir)
     // prune the resolved side to its essential columns BEFORE the join: the full
     // resolvedTargets frame carries ~45 intermediate geometry columns, pushing the
     // joined stage past the whole-stage-codegen field limit — the interpreted
@@ -840,7 +802,6 @@ object TerrainCorrection {
     val resolved = resolvedTargets(spark, sfDir)
       .select("scene_id", "subswath", "burst_idx", "tile_x", "tile_y",
         "ci", "cj", "local_line", "x_in_sw", "px")
-    val d = Raster.Dyadic; val dv = Raster.DyadicV
     tiles
       .join(broadcast(resolved),
         Seq("scene_id", "subswath", "burst_idx", "tile_x", "tile_y"))
@@ -848,9 +809,6 @@ object TerrainCorrection {
       .withColumn("pb", expr("element_at(q, px + 1)"))
       .select(col("scene_id"), col("ci"), col("cj"), col("subswath"), col("burst_idx"),
         col("local_line"), col("x_in_sw"),
-        expr(
-          s"""round(if(pa = -9999.0D or pb = -9999.0D or isnan(pa) or isnan(pb), -9999.0D,
-             |  floor(((floor(pa * $d) / $d) * (floor(pa * $d) / $d)
-             |         + (floor(pb * $d) / $d) * (floor(pb * $d) / $d)) * $dv) / $dv), 6)""".stripMargin).as("value"))
+        expr(s"round(if($GatherNd, -9999.0D, $GatherI), 6)").as("value"))
   }
 }

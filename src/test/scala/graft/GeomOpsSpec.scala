@@ -84,6 +84,30 @@ class GeomOpsSpec extends AnyFunSuite {
     assert(b.exceptAll(a).count() == 0)
   }
 
+  test("bilinear corners key tile seams and keep dyadic weights summing to 1") {
+    val (tw, th) = (Layout.TileW, Layout.TileH)
+    // (l0, x0, wl, wx): range seam, azimuth seam, both, and one interior position
+    val positions = Seq(
+      (5, tw - 1, 0.25, 0.5), (th - 1, 7, 0.75, 0.125),
+      (th - 1, tw - 1, 0.5, 0.0625), (10, 20, 0.375, 0.875))
+    val rows = TerrainCorrection.bilinearCorners(positions.toDF("l0", "x0", "wl", "wx"))
+      .select("l0", "x0", "cyx.cy", "cyx.cx", "tile_y", "tile_x", "px", "w")
+      .as[(Int, Int, Int, Int, Long, Long, Int, Double)].collect()
+    assert(rows.length == 4 * positions.length)
+    for ((l0, x0, wl, wx) <- positions) {
+      val corners = rows.filter(r => r._1 == l0 && r._2 == x0)
+      assert(corners.map(r => (r._3, r._4)).toSet == Set((0, 0), (0, 1), (1, 0), (1, 1)))
+      for ((_, _, cy, cx, tileY, tileX, px, _) <- corners) {
+        val (line, samp) = (l0 + cy, x0 + cx)
+        assert((tileY, tileX, px) == ((line / th).toLong, (samp / tw).toLong, (line % th) * tw + samp % tw),
+          s"corner ($cy, $cx) of ($l0, $x0)")
+      }
+      val ws = corners.sortBy(r => (r._3, r._4)).map(_._8)
+      assert(ws.toSeq == Seq((1 - wl) * (1 - wx), (1 - wl) * wx, wl * (1 - wx), wl * wx))
+      assert(ws.sum == 1.0, s"weights of ($l0, $x0)")
+    }
+  }
+
   test("deburst + TC agree on burst ownership rule") {
     // every (scene, subswath, global line) the deburst op assigns must be the burst TC picks
     val d = Deburst.query(spark, sf).select("scene_id", "subswath", "line", "burst_idx")

@@ -155,20 +155,6 @@ class KernelSpec extends AnyFunSuite {
     assert(allNd.getLong(0) == 0L && allNd.isNullAt(2))
   }
 
-  test("windowMoments equals per-pixel loop for every (n, s1, s2, cp)") {
-    val halo = tile(7L, (W + 2 * M) * (H + 2 * M))
-    val row = Kernels.windowMoments(arr(halo), W, H, M, M)
-    val nA = row.getArray(0).toDoubleArray(); val s1A = row.getArray(1).toDoubleArray()
-    val s2A = row.getArray(2).toDoubleArray(); val cpA = row.getArray(3).toDoubleArray()
-    val hw = W + 2 * M
-    for (y <- 0 until H; x <- 0 until W) {
-      val (n, s1, s2, _) = winStats(halo, x, y, M)
-      val k = y * W + x
-      assert(nA(k) == n.toDouble && s1A(k) == s1 && s2A(k) == s2)
-      assert(cpA(k) == halo((y + M) * hw + (x + M)))
-    }
-  }
-
   test("cfar full-minus-guard equals the direct background-ring oracle") {
     val g = 1; val thr = 3.0
     val halo = tile(21L, (W + 2 * M) * (H + 2 * M))
