@@ -962,7 +962,6 @@ object GeoOracles {
   val convexHull: String = {
     val dirVals = graft.geom.Analytics.Dirs.zipWithIndex
       .map { case ((dx, dy), i) => s"($i, $dx, $dy)" }.mkString(", ")
-    val k = graft.geom.Analytics.Dirs.size
     s"""WITH $spanPtsCte,
        |pt AS (SELECT scene_id,
        |         CAST(floor(lon * 1e6) AS BIGINT) AS px,

@@ -18,9 +18,6 @@ object SarOracles4 {
 
   private val rollup = SarOracles.rollupSql(1.0)
 
-  private val cu = 1.0 / math.sqrt(Speckle.Enl)
-  private val cu2 = cu * cu
-
   /** pixel CTE (px) over `tiles` with intensity v. */
   private val pxCte: String =
     s"""px0 AS (

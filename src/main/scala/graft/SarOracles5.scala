@@ -14,7 +14,6 @@ import graft.ops.{Stack, TerrainCorrection}
 object SarOracles5 {
 
   private val N = Layout.TileW * Layout.TileH
-  private val W = Layout.TileW
 
   /** stack pixels with quantized i/q/v and epoch. */
   private val sxCte: String =

@@ -31,10 +31,6 @@ object SarOracles8 {
        |                          + (floor(qv0 * 4096) / 4096) * (floor(qv0 * 4096) / 4096)) * 16384) / 16384 END AS v
        |  FROM px0)""".stripMargin
 
-  private val keysEq: String =
-    """n.scene_id = c.scene_id AND n.subswath = c.subswath AND n.pol = c.pol
-      |    AND n.burst_idx = c.burst_idx""".stripMargin
-
   /** px plus the boolean no-data mask the separable window passes gate on. */
   private val pxvCte: String =
     s"$pxCte,\npxv AS (SELECT *, v <> -9999.0 AS valid FROM px)"

@@ -13,7 +13,6 @@ import graft.model.Layout
 object SarOraclesSm {
 
   private val W = Layout.TileW
-  private val N = Layout.TileW * Layout.TileH
   private val rollup = SarOracles.rollupSql(1.0)
   private def q6(e: String) = s"CAST(floor(0.031415926535897934 + ($e) * 1.0E6) AS BIGINT)"
 

@@ -231,7 +231,7 @@ object SarOraclesTc {
 
   /** The shared resolve chain (sv0 .. g9): curved-orbit bisection to fractional
    * burst-local (l0, x0, wl, wx) + slant, bounded to ci < ciMax when given. */
-  private def resolveCtes(useDem: Boolean, ciMax: Int = TerrainCorrection.GridNx): String = {
+  private def resolveCtes(useDem: Boolean, ciMax: Int): String = {
     val tc = TerrainCorrection
     val steps = (1 to 40).map(i => bisectStep(i)).mkString(",\n")
     s"""sv0 AS (
@@ -300,7 +300,6 @@ object SarOraclesTc {
 
   private def rdGeocodeSql(useDem: Boolean, ciMax: Int = TerrainCorrection.GridNx,
       normalize: Boolean = false): String = {
-    val tc = TerrainCorrection
     val snorm =
       if (normalize)
         s"500.0 + 0.1 * ((burst_idx - 1) * ${Layout.LinesPerBurst} + l0 + wl) + 0.05 * (x0 + wx)"

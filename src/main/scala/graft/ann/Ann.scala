@@ -32,7 +32,8 @@ object Ann {
   def cosCol: org.apache.spark.sql.Column =
     graft.exprs.KernelExprs.cosine(col("va"), col("vb"))
 
-  /** cosine(a, b) over two ARRAY<FLOAT> columns, computed in double. */
+  /** cosine(a, b) over the "va"/"vb" columns, computed in double: the
+   * interpreted reference that RasterOpsSpec pins cosCol against. */
   val cosSql: String =
     """aggregate(zip_with(va, vb, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0D, (a, x) -> a + x)
       | / (sqrt(aggregate(va, 0D, (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))
@@ -152,19 +153,28 @@ object Ann {
    * deterministically (vec_id < C) — k-means training is orthogonal to the
    * search plan shape and would reuse the same assignment machinery.
    */
-  /** IVF cell machinery shared by the cosine search and the IVF-PQ (ADC)
-   * search: (corpus -> argmax cell) assignment and (query -> nprobe cells)
-   * probes, both via broadcast scoring against the C-row centroid table. */
-  private def ivfAssignProbes(e: DataFrame, nQueries: Int): (DataFrame, DataFrame) = {
-    val cent = e.where(col("vec_id") < IvfCells)
+  /** The C seed centroids (vec_id < C) as ("centroid_id", "vb"). */
+  private def seedCentroids(e: DataFrame): DataFrame =
+    e.where(col("vec_id") < IvfCells)
       .select(col("vec_id").as("centroid_id"), col("embedding").as("vb"))
-    val assign = e.select(col("vec_id"), col("embedding").as("va"))
+
+  /** Corpus -> nearest IVF cell: the argmax-cosine centroid of every vector
+   * over the broadcast centroid frame `cent` ("centroid_id", "vb"). Semantic
+   * dedup clusters the corpus with it. */
+  def ivfAssign(e: DataFrame, cent: DataFrame): DataFrame =
+    e.select(col("vec_id"), col("embedding").as("va"))
       .join(broadcast(cent))
       .withColumn("ccos", cosCol)
       .withColumn("crn", row_number().over(
         Window.partitionBy("vec_id").orderBy(desc("ccos"), asc("centroid_id"))))
       .where(col("crn") === 1)
       .select(col("vec_id"), col("centroid_id"))
+
+  /** IVF cell machinery shared by the cosine search and the IVF-PQ (ADC)
+   * search: (corpus -> argmax cell) assignment and (query -> nprobe cells)
+   * probes, both via broadcast scoring against the C-row centroid frame `cent`
+   * (seeded or k-means-trained). */
+  private def ivfAssignProbes(e: DataFrame, cent: DataFrame, nQueries: Int): (DataFrame, DataFrame) = {
     val probes = e.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("va"))
       .join(broadcast(cent))
@@ -173,14 +183,14 @@ object Ann {
         Window.partitionBy("query_id").orderBy(desc("ccos"), asc("centroid_id"))))
       .where(col("prn") <= IvfNProbe)
       .select(col("query_id"), col("centroid_id"))
-    (assign, probes)
+    (ivfAssign(e, cent), probes)
   }
 
-  def ivfTopKQuery(spark: SparkSession, dir: String, nQueries: Int = 20, k: Int = 10): DataFrame = {
-    val e = emb(spark, dir)
-    // corpus -> nearest cell (C-way broadcast scoring, rank 1);
-    // query -> nprobe nearest cells; search only the probed inverted lists
-    val (assign, probes) = ivfAssignProbes(e, nQueries)
+  /** IVF cosine top-k over the centroid frame `cent`: corpus -> nearest cell
+   * (C-way broadcast scoring, rank 1); query -> nprobe nearest cells; search
+   * only the probed inverted lists. */
+  private def ivfSearch(e: DataFrame, cent: DataFrame, nQueries: Int, k: Int): DataFrame = {
+    val (assign, probes) = ivfAssignProbes(e, cent, nQueries)
     val qv = e.select(col("vec_id").as("query_id"), col("embedding").as("va"))
     val cv = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("vb"))
     probes
@@ -194,6 +204,11 @@ object Ann {
         Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))))
       .where(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("cos"), 6).as("cos_r"))
+  }
+
+  def ivfTopKQuery(spark: SparkSession, dir: String, nQueries: Int = 20, k: Int = 10): DataFrame = {
+    val e = emb(spark, dir)
+    ivfSearch(e, seedCentroids(e), nQueries, k)
   }
 
   // -------------------------------------------------- k-means codebook training
@@ -237,39 +252,9 @@ object Ann {
   /** q_ann_ivf_trained: the IVF search plan of ivfTopKQuery on k-means-trained
    * centroids (assignment/probing/inverted-list machinery unchanged — training
    * is orthogonal to the plan shape, which is the point). */
-  def ivfTrainedTopKQuery(spark: SparkSession, dir: String, nQueries: Int = 20, k: Int = 10): DataFrame = {
-    val e = emb(spark, dir)
-    val cent = ivfTrainedCentroids(spark, dir)
-      .select(col("centroid_id"), col("cv").as("vb"))
-    val assign = e.select(col("vec_id"), col("embedding").as("va"))
-      .join(broadcast(cent))
-      .withColumn("ccos", cosCol)
-      .withColumn("crn", row_number().over(
-        Window.partitionBy("vec_id").orderBy(desc("ccos"), asc("centroid_id"))))
-      .where(col("crn") === 1)
-      .select(col("vec_id"), col("centroid_id"))
-    val probes = e.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("va"))
-      .join(broadcast(cent))
-      .withColumn("ccos", cosCol)
-      .withColumn("prn", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("ccos"), asc("centroid_id"))))
-      .where(col("prn") <= IvfNProbe)
-      .select(col("query_id"), col("centroid_id"))
-    val qv = e.select(col("vec_id").as("query_id"), col("embedding").as("va"))
-    val cv = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("vb"))
-    probes
-      .join(assign, Seq("centroid_id"))
-      .where(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"))
-      .join(qv, Seq("query_id"))
-      .join(cv, Seq("neighbor_id"))
-      .withColumn("cos", cosCol)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("cos"), 6).as("cos_r"))
-  }
+  def ivfTrainedTopKQuery(spark: SparkSession, dir: String, nQueries: Int = 20, k: Int = 10): DataFrame =
+    ivfSearch(emb(spark, dir), ivfTrainedCentroids(spark, dir)
+      .select(col("centroid_id"), col("cv").as("vb")), nQueries, k)
 
   /** Trained PQ codebook: per-subspace k-means (L2 assignment, the ADC metric),
    * exact quantized mean update; flattened to the pqCb (s, c, j) layout. */
@@ -389,7 +374,7 @@ object Ann {
    */
   def ivfPqTopKQuery(spark: SparkSession, dir: String, nQueries: Int = 20, k: Int = 10): DataFrame = {
     val e = emb(spark, dir)
-    val (assign, probes) = ivfAssignProbes(e, nQueries)
+    val (assign, probes) = ivfAssignProbes(e, seedCentroids(e), nQueries)
     val cb = pqCb(spark, dir)
     val vd = "transform(embedding, x -> CAST(x AS DOUBLE))"
     val codes = e.crossJoin(broadcast(cb))
@@ -459,7 +444,7 @@ object Ann {
         case None => ("qe", "ce")
       }
       q.join(c, col("query_id") =!= col("neighbor_id"))
-        .withColumn("cos", expr(cosSql.replace("va", va).replace("vb", vb)))
+        .withColumn("cos", graft.exprs.KernelExprs.cosine(expr(va), expr(vb)))
         .withColumn(rankName, row_number().over(
           Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))))
         .where(col(rankName) <= k)

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -164,17 +164,9 @@ object Dedup {
    * corpus squared), then the bounded label-propagation rounds.
    */
   def semanticDedupQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = graft.ann.Ann.emb(spark, dir)
-    val cent = graft.ann.Ann.ivfTrainedCentroids(spark, dir)
-      .select(col("centroid_id"), col("cv").as("vb"))
-    val assign = e.select(col("vec_id"), col("embedding").as("va"))
-      .join(broadcast(cent))
-      .withColumn("ccos", expr(graft.ann.Ann.cosSql))
-      .withColumn("crn", row_number().over(
-        Window.partitionBy("vec_id").orderBy(desc("ccos"), asc("centroid_id"))))
-      .where(col("crn") === 1)
-      .select(col("vec_id"), col("centroid_id"))
+    val assign = graft.ann.Ann.ivfAssign(e, graft.ann.Ann.ivfTrainedCentroids(spark, dir)
+      .select(col("centroid_id"), col("cv").as("vb")))
     val av = e.select(col("vec_id").as("vec_a"), col("embedding").as("va"))
     val bv = e.select(col("vec_id").as("vec_b"), col("embedding").as("vb"))
     val pairs = assign.as("x")
@@ -182,7 +174,7 @@ object Dedup {
         col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"))
       .join(av, Seq("vec_a")).join(bv, Seq("vec_b"))
-      .withColumn("cos", expr(graft.ann.Ann.cosSql))
+      .withColumn("cos", graft.ann.Ann.cosCol)
       .where(col("cos") > SemTau)
       .select(col("vec_a"), col("vec_b"))
     val edges = pairs

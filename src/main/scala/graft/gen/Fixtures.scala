@@ -74,10 +74,18 @@ object Fixtures {
    * the stale-marker-across-a-generator-change gotcha (VERDICT r3 #2). */
   private lazy val generatorHash: String = {
     val in = getClass.getResourceAsStream("/graft/gen/Fixtures$.class")
-    try {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      md.digest(in.readAllBytes()).map("%02x".format(_)).mkString
-    } finally in.close()
+    try classHash(in.readAllBytes()) finally in.close()
+  }
+
+  /** md5 of a class file without its debug attributes (source file, line
+   * numbers, local variable names), so an edit that only moves lines, such as
+   * a comment, keeps the hash. */
+  private[graft] def classHash(bytes: Array[Byte]): String = {
+    import org.apache.xbean.asm9.{ClassReader, ClassWriter}
+    val w = new ClassWriter(0)
+    new ClassReader(bytes).accept(w, ClassReader.SKIP_DEBUG)
+    java.security.MessageDigest.getInstance("MD5").digest(w.toByteArray)
+      .map("%02x".format(_)).mkString
   }
 
   @volatile private var verifiedDirs = Set.empty[String]

@@ -383,7 +383,6 @@ object Spatial {
    * clip-pair frame; the join is burst-keyed hash, the final rollup per-AOI.
    */
   def zonalAreaQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val tw = graft.model.Layout.TileW
     val power = Fixtures.table(spark, sfDir, "tiles").where(col("pol") === "VV")
       .select(col("scene_id"), col("subswath"), col("burst_idx"),
         col("no_data"), posexplode(col("i")).as(Seq("k", "iv")),

@@ -2,12 +2,12 @@ package graft.graph
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.gen.Fixtures
 import graft.model.Layout
-import graft.ops.{Calibration, Raster, Speckle}
+import graft.ops.{Calibration, InSAR, Raster, Spectral, Speckle, TerrainCorrection}
 
 /**
  * Declarative processing-chain runner — the analog of the reference's GPF graph
@@ -114,37 +114,19 @@ object ChainGraph {
   }
 
   /** Apply-Orbit-File: attach the degree-3 Lagrange-interpolated orbit state
-   * (position + along-track velocity) at each burst mid-time — the frame-level
-   * form of TerrainCorrection.orbitInterpQuery (ApplyOrbitFileOp.java:60-101),
-   * identical formula text so the chain oracle shares every IEEE step. */
+   * (position + along-track velocity) at each burst mid-time
+   * (ApplyOrbitFileOp.java:60-101); the node calls TerrainCorrection's
+   * lagrangeKnots and lagrangeSql, as orbitInterpQuery does. */
   private def orbitOp: OpCompiler = (spark, sfDir, params, srcs) => {
     require(params.getOrElse("polyDegree", "3") == "3", "only degree-3 orbit interpolation is implemented")
-    val orb = Fixtures.table(spark, sfDir, "orbit")
-      .groupBy("scene_id")
-      .agg(array_sort(collect_list(struct(col("t_sec"), col("x"), col("y"), col("z"),
-        col("vx"), col("vy"), col("vz")))).as("svs"))
-    val withKnots = srcs.head
+    val at = srcs.head
       .withColumn("tm", (col("burst_first_line_time") + col("burst_last_line_time")) / 2)
-      .join(broadcast(orb), Seq("scene_id"))
-      .withColumn("kk", expr(
-        "greatest(2, least(size(svs) - 2, size(filter(svs, e -> e.t_sec <= tm))))"))
-      .withColumn("k1", expr("element_at(svs, kk - 1)"))
-      .withColumn("k2", expr("element_at(svs, kk)"))
-      .withColumn("k3", expr("element_at(svs, kk + 1)"))
-      .withColumn("k4", expr("element_at(svs, kk + 2)"))
-      .withColumn("w1", expr(
-        "((tm - k2.t_sec) * (tm - k3.t_sec) * (tm - k4.t_sec)) / ((k1.t_sec - k2.t_sec) * (k1.t_sec - k3.t_sec) * (k1.t_sec - k4.t_sec))"))
-      .withColumn("w2", expr(
-        "((tm - k1.t_sec) * (tm - k3.t_sec) * (tm - k4.t_sec)) / ((k2.t_sec - k1.t_sec) * (k2.t_sec - k3.t_sec) * (k2.t_sec - k4.t_sec))"))
-      .withColumn("w3", expr(
-        "((tm - k1.t_sec) * (tm - k2.t_sec) * (tm - k4.t_sec)) / ((k3.t_sec - k1.t_sec) * (k3.t_sec - k2.t_sec) * (k3.t_sec - k4.t_sec))"))
-      .withColumn("w4", expr(
-        "((tm - k1.t_sec) * (tm - k2.t_sec) * (tm - k3.t_sec)) / ((k4.t_sec - k1.t_sec) * (k4.t_sec - k2.t_sec) * (k4.t_sec - k3.t_sec))"))
-    withKnots
-      .withColumn("ox", expr("w1 * k1.x + w2 * k2.x + w3 * k3.x + w4 * k4.x"))
-      .withColumn("oy", expr("w1 * k1.y + w2 * k2.y + w3 * k3.y + w4 * k4.y"))
-      .withColumn("oz", expr("w1 * k1.z + w2 * k2.z + w3 * k3.z + w4 * k4.z"))
-      .withColumn("ovy", expr("w1 * k1.vy + w2 * k2.vy + w3 * k3.vy + w4 * k4.vy"))
+    def interp(f: String) = expr(TerrainCorrection.lagrangeSql(f))
+    TerrainCorrection.lagrangeKnots(spark, sfDir, at)
+      .withColumn("ox", interp("x"))
+      .withColumn("oy", interp("y"))
+      .withColumn("oz", interp("z"))
+      .withColumn("ovy", interp("vy"))
       .drop("svs", "kk", "k1", "k2", "k3", "k4", "w1", "w2", "w3", "w4")
   }
 
@@ -173,27 +155,15 @@ object ChainGraph {
         expr(q6("(oy_s - oy_m) - ovy_m * (tm_s - tm_m)")).as("ay_resid_q"))
   }
 
-  /** Dyadic intensity from a frame's i/q (the shared pre-snap: products of
-   * 2^-12-grid values land on the 2^-14-snapped DyadicV grid). */
-  private def intensityV(in: DataFrame): DataFrame =
-    in.withColumn("v", graft.exprs.KernelExprs.intensity(
-      col("i"), col("q"), Raster.Dyadic.toDouble, Raster.DyadicV.toDouble))
-
   /** ThermalNoiseRemoval (ThermalNoiseRemovalOp — noise-LUT subtraction with
    * the zero clamp): derive the dyadic intensity, broadcast-join the noise
    * vectors, interpolate the noise floor per pixel and subtract; emits the
    * denoised intensity in `v` for a downstream Calibration node. */
-  private def thermalNoiseOp: OpCompiler = (spark, sfDir, _, srcs) => {
-    val nd = Raster.ND
-    val noise = Fixtures.table(spark, sfDir, "noise_vectors")
-      .groupBy("scene_id", "subswath", "pol")
-      .agg(array_sort(collect_list(struct(col("line"), col("pixels"), col("noise_lut").as("lut"))))
-        .as("vecs"))
-    Calibration.withLutA(intensityV(srcs.head), noise)
+  private def thermalNoiseOp: OpCompiler = (spark, sfDir, _, srcs) =>
+    Calibration.withLutA(Raster.withIntensity(srcs.head), Calibration.noiseLutTable(spark, sfDir))
       .withColumn("v", graft.exprs.KernelExprs.pixelMap2(
         col("v"), col("lut_a"), graft.exprs.Kernels.PM_NOISESUB))
       .drop("lut_a", "i", "q")
-  }
 
   /** Calibration: sigma0 LUT calibration as a frame transformation — derive
    * the dyadic intensity from the frame's i/q (or take the intensity already
@@ -202,9 +172,8 @@ object ChainGraph {
    * (the compiled bracketing kernel), and emit the calibrated array back in
    * `v` for the next stage. */
   private def calibrationOp: OpCompiler = (spark, sfDir, _, srcs) => {
-    val nd = Raster.ND
     val withV =
-      if (srcs.head.columns.contains("i")) intensityV(srcs.head) else srcs.head
+      if (srcs.head.columns.contains("i")) Raster.withIntensity(srcs.head) else srcs.head
     // calibrated values re-snap to the 2^-26 dyadic grid: sigma0 = dn2/A^2 with
     // A >= 500 stays below 2^-6, so the snapped value carries <= 20 mantissa
     // bits, its square <= 40, and the downstream 3x3 window sums (s1, s2) are
@@ -259,33 +228,19 @@ object ChainGraph {
   }
 
   /** Interferogram (two sources: master chain, secondary chain —
-   * InterferogramOp.java:64-106): equi-join the two frames on the tile key and
-   * run the compiled complex-cross kernel in ONE pass; emits the cre/cim/p1/p2
-   * cross-product arrays for a downstream Coherence node plus the wrapped
-   * phase in `v` so the node can also feed raster stages directly. */
-  private def interferogramOp: OpCompiler = (_, _, _, srcs) => {
-    val keys = Seq("scene_id", "subswath", "pol", "burst_idx", "tile_x", "tile_y")
-    val ref = srcs(0).select(keys.map(col) ++ Seq(col("i").as("i1"), col("q").as("q1")): _*)
-    val sec = srcs(1).select(keys.map(col) ++ Seq(col("i").as("i2"), col("q").as("q2")): _*)
-    val nd = Raster.ND
-    ref.join(sec, keys)
-      .withColumn("cx", graft.exprs.KernelExprs.complexCross(
-        col("i1"), col("q1"), col("i2"), col("q2")))
-      .select(keys.map(col) ++ Seq(col("cx.cre").as("cre"), col("cx.cim").as("cim"),
-        col("cx.p1").as("p1"), col("cx.p2").as("p2")): _*)
+   * InterferogramOp.java:64-106): InSAR.cross equi-joins the two frames on the
+   * tile key and runs the compiled complex-cross kernel in ONE pass; emits the
+   * cre/cim/p1/p2 cross-product arrays for a downstream Coherence node plus the
+   * wrapped phase in `v` so the node can also feed raster stages directly. */
+  private def interferogramOp: OpCompiler = (_, _, _, srcs) =>
+    InSAR.cross(srcs(0), srcs(1))
       .withColumn("v", graft.exprs.KernelExprs.pixelMap2(
         col("cim"), col("cre"), graft.exprs.Kernels.PM_ATAN2))
-  }
 
-  /** Coherence (CoherenceOp.java:69-87, 722, 752-755): ONE 4-channel halo
-   * exchange over the chain's cross products + one compiled windowed pass;
-   * emits the coherence array in `v` for the next raster stage. */
-  private def coherenceOp: OpCompiler = (_, _, _, srcs) =>
-    Raster.withHaloMulti(srcs.head, Seq("cre", "cim", "p1", "p2"), 1)
-      .withColumn("v", graft.exprs.KernelExprs.coherence(
-        col("halo_cre"), col("halo_cim"), col("halo_p1"), col("halo_p2"),
-        Raster.W, Raster.H, 1))
-      .drop("halo_cre", "halo_cim", "halo_p1", "halo_p2")
+  /** Coherence (CoherenceOp.java:69-87, 722, 752-755): InSAR.coherence over the
+   * chain's cross products (ONE 4-channel halo exchange + one compiled windowed
+   * pass); emits the coherence array in `v` for the next raster stage. */
+  private def coherenceOp: OpCompiler = (_, _, _, srcs) => InSAR.coherence(srcs.head, "v")
 
   /** TopoPhaseRemoval (TopoPhaseRemovalOp: subtract the DEM-derived
    * topographic phase from the interferometric phase and re-wrap — the
@@ -313,7 +268,6 @@ object ChainGraph {
     val rh = params.getOrElse("regionH", Layout.LinesPerBurst.toString).toInt
     val x1 = x0 + rw - 1; val y1 = y0 + rh - 1
     val tw = Layout.TileW; val th = Layout.TileH
-    val nd = Raster.ND
     val in = srcs.head
     val kept = in.where(
       col("tile_x") * tw <= x1 && (col("tile_x") + 1) * tw > x0 &&
@@ -333,31 +287,13 @@ object ChainGraph {
   private def deburstOp: OpCompiler = (spark, sfDir, _, srcs) =>
     graft.ops.Deburst.fromBursts(spark, sfDir, srcs.head)
 
-  /** GoldsteinPhaseFiltering (GoldsteinFilterOp.java:330-826): the FULL
-   * 75%-overlap 64x64 block pipeline with Baran-2003 adaptive alpha, input-
-   * driven over the upstream Interferogram node's cross products. Per-burst
+  /** GoldsteinPhaseFiltering (GoldsteinFilterOp.java:330-826): Spectral.goldstein,
+   * the FULL 75%-overlap 64x64 block pipeline with Baran-2003 adaptive alpha,
+   * input-driven over the upstream Interferogram node's cross products. Per-burst
    * raster assembly is ONE groupBy shuffle, and the collect_list aggregation
    * materializes the chained cre/cim expressions exactly once per tile (the
    * same reason the chain Multilook runs a compiled kernel). */
-  private def goldsteinOp: OpCompiler = (_, _, _, srcs) => {
-    val tilesX = Layout.TilesX; val tilesY = Layout.TilesY
-    srcs.head
-      .groupBy("scene_id", "subswath", "pol", "burst_idx")
-      .agg(sort_array(collect_list(struct(col("tile_y"), col("tile_x"),
-        col("cre"), col("cim")))).as("ts"))
-      .withColumn("cre_r", expr("flatten(transform(ts, t -> t.cre))"))
-      .withColumn("cim_r", expr("flatten(transform(ts, t -> t.cim))"))
-      .withColumn("r", graft.exprs.KernelExprs.goldsteinFull(col("cre_r"), col("cim_r"),
-        tilesX, tilesY, Layout.TileW, Layout.TileH,
-        graft.ops.Spectral.GoldsteinAlphaMin, graft.ops.Spectral.GoldsteinAlphaMax,
-        graft.ops.Spectral.GoldsteinAlpha))
-      .withColumn("ti", explode(sequence(lit(0), lit(tilesX * tilesY - 1))))
-      .select(col("scene_id"), col("subswath"), col("pol"), col("burst_idx"),
-        expr(s"CAST(ti div $tilesX AS INT)").as("tile_y"),
-        expr(s"CAST(ti % $tilesX AS INT)").as("tile_x"),
-        expr("element_at(r.n, ti + 1)").as("n_valid"),
-        expr("element_at(r.ph_q, ti + 1)").as("phase_sum_q"))
-  }
+  private def goldsteinOp: OpCompiler = (_, _, _, srcs) => Spectral.goldstein(srcs.head)
 
   /** Terrain-Correction (RangeDopplerGeocodingOp.java:923-1177 +
    * SARGeocoding.java:64-359): the full curved-orbit Range-Doppler geocoding
@@ -770,6 +706,24 @@ object ChainGraph {
 
   private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
+  /** Runs a declared chain with its Read node over a `readStream` parquet source
+   * of the tiles table (sourceOverrides injection), `finish` applied to the
+   * compiled frame, drained by Trigger.AvailableNow into a memory sink whose
+   * table is returned. */
+  private def streamed(spark: SparkSession, sfDir: String, xml: String, name: String)(
+      finish: DataFrame => DataFrame): DataFrame = {
+    import org.apache.spark.sql.streaming.Trigger
+    val batchTiles = Fixtures.table(spark, sfDir, "tiles")
+    val src = spark.readStream.schema(batchTiles.schema)
+      .parquet(new java.io.File(batchTiles.inputFiles.head).getParent)
+    val table = s"${name}_${streamSeq.incrementAndGet()}"
+    val q = finish(compile(spark, sfDir, parseXml(xml), Map("Read" -> src)))
+      .writeStream.format("memory").queryName(table)
+      .outputMode("append").trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    spark.table(table)
+  }
+
   /** q_chain_dinsar_stream: the DInSAR DAG with the MASTER Read streamed —
    * the two-source Interferogram node becomes a stream-STATIC equi-join (the
    * secondary Read stays a batch frame), TopoPhaseRemoval is per-row and the
@@ -777,18 +731,8 @@ object ChainGraph {
    * declared two-source DAG executes as one unwatermarked append stream.
    * Shares q_chain_dinsar's oracle verbatim: stream/batch equality is the
    * engine-side guarantee, pinned in ChainSpec. */
-  def dinsarStreamQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val batchTiles = graft.gen.Fixtures.table(spark, sfDir, "tiles")
-    val src = spark.readStream.schema(batchTiles.schema)
-      .parquet(new java.io.File(batchTiles.inputFiles.head).getParent)
-    val name = s"chain_dinsar_stream_${streamSeq.incrementAndGet()}"
-    val q = compile(spark, sfDir, parseXml(dinsarChainXml), Map("Read" -> src))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(name)
-  }
+  def dinsarStreamQuery(spark: SparkSession, sfDir: String): DataFrame =
+    streamed(spark, sfDir, dinsarChainXml, "chain_dinsar_stream")(identity)
 
   /** q_chain_grd_stream: the declared GRD prefix executed AS a structured
    * stream end-to-end under the driver gate — the chain compiles over a
@@ -799,19 +743,9 @@ object ChainGraph {
    * drains the full source and every row's value is independent of batch
    * boundaries, so the result equals the batch chain row-for-row (pinned in
    * ChainSpec) and matches the same DuckDB oracle as any batch gate. */
-  def grdStreamQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val batchTiles = graft.gen.Fixtures.table(spark, sfDir, "tiles")
-    val src = spark.readStream.schema(batchTiles.schema)
-      .parquet(new java.io.File(batchTiles.inputFiles.head).getParent)
-    val chained = compile(spark, sfDir, parseXml(grdStreamXml), Map("Read" -> src))
-    val name = s"chain_grd_stream_${streamSeq.incrementAndGet()}"
-    val q = graft.ops.Raster.rollup(chained.withColumn("out", col("v")), scale = 1e1)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(name)
-  }
+  def grdStreamQuery(spark: SparkSession, sfDir: String): DataFrame =
+    streamed(spark, sfDir, grdStreamXml, "chain_grd_stream")(chained =>
+      graft.ops.Raster.rollup(chained.withColumn("out", col("v")), scale = 1e1))
 
   /** The canonical Sentinel-1 GRD backscatter chain (the most-used shipped
    * graph shape: Read -> ThermalNoiseRemoval -> Calibration -> Speckle-Filter

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.gen.Fixtures
 
 /**
  * Full-fidelity Back-Geocoding / DEM-assisted coregistration
@@ -44,16 +43,8 @@ object BackGeocoding {
       .withColumn("scene_idx", expr("CAST(substring(scene_id, 7, 4) AS INT)"))
       .where(col("scene_idx") % 2 === 0)
       .withColumn("sec_scene_id", format_string("scene_%04d", col("scene_idx") + 1))
-    val bursts = Fixtures.table(spark, sfDir, "bursts")
-      .select(col("scene_id"), col("subswath"), col("burst_idx"),
-        col("burst_first_line_time"), col("doppler_rate"), col("doppler_centroid"),
-        col("reference_time"))
-    val scenes = Fixtures.table(spark, sfDir, "scenes")
-      .select("scene_id", "azimuth_time_interval")
     // deramp metadata of the secondary position's burst (master scene timeline)
-    val withMeta = j
-      .join(broadcast(bursts), Seq("scene_id", "subswath", "burst_idx"))
-      .join(broadcast(scenes), Seq("scene_id"))
+    val withMeta = InSAR.withBurstTiming(spark, sfDir, j)
       .withColumn("t_s", expr("burst_first_line_time + lf_s * azimuth_time_interval"))
       .withColumn("remod_ph", expr(
         s"atan2(sin(0.0 - ${phaseSql("t_s")}), cos(0.0 - ${phaseSql("t_s")}))"))

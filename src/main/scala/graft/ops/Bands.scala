@@ -26,7 +26,6 @@ import graft.model.Layout
 object Bands {
 
   private val ND = Raster.ND
-  private val Q = "1.0E6"
   private val Off = "0.031415926535897934"
 
   /** per-pixel quantized BIGINT (n, s) of the valid intensities of one tile —

@@ -19,11 +19,17 @@ import graft.model.Layout
  */
 object Calibration {
 
-  private val ND = Raster.ND
 
   /** One row per (scene, subswath, pol): vectors sorted by line. */
   def lutTable(spark: SparkSession, sfDir: String, lutCol: String): DataFrame =
-    Fixtures.table(spark, sfDir, "cal_vectors")
+    vectors(spark, sfDir, "cal_vectors", lutCol)
+
+  /** The noise-vector LUT table (thermal-noise removal, ETAD), lutTable's shape. */
+  def noiseLutTable(spark: SparkSession, sfDir: String): DataFrame =
+    vectors(spark, sfDir, "noise_vectors", "noise_lut")
+
+  private def vectors(spark: SparkSession, sfDir: String, table: String, lutCol: String): DataFrame =
+    Fixtures.table(spark, sfDir, table)
       .groupBy("scene_id", "subswath", "pol")
       .agg(array_sort(collect_list(struct(col("line"), col("pixels"), col(lutCol).as("lut"))))
         .as("vecs"))
@@ -89,20 +95,11 @@ object Calibration {
   /** Thermal-noise removal (reference Sentinel1RemoveThermalNoiseOp.java:54): subtract the
    * interpolated noise LUT from dn^2, clamp at 0 — same broadcast-LUT shape. */
   def thermalNoiseQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val tiles = Raster.intensityTiles(spark, sfDir)
-    val lut = Fixtures.table(spark, sfDir, "noise_vectors")
-      .groupBy("scene_id", "subswath", "pol")
-      .agg(array_sort(collect_list(struct(col("line"), col("pixels"), col("noise_lut").as("lut"))))
-        .as("vecs"))
-    val out = withLutA(tiles, lut)
+    val out = withLutA(Raster.intensityTiles(spark, sfDir), noiseLutTable(spark, sfDir))
       .withColumn("out", graft.exprs.KernelExprs.pixelMap2(
         col("v"), col("lut_a"), graft.exprs.Kernels.PM_NOISESUB))
     Raster.rollup(out, scale = 1.0)
   }
-
-  /** Shared elevation-angle SQL (linear in range position, integer denominator so
-   * both engines run double division). */
-  private def thetaOf(gx: String) = s"(20.0 + 20.0 * ($gx) / ${Layout.SamplesPerBurst})"
 
   /** q_antenna_pattern: remove the two-way elevation antenna-pattern gain
    * (RemoveAntennaPatternOp.java — out = dn2 / g(theta)^2 with the gain pattern a

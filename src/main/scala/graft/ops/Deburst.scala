@@ -86,7 +86,6 @@ object Deburst {
 
     // ---- overlap strips: last `ov` rows of burst b (tile_y = lastTy) vs first
     // `ov` rows of burst b+1 (tile_y = 0), per tile_x ----
-    val topOff = W * (Layout.TileH - ov)
     val top = tiles.where(col("tile_y") === lastTy && col("burst_idx") < maxBurst)
       .select(col("scene_id"), col("subswath"), col("pol"), col("burst_idx").as("burst_a"),
         col("tile_x"), col("v").as("va"), col("id").as("ia"))

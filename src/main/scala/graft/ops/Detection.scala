@@ -2,8 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.gen.Fixtures
-import graft.model.Layout
 
 /**
  * Detection / stack operators:

@@ -20,7 +20,6 @@ import graft.model.Layout
  */
 object Geocode {
 
-  private val ND = Raster.ND
   val MosaicCell = 0.05
 
   /** Pixel scatter -> map-cell mean (VV intensity). The scatter is PRE-AGGREGATED
@@ -147,12 +146,7 @@ object Geocode {
    * surface in the fixtures).
    */
   def etadQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val tiles = Raster.intensityTiles(spark, sfDir)
-    val lut = Fixtures.table(spark, sfDir, "noise_vectors")
-      .groupBy("scene_id", "subswath", "pol")
-      .agg(array_sort(collect_list(struct(col("line"), col("pixels"), col("noise_lut").as("lut"))))
-        .as("vecs"))
-    Raster.rollup(Calibration.withLutA(tiles, lut)
+    Raster.rollup(Calibration.withLutA(Raster.intensityTiles(spark, sfDir), Calibration.noiseLutTable(spark, sfDir))
       .withColumn("out", graft.exprs.KernelExprs.etadMap(
         col("v"), col("lut_a"), col("tile_x"), TerrainCorrection.DR, Layout.TileW)))
   }

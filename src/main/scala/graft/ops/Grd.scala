@@ -62,16 +62,11 @@ object Grd {
    * the per-line knots of noise_az_vectors (identical lerp staged in the oracle).
    */
   def thermalNoiseAzQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val tiles = Raster.intensityTiles(spark, sfDir)
-    val rgLut = Fixtures.table(spark, sfDir, "noise_vectors")
-      .groupBy("scene_id", "subswath", "pol")
-      .agg(array_sort(collect_list(struct(col("line"), col("pixels"), col("noise_lut").as("lut"))))
-        .as("vecs"))
     val azLut = Fixtures.table(spark, sfDir, "noise_az_vectors")
       .groupBy("scene_id", "subswath", "pol")
       .agg(expr("transform(array_sort(collect_list(struct(line, value))), e -> e.value)").as("azlut"))
     val lp = Layout.LinesPerBurst
-    val withRg = Calibration.withLutA(tiles, rgLut)
+    val withRg = Calibration.withLutA(Raster.intensityTiles(spark, sfDir), Calibration.noiseLutTable(spark, sfDir))
       .join(broadcast(azLut), Seq("scene_id", "subswath", "pol"))
     // compiled lerp-subtract map (Kernels.noiseAzMap) — replaces the interpreted
     // transform(sequence(...)) HOF; pure +,-,*,/ so bit-identical (RasterOpsSpec)

@@ -30,21 +30,21 @@ object InSAR {
   val CohBiasC: Double = 1.0 / math.sqrt(18.0)
   val CohBiasDen: Double = 1.0 - CohBiasC
 
-  /** tiles joined with tiles_sec per tile key, with complex-cross per-pixel arrays. */
-  def crossTiles(spark: SparkSession, sfDir: String): DataFrame = {
-    val ref = Fixtures.table(spark, sfDir, "tiles")
-      .select(col("scene_id"), col("subswath"), col("pol"), col("burst_idx"),
-        col("tile_x"), col("tile_y"), col("i").as("i1"), col("q").as("q1"))
-    val sec = Fixtures.table(spark, sfDir, "tiles_sec")
-      .select(col("scene_id"), col("subswath"), col("pol"), col("burst_idx"),
-        col("tile_x"), col("tile_y"), col("i").as("i2"), col("q").as("q2"))
-    ref.join(sec, Seq("scene_id", "subswath", "pol", "burst_idx", "tile_x", "tile_y"))
+  /** Reference and secondary tiles joined per tile key, with the complex-cross
+   * per-pixel arrays (cre, cim, p1, p2) from ONE compiled pass per tile pair.
+   * The chain Interferogram node calls it on its two source frames. */
+  def cross(ref: DataFrame, sec: DataFrame): DataFrame = {
+    val keys = Seq("scene_id", "subswath", "pol", "burst_idx", "tile_x", "tile_y")
+    ref.select(keys.map(col) ++ Seq(col("i").as("i1"), col("q").as("q1")): _*)
+      .join(sec.select(keys.map(col) ++ Seq(col("i").as("i2"), col("q").as("q2")): _*), keys)
       .withColumn("cx", KernelExprs.complexCross(col("i1"), col("q1"), col("i2"), col("q2")))
-      .select(col("scene_id"), col("subswath"), col("pol"), col("burst_idx"),
-        col("tile_x"), col("tile_y"),
-        col("cx.cre").as("cre"), col("cx.cim").as("cim"),
-        col("cx.p1").as("p1"), col("cx.p2").as("p2"))
+      .select(keys.map(col) ++ Seq(col("cx.cre").as("cre"), col("cx.cim").as("cim"),
+        col("cx.p1").as("p1"), col("cx.p2").as("p2")): _*)
   }
+
+  /** tiles joined with tiles_sec per tile key, with complex-cross per-pixel arrays. */
+  def crossTiles(spark: SparkSession, sfDir: String): DataFrame =
+    cross(Fixtures.table(spark, sfDir, "tiles"), Fixtures.table(spark, sfDir, "tiles_sec"))
 
   /** Per-tile interferogram phase rollup. */
   def interferogramQuery(spark: SparkSession, sfDir: String): DataFrame =
@@ -68,31 +68,26 @@ object InSAR {
         graft.exprs.Kernels.PS_FLAT, 0.0, Layout.TileW, Layout.TileH,
         Layout.SamplesPerBurst, FlatC1, FlatC3)))
 
-  /** Coherence: one 4-column halo exchange, one native windowed pass. */
-  def coherenceQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val haloed = Raster.withHaloMulti(crossTiles(spark, sfDir),
-      Seq("cre", "cim", "p1", "p2"), margin = 1)
-    Raster.rollup(haloed
-      .withColumn("out", KernelExprs.coherence(
+  /** Coherence of the cross products into column `out`: one 4-column halo
+   * exchange, one native windowed pass. The chain Coherence node calls it too. */
+  def coherence(cross: DataFrame, out: String): DataFrame =
+    Raster.withHaloMulti(cross, Seq("cre", "cim", "p1", "p2"), margin = 1)
+      .withColumn(out, KernelExprs.coherence(
         col("halo_cre"), col("halo_cim"), col("halo_p1"), col("halo_p2"),
         Raster.W, Raster.H, 1))
-      .drop("halo_cre", "halo_cim", "halo_p1", "halo_p2"))
-  }
+      .drop("halo_cre", "halo_cim", "halo_p1", "halo_p2")
+
+  def coherenceQuery(spark: SparkSession, sfDir: String): DataFrame =
+    Raster.rollup(coherence(crossTiles(spark, sfDir), "out"))
 
   /** Coherence with bias correction (CoherenceOp.java:927): coh_corr =
    * max(0, (coh - 1/sqrt(2*ENL)) / (1 - 1/sqrt(2*ENL))) with ENL = window n. */
-  def coherenceBiasCorrectedQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val haloed = Raster.withHaloMulti(crossTiles(spark, sfDir),
-      Seq("cre", "cim", "p1", "p2"), margin = 1)
-    Raster.rollup(haloed
-      .withColumn("coh", KernelExprs.coherence(
-        col("halo_cre"), col("halo_cim"), col("halo_p1"), col("halo_p2"),
-        Raster.W, Raster.H, 1))
+  def coherenceBiasCorrectedQuery(spark: SparkSession, sfDir: String): DataFrame =
+    Raster.rollup(coherence(crossTiles(spark, sfDir), "coh")
       .withColumn("out", KernelExprs.pixelMapIdx(
         col("coh"), lit(0), lit(CohBiasC), graft.exprs.Kernels.PXI_COHBIAS,
         Layout.TileW, Layout.SamplesPerBurst))
-      .drop("halo_cre", "halo_cim", "halo_p1", "halo_p2", "coh"))
-  }
+      .drop("coh"))
 
   /** Synthetic topographic phase surface used by TopoPhaseRemoval / PhaseToElevation
    * (the reference computes it from the DEM through the InSAR geometry,
@@ -261,28 +256,41 @@ object InSAR {
            |      * atan2(element_at(cim, k + 1), element_at(cre, k + 1))))""".stripMargin)), scale = 1.0)
   }
 
-  /** Demodulate (TOPSAR demod, Sentinel1Utils.java:735-805): subtract the deramp
-   * phase from the raw signal phase, wrapped. */
-  def demodulateQuery(spark: SparkSession, sfDir: String): DataFrame = {
+  /** TOPS burst timing per tile: the bursts' first-line time, Doppler rate and
+   * centroid and reference time, and the scene's azimuth time interval, both
+   * broadcast-joined onto `df` by burst and scene. */
+  def withBurstTiming(spark: SparkSession, sfDir: String, df: DataFrame): DataFrame = {
     val bursts = Fixtures.table(spark, sfDir, "bursts")
       .select("scene_id", "subswath", "burst_idx", "burst_first_line_time",
         "doppler_rate", "doppler_centroid", "reference_time")
     val scenes = Fixtures.table(spark, sfDir, "scenes")
       .select("scene_id", "azimuth_time_interval")
-    val ta = s"(burst_first_line_time + (tile_y * ${Layout.TileH} + k div ${Layout.TileW}) * azimuth_time_interval)"
-    val phi = s"(-pi() * doppler_rate * ($ta - reference_time) * ($ta - reference_time) - 2 * pi() * doppler_centroid * $ta)"
-    val tiles = Fixtures.table(spark, sfDir, "tiles").where(col("pol") === "VV")
-      .withColumn("iq", graft.exprs.KernelExprs.quantize(col("i"), Raster.Dyadic))
-      .withColumn("qq", graft.exprs.KernelExprs.quantize(col("q"), Raster.Dyadic))
-    Raster.rollup(tiles
-      .join(broadcast(bursts), Seq("scene_id", "subswath", "burst_idx"))
+    df.join(broadcast(bursts), Seq("scene_id", "subswath", "burst_idx"))
       .join(broadcast(scenes), Seq("scene_id"))
+  }
+
+  /** Azimuth time of pixel k's line in its burst (over withBurstTiming's columns). */
+  private[ops] val TopsTa =
+    s"(burst_first_line_time + (tile_y * ${Layout.TileH} + k div ${Layout.TileW}) * azimuth_time_interval)"
+  /** TOPS deramp/demod phase of pixel k (Sentinel1Utils.java:735-805). */
+  private val TopsPhi =
+    s"(-pi() * doppler_rate * ($TopsTa - reference_time) * ($TopsTa - reference_time) - 2 * pi() * doppler_centroid * $TopsTa)"
+
+  /** VV tiles with i/q snapped to the dyadic grid (iq, qq). */
+  private def vvQuantized(spark: SparkSession, sfDir: String): DataFrame =
+    Fixtures.table(spark, sfDir, "tiles").where(col("pol") === "VV")
+      .withColumn("iq", KernelExprs.quantize(col("i"), Raster.Dyadic))
+      .withColumn("qq", KernelExprs.quantize(col("q"), Raster.Dyadic))
+
+  /** Demodulate (TOPSAR demod, Sentinel1Utils.java:735-805): subtract the deramp
+   * phase from the raw signal phase, wrapped. */
+  def demodulateQuery(spark: SparkSession, sfDir: String): DataFrame =
+    Raster.rollup(withBurstTiming(spark, sfDir, vvQuantized(spark, sfDir))
       .withColumn("out", expr(
         s"""transform(sequence(0, ${Layout.TileW * Layout.TileH - 1}), k ->
            |  if(element_at(iq, k + 1) = $ND or element_at(qq, k + 1) = $ND, $ND,
-           |    atan2(sin(atan2(element_at(qq, k + 1), element_at(iq, k + 1)) - $phi),
-           |          cos(atan2(element_at(qq, k + 1), element_at(iq, k + 1)) - $phi))))""".stripMargin)))
-  }
+           |    atan2(sin(atan2(element_at(qq, k + 1), element_at(iq, k + 1)) - $TopsPhi),
+           |          cos(atan2(element_at(qq, k + 1), element_at(iq, k + 1)) - $TopsPhi))))""".stripMargin)))
 
   /** Three-pass DInSAR (double-difference over the epoch stack): per pixel,
    * dd = wrap(ph(0->1) - 0.5 * ph(0->2)) with the baseline ratio pinned to 0.5 —
@@ -309,43 +317,19 @@ object InSAR {
 
   /** Deramp/demod phase per pixel, wrapped; per-tile rollup. */
   def derampQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val bursts = Fixtures.table(spark, sfDir, "bursts")
-      .select("scene_id", "subswath", "burst_idx", "burst_first_line_time",
-        "doppler_rate", "doppler_centroid", "reference_time")
-    val scenes = Fixtures.table(spark, sfDir, "scenes")
-      .select("scene_id", "azimuth_time_interval")
     val tiles = Fixtures.table(spark, sfDir, "tiles").where(col("pol") === "VV")
       .select("scene_id", "subswath", "pol", "burst_idx", "tile_x", "tile_y")
-    Raster.rollup(tiles
-      .join(broadcast(bursts), Seq("scene_id", "subswath", "burst_idx"))
-      .join(broadcast(scenes), Seq("scene_id"))
+    Raster.rollup(withBurstTiming(spark, sfDir, tiles)
       .withColumn("out", expr(
-        s"""transform(sequence(0, ${Layout.TileW * Layout.TileH - 1}), k ->
-           |  atan2(sin(-pi() * doppler_rate * (burst_first_line_time + (tile_y * ${Layout.TileH} + k div ${Layout.TileW}) * azimuth_time_interval - reference_time)
-           |                 * (burst_first_line_time + (tile_y * ${Layout.TileH} + k div ${Layout.TileW}) * azimuth_time_interval - reference_time)
-           |            - 2 * pi() * doppler_centroid * (burst_first_line_time + (tile_y * ${Layout.TileH} + k div ${Layout.TileW}) * azimuth_time_interval)),
-           |        cos(-pi() * doppler_rate * (burst_first_line_time + (tile_y * ${Layout.TileH} + k div ${Layout.TileW}) * azimuth_time_interval - reference_time)
-           |                 * (burst_first_line_time + (tile_y * ${Layout.TileH} + k div ${Layout.TileW}) * azimuth_time_interval - reference_time)
-           |            - 2 * pi() * doppler_centroid * (burst_first_line_time + (tile_y * ${Layout.TileH} + k div ${Layout.TileW}) * azimuth_time_interval))))""".stripMargin)))
+        s"transform(sequence(0, ${Layout.TileW * Layout.TileH - 1}), k -> atan2(sin($TopsPhi), cos($TopsPhi)))")))
   }
 
   /** Remodulate (inverse of Demodulate, TOPSARDerampDemodOp's backward leg):
    * re-apply the deramp/demod phase ramp to the demodulated signal; the round
    * trip recovers the original phase (both engines stage wrap(phi_d + phi)). */
   def remodulateQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val bursts = Fixtures.table(spark, sfDir, "bursts")
-      .select("scene_id", "subswath", "burst_idx", "burst_first_line_time",
-        "doppler_rate", "doppler_centroid", "reference_time")
-    val scenes = Fixtures.table(spark, sfDir, "scenes")
-      .select("scene_id", "azimuth_time_interval")
-    val ta = s"(burst_first_line_time + (tile_y * ${Layout.TileH} + k div ${Layout.TileW}) * azimuth_time_interval)"
-    val phi = s"(-pi() * doppler_rate * ($ta - reference_time) * ($ta - reference_time) - 2 * pi() * doppler_centroid * $ta)"
-    val tiles = Fixtures.table(spark, sfDir, "tiles").where(col("pol") === "VV")
-      .withColumn("iq", graft.exprs.KernelExprs.quantize(col("i"), Raster.Dyadic))
-      .withColumn("qq", graft.exprs.KernelExprs.quantize(col("q"), Raster.Dyadic))
-    Raster.rollup(tiles
-      .join(broadcast(bursts), Seq("scene_id", "subswath", "burst_idx"))
-      .join(broadcast(scenes), Seq("scene_id"))
+    val phi = TopsPhi
+    Raster.rollup(withBurstTiming(spark, sfDir, vvQuantized(spark, sfDir))
       .withColumn("out", expr(
         s"""transform(sequence(0, ${Layout.TileW * Layout.TileH - 1}), k ->
            |  if(element_at(iq, k + 1) = $ND or element_at(qq, k + 1) = $ND, $ND,

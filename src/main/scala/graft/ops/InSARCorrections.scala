@@ -76,24 +76,11 @@ object InSARCorrections {
    * superseded. Scale shape: ONE groupBy(burst) shuffle to assemble rasters,
    * the kernel runs map-side, output explodes back to tile rows.
    */
-  def ionoQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val tilesX = Layout.TilesX; val tilesY = Layout.TilesY
-    InSAR.crossTiles(spark, sfDir)
-      .groupBy("scene_id", "subswath", "pol", "burst_idx")
-      .agg(sort_array(collect_list(struct(col("tile_y"), col("tile_x"),
-        col("cre"), col("cim")))).as("ts"))
-      .withColumn("cre_r", expr("flatten(transform(ts, t -> t.cre))"))
-      .withColumn("cim_r", expr("flatten(transform(ts, t -> t.cim))"))
+  def ionoQuery(spark: SparkSession, sfDir: String): DataFrame =
+    Raster.explodeTiles(Raster.burstRaster(InSAR.crossTiles(spark, sfDir), "cre", "cim")
       .withColumn("r", graft.exprs.KernelExprs.ionoSmooth(col("cre_r"), col("cim_r"),
-        tilesX, tilesY, Layout.TileW, Layout.TileH, IonoSigma, IonoCohThr))
-      .withColumn("ti", explode(sequence(lit(0), lit(tilesX * tilesY - 1))))
-      .select(col("scene_id"), col("subswath"), col("pol"), col("burst_idx"),
-        expr(s"CAST(ti div $tilesX AS INT)").as("tile_y"),
-        expr(s"CAST(ti % $tilesX AS INT)").as("tile_x"),
-        expr("element_at(r.n, ti + 1)").as("n_valid"),
-        expr("element_at(r.iono_q, ti + 1)").as("iono_sum_q"),
-        expr("element_at(r.corr_q, ti + 1)").as("corr_sum_q"))
-  }
+        Layout.TilesX, Layout.TilesY, Layout.TileW, Layout.TileH, IonoSigma, IonoCohThr)),
+      "n_valid" -> "n", "iono_sum_q" -> "iono_q", "corr_sum_q" -> "corr_q")
 
   /** q_tropo: per-ifg linear phase-elevation fit + model subtraction. */
   def tropoQuery(spark: SparkSession, sfDir: String): DataFrame = {

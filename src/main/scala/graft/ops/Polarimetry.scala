@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.gen.Fixtures
-import graft.model.Layout
 
 /**
  * Dual/compact-pol polarimetric operators (reference rstb family:
@@ -22,7 +21,6 @@ import graft.model.Layout
 object Polarimetry {
 
   private val ND = Raster.ND
-  private val N = Layout.TileW * Layout.TileH
 
   /** dual-pol tiles joined on tile key with quantized per-pixel products:
    * c11 = |vv|^2, c22 = |vh|^2, c12r/c12i = vv * conj(vh). */

@@ -36,11 +36,15 @@ object Raster {
   /** Tiles with a derived intensity array v = i^2+q^2 (complex no-data propagates),
    * exactly the complex branch of SpeckleFilter.getNeighborValues (reference :96-117). */
   def intensityTiles(spark: SparkSession, sfDir: String, table: String = "tiles"): DataFrame =
+    withIntensity(Fixtures.table(spark, sfDir, table))
+
+  /** The frame's i/q with the derived intensity `v` (the chain nodes' pre-snap:
+   * products of 2^-12-grid values land on the 2^-14-snapped DyadicV grid). */
+  def withIntensity(tiles: DataFrame): DataFrame =
     // compiled kernel (was an interpreted zip_with lambda — a CodegenFallback
     // HOF that also knocked the whole projection out of whole-stage codegen)
-    Fixtures.table(spark, sfDir, table)
-      .withColumn("v", graft.exprs.KernelExprs.intensity(
-        col("i"), col("q"), Dyadic.toDouble, DyadicV.toDouble))
+    tiles.withColumn("v", graft.exprs.KernelExprs.intensity(
+      col("i"), col("q"), Dyadic.toDouble, DyadicV.toDouble))
 
   /**
    * Generalized halo exchange over several per-pixel value arrays at once. Plan shape
@@ -81,6 +85,31 @@ object Raster {
       df.withColumn(s"halo_$c",
         graft.exprs.KernelExprs.haloAssemble(col(s"contrib_$c"), W, H, margin))
     }.drop(cols.map(c => s"contrib_$c"): _*)
+  }
+
+  /** Burst raster assembly: ONE groupBy(burst) shuffle collecting each burst's
+   * tiles as `ts`, the (tile_y, tile_x, fields...) structs sorted tile-major. */
+  def burstTiles(tiles: DataFrame, fields: String*): DataFrame =
+    tiles.groupBy("scene_id", "subswath", "pol", "burst_idx")
+      .agg(sort_array(collect_list(struct(col("tile_y") +: col("tile_x") +: fields.map(col): _*))).as("ts"))
+
+  /** burstTiles with each field flattened to one tile-major burst array
+   * `<field>_r`, the input of the per-burst kernels. */
+  def burstRaster(tiles: DataFrame, fields: String*): DataFrame =
+    fields.foldLeft(burstTiles(tiles, fields: _*)) { (df, f) =>
+      df.withColumn(s"${f}_r", expr(s"flatten(transform(ts, t -> t.$f))"))
+    }.drop("ts")
+
+  /** Per-tile explode of a per-burst kernel result `r`: tile index ti runs
+   * tile-major (tile_y = ti div TilesX, tile_x = ti % TilesX), and each output
+   * column (name -> r's field) takes that tile's element of the field. */
+  def explodeTiles(bursts: DataFrame, outs: (String, String)*): DataFrame = {
+    val tilesX = Layout.TilesX; val tilesY = Layout.TilesY
+    bursts.withColumn("ti", explode(sequence(lit(0), lit(tilesX * tilesY - 1))))
+      .select(Seq(col("scene_id"), col("subswath"), col("pol"), col("burst_idx"),
+        expr(s"CAST(ti div $tilesX AS INT)").as("tile_y"),
+        expr(s"CAST(ti % $tilesX AS INT)").as("tile_x")) ++
+        outs.map { case (name, f) => expr(s"element_at(r.$f, ti + 1)").as(name) }: _*)
   }
 
   /** element_at into the margin-1 halo at window offset (dy, dx) of pixel k. */

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.cells.CellIndex
 import graft.gen.Fixtures
 import graft.model.Layout
 

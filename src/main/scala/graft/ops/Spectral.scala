@@ -45,33 +45,17 @@ object Spectral {
   def bandpassRangeQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val d = graft.ops.Raster.Dyadic
     val nd = Raster.ND
-    val tilesX = Layout.TilesX; val tilesY = Layout.TilesY
     val master = graft.gen.Fixtures.table(spark, sfDir, "tiles")
       .where(col("pol") === "VV" && col("burst_idx") <= 2)
       .withColumn("iq", expr(s"transform(i, x -> if(isnan(x), CAST($nd AS DOUBLE), floor(x * $d) / $d))"))
       .withColumn("qq", expr(s"transform(q, x -> if(isnan(x), CAST($nd AS DOUBLE), floor(x * $d) / $d))"))
-      .groupBy("scene_id", "subswath", "pol", "burst_idx")
-      .agg(sort_array(collect_list(struct(col("tile_y"), col("tile_x"),
-        col("iq"), col("qq")))).as("mts"))
     val cross = InSAR.crossTiles(spark, sfDir)
       .where(col("pol") === "VV" && col("burst_idx") <= 2)
-      .groupBy("scene_id", "subswath", "pol", "burst_idx")
-      .agg(sort_array(collect_list(struct(col("tile_y"), col("tile_x"),
-        col("cre"), col("cim")))).as("xts"))
-    master.join(cross, Seq("scene_id", "subswath", "pol", "burst_idx"))
-      .withColumn("mre_r", expr("flatten(transform(mts, t -> t.iq))"))
-      .withColumn("mim_r", expr("flatten(transform(mts, t -> t.qq))"))
-      .withColumn("xre_r", expr("flatten(transform(xts, t -> t.cre))"))
-      .withColumn("xim_r", expr("flatten(transform(xts, t -> t.cim))"))
-      .withColumn("r", KernelExprs.rangeFilter(col("mre_r"), col("mim_r"),
-        col("xre_r"), col("xim_r"), tilesX, tilesY, Layout.TileW, Layout.TileH))
-      .withColumn("ti", explode(sequence(lit(0), lit(tilesX * tilesY - 1))))
-      .select(col("scene_id"), col("subswath"), col("pol"), col("burst_idx"),
-        expr(s"CAST(ti div $tilesX AS INT)").as("tile_y"),
-        expr(s"CAST(ti % $tilesX AS INT)").as("tile_x"),
-        expr("element_at(r.n, ti + 1)").as("n_valid"),
-        expr("element_at(r.re_q, ti + 1)").as("re_sum_q"),
-        expr("element_at(r.im_q, ti + 1)").as("im_sum_q"))
+    Raster.explodeTiles(Raster.burstRaster(master, "iq", "qq")
+      .join(Raster.burstRaster(cross, "cre", "cim"), Seq("scene_id", "subswath", "pol", "burst_idx"))
+      .withColumn("r", KernelExprs.rangeFilter(col("iq_r"), col("qq_r"),
+        col("cre_r"), col("cim_r"), Layout.TilesX, Layout.TilesY, Layout.TileW, Layout.TileH)),
+      "n_valid" -> "n", "re_sum_q" -> "re_q", "im_sum_q" -> "im_q")
   }
 
   /** Fixture processed azimuth bandwidth (Hz) and jlinda's default Hamming
@@ -97,33 +81,22 @@ object Spectral {
   def bandpassAzimuthQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val d = graft.ops.Raster.Dyadic
     val nd = Raster.ND
-    val tilesX = Layout.TilesX; val tilesY = Layout.TilesY
     val bursts = graft.gen.Fixtures.table(spark, sfDir, "bursts")
       .select("scene_id", "subswath", "burst_idx", "doppler_centroid")
     val scenes = graft.gen.Fixtures.table(spark, sfDir, "scenes")
       .select("scene_id", "azimuth_time_interval")
-    graft.gen.Fixtures.table(spark, sfDir, "tiles")
+    val tiles = graft.gen.Fixtures.table(spark, sfDir, "tiles")
       .where(col("pol") === "VV" && col("burst_idx") <= 2)
       .withColumn("iq", expr(s"transform(i, x -> if(isnan(x), CAST($nd AS DOUBLE), floor(x * $d) / $d))"))
       .withColumn("qq", expr(s"transform(q, x -> if(isnan(x), CAST($nd AS DOUBLE), floor(x * $d) / $d))"))
-      .groupBy("scene_id", "subswath", "pol", "burst_idx")
-      .agg(sort_array(collect_list(struct(col("tile_y"), col("tile_x"),
-        col("iq"), col("qq")))).as("ts"))
-      .withColumn("cre_r", expr("flatten(transform(ts, t -> t.iq))"))
-      .withColumn("cim_r", expr("flatten(transform(ts, t -> t.qq))"))
+    Raster.explodeTiles(Raster.burstRaster(tiles, "iq", "qq")
       .join(broadcast(bursts), Seq("scene_id", "subswath", "burst_idx"))
       .join(broadcast(scenes), Seq("scene_id"))
-      .withColumn("r", KernelExprs.azFilter(col("cre_r"), col("cim_r"),
+      .withColumn("r", KernelExprs.azFilter(col("iq_r"), col("qq_r"),
         col("doppler_centroid"), col("doppler_centroid") + AzFdcSlaveOffset,
         expr("1.0 / azimuth_time_interval"),
-        tilesX, tilesY, Layout.TileW, Layout.TileH, AzBw, AzHammingAlpha))
-      .withColumn("ti", explode(sequence(lit(0), lit(tilesX * tilesY - 1))))
-      .select(col("scene_id"), col("subswath"), col("pol"), col("burst_idx"),
-        expr(s"CAST(ti div $tilesX AS INT)").as("tile_y"),
-        expr(s"CAST(ti % $tilesX AS INT)").as("tile_x"),
-        expr("element_at(r.n, ti + 1)").as("n_valid"),
-        expr("element_at(r.re_q, ti + 1)").as("re_sum_q"),
-        expr("element_at(r.im_q, ti + 1)").as("im_sum_q"))
+        Layout.TilesX, Layout.TilesY, Layout.TileW, Layout.TileH, AzBw, AzHammingAlpha)),
+      "n_valid" -> "n", "re_sum_q" -> "re_q", "im_sum_q" -> "im_q")
   }
 
   /** Azimuth-Spectrum (DerampedAzimuthSpectrumOp.java:43-46, 290-296, 371-396):
@@ -137,17 +110,10 @@ object Spectral {
     val ND = Raster.ND
     val N = Layout.TileW * Layout.TileH
     val d = Raster.Dyadic
-    val bursts = Fixtures.table(spark, sfDir, "bursts")
-      .select("scene_id", "subswath", "burst_idx", "burst_first_line_time",
-        "doppler_rate", "reference_time")
-    val scenes = Fixtures.table(spark, sfDir, "scenes")
-      .select("scene_id", "azimuth_time_interval")
-    val ta = s"(burst_first_line_time + (tile_y * ${Layout.TileH} + k div ${Layout.TileW}) * azimuth_time_interval)"
+    val ta = InSAR.TopsTa
     val phi = s"(-pi() * doppler_rate * ($ta - reference_time) * ($ta - reference_time))"
-    Raster.rollup(Fixtures.table(spark, sfDir, "tiles")
-      .where(col("pol") === "VV" && col("burst_idx") <= 2)
-      .join(broadcast(bursts), Seq("scene_id", "subswath", "burst_idx"))
-      .join(broadcast(scenes), Seq("scene_id"))
+    Raster.rollup(InSAR.withBurstTiming(spark, sfDir, Fixtures.table(spark, sfDir, "tiles")
+      .where(col("pol") === "VV" && col("burst_idx") <= 2))
       .withColumn("iq", expr(s"transform(i, x -> if(x = $ND or isnan(x), 0.0D, floor(x * $d) / $d))"))
       .withColumn("qq", expr(s"transform(q, x -> if(x = $ND or isnan(x), 0.0D, floor(x * $d) / $d))"))
       .withColumn("cphi", expr(s"transform(sequence(0, ${N - 1}), k -> cos($phi))"))
@@ -174,23 +140,16 @@ object Spectral {
    * deterministic radix-2 FFT whose butterflies the DuckDB twin replays
    * bit-for-bit). Subset: VV, bursts 1-2 (bounds the twin's staged-FFT cost).
    */
-  def goldsteinQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val tilesX = Layout.TilesX; val tilesY = Layout.TilesY
-    InSAR.crossTiles(spark, sfDir)
-      .where(col("pol") === "VV" && col("burst_idx") <= 2)
-      .groupBy("scene_id", "subswath", "pol", "burst_idx")
-      .agg(sort_array(collect_list(struct(col("tile_y"), col("tile_x"),
-        col("cre"), col("cim")))).as("ts"))
-      .withColumn("cre_r", expr("flatten(transform(ts, t -> t.cre))"))
-      .withColumn("cim_r", expr("flatten(transform(ts, t -> t.cim))"))
+  def goldsteinQuery(spark: SparkSession, sfDir: String): DataFrame =
+    goldstein(InSAR.crossTiles(spark, sfDir)
+      .where(col("pol") === "VV" && col("burst_idx") <= 2))
+
+  /** The Goldstein pipeline over the cross products of any tile frame; the chain
+   * GoldsteinPhaseFiltering node calls it on its upstream Interferogram. */
+  def goldstein(cross: DataFrame): DataFrame =
+    Raster.explodeTiles(Raster.burstRaster(cross, "cre", "cim")
       .withColumn("r", KernelExprs.goldsteinFull(col("cre_r"), col("cim_r"),
-        tilesX, tilesY, Layout.TileW, Layout.TileH,
-        GoldsteinAlphaMin, GoldsteinAlphaMax, GoldsteinAlpha))
-      .withColumn("ti", explode(sequence(lit(0), lit(tilesX * tilesY - 1))))
-      .select(col("scene_id"), col("subswath"), col("pol"), col("burst_idx"),
-        expr(s"CAST(ti div $tilesX AS INT)").as("tile_y"),
-        expr(s"CAST(ti % $tilesX AS INT)").as("tile_x"),
-        expr("element_at(r.n, ti + 1)").as("n_valid"),
-        expr("element_at(r.ph_q, ti + 1)").as("phase_sum_q"))
-  }
+        Layout.TilesX, Layout.TilesY, Layout.TileW, Layout.TileH,
+        GoldsteinAlphaMin, GoldsteinAlphaMax, GoldsteinAlpha)),
+      "n_valid" -> "n", "phase_sum_q" -> "ph_q")
 }

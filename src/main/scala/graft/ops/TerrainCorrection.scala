@@ -96,22 +96,19 @@ object TerrainCorrection {
       .withColumn("tile_x", expr(s"x_in_sw div ${Layout.TileW}"))
       .withColumn("px", expr(s"CAST((local_line % ${Layout.TileH}) * ${Layout.TileW} + x_in_sw % ${Layout.TileW} AS INT)"))
 
-  /**
-   * Apply-Orbit-File (reference ApplyOrbitFileOp.java:60-101): degree-3 Lagrange
-   * interpolation of the orbit state vectors at each burst mid-time, over the 4
-   * bracketing SVs (2 before + 2 after). The orbit dimension table is collected to
-   * one sorted array per scene and broadcast.
-   */
-  def orbitInterpQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val orb = Fixtures.table(spark, sfDir, "orbit")
+  /** Per-scene state vectors of an orbit table, as one array sorted by time. */
+  private def svs(spark: SparkSession, sfDir: String, table: String): DataFrame =
+    Fixtures.table(spark, sfDir, table)
       .groupBy("scene_id")
       .agg(array_sort(collect_list(struct(col("t_sec"), col("x"), col("y"), col("z"),
         col("vx"), col("vy"), col("vz")))).as("svs"))
-    val bursts = Fixtures.table(spark, sfDir, "bursts")
-      .select(col("scene_id"), col("subswath"), col("burst_idx"),
-        ((col("burst_first_line_time") + col("burst_last_line_time")) / 2).as("tm"))
+
+  /** The degree-3 Lagrange bracket of each row's time `tm` on the broadcast
+   * orbit state vectors: the 4 bracketing knots k1..k4 (2 before + 2 after) and
+   * their weights w1..w4. The chain Apply-Orbit-File node calls it too. */
+  def lagrangeKnots(spark: SparkSession, sfDir: String, at: DataFrame): DataFrame =
     // bracket index: k = clamp(#{t_sec <= tm}, 2, n-2); knots k-1..k+2 (1-based)
-    val withKnots = bursts.join(broadcast(orb), Seq("scene_id"))
+    at.join(broadcast(svs(spark, sfDir, "orbit")), Seq("scene_id"))
       .withColumn("kk", expr(
         "greatest(2, least(size(svs) - 2, size(filter(svs, e -> e.t_sec <= tm))))"))
       .withColumn("k1", expr("element_at(svs, kk - 1)"))
@@ -127,12 +124,23 @@ object TerrainCorrection {
         "((tm - k1.t_sec) * (tm - k2.t_sec) * (tm - k4.t_sec)) / ((k3.t_sec - k1.t_sec) * (k3.t_sec - k2.t_sec) * (k3.t_sec - k4.t_sec))"))
       .withColumn("w4", expr(
         "((tm - k1.t_sec) * (tm - k2.t_sec) * (tm - k3.t_sec)) / ((k4.t_sec - k1.t_sec) * (k4.t_sec - k2.t_sec) * (k4.t_sec - k3.t_sec))"))
-    def interp(f: String) = expr(s"w1 * k1.$f + w2 * k2.$f + w3 * k3.$f + w4 * k4.$f")
-    withKnots.select(col("scene_id"), col("subswath"), col("burst_idx"),
-      expr("CAST(floor(0.031415926535897934 + (w1 * k1.x + w2 * k2.x + w3 * k3.x + w4 * k4.x) * 1.0E6) AS BIGINT)").as("x_q"),
-      expr("CAST(floor(0.031415926535897934 + (w1 * k1.y + w2 * k2.y + w3 * k3.y + w4 * k4.y) * 1.0E6) AS BIGINT)").as("y_q"),
-      expr("CAST(floor(0.031415926535897934 + (w1 * k1.z + w2 * k2.z + w3 * k3.z + w4 * k4.z) * 1.0E6) AS BIGINT)").as("z_q"),
-      expr("CAST(floor(0.031415926535897934 + (w1 * k1.vy + w2 * k2.vy + w3 * k3.vy + w4 * k4.vy) * 1.0E6) AS BIGINT)").as("vy_q"))
+
+  /** Lagrange-interpolated state component f over lagrangeKnots' columns. */
+  def lagrangeSql(f: String): String = s"w1 * k1.$f + w2 * k2.$f + w3 * k3.$f + w4 * k4.$f"
+
+  /**
+   * Apply-Orbit-File (reference ApplyOrbitFileOp.java:60-101): degree-3 Lagrange
+   * interpolation of the orbit state vectors at each burst mid-time, over the 4
+   * bracketing SVs (2 before + 2 after). The orbit dimension table is collected to
+   * one sorted array per scene and broadcast.
+   */
+  def orbitInterpQuery(spark: SparkSession, sfDir: String): DataFrame = {
+    val bursts = Fixtures.table(spark, sfDir, "bursts")
+      .select(col("scene_id"), col("subswath"), col("burst_idx"),
+        ((col("burst_first_line_time") + col("burst_last_line_time")) / 2).as("tm"))
+    def q6(f: String) = expr(s"CAST(floor(0.031415926535897934 + (${lagrangeSql(f)}) * 1.0E6) AS BIGINT)")
+    lagrangeKnots(spark, sfDir, bursts).select(col("scene_id"), col("subswath"), col("burst_idx"),
+      q6("x").as("x_q"), q6("y").as("y_q"), q6("z").as("z_q"), q6("vy").as("vy_q"))
   }
 
   /**
@@ -419,10 +427,7 @@ object TerrainCorrection {
 
   /** Per-scene sorted state-vector arrays of the CURVED orbit, broadcastable. */
   def svArrays(spark: SparkSession, sfDir: String): DataFrame =
-    Fixtures.table(spark, sfDir, "orbit_curved")
-      .groupBy("scene_id")
-      .agg(array_sort(collect_list(struct(col("t_sec"), col("x"), col("y"), col("z"),
-        col("vx"), col("vy"), col("vz")))).as("svs"))
+    svs(spark, sfDir, "orbit_curved")
       .select(col("scene_id"),
         expr("transform(svs, e -> e.t_sec)").as("ts"),
         expr("transform(svs, e -> e.x)").as("xs"),
@@ -717,22 +722,15 @@ object TerrainCorrection {
   def gslcQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val lambda = InSAR.Wavelength
     val d = Raster.Dyadic; val dv = Raster.DyadicV
-    val bursts = Fixtures.table(spark, sfDir, "bursts")
-      .select("scene_id", "subswath", "burst_idx", "burst_first_line_time",
-        "doppler_rate", "doppler_centroid", "reference_time")
-    val scenesAz = Fixtures.table(spark, sfDir, "scenes")
-      .select("scene_id", "azimuth_time_interval")
     val resolved = resolveCells(spark, sfDir, useDem = true, ciMax = GeoVarCiMax)
       .withColumn("ph", expr(s"4.0D * pi() * slant / ${lambda}D"))
       .withColumn("phr", expr("ph - floor(ph / (2.0D * pi())) * (2.0D * pi())"))
       .withColumn("cq", expr(s"floor(cos(phr) * $dv) / $dv"))
       .withColumn("sq", expr(s"floor(sin(phr) * $dv) / $dv"))
       .select("scene_id", "subswath", "burst_idx", "ci", "cj", "l0", "x0", "wl", "wx", "cq", "sq")
-    val corners = bilinearCorners(resolved)
-      // TOPS deramp phase at the source corner's azimuth line (the deramp model
-      // the TOPSAR-DerampDemod gate pins, InSAR.derampQuery)
-      .join(broadcast(bursts), Seq("scene_id", "subswath", "burst_idx"))
-      .join(broadcast(scenesAz), Seq("scene_id"))
+    // TOPS deramp phase at the source corner's azimuth line (the deramp model
+    // the TOPSAR-DerampDemod gate pins, InSAR.derampQuery)
+    val corners = InSAR.withBurstTiming(spark, sfDir, bilinearCorners(resolved))
       .withColumn("ta", expr("burst_first_line_time + line * azimuth_time_interval"))
       .withColumn("phd", expr("-pi() * doppler_rate * (ta - reference_time) * (ta - reference_time) " +
         "- 2.0D * pi() * doppler_centroid * ta"))

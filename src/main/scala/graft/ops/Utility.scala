@@ -68,7 +68,6 @@ object Utility {
    * :181-183) stays as its own gate, q_undersample_subsample.
    */
   def undersampleQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = Raster.Dyadic
     val w = 1.0 / 9
     val terms = (for (dy <- 0 to 2; dx <- 0 to 2) yield {
       val ti = s"CAST(((y0 + $dy) div ${Layout.TileH}) * ${Layout.TilesX} + ((x0 + $dx) div ${Layout.TileW}) + 1 AS INT)"
@@ -79,8 +78,7 @@ object Utility {
     Fixtures.table(spark, sfDir, "tiles")
       .withColumn("iq", graft.exprs.KernelExprs.quantize(col("i"), Raster.Dyadic))
       .withColumn("qq", graft.exprs.KernelExprs.quantize(col("q"), Raster.Dyadic))
-      .groupBy("scene_id", "subswath", "pol", "burst_idx")
-      .agg(sort_array(collect_list(struct(col("tile_y"), col("tile_x"), col("iq"), col("qq")))).as("ts"))
+      .transform(Raster.burstTiles(_, "iq", "qq"))
       .withColumn("out", expr(
         s"""transform(sequence(0, ${UsTgtW * UsTgtH - 1}), t ->
            |  aggregate(array(struct(

@@ -88,4 +88,38 @@ class FixturesSpec extends AnyFunSuite {
       forgetVerified(dir.toString)
     }
   }
+
+  test("the generator hash ignores line numbers but not code") {
+    import org.apache.xbean.asm9.{ClassReader, ClassVisitor, ClassWriter, Label, MethodVisitor, Opcodes}
+    val bytes = {
+      val in = Fixtures.getClass.getResourceAsStream("/graft/gen/Fixtures$.class")
+      try in.readAllBytes() finally in.close()
+    }
+    /** `bytes` copied with each method's visitor wrapped by `f`. */
+    def rewrite(f: MethodVisitor => MethodVisitor): Array[Byte] = {
+      val w = new ClassWriter(0)
+      new ClassReader(bytes).accept(new ClassVisitor(Opcodes.ASM9, w) {
+        override def visitMethod(access: Int, name: String, desc: String, sig: String,
+            exceptions: Array[String]): MethodVisitor =
+          f(super.visitMethod(access, name, desc, sig, exceptions))
+      }, 0)
+      w.toByteArray
+    }
+    def md5(b: Array[Byte]): String =
+      java.security.MessageDigest.getInstance("MD5").digest(b).map("%02x".format(_)).mkString
+    val copy = rewrite(identity)
+    val shifted = rewrite(mv => new MethodVisitor(Opcodes.ASM9, mv) {
+      override def visitLineNumber(line: Int, start: Label): Unit = super.visitLineNumber(line + 7, start)
+    })
+    val recoded = rewrite(mv => new MethodVisitor(Opcodes.ASM9, mv) {
+      override def visitLdcInsn(v: Any): Unit = v match {
+        case d: java.lang.Double => super.visitLdcInsn(java.lang.Double.valueOf(d + 1.0))
+        case _ => super.visitLdcInsn(v)
+      }
+    })
+    assert(md5(shifted) != md5(copy)) // the whole class file changes with its line numbers
+    assert(Fixtures.classHash(shifted) == Fixtures.classHash(copy))
+    assert(Fixtures.classHash(copy) == Fixtures.classHash(bytes))
+    assert(Fixtures.classHash(recoded) != Fixtures.classHash(copy))
+  }
 }

@@ -354,18 +354,51 @@ class RasterOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("burst raster is tile-major and the per-tile explode maps ti back to its own tile") {
+    val tx = Layout.TilesX; val ty = Layout.TilesY; val n = Layout.TileW * Layout.TileH
+    // one burst, a distinct value per pixel: tile (y, x) holds (y * TilesX + x) * n + p
+    def px(y: Int, x: Int): Array[Double] = Array.tabulate(n)(p => ((y * tx + x) * n + p).toDouble)
+    val tiles = new scala.util.Random(7).shuffle(
+      for (y <- 0 until ty; x <- 0 until tx) yield ("s1", "IW1", "VV", 1, y, x, px(y, x), px(y, x).map(-_)))
+    val df = tiles.toDF("scene_id", "subswath", "pol", "burst_idx", "tile_y", "tile_x", "a", "b")
+    val raster = Raster.burstRaster(df, "a", "b")
+    val Array((a, b)) = raster.select("a_r", "b_r").as[(Array[Double], Array[Double])].collect()
+    assert(a.toSeq == (0 until tx * ty * n).map(_.toDouble))
+    assert(b.toSeq == a.toSeq.map(-_))
+    // a per-burst result with one element per tile in tile-major order: the first
+    // and last pixel of each tile
+    val r = raster.withColumn("r", expr(
+      s"struct(transform(sequence(0, ${tx * ty - 1}), ti -> element_at(a_r, ti * $n + 1)) AS lo, " +
+        s"transform(sequence(0, ${tx * ty - 1}), ti -> element_at(b_r, ti * $n + $n)) AS hi)"))
+    val out = Raster.explodeTiles(r, "first_a" -> "lo", "last_b" -> "hi")
+      .select("tile_y", "tile_x", "first_a", "last_b").as[(Int, Int, Double, Double)].collect()
+    assert(out.map(t => (t._1, t._2)).toSet ==
+      (for (y <- 0 until ty; x <- 0 until tx) yield (y, x)).toSet)
+    assert(out.length == tx * ty)
+    out.foreach { case (y, x, lo, hi) =>
+      assert(lo == px(y, x).head, s"tile ($y, $x)")
+      assert(hi == -px(y, x).last, s"tile ($y, $x)")
+    }
+  }
+
   test("compiled cosine and shingle-h60 kernels equal their interpreted SQL twins") {
     import graft.exprs.KernelExprs
     val r = new scala.util.Random(43)
     val vecs = (1 to 12).map { _ =>
       (Array.fill(64)(r.nextFloat() * 2f - 1f), Array.fill(64)(r.nextFloat() * 2f - 1f))
     }
-    val df = vecs.toDF("va", "vb")
-    val cosOut = df.select(KernelExprs.cosine(col("va"), col("vb")).as("k"),
-      expr(graft.ann.Ann.cosSql).as("s")).collect()
-    cosOut.foreach { row =>
-      assert(java.lang.Double.doubleToLongBits(row.getDouble(0)) ==
-        java.lang.Double.doubleToLongBits(row.getDouble(1)))
+    // float x float (search), float x double (corpus x trained centroids, as in
+    // semantic dedup) and double x double
+    val pairs = Seq(vecs.toDF("va", "vb"),
+      vecs.map { case (a, b) => (a, b.map(_.toDouble * 0.75)) }.toDF("va", "vb"),
+      vecs.map { case (a, b) => (a.map(_.toDouble / 3), b.map(_.toDouble)) }.toDF("va", "vb"))
+    pairs.foreach { df =>
+      val cosOut = df.select(KernelExprs.cosine(col("va"), col("vb")).as("k"),
+        expr(graft.ann.Ann.cosSql).as("s")).collect()
+      cosOut.foreach { row =>
+        assert(java.lang.Double.doubleToLongBits(row.getDouble(0)) ==
+          java.lang.Double.doubleToLongBits(row.getDouble(1)), df.schema.simpleString)
+      }
     }
     val texts = Seq("the quick brown fox jumps over the lazy dog",
       "a b c d e f g", "x y z", "repeat repeat repeat repeat repeat")
