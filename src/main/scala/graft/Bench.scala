@@ -257,7 +257,7 @@ object Bench {
     // append-only history with provenance + contention index (reference
     // Benchmark.java:286-301; contention fields per VERDICT r3 #9 — loadavg and
     // steal sampled before and after the run bracket the whole measurement)
-    val hist = Paths.get("/root/repo/bench_history.jsonl")
+    val hist = Paths.get(s"${gen.Fixtures.RepoDir}/bench_history.jsonl")
     val prov = s"""{"ts":"${java.time.Instant.now}","host":"${java.net.InetAddress.getLocalHost.getHostName}","cores":${Runtime.getRuntime.availableProcessors},"pre":{$contentionBefore},"post":{${contention()}},"record":$line}"""
     Files.writeString(hist, prov + "\n", StandardOpenOption.CREATE, StandardOpenOption.APPEND)
   }

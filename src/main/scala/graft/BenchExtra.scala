@@ -3,7 +3,9 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.streaming.sources.MemoryPlan
 
 /**
  * Optimization-round instrumentation main (guide §1: measure first; §1.4 noop
@@ -17,7 +19,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
  *     query) to <outDir>/<name>.txt, and its canonicalized optimized logical
  *     plan (expression ids normalized, no codegen ids, commutative operands in
  *     text order) to <outDir>/<name>.canon.txt, so plans diff across builds
- *     without id noise
+ *     without id noise; the closing JSON line lists as "materialized" the
+ *     queries whose canonical plan cannot be compared that way
  *   sbt "runMain graft.BenchExtra time <reps> [q1 q2 ...]"
  *     times each named query (default: the Bench headline) with the noop sink —
  *     full evaluation of every column, no sink cost — and prints one JSON line
@@ -43,6 +46,16 @@ object BenchExtra {
     }
   }
 
+  /** Whether a canonical plan only reads a result computed before the query
+   * returned (a checkpointed RDD, a local relation or a memory sink), under at
+   * most Projects. Its `.canon.txt` then shows none of the query's work, so a
+   * plan diff cannot tell two builds of it apart. */
+  private def materialized(plan: LogicalPlan): Boolean = plan match {
+    case Project(_, child) => materialized(child)
+    case _: LogicalRDD | _: LocalRelation | _: MemoryPlan => true
+    case _ => false
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -55,7 +68,7 @@ object BenchExtra {
         val outDir = Paths.get(if (args.length > 1) args(1) else "/tmp/plans")
         Files.createDirectories(outDir)
         val names = if (args.length > 2) args.drop(2).toSeq else SparkEntry.queries.keys.toSeq.sorted
-        names.foreach { name =>
+        val materializedQueries = names.filter { name =>
           try {
             val df = SparkEntry.queries(name)(spark, sfDir)
             // execute THIS QueryExecution once so AQE finalizes every stage:
@@ -67,15 +80,18 @@ object BenchExtra {
             val plan = df.queryExecution.explainString(
               org.apache.spark.sql.execution.FormattedMode)
             Files.writeString(outDir.resolve(s"$name.txt"), plan)
+            val canon = textOrdered(df.queryExecution.optimizedPlan.canonicalized)
             Files.writeString(outDir.resolve(s"$name.canon.txt"),
-              textOrdered(df.queryExecution.optimizedPlan.canonicalized)
-                .treeString(verbose = true, maxFields = Int.MaxValue))
+              canon.treeString(verbose = true, maxFields = Int.MaxValue))
+            materialized(canon)
           } catch {
             case e: Exception =>
               Files.writeString(outDir.resolve(s"$name.ERROR.txt"), e.toString)
+              false
           }
         }
-        println(s"""{"explained":${names.length},"out":"$outDir"}""")
+        val listed = materializedQueries.map(n => s""""$n"""").mkString(",")
+        println(s"""{"explained":${names.length},"out":"$outDir","materialized":[$listed]}""")
 
       case "time" =>
         val reps = if (args.length > 1) args(1).toInt else 3

@@ -27,6 +27,24 @@ object Kernels {
   val ND = -9999.0
   @inline private def isNd(v: Double): Boolean = java.lang.Double.isNaN(v) || v == ND
 
+  // ------------------------------------------------------------ quantization grid
+
+  /** The standard dither of every integer quantization grid: an irrational
+   * offset that keeps dyadic values off the floor boundaries. */
+  private final val Dither = 0.031415926535897934
+
+  /** x on the integer grid of quantum 1 / scale: floor(Dither + x * scale). Sums
+   * of grid values are exact, so they do not depend on summation order. */
+  @inline private def quant(x: Double, scale: Double): Long =
+    math.floor(Dither + x * scale).toLong
+
+  /** The 1e-6 grid, the quantum of the per-tile gate rollups. */
+  @inline private def q6l(v: Double): Long = quant(v, 1.0e6)
+
+  /** SQL text of the 1e-6 grid over the SQL expression `e`, for the engine's
+   * SQL stages that quantize before an aggregate. */
+  def q6Sql(e: String): String = s"CAST(floor($Dither + ($e) * 1.0E6) AS BIGINT)"
+
   // ------------------------------------------------------------------ speckle filters
 
   val MODE_BOXCAR = 0
@@ -76,8 +94,7 @@ object Kernels {
       enl: Double, damping: Double): ArrayData = {
     val hw = w + 2 * m
     val hh = h + 2 * m
-    val a = halo.toDoubleArray()
-    require(a.length == hw * hh, s"halo length ${a.length} != ${hw * hh}")
+    val a = haloChannel(halo, w, h, m)
     val out = new Array[Double](w * h)
     val win = new Array[Double]((2 * m + 1) * (2 * m + 1))
     val cu = 1.0 / math.sqrt(enl)
@@ -323,9 +340,7 @@ object Kernels {
   @inline private def leeSigmaMmse(cp: Double, mean: Double, varY: Double,
       eta2: Double): Double = {
     if (varY <= 0.0) return mean
-    var varX = (varY - mean * mean * eta2) / (1.0 + eta2)
-    if (varX < 0.0) varX = 0.0
-    val b = varX / varY
+    val b = mmseVarX(varY, mean, eta2) / varY
     (1.0 - b) * mean + b * cp
   }
 
@@ -394,8 +409,88 @@ object Kernels {
   /** Per-term dyadically-quantized squared deviation (the diff-form variance of
    * SpeckleFilter.getVarianceValue, snapped so Long sums are exact/order-free in
    * both engines — documented deviation: 1e-6 term quantization). */
-  @inline private def qdev(v: Double, mean: Double): Long =
-    math.floor(0.031415926535897934 + (v - mean) * (v - mean) * 1.0e6).toLong
+  @inline private def qdev(v: Double, mean: Double): Long = q6l((v - mean) * (v - mean))
+
+  // ------------------------------------------------------ Refined Lee steps
+  // Shared by the scalar filter (refinedLeePixel, RefinedLee.java) and the
+  // polarimetric one (polRefinedLee, rstb RefinedLee.java). A 7x7 window is read
+  // as a(base + wy * stride + wx) for wy, wx in 0..6.
+
+  /** Raw means of the 9 overlapping stride-2 3x3 sub-areas of the window
+   * (computeSubAreaMeans), indexed sj * 3 + si, and the count of valid cells of
+   * each. The means take every cell, no-data included. */
+  private def rlSubMeans(a: Array[Double], base: Int, stride: Int,
+      sub: Array[Double], subValid: Array[Int]): Unit = {
+    var sj = 0
+    while (sj < 3) {
+      var si = 0
+      while (si < 3) {
+        var s = 0.0; var k9 = 0
+        var yy = 2 * sj
+        while (yy < 2 * sj + 3) {
+          var xx = 2 * si
+          while (xx < 2 * si + 3) {
+            val v = a(base + yy * stride + xx)
+            s += v
+            if (!isNd(v)) k9 += 1
+            xx += 1
+          }
+          yy += 1
+        }
+        sub(sj * 3 + si) = s / 9.0
+        subValid(sj * 3 + si) = k9
+        si += 1
+      }
+      sj += 1
+    }
+  }
+
+  /** Whether window cell (wy, wx) is in the 28-pixel non-edge template of edge
+   * direction d in 0..7 (getNonEdgeAreaPixelValues). */
+  private def inTmpl(d: Int, wy: Int, wx: Int): Boolean = d match {
+    case 0 => wx >= 3
+    case 1 => wx >= wy
+    case 2 => wy <= 3
+    case 3 => wx < 7 - wy
+    case 4 => wx <= 3
+    case 5 => wx < wy + 1
+    case 6 => wy >= 3
+    case 7 => wx >= 6 - wy
+  }
+
+  /** Mean of the window over the template of direction d. */
+  private def tmplMean(a: Array[Double], base: Int, stride: Int, d: Int): Double = {
+    var s28 = 0.0
+    var wy = 0
+    while (wy < 7) {
+      var wx = 0
+      while (wx < 7) { if (inTmpl(d, wy, wx)) s28 += a(base + wy * stride + wx); wx += 1 }
+      wy += 1
+    }
+    s28 / 28.0
+  }
+
+  /** (n - 1) variance of the window over the template of direction d about its
+   * mean, from per-term quantized squared deviations (qdev). */
+  private def tmplVar(a: Array[Double], base: Int, stride: Int, d: Int, meanY: Double): Double = {
+    var q28 = 0L
+    var wy = 0
+    while (wy < 7) {
+      var wx = 0
+      while (wx < 7) { if (inTmpl(d, wy, wx)) q28 += qdev(a(base + wy * stride + wx), meanY); wx += 1 }
+      wy += 1
+    }
+    q28.toDouble / 1.0e6 / 27.0
+  }
+
+  /** The signal variance of the Lee MMSE estimate, clamped at 0:
+   * max(0, (varY - meanY^2 sigma2) / (1 + sigma2)) for noise variance sigma2
+   * (LeeSigma.java computeMMSEWeight, RefinedLee.java
+   * computePixelValueUsingLocalStatistics). */
+  @inline private def mmseVarX(varY: Double, meanY: Double, sigma2: Double): Double = {
+    val varX = (varY - meanY * meanY * sigma2) / (1.0 + sigma2)
+    if (varX < 0.0) 0.0 else varX
+  }
 
   /**
    * Refined Lee (reference RefinedLee.java:147-551), the FULL reference algorithm:
@@ -435,31 +530,9 @@ object Kernels {
       }
       wy += 1
     }
-    // 9 overlapping 3x3 sub-areas: raw means + valid counts
     val sub = new Array[Double](9)
     val subValid = new Array[Int](9)
-    var sj = 0
-    while (sj < 3) {
-      var si = 0
-      while (si < 3) {
-        var s = 0.0; var k9 = 0
-        var yy = 2 * sj
-        while (yy < 2 * sj + 3) {
-          var xx = 2 * si
-          while (xx < 2 * si + 3) {
-            val v = wv(yy * 7 + xx)
-            s += v
-            if (!isNd(v)) k9 += 1
-            xx += 1
-          }
-          yy += 1
-        }
-        sub(sj * 3 + si) = s / 9.0
-        subValid(sj * 3 + si) = k9
-        si += 1
-      }
-      sj += 1
-    }
+    rlSubMeans(wv, 0, 7, sub, subValid)
     // estimated noise variance: <=5 smallest normalized variances of complete areas
     val nvs = new Array[Double](9)
     var nNv = 0
@@ -489,7 +562,7 @@ object Kernels {
         val navg = math.min(5, nNv)
         var qs = 0L
         var t = 0
-        while (t < navg) { qs += math.floor(0.031415926535897934 + nvs(t) * 1.0e6).toLong; t += 1 }
+        while (t < navg) { qs += q6l(nvs(t)); t += 1 }
         (qs.toDouble / 1.0e6) / navg
       }
     if (cnt < 49) {
@@ -501,9 +574,7 @@ object Kernels {
       while (k < 49) { val v = wv(k); if (!isNd(v)) qv += qdev(v, meanY); k += 1 }
       val varY = if (cnt > 1) qv.toDouble / 1.0e6 / (cnt - 1) else 0.0
       if (varY == 0.0) return meanY
-      var varX = (varY - meanY * meanY * sigmaV) / (1.0 + sigmaV)
-      if (varX < 0.0) varX = 0.0
-      return meanY + varX / varY * (cp - meanY)
+      return meanY + mmseVarX(varY, meanY, sigmaV) / varY * (cp - meanY)
     }
     // edge path: gradients (first max wins), direction refined by center adjacency
     val g0 = math.abs(sub(3) - sub(5))
@@ -521,36 +592,10 @@ object Kernels {
       case 2 => if (math.abs(sub(1) - sub(4)) < math.abs(sub(4) - sub(7))) 2 else 6
       case 3 => if (math.abs(sub(0) - sub(4)) < math.abs(sub(4) - sub(8))) 3 else 7
     }
-    @inline def inTmpl(wyT: Int, wxT: Int): Boolean = d match {
-      case 0 => wxT >= 3
-      case 1 => wxT >= wyT
-      case 2 => wyT <= 3
-      case 3 => wxT < 7 - wyT
-      case 4 => wxT <= 3
-      case 5 => wxT < wyT + 1
-      case 6 => wyT >= 3
-      case 7 => wxT >= 6 - wyT
-    }
-    var s28 = 0.0
-    var yy = 0
-    while (yy < 7) {
-      var xx = 0
-      while (xx < 7) { if (inTmpl(yy, xx)) s28 += wv(yy * 7 + xx); xx += 1 }
-      yy += 1
-    }
-    val meanY = s28 / 28.0
-    var qv28 = 0L
-    yy = 0
-    while (yy < 7) {
-      var xx = 0
-      while (xx < 7) { if (inTmpl(yy, xx)) qv28 += qdev(wv(yy * 7 + xx), meanY); xx += 1 }
-      yy += 1
-    }
-    val varY = qv28.toDouble / 1.0e6 / 27.0
+    val meanY = tmplMean(wv, 0, 7, d)
+    val varY = tmplVar(wv, 0, 7, d, meanY)
     if (varY == 0.0) return meanY
-    var varX = (varY - meanY * meanY * sigmaV) / (1.0 + sigmaV)
-    if (varX < 0.0) varX = 0.0
-    meanY + varX / varY * (cp - meanY)
+    meanY + mmseVarX(varY, meanY, sigmaV) / varY * (cp - meanY)
   }
 
   // 49-bit (7x7) bitboard layout for IDAN region growing: bit k = (dy+3)*7 + (dx+3)
@@ -660,7 +705,7 @@ object Kernels {
       if (((a2 >> k) & 1L) == 1L) {
         val v = w(k)
         n2 += 1; s1b += v
-        s2q += math.floor(0.031415926535897934 + v * v * 1.0e6).toLong
+        s2q += q6l(v * v)
       }
       k += 1
     }
@@ -1133,7 +1178,7 @@ object Kernels {
     while (i < a.length) {
       val v = a(i)
       if (!isNd(v)) {
-        val qq = math.floor(0.031415926535897934 + v * q).toLong
+        val qq = quant(v, q)
         n += 1; s += qq
         if (qq < mn) mn = qq
         if (qq > mx) mx = qq
@@ -1156,9 +1201,9 @@ object Kernels {
     while (i < a.length) {
       val v = a(i)
       if (!isNd(v)) {
-        val qq = math.floor(0.031415926535897934 + v * q).toLong
+        val qq = quant(v, q)
         n += 1; s += qq
-        s2 += math.floor(0.031415926535897934 + v * v * q).toLong
+        s2 += quant(v * v, q)
         if (qq < mn) mn = qq
         if (qq > mx) mx = qq
       }
@@ -1184,18 +1229,18 @@ object Kernels {
         val b = bD.toDoubleArray()
         while (i < a.length) {
           val x = if (a(i) == ND) 0.0 else a(i) + b(i)
-          s += math.floor(0.031415926535897934 + x * q).toLong; i += 1
+          s += quant(x, q); i += 1
         }
       case SQ_PAIR_SUB =>
         val b = bD.toDoubleArray()
         while (i < a.length) {
           val x = if (a(i) == ND) 0.0 else a(i) - b(i)
-          s += math.floor(0.031415926535897934 + x * q).toLong; i += 1
+          s += quant(x, q); i += 1
         }
       case SQ_SCALED =>
         while (i < a.length) {
           val x = a(i)
-          if (x != ND) s += math.floor(0.031415926535897934 + k * x * q).toLong
+          if (x != ND) s += quant(k * x, q)
           i += 1
         }
     }
@@ -1286,6 +1331,62 @@ object Kernels {
     InternalRow(nDetect, if (any) maxT else null)
   }
 
+  // ------------------------------------------------------- windowed halo steps
+
+  /** A halo channel of a margin-m windowed kernel as a primitive array, checked
+   * against the (w + 2m) x (h + 2m) layout that every window read assumes. */
+  private def haloChannel(d: ArrayData, w: Int, h: Int, m: Int): Array[Double] = {
+    val a = d.toDoubleArray()
+    val len = (w + 2 * m) * (h + 2 * m)
+    require(a.length == len,
+      s"halo length ${a.length} != (w + 2m) x (h + 2m) = $len for w=$w, h=$h, m=$m")
+    a
+  }
+
+  /** Window sums of four halo channels at pixel (x, y) over the cells where the
+   * first channel is valid, in (dy, dx) row-major order: fills s with the four
+   * sums and returns the cell count. The dual-pol C2 window (c11, c22, c12r,
+   * c12i; PolarimetricMatricesOp.java window estimation) and the coherence
+   * window (p1, p2, re, im; CoherenceOp.java:722) are this step. */
+  private def windowSums4(k: Array[Double], b: Array[Double], c: Array[Double],
+      d: Array[Double], hw: Int, x: Int, y: Int, m: Int, s: Array[Double]): Int = {
+    var n = 0; var sk = 0.0; var sb = 0.0; var sc = 0.0; var sd = 0.0
+    var dy = -m
+    while (dy <= m) {
+      var dx = -m
+      while (dx <= m) {
+        val idx = (y + m + dy) * hw + (x + m + dx)
+        if (!isNd(k(idx))) {
+          n += 1; sk += k(idx); sb += b(idx); sc += c(idx); sd += d(idx)
+        }
+        dx += 1
+      }
+      dy += 1
+    }
+    s(0) = sk; s(1) = sb; s(2) = sc; s(3) = sd
+    n
+  }
+
+  /** Whether pixel (x, y) of a margin-m halo is dark: valid and below k times
+   * the mean of the valid cells of its window (OilSpillDetectionOp.java, the
+   * threshold below the background). */
+  private def isDark(a: Array[Double], hw: Int, x: Int, y: Int, m: Int, k: Double): Boolean = {
+    val cp = a((y + m) * hw + (x + m))
+    if (isNd(cp)) return false
+    var n = 0; var s1 = 0.0
+    var dy = -m
+    while (dy <= m) {
+      var dx = -m
+      while (dx <= m) {
+        val v = a((y + m + dy) * hw + (x + m + dx))
+        if (!isNd(v)) { n += 1; s1 += v }
+        dx += 1
+      }
+      dy += 1
+    }
+    n > 0 && cp < k * (s1 / n)
+  }
+
   // -------------------------------------------------------- windowed C2 polarimetry
 
   val C2_MDELTA = 0
@@ -1310,56 +1411,37 @@ object Kernels {
   def c2Window(c11H: ArrayData, c22H: ArrayData, c12rH: ArrayData, c12iH: ArrayData,
       w: Int, h: Int, m: Int, mode: Int): ArrayData = {
     val hw = w + 2 * m
-    val c11 = c11H.toDoubleArray(); val c22 = c22H.toDoubleArray()
-    val cr = c12rH.toDoubleArray(); val ci = c12iH.toDoubleArray()
+    val c11 = haloChannel(c11H, w, h, m); val c22 = haloChannel(c22H, w, h, m)
+    val cr = haloChannel(c12rH, w, h, m); val ci = haloChannel(c12iH, w, h, m)
     val out = new Array[Double](w * h)
     val ln2 = math.log(2.0)
+    val s = new Array[Double](4)
     var y = 0
     while (y < h) {
       var x = 0
       while (x < w) {
-        var n = 0; var m11 = 0.0; var m22 = 0.0; var mr = 0.0; var mi = 0.0
-        var dy = -m
-        while (dy <= m) {
-          var dx = -m
-          while (dx <= m) {
-            val idx = (y + m + dy) * hw + (x + m + dx)
-            if (!isNd(c11(idx))) {
-              n += 1; m11 += c11(idx); m22 += c22(idx); mr += cr(idx); mi += ci(idx)
-            }
-            dx += 1
-          }
-          dy += 1
-        }
-        out(y * w + x) = mode match {
+        val n = windowSums4(c11, c22, cr, ci, hw, x, y, m, s)
+        val m11 = s(0); val m22 = s(1); val mr = s(2); val mi = s(3)
+        out(y * w + x) = if (n == 0 || m11 + m22 <= 0.0) ND else mode match {
           case C2_MDELTA | C2_DPRVI =>
-            if (n == 0 || m11 + m22 <= 0.0) ND
-            else {
-              val g1 = m11 - m22; val g2 = 2.0 * mr; val g3 = -2.0 * mi
-              val dop = math.sqrt(g1 * g1 + g2 * g2 + g3 * g3) / (m11 + m22)
-              if (mode == C2_MDELTA) dop else 1.0 - dop
-            }
+            val g1 = m11 - m22; val g2 = 2.0 * mr; val g3 = -2.0 * mi
+            val dop = math.sqrt(g1 * g1 + g2 * g2 + g3 * g3) / (m11 + m22)
+            if (mode == C2_MDELTA) dop else 1.0 - dop
           case C2_ANISOTROPY =>
-            if (n == 0 || m11 + m22 <= 0.0) ND
-            else {
-              val tr = m11 + m22
-              val disc = tr * tr - 4.0 * (m11 * m22 - mr * mr - mi * mi)
-              if (disc < 0.0) 0.0 else math.sqrt(disc) / tr
-            }
+            val tr = m11 + m22
+            val disc = tr * tr - 4.0 * (m11 * m22 - mr * mr - mi * mi)
+            if (disc < 0.0) 0.0 else math.sqrt(disc) / tr
           case C2_MCHI =>
             // m-chi surface power ps = g0 m (1 + sin2chi)/2 with
             // sin2chi = -g3 / (m g0) over the windowed Stokes (Raney m-chi CP
             // decomposition; the pv/pd channels share the identical pass).
-            if (n == 0 || m11 + m22 <= 0.0) ND
+            val g0 = m11 + m22
+            val g1 = m11 - m22; val g2 = 2.0 * mr; val g3 = -2.0 * mi
+            val mdop = math.sqrt(g1 * g1 + g2 * g2 + g3 * g3) / g0
+            if (mdop <= 0.0) ND
             else {
-              val g0 = m11 + m22
-              val g1 = m11 - m22; val g2 = 2.0 * mr; val g3 = -2.0 * mi
-              val mdop = math.sqrt(g1 * g1 + g2 * g2 + g3 * g3) / g0
-              if (mdop <= 0.0) ND
-              else {
-                val s2x = (0.0 - g3) / (mdop * g0)
-                g0 * mdop * (1.0 + s2x) / 2.0
-              }
+              val s2x = (0.0 - g3) / (mdop * g0)
+              g0 * mdop * (1.0 + s2x) / 2.0
             }
           case C2_Y3PS =>
             // Y3 dual-pol model-based decomposition, Uniform-Random volume
@@ -1368,33 +1450,27 @@ object Kernels {
             // residual trace to surface or double-bounce by sign(Re c12)
             // (:231-265). Window sums stand in for the window means — the powers
             // scale by the shared valid count, identically in the DuckDB twin.
-            if (n == 0 || m11 + m22 <= 0.0) ND
-            else {
-              var residCo = m11 - m22 // c11 - fv*volA with fv = c22/volB
-              var residCross = 0.0 // c22 - fv*volB = 0 by construction
-              if (residCo < 0.0) { // volume over-estimated: clip fv to c11/volA
-                residCo = 0.0
-                residCross = m22 - m11
-                if (residCross < 0.0) residCross = 0.0 // pure-volume pixel
-              }
-              val residTrace = math.max(0.0, residCo + residCross)
-              if (residTrace > 0.0 && mr >= 0.0) residTrace else 0.0
+            var residCo = m11 - m22 // c11 - fv*volA with fv = c22/volB
+            var residCross = 0.0 // c22 - fv*volB = 0 by construction
+            if (residCo < 0.0) { // volume over-estimated: clip fv to c11/volA
+              residCo = 0.0
+              residCross = m22 - m11
+              if (residCross < 0.0) residCross = 0.0 // pure-volume pixel
             }
+            val residTrace = math.max(0.0, residCo + residCross)
+            if (residTrace > 0.0 && mr >= 0.0) residTrace else 0.0
           case C2_ENTROPY =>
-            if (n == 0 || m11 + m22 <= 0.0) ND
+            val tr = m11 + m22
+            val det = m11 * m22 - mr * mr - mi * mi
+            val disc = tr * tr - 4.0 * det
+            if (disc < 0.0) 0.0
             else {
-              val tr = m11 + m22
-              val det = m11 * m22 - mr * mr - mi * mi
-              val disc = tr * tr - 4.0 * det
-              if (disc < 0.0) 0.0
-              else {
-                val s = math.sqrt(disc)
-                val p1 = (tr + s) / (2.0 * tr)
-                val p2 = (tr - s) / (2.0 * tr)
-                val t1 = if (p1 > 0.0) p1 * (math.log(p1) / ln2) else 0.0
-                val t2 = if (p2 > 0.0) p2 * (math.log(p2) / ln2) else 0.0
-                -1.0 * (t1 + t2)
-              }
+              val sq = math.sqrt(disc)
+              val p1 = (tr + sq) / (2.0 * tr)
+              val p2 = (tr - sq) / (2.0 * tr)
+              val t1 = if (p1 > 0.0) p1 * (math.log(p1) / ln2) else 0.0
+              val t2 = if (p2 > 0.0) p2 * (math.log(p2) / ln2) else 0.0
+              -1.0 * (t1 + t2)
             }
           case C2_CPRVI =>
             // Compact-pol RVI (Mandal et al. 2020; CPRVIOp.java:235-293): geodesic
@@ -1403,20 +1479,17 @@ object Kernels {
             // K13=.5g1, K20=.25g2, K31=.25g1, K33=.5g3) and the ideal depolarizer
             // diag(1,0,0,0); trace algebra collapses to closed form. Guard: non-
             // positive SC/OC powers -> ND (the reference emits NaN there).
-            if (n == 0 || m11 + m22 <= 0.0) ND
+            val g0 = m11 + m22
+            val g1 = m11 - m22; val g2 = 2.0 * mr; val g3 = -2.0 * mi
+            val num3 = 0.25 * (g0 * g0) + 0.3125 * (g1 * g1) +
+              0.3125 * (g2 * g2) + 0.25 * (g3 * g3)
+            val gd = 2.0 * math.acos(0.5 * g0 / math.sqrt(num3)) / math.Pi
+            val sc = (g0 - g3) / 2.0; val oc = (g0 + g3) / 2.0
+            val mn = math.min(sc, oc); val mx = math.max(sc, oc)
+            if (mn <= 0.0 || mx <= 0.0) ND
             else {
-              val g0 = m11 + m22
-              val g1 = m11 - m22; val g2 = 2.0 * mr; val g3 = -2.0 * mi
-              val num3 = 0.25 * (g0 * g0) + 0.3125 * (g1 * g1) +
-                0.3125 * (g2 * g2) + 0.25 * (g3 * g3)
-              val gd = 2.0 * math.acos(0.5 * g0 / math.sqrt(num3)) / math.Pi
-              val sc = (g0 - g3) / 2.0; val oc = (g0 + g3) / 2.0
-              val mn = math.min(sc, oc); val mx = math.max(sc, oc)
-              if (mn <= 0.0 || mx <= 0.0) ND
-              else {
-                val lam = 1.5 * gd
-                (1.0 - lam) * math.pow(mn / mx, 2.0 * lam)
-              }
+              val lam = 1.5 * gd
+              (1.0 - lam) * math.pow(mn / mx, 2.0 * lam)
             }
         }
         x += 1
@@ -1430,27 +1503,13 @@ object Kernels {
    * (OilSpillDetectionOp threshold-below-background). One compiled call per tile. */
   def darkCount(halo: ArrayData, w: Int, h: Int, m: Int, k: Double): Long = {
     val hw = w + 2 * m
-    val a = halo.toDoubleArray()
+    val a = haloChannel(halo, w, h, m)
     var cnt = 0L
     var y = 0
     while (y < h) {
       var x = 0
       while (x < w) {
-        val cp = a((y + m) * hw + (x + m))
-        if (!isNd(cp)) {
-          var n = 0; var s1 = 0.0
-          var dy = -m
-          while (dy <= m) {
-            var dx = -m
-            while (dx <= m) {
-              val v = a((y + m + dy) * hw + (x + m + dx))
-              if (!isNd(v)) { n += 1; s1 += v }
-              dx += 1
-            }
-            dy += 1
-          }
-          if (n > 0 && cp < k * (s1 / n)) cnt += 1
-        }
+        if (isDark(a, hw, x, y, m, k)) cnt += 1
         x += 1
       }
       y += 1
@@ -1509,7 +1568,7 @@ object Kernels {
         if (p != ND) {
           val b = (y / looks) * bx + (x / looks)
           ns(b) += 1
-          ss(b) += math.floor(0.031415926535897934 + p * q).toLong
+          ss(b) += quant(p, q)
         }
         x += 1
       }
@@ -1552,7 +1611,7 @@ object Kernels {
           var a = acc.get(key)
           if (a == null) { a = new Array[Long](2); acc.put(key, a) }
           a(0) += 1L
-          a(1) += math.floor(0.031415926535897934 + p * 1.0e6).toLong
+          a(1) += q6l(p)
         }
         x += 1
       }
@@ -1640,6 +1699,8 @@ object Kernels {
 
   // ------------------------------------------------------------------ spectral kernels
 
+  /** Complex FFT of one signal, any power-of-2 length, through commons-math3
+   * (standard normalization: the inverse divides by the length). */
   private def fft1d(re: Array[Double], im: Array[Double], inverse: Boolean): (Array[Double], Array[Double]) = {
     import org.apache.commons.math3.transform.{DftNormalization, FastFourierTransformer, TransformType}
     val t = new FastFourierTransformer(DftNormalization.STANDARD)
@@ -1679,16 +1740,6 @@ object Kernels {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  /**
-   * WSS deburst overlap-strip fold (reference DeburstWSSOp.java:43 ownership
-   * rules): for each of the ov overlap rows j between burst b (last ov rows,
-   * offset w*(h-ov)) and burst b+1 (first ov rows), fold the margin-valid
-   * columns into quantized (n, peak, peak-i, avg) sums — peak keeps the
-   * higher-power pixel (and ITS i channel), avg is the two-burst mean, single
-   * sided where one burst is no-data. Returns a flat Long array of ov*4
-   * (n, pk, pki, av) per row. Replaces a ~10-element_at-per-step interpreted
-   * aggregate lambda that cost 311 s of the sf0.01 verify surface.
-   */
   /**
    * MuLoG speckle filter — the reference's ADMM loop (MuLog.java:126-148), not
    * the round-3 boxcar stand-in: log-transform y = ln(v + 1e-10), then `iters`
@@ -1804,11 +1855,20 @@ object Kernels {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
+  /**
+   * WSS deburst overlap-strip fold (reference DeburstWSSOp.java:43 ownership
+   * rules): for each of the ov overlap rows j between burst b (last ov rows,
+   * offset w*(h-ov)) and burst b+1 (first ov rows), fold the margin-valid
+   * columns into quantized (n, peak, peak-i, avg) sums — peak keeps the
+   * higher-power pixel (and ITS i channel), avg is the two-burst mean, single
+   * sided where one burst is no-data. Returns a flat Long array of ov*4
+   * (n, pk, pki, av) per row. Replaces a ~10-element_at-per-step interpreted
+   * aggregate lambda that cost 311 s of the sf0.01 verify surface.
+   */
   def wssOverlap(vaD: ArrayData, iaD: ArrayData, vbD: ArrayData, ibD: ArrayData,
       tileX: Int, w: Int, h: Int, ov: Int, margin: Int, wTotal: Int, q: Double): ArrayData = {
     val va = vaD.toDoubleArray(); val ia = iaD.toDoubleArray()
     val vb = vbD.toDoubleArray(); val ib = ibD.toDoubleArray()
-    val off = 0.031415926535897934
     val topOff = w * (h - ov)
     val out = new Array[Long](ov * 4)
     var j = 0
@@ -1822,17 +1882,17 @@ object Kernels {
           if (!(a == ND && b == ND)) {
             n += 1
             if (b == ND) {
-              pk += math.floor(off + a * q).toLong
-              pki += math.floor(off + ia(topOff + j * w + c) * q).toLong
-              av += math.floor(off + a * q).toLong
+              pk += quant(a, q)
+              pki += quant(ia(topOff + j * w + c), q)
+              av += quant(a, q)
             } else if (a == ND) {
-              pk += math.floor(off + b * q).toLong
-              pki += math.floor(off + ib(j * w + c) * q).toLong
-              av += math.floor(off + b * q).toLong
+              pk += quant(b, q)
+              pki += quant(ib(j * w + c), q)
+              av += quant(b, q)
             } else {
-              pk += math.floor(off + math.max(a, b) * q).toLong
-              pki += math.floor(off + (if (a >= b) ia(topOff + j * w + c) else ib(j * w + c)) * q).toLong
-              av += math.floor(off + ((a + b) / 2.0) * q).toLong
+              pk += quant(math.max(a, b), q)
+              pki += quant(if (a >= b) ia(topOff + j * w + c) else ib(j * w + c), q)
+              av += quant((a + b) / 2.0, q)
             }
           }
         }
@@ -1850,7 +1910,6 @@ object Kernels {
   def wssPass(vD: ArrayData, idD: ArrayData, tileX: Int, w: Int, h: Int,
       margin: Int, wTotal: Int, q: Double): ArrayData = {
     val v = vD.toDoubleArray(); val id = idD.toDoubleArray()
-    val off = 0.031415926535897934
     val out = new Array[Long](h * 4)
     var r = 0
     while (r < h) {
@@ -1862,9 +1921,9 @@ object Kernels {
           val x = v(r * w + c)
           if (x != ND) {
             n += 1
-            val xq = math.floor(off + x * q).toLong
+            val xq = quant(x, q)
             pk += xq; av += xq
-            pki += math.floor(off + id(r * w + c) * q).toLong
+            pki += quant(id(r * w + c), q)
           }
         }
         c += 1
@@ -1938,28 +1997,25 @@ object Kernels {
     out
   }
 
-  /** In-place 2-D FFT (power-of-2 sides) via commons-math3 row/column passes. */
+  /** In-place 2-D FFT (power-of-2 sides) as fft1d row then column passes. */
   private def fft2d(re: Array[Double], im: Array[Double], n: Int, inverse: Boolean): Unit = {
-    import org.apache.commons.math3.transform.{DftNormalization, FastFourierTransformer, TransformType}
-    val t = new FastFourierTransformer(DftNormalization.STANDARD)
-    val dir = if (inverse) TransformType.INVERSE else TransformType.FORWARD
     val rowR = new Array[Double](n); val rowI = new Array[Double](n)
     var y = 0
     while (y < n) {
       var x = 0
       while (x < n) { rowR(x) = re(y * n + x); rowI(x) = im(y * n + x); x += 1 }
-      val c = t.transform(rowR.zip(rowI).map { case (a, b) => new org.apache.commons.math3.complex.Complex(a, b) }, dir)
+      val (cr, ci) = fft1d(rowR, rowI, inverse)
       x = 0
-      while (x < n) { re(y * n + x) = c(x).getReal; im(y * n + x) = c(x).getImaginary; x += 1 }
+      while (x < n) { re(y * n + x) = cr(x); im(y * n + x) = ci(x); x += 1 }
       y += 1
     }
     var x = 0
     while (x < n) {
       var yy = 0
       while (yy < n) { rowR(yy) = re(yy * n + x); rowI(yy) = im(yy * n + x); yy += 1 }
-      val c = t.transform(rowR.zip(rowI).map { case (a, b) => new org.apache.commons.math3.complex.Complex(a, b) }, dir)
+      val (cr, ci) = fft1d(rowR, rowI, inverse)
       yy = 0
-      while (yy < n) { re(yy * n + x) = c(yy).getReal; im(yy * n + x) = c(yy).getImaginary; yy += 1 }
+      while (yy < n) { re(yy * n + x) = cr(yy); im(yy * n + x) = ci(yy); yy += 1 }
       x += 1
     }
   }
@@ -2274,26 +2330,16 @@ object Kernels {
   def coherence(creH: ArrayData, cimH: ArrayData, p1H: ArrayData, p2H: ArrayData,
       w: Int, h: Int, m: Int): ArrayData = {
     val hw = w + 2 * m
-    val cre = creH.toDoubleArray(); val cim = cimH.toDoubleArray()
-    val p1 = p1H.toDoubleArray(); val p2 = p2H.toDoubleArray()
+    val cre = haloChannel(creH, w, h, m); val cim = haloChannel(cimH, w, h, m)
+    val p1 = haloChannel(p1H, w, h, m); val p2 = haloChannel(p2H, w, h, m)
     val out = new Array[Double](w * h)
+    val s = new Array[Double](4)
     var y = 0
     while (y < h) {
       var x = 0
       while (x < w) {
-        var n = 0; var sre = 0.0; var sim = 0.0; var sp1 = 0.0; var sp2 = 0.0
-        var dy = -m
-        while (dy <= m) {
-          var dx = -m
-          while (dx <= m) {
-            val idx = (y + m + dy) * hw + (x + m + dx)
-            if (!isNd(p1(idx))) {
-              n += 1; sre += cre(idx); sim += cim(idx); sp1 += p1(idx); sp2 += p2(idx)
-            }
-            dx += 1
-          }
-          dy += 1
-        }
+        val n = windowSums4(p1, p2, cre, cim, hw, x, y, m, s)
+        val sp1 = s(0); val sp2 = s(1); val sre = s(2); val sim = s(3)
         // zero-power guard: an all-zero window would give 0/0 = NaN (or +Inf with
         // one-sided zero power) — return ND like the n == 0 branch (ADVICE r2)
         out(y * w + x) =
@@ -2351,7 +2397,7 @@ object Kernels {
         while (a < K) {
           var b = a
           while (b < K) {
-            g(a)(b) += math.floor(0.031415926535897934 + ch(a)(i) * ch(b)(i) * RpcaQ).toLong
+            g(a)(b) += quant(ch(a)(i) * ch(b)(i), RpcaQ)
             b += 1
           }
           a += 1
@@ -2554,7 +2600,7 @@ object Kernels {
             val wr = vr(e5) * vr(0) + vi(e5) * vi(0)
             val wi = vi(e5) * vr(0) - vr(e5) * vi(0)
             val ph = math.atan2(wi, wr)
-            sums(e5) += math.floor(0.031415926535897934 + ph * 1.0e6).toLong
+            sums(e5) += q6l(ph)
             e5 += 1
           }
         }
@@ -2652,6 +2698,14 @@ object Kernels {
     out(8) = (p2i * p3r - p2r * p3i) / 2
   }
 
+  /** The 8 quad-pol channels (i/q x HH, HV, VH, VV) as primitive arrays, in the
+   * order that quadValid, t3Px and every quad-pol kernel index them. */
+  private def quadChannels(hhI: ArrayData, hhQ: ArrayData, hvI: ArrayData, hvQ: ArrayData,
+      vhI: ArrayData, vhQ: ArrayData, vvI: ArrayData, vvQ: ArrayData): Array[Array[Double]] =
+    Array(hhI.toDoubleArray(), hhQ.toDoubleArray(), hvI.toDoubleArray(),
+      hvQ.toDoubleArray(), vhI.toDoubleArray(), vhQ.toDoubleArray(),
+      vvI.toDoubleArray(), vvQ.toDoubleArray())
+
   @inline private def quadValid(a: Array[Array[Double]], idx: Int): Boolean = {
     var c = 0
     while (c < 8) { if (isNd(a(c)(idx))) return false; c += 1 }
@@ -2663,9 +2717,7 @@ object Kernels {
    * (i/q x HH,HV,VH,VV), dyadic-snapped by the caller. */
   def t3Sums(hhI: ArrayData, hhQ: ArrayData, hvI: ArrayData, hvQ: ArrayData,
       vhI: ArrayData, vhQ: ArrayData, vvI: ArrayData, vvQ: ArrayData): InternalRow = {
-    val ch = Array(hhI.toDoubleArray(), hhQ.toDoubleArray(), hvI.toDoubleArray(),
-      hvQ.toDoubleArray(), vhI.toDoubleArray(), vhQ.toDoubleArray(),
-      vvI.toDoubleArray(), vvQ.toDoubleArray())
+    val ch = quadChannels(hhI, hhQ, hvI, hvQ, vhI, vhQ, vvI, vvQ)
     val t = new Array[Double](9)
     val s = new Array[Long](9)
     var n = 0L
@@ -2675,7 +2727,7 @@ object Kernels {
         t3Px(ch(0)(i), ch(1)(i), ch(2)(i), ch(3)(i), ch(4)(i), ch(5)(i), ch(6)(i), ch(7)(i), t)
         n += 1
         var j = 0
-        while (j < 9) { s(j) += math.floor(0.031415926535897934 + t(j) * 1.0e6).toLong; j += 1 }
+        while (j < 9) { s(j) += q6l(t(j)); j += 1 }
       }
       i += 1
     }
@@ -2708,21 +2760,25 @@ object Kernels {
   private val Log3 = math.log(3.0)
   private val TwoPiThird = 2.0 * math.Pi / 3.0
 
-  /** Cardano H-A-alpha of one windowed T3 (win as from t3Win, win(0)=n > 0).
-   * Fills haa = (entropy, anisotropy, alphaDeg). Formula staged EXACTLY as the
-   * SarOraclesQuad SQL (same association order). */
-  private def hAlphaOf(win: Array[Double], haa: Array[Double]): Unit = {
+  /**
+   * Eigenvalues ev(0) >= ev(1) >= ev(2) of the 3x3 Hermitian matrix in win(1..9)
+   * (t11, t22, t33, t12r, t12i, t13r, t13i, t23r, t23i, at any positive scale)
+   * by Cardano's trigonometric solve of the characteristic cubic, staged exactly
+   * as the SarOraclesQuad SQL. It stands in for the EigenDecomposition of the
+   * reference's H-A-alpha, Touzi, Cloude and parameter operators
+   * (PolarimetricDecompositionOp.java:47, PolarimetricParametersOp.java).
+   * Returns p1, the squared norm of the off-diagonal entries: p1 == 0 means the
+   * matrix is diagonal and ev holds its diagonal, largest and smallest exact.
+   */
+  private[graft] def eig3H(win: Array[Double], ev: Array[Double]): Double = {
     val a = win(1); val b = win(2); val c = win(3)
     val d12r = win(4); val d12i = win(5); val d13r = win(6); val d13i = win(7)
     val d23r = win(8); val d23i = win(9)
     val tr = a + b + c
-    if (tr <= 0.0) { haa(0) = ND; haa(1) = ND; haa(2) = ND; return }
     val p1 = d12r * d12r + d12i * d12i + d13r * d13r + d13i * d13i + d23r * d23r + d23i * d23i
-    var l1 = 0.0; var l2 = 0.0; var l3 = 0.0
     if (p1 == 0.0) {
-      l1 = math.max(a, math.max(b, c))
-      l3 = math.min(a, math.min(b, c))
-      l2 = tr - l1 - l3
+      ev(0) = math.max(a, math.max(b, c))
+      ev(2) = math.min(a, math.min(b, c))
     } else {
       val q = tr / 3.0
       val p2 = (a - q) * (a - q) + (b - q) * (b - q) + (c - q) * (c - q) + 2.0 * p1
@@ -2738,10 +2794,44 @@ object Kernels {
       if (r < -1.0) r = -1.0
       if (r > 1.0) r = 1.0
       val phi = math.acos(r) / 3.0
-      l1 = q + 2.0 * p * math.cos(phi)
-      l3 = q + 2.0 * p * math.cos(phi + TwoPiThird)
-      l2 = tr - l1 - l3
+      ev(0) = q + 2.0 * p * math.cos(phi)
+      ev(2) = q + 2.0 * p * math.cos(phi + TwoPiThird)
     }
+    ev(1) = tr - ev(0) - ev(2)
+    p1
+  }
+
+  /** Eigenvector of the win(1..9) Hermitian matrix for its eigenvalue lk, as
+   * the H-A-alpha angle and Touzi.java:215-280 read it: the cross product of
+   * rows 1 and 2 of T - lk I, unnormalized (the reference's EigenDecomposition
+   * returns unit vectors; callers divide by the norm). Fills
+   * v = (v1r, v1i, v2r, v2i, v3r), v3 being real, and returns the squared norm,
+   * 0 when the two rows are parallel. */
+  private def eigVec3H(win: Array[Double], lk: Double, v: Array[Double]): Double = {
+    val a = win(1); val b = win(2)
+    val d12r = win(4); val d12i = win(5); val d13r = win(6); val d13i = win(7)
+    val d23r = win(8); val d23i = win(9)
+    // r1 = (a-l, d12, d13); r2 = (conj(d12), b-l, d23)
+    val v1r = d12r * d23r - d12i * d23i - d13r * (b - lk)
+    val v1i = d12r * d23i + d12i * d23r - d13i * (b - lk)
+    val v2r = d13r * d12r + d13i * d12i - (a - lk) * d23r
+    val v2i = d13i * d12r - d13r * d12i - (a - lk) * d23i
+    val v3r = (a - lk) * (b - lk) - (d12r * d12r + d12i * d12i)
+    v(0) = v1r; v(1) = v1i; v(2) = v2r; v(3) = v2i; v(4) = v3r
+    v1r * v1r + v1i * v1i + v2r * v2r + v2i * v2i + v3r * v3r
+  }
+
+  /** Cardano H-A-alpha of one windowed T3 (win as from t3Win, win(0)=n > 0).
+   * Fills haa = (entropy, anisotropy, alphaDeg); ev and v are eig3H / eigVec3H
+   * scratch. Formula staged EXACTLY as the SarOraclesQuad SQL (same association
+   * order). */
+  private def hAlphaOf(win: Array[Double], ev: Array[Double], v: Array[Double],
+      haa: Array[Double]): Unit = {
+    val a = win(1)
+    val tr = a + win(2) + win(3)
+    if (tr <= 0.0) { haa(0) = ND; haa(1) = ND; haa(2) = ND; return }
+    val p1 = eig3H(win, ev)
+    val l1 = ev(0); val l2 = ev(1); val l3 = ev(2)
     // probabilities (clamped), entropy base 3
     var h = 0.0
     var k = 0
@@ -2753,7 +2843,7 @@ object Kernels {
       k += 1
     }
     val anis = if (l2 + l3 > 0.0) (l2 - l3) / (l2 + l3) else 0.0
-    // mean alpha from eigenvectors: v = row1(T - lI) x row2(T - lI)
+    // mean alpha from the eigenvectors
     var alpha = 0.0
     if (p1 == 0.0) {
       // diagonal T: eigenvectors are the unit axes; alpha = 0 for the t11 axis,
@@ -2772,17 +2862,11 @@ object Kernels {
         val l = if (kk == 0) l1 else if (kk == 1) l2 else l3
         var pk = l / tr
         if (pk < 0.0) pk = 0.0
-        // r1 = (a-l, d12, d13); r2 = (conj(d12), b-l, d23)
-        val v1r = d12r * d23r - d12i * d23i - d13r * (b - l)
-        val v1i = d12r * d23i + d12i * d23r - d13i * (b - l)
-        val v2r = d13r * d12r + d13i * d12i - (a - l) * d23r
-        val v2i = d13i * d12r - d13r * d12i - (a - l) * d23i
-        val v3r = (a - l) * (b - l) - (d12r * d12r + d12i * d12i)
-        val norm2 = v1r * v1r + v1i * v1i + v2r * v2r + v2i * v2i + v3r * v3r
+        val norm2 = eigVec3H(win, l, v)
         val ak =
           if (norm2 <= 0.0) 0.0
           else {
-            var cosA = math.sqrt((v1r * v1r + v1i * v1i) / norm2)
+            var cosA = math.sqrt((v(0) * v(0) + v(1) * v(1)) / norm2)
             if (cosA > 1.0) cosA = 1.0
             math.acos(cosA) * (180.0 / math.Pi)
           }
@@ -2801,12 +2885,11 @@ object Kernels {
       vhI: ArrayData, vhQ: ArrayData, vvI: ArrayData, vvQ: ArrayData,
       w: Int, h: Int, m: Int): InternalRow = {
     val hw = w + 2 * m
-    val ch = Array(hhI.toDoubleArray(), hhQ.toDoubleArray(), hvI.toDoubleArray(),
-      hvQ.toDoubleArray(), vhI.toDoubleArray(), vhQ.toDoubleArray(),
-      vvI.toDoubleArray(), vvQ.toDoubleArray())
+    val ch = quadChannels(hhI, hhQ, hvI, hvQ, vhI, vhQ, vvI, vvQ)
     val t = new Array[Double](9)
     val win = new Array[Double](10)
     val haa = new Array[Double](3)
+    val ev = new Array[Double](3); val v = new Array[Double](5)
     var n = 0L; var hs = 0L; var as = 0L; var als = 0L
     var y = 0
     while (y < h) {
@@ -2814,12 +2897,12 @@ object Kernels {
       while (x < w) {
         t3Win(ch, hw, x, y, m, t, win)
         if (win(0) > 0) {
-          hAlphaOf(win, haa)
+          hAlphaOf(win, ev, v, haa)
           if (!isNd(haa(0))) {
             n += 1
-            hs += math.floor(0.031415926535897934 + haa(0) * 1.0e6).toLong
-            as += math.floor(0.031415926535897934 + haa(1) * 1.0e6).toLong
-            als += math.floor(0.031415926535897934 + haa(2) * 1.0e6).toLong
+            hs += q6l(haa(0))
+            as += q6l(haa(1))
+            als += q6l(haa(2))
           }
         }
         x += 1
@@ -2855,9 +2938,7 @@ object Kernels {
       vhI: ArrayData, vhQ: ArrayData, vvI: ArrayData, vvQ: ArrayData,
       centersD: ArrayData, w: Int, h: Int, m: Int): ArrayData = {
     val hw = w + 2 * m
-    val ch = Array(hhI.toDoubleArray(), hhQ.toDoubleArray(), hvI.toDoubleArray(),
-      hvQ.toDoubleArray(), vhI.toDoubleArray(), vhQ.toDoubleArray(),
-      vvI.toDoubleArray(), vvQ.toDoubleArray())
+    val ch = quadChannels(hhI, hhQ, hvI, hvQ, vhI, vhQ, vvI, vvQ)
     val centers =
       if (centersD == null || centersD.numElements() == 0) null else centersD.toLongArray()
     // precompute per-zone ln det + inverse entries from the exact integer centers
@@ -2899,6 +2980,7 @@ object Kernels {
     val t = new Array[Double](9)
     val win = new Array[Double](10)
     val haa = new Array[Double](3)
+    val ev = new Array[Double](3); val v = new Array[Double](5)
     val cnt = new Array[Long](9)
     val sums = Array.ofDim[Long](9, 9)
     var y = 0
@@ -2910,7 +2992,7 @@ object Kernels {
           val n = win(0)
           var zone = -1
           if (centers == null) {
-            hAlphaOf(win, haa)
+            hAlphaOf(win, ev, v, haa)
             if (!isNd(haa(0))) zone = zoneOf(haa(0), haa(2))
           } else if (win(1) + win(2) + win(3) > 0.0) { // tr > 0, mirrors the seed path
             // mean coherency of the pixel (same division staged in the oracle)
@@ -2937,7 +3019,7 @@ object Kernels {
             cnt(zone) += 1
             var j = 0
             while (j < 9) {
-              sums(zone)(j) += math.floor(0.031415926535897934 + win(j + 1) * WishartQ).toLong
+              sums(zone)(j) += quant(win(j + 1), WishartQ)
               j += 1
             }
           }
@@ -2974,16 +3056,6 @@ object Kernels {
    * degenerate-channel guard of the Freeman-Durden solve. */
   private val SnapEps = 1e-15
 
-  @inline private def q6l(v: Double): Long =
-    math.floor(0.031415926535897934 + v * 1.0e6).toLong
-
-  /**
-   * Per-tile rollup of the scalar quad-pol aliases over margin-m windowed T3/C4:
-   * one compiled pass, struct(n, s1, s2, s3) of 1e6-quantized per-pixel sums.
-   * Angle stages (atan2) run on the EXACT integer-grid window sums (the angles are
-   * scale-invariant, so sums == means); power stages divide by the window count
-   * with the same staging as the DuckDB oracle.
-   */
   /**
    * Polarimetric Refined Lee speckle filter (reference rstb RefinedLee.java:
    * 226-608 — the operator's T3 path, FULL reference algorithm): per pixel,
@@ -3005,9 +3077,7 @@ object Kernels {
       vhI: ArrayData, vhQ: ArrayData, vvI: ArrayData, vvQ: ArrayData,
       w: Int, h: Int, m: Int, enl: Double): InternalRow = {
     val hw = w + 2 * m; val hh2 = h + 2 * m
-    val ch = Array(hhI.toDoubleArray(), hhQ.toDoubleArray(), hvI.toDoubleArray(),
-      hvQ.toDoubleArray(), vhI.toDoubleArray(), vhQ.toDoubleArray(),
-      vvI.toDoubleArray(), vvQ.toDoubleArray())
+    val ch = quadChannels(hhI, hhQ, hvI, hvQ, vhI, vhQ, vvI, vvQ)
     val nPix = hw * hh2
     val t = new Array[Double](9)
     val t3 = Array.ofDim[Double](9, nPix)
@@ -3023,6 +3093,7 @@ object Kernels {
       i += 1
     }
     val sigmaVSqr = 1.0 / enl
+    val sub = new Array[Double](9); val subValid = new Array[Int](9)
     val sums = new Array[Long](9)
     var nOut = 0L
     var y = 0
@@ -3032,7 +3103,9 @@ object Kernels {
         val c0 = (y + m) * hw + (x + m)
         if (span(c0) != ND) {
           nOut += 1
-          @inline def sidx(wyT: Int, wxT: Int): Int = (y + m + wyT - 3) * hw + (x + m + wxT - 3)
+          // the 7x7 window's top-left cell
+          val base = (y + m - 3) * hw + (x + m - 3)
+          @inline def sidx(wyT: Int, wxT: Int): Int = base + wyT * hw + wxT
           // valid count over the 7x7 span window (getLocalData's n)
           var n = 0
           var wy = 0
@@ -3075,34 +3148,14 @@ object Kernels {
               val varY = if (k > 1) qv.toDouble / 1.0e6 / (k - 1) else 0.0
               val out =
                 if (varY == 0.0) 0.0
-                else {
-                  var varX = (varY - meanY * meanY * sigmaVSqr) / (1.0 + sigmaVSqr)
-                  if (varX < 0.0) varX = 0.0
-                  meanY + varX / varY * (t3(j)(c0) - meanY)
-                }
+                else meanY + mmseVarX(varY, meanY, sigmaVSqr) / varY * (t3(j)(c0) - meanY)
               sums(j) += q6l(out)
               j += 1
             }
           } else {
             // EDGE path: 9 OVERLAPPING stride-2 3x3 sub-means of the span
             // (computeSubAreaMeans:452-470, filterSize 7 -> subWindow 3 stride 2)
-            val sub = new Array[Double](9)
-            var sj = 0
-            while (sj < 3) {
-              var si = 0
-              while (si < 3) {
-                var s = 0.0
-                var yy = 2 * sj
-                while (yy < 2 * sj + 3) {
-                  var xx = 2 * si
-                  while (xx < 2 * si + 3) { s += span(sidx(yy, xx)); xx += 1 }
-                  yy += 1
-                }
-                sub(sj * 3 + si) = s / 9.0
-                si += 1
-              }
-              sj += 1
-            }
+            rlSubMeans(span, base, hw, sub, subValid)
             // SIGNED gradients (getDirection:478-516): first |max| wins, +4 if positive
             val g = new Array[Double](4)
             g(0) = sub(2) + sub(5) + sub(8) - sub(0) - sub(3) - sub(6)
@@ -3118,53 +3171,18 @@ object Kernels {
               gi += 1
             }
             val d = if (g(dir) > 0.0) dir + 4 else dir
-            // the reference's exact 28-pixel non-edge templates
-            // (getNonEdgeAreaPixelValues:520-608)
-            @inline def inTmpl(wyT: Int, wxT: Int): Boolean = d match {
-              case 0 => wxT >= 3
-              case 1 => wxT >= wyT
-              case 2 => wyT <= 3
-              case 3 => wxT < 7 - wyT
-              case 4 => wxT <= 3
-              case 5 => wxT < wyT + 1
-              case 6 => wyT >= 3
-              case 7 => wxT >= 6 - wyT
-            }
             // b from the span template (computePixelValueUsingEdgeDetection:371-394);
             // varY == 0 -> ALL channels 0.0 (the rstb quirk)
-            var s28 = 0.0
-            wy = 0
-            while (wy < 7) {
-              var wx = 0
-              while (wx < 7) { if (inTmpl(wy, wx)) s28 += span(sidx(wy, wx)); wx += 1 }
-              wy += 1
-            }
-            val meanY = s28 / 28.0
-            var q28 = 0L
-            wy = 0
-            while (wy < 7) {
-              var wx = 0
-              while (wx < 7) { if (inTmpl(wy, wx)) q28 += qdev(span(sidx(wy, wx)), meanY); wx += 1 }
-              wy += 1
-            }
-            val varY = q28.toDouble / 1.0e6 / 27.0
+            val meanY = tmplMean(span, base, hw, d)
+            val varY = tmplVar(span, base, hw, d, meanY)
             if (varY == 0.0) {
               var j = 0
               while (j < 9) { sums(j) += q6l(0.0); j += 1 }
             } else {
-              var varX = (varY - meanY * meanY * sigmaVSqr) / (1.0 + sigmaVSqr)
-              if (varX < 0.0) varX = 0.0
-              val b = varX / varY
+              val b = mmseVarX(varY, meanY, sigmaVSqr) / varY
               var j = 0
               while (j < 9) {
-                var zs = 0.0
-                wy = 0
-                while (wy < 7) {
-                  var wx = 0
-                  while (wx < 7) { if (inTmpl(wy, wx)) zs += t3(j)(sidx(wy, wx)); wx += 1 }
-                  wy += 1
-                }
-                val meanZ = zs / 28.0
+                val meanZ = tmplMean(t3(j), base, hw, d)
                 val out = meanZ + b * (t3(j)(c0) - meanZ)
                 sums(j) += q6l(out)
                 j += 1
@@ -3179,15 +3197,21 @@ object Kernels {
     InternalRow(nOut, sums(0), sums(1), sums(2), sums(3), sums(4), sums(5), sums(6), sums(7), sums(8))
   }
 
+  /**
+   * Per-tile rollup of the scalar quad-pol aliases over margin-m windowed T3/C4:
+   * one compiled pass, struct(n, s1, s2, s3) of 1e6-quantized per-pixel sums.
+   * Angle stages (atan2) run on the EXACT integer-grid window sums (the angles are
+   * scale-invariant, so sums == means); power stages divide by the window count
+   * with the same staging as the DuckDB oracle.
+   */
   def quadScalar(hhI: ArrayData, hhQ: ArrayData, hvI: ArrayData, hvQ: ArrayData,
       vhI: ArrayData, vhQ: ArrayData, vvI: ArrayData, vvQ: ArrayData,
       w: Int, h: Int, m: Int, mode: Int): InternalRow = {
     val hw = w + 2 * m
-    val ch = Array(hhI.toDoubleArray(), hhQ.toDoubleArray(), hvI.toDoubleArray(),
-      hvQ.toDoubleArray(), vhI.toDoubleArray(), vhQ.toDoubleArray(),
-      vvI.toDoubleArray(), vvQ.toDoubleArray())
+    val ch = quadChannels(hhI, hhQ, hvI, hvQ, vhI, vhQ, vvI, vvQ)
     val t = new Array[Double](9)
     val win = new Array[Double](10)
+    val ev = new Array[Double](3); val v = new Array[Double](5)
     var n = 0L; var s1 = 0L; var s2 = 0L; var s3 = 0L
     val Pi4 = math.Pi / 4.0
     val Pi2 = math.Pi / 2.0
@@ -3250,38 +3274,11 @@ object Kernels {
           case QS_PARAMS =>
             t3Win(ch, hw, x, y, m, t, win)
             if (win(0) > 0) {
-              val a = win(1); val b = win(2); val c = win(3)
-              val tr = a + b + c
+              val tr = win(1) + win(2) + win(3)
               if (tr > 0.0) {
-                // eigenvalues: identical Cardano staging to hAlphaOf (scale-invariant
-                // ratios on the exact window sums)
-                val d12r = win(4); val d12i = win(5); val d13r = win(6); val d13i = win(7)
-                val d23r = win(8); val d23i = win(9)
-                val p1 = d12r * d12r + d12i * d12i + d13r * d13r + d13i * d13i +
-                  d23r * d23r + d23i * d23i
-                var l1 = 0.0; var l3 = 0.0
-                if (p1 == 0.0) {
-                  l1 = math.max(a, math.max(b, c))
-                  l3 = math.min(a, math.min(b, c))
-                } else {
-                  val q = tr / 3.0
-                  val p2 = (a - q) * (a - q) + (b - q) * (b - q) + (c - q) * (c - q) + 2.0 * p1
-                  val p = math.sqrt(p2 / 6.0)
-                  val b11 = (a - q) / p; val b22 = (b - q) / p; val b33 = (c - q) / p
-                  val e12r = d12r / p; val e12i = d12i / p
-                  val e13r = d13r / p; val e13i = d13i / p
-                  val e23r = d23r / p; val e23i = d23i / p
-                  val detB = b11 * b22 * b33 - b11 * (e23r * e23r + e23i * e23i) -
-                    b22 * (e13r * e13r + e13i * e13i) - b33 * (e12r * e12r + e12i * e12i) +
-                    2.0 * ((e12r * e23r - e12i * e23i) * e13r + (e12r * e23i + e12i * e23r) * e13i)
-                  var r = detB / 2.0
-                  if (r < -1.0) r = -1.0
-                  if (r > 1.0) r = 1.0
-                  val phi = math.acos(r) / 3.0
-                  l1 = q + 2.0 * p * math.cos(phi)
-                  l3 = q + 2.0 * p * math.cos(phi + TwoPiThird)
-                }
-                val l2 = tr - l1 - l3
+                // eigenvalues of the exact window sums (the ratios are scale-invariant)
+                eig3H(win, ev)
+                val l1 = ev(0); val l2 = ev(1); val l3 = ev(2)
                 if (l1 > 0.0) {
                   val span = 2.0 * tr / win(0)
                   val pedestal = l3 / l1
@@ -3406,34 +3403,11 @@ object Kernels {
             // degenerate cross product are skipped in BOTH engines.
             t3Win(ch, hw, x, y, m, t, win)
             if (win(0) > 0) {
-              val a = win(1); val b = win(2); val c = win(3)
-              val d12r = win(4); val d12i = win(5); val d13r = win(6); val d13i = win(7)
-              val d23r = win(8); val d23i = win(9)
-              val tr = a + b + c
-              val p1 = d12r * d12r + d12i * d12i + d13r * d13r + d13i * d13i + d23r * d23r + d23i * d23i
-              if (tr > 0.0 && p1 != 0.0) {
-                // Cardano dominant eigenvalue (staged exactly as hAlphaOf / SQL)
-                val q = tr / 3.0
-                val p2 = (a - q) * (a - q) + (b - q) * (b - q) + (c - q) * (c - q) + 2.0 * p1
-                val p = math.sqrt(p2 / 6.0)
-                val b11 = (a - q) / p; val b22 = (b - q) / p; val b33 = (c - q) / p
-                val e12r = d12r / p; val e12i = d12i / p
-                val e13r = d13r / p; val e13i = d13i / p
-                val e23r = d23r / p; val e23i = d23i / p
-                var r = b11 * b22 * b33 - b11 * (e23r * e23r + e23i * e23i) -
-                  b22 * (e13r * e13r + e13i * e13i) - b33 * (e12r * e12r + e12i * e12i) +
-                  2.0 * ((e12r * e23r - e12i * e23i) * e13r + (e12r * e23i + e12i * e23r) * e13i)
-                r = r / 2.0
-                if (r < -1.0) r = -1.0
-                if (r > 1.0) r = 1.0
-                val l1 = q + 2.0 * p * math.cos(math.acos(r) / 3.0)
-                // eigenvector = row1(T - l1 I) x row2(T - l1 I)
-                val v1r = d12r * d23r - d12i * d23i - d13r * (b - l1)
-                val v1i = d12r * d23i + d12i * d23r - d13i * (b - l1)
-                val v2r = d13r * d12r + d13i * d12i - (a - l1) * d23r
-                val v2i = d13i * d12r - d13r * d12i - (a - l1) * d23i
-                val v3r = (a - l1) * (b - l1) - (d12r * d12r + d12i * d12i)
-                val norm2 = v1r * v1r + v1i * v1i + v2r * v2r + v2i * v2i + v3r * v3r
+              val tr = win(1) + win(2) + win(3)
+              if (tr > 0.0 && eig3H(win, ev) != 0.0) {
+                val l1 = ev(0)
+                val norm2 = eigVec3H(win, l1, v)
+                val v1r = v(0); val v1i = v(1); val v2r = v(2); val v2i = v(3); val v3r = v(4)
                 if (norm2 > 0.0 && mode == QS_CLOUDE) {
                   // Cloude: dominant eigenvalue of the window MEAN coherency
                   // matrix times the unit-eigenvector component magnitudes,
@@ -3618,9 +3592,7 @@ object Kernels {
    */
   def cpC2Sums(hhI: ArrayData, hhQ: ArrayData, hvI: ArrayData, hvQ: ArrayData,
       vhI: ArrayData, vhQ: ArrayData, vvI: ArrayData, vvQ: ArrayData): InternalRow = {
-    val ch = Array(hhI.toDoubleArray(), hhQ.toDoubleArray(), hvI.toDoubleArray(),
-      hvQ.toDoubleArray(), vhI.toDoubleArray(), vhQ.toDoubleArray(),
-      vvI.toDoubleArray(), vvQ.toDoubleArray())
+    val ch = quadChannels(hhI, hhQ, hvI, hvQ, vhI, vhQ, vvI, vvQ)
     var n = 0L; var s11 = 0L; var s22 = 0L; var s12r = 0L; var s12i = 0L
     var i = 0
     while (i < ch(0).length) {
@@ -3931,9 +3903,7 @@ object Kernels {
    * (PolarimetricCalibrationOp.java:201-246 collectCovariance/accumulateOuter). */
   def polCalCovTile(hhI: ArrayData, hhQ: ArrayData, hvI: ArrayData, hvQ: ArrayData,
       vhI: ArrayData, vhQ: ArrayData, vvI: ArrayData, vvQ: ArrayData): InternalRow = {
-    val ch = Array(hhI.toDoubleArray(), hhQ.toDoubleArray(), hvI.toDoubleArray(),
-      hvQ.toDoubleArray(), vhI.toDoubleArray(), vhQ.toDoubleArray(),
-      vvI.toDoubleArray(), vvQ.toDoubleArray())
+    val ch = quadChannels(hhI, hhQ, hvI, hvQ, vhI, vhQ, vvI, vvQ)
     var n = 0L
     var c00 = 0.0; var c33 = 0.0
     var c01r = 0.0; var c01i = 0.0; var c02r = 0.0; var c02i = 0.0
@@ -3972,9 +3942,7 @@ object Kernels {
       vhI: ArrayData, vhQ: ArrayData, vvI: ArrayData, vvQ: ArrayData,
       d1r: Double, d1i: Double, d2r: Double, d2i: Double,
       d3r: Double, d3i: Double, d4r: Double, d4i: Double): InternalRow = {
-    val ch = Array(hhI.toDoubleArray(), hhQ.toDoubleArray(), hvI.toDoubleArray(),
-      hvQ.toDoubleArray(), vhI.toDoubleArray(), vhQ.toDoubleArray(),
-      vvI.toDoubleArray(), vvQ.toDoubleArray())
+    val ch = quadChannels(hhI, hhQ, hvI, hvQ, vhI, vhQ, vvI, vvQ)
     // det T = 1 - d2*d1, det R = 1 - d4*d3 (f folded to 1 in the Quegan path)
     val detTr = 1.0 - (d2r * d1r - d2i * d1i)
     val detTi = 0.0 - (d2r * d1i + d2i * d1r)
@@ -4115,27 +4083,13 @@ object Kernels {
    * (OilSpillDetectionOp criterion; feeds the clustering stage). */
   def darkKs(halo: ArrayData, w: Int, h: Int, m: Int, kf: Double): ArrayData = {
     val hw = w + 2 * m
-    val a = halo.toDoubleArray()
+    val a = haloChannel(halo, w, h, m)
     val out = new scala.collection.mutable.ArrayBuffer[Int]()
     var y = 0
     while (y < h) {
       var x = 0
       while (x < w) {
-        val cp = a((y + m) * hw + (x + m))
-        if (!isNd(cp)) {
-          var n = 0; var s1 = 0.0
-          var dy = -m
-          while (dy <= m) {
-            var dx = -m
-            while (dx <= m) {
-              val v = a((y + m + dy) * hw + (x + m + dx))
-              if (!isNd(v)) { n += 1; s1 += v }
-              dx += 1
-            }
-            dy += 1
-          }
-          if (n > 0 && cp < kf * (s1 / n)) out += y * w + x
-        }
+        if (isDark(a, hw, x, y, m, kf)) out += y * w + x
         x += 1
       }
       y += 1
@@ -4150,6 +4104,39 @@ object Kernels {
   val DP_POWERS = 2 // DpDecompositionOp.java:500-560 (Pu/Pd/Ps + alpha_dp)
   val DP_FACT = 3 // DpFactorizationOp.java:465-540 (Ps/Pd/Pr factorization)
 
+  /** Mean of the valid slope cells of the margin-m window at pixel (x, y), 0
+   * when none is valid: the terrain mask input of the dual-pol index family
+   * (DPRBIOp.java:425-505). */
+  private def slopeMean(sl: Array[Double], hw: Int, x: Int, y: Int, m: Int): Double = {
+    var sc = 0; var ss = 0.0
+    var dy = -m
+    while (dy <= m) {
+      var dx = -m
+      while (dx <= m) {
+        val idx = (y + m + dy) * hw + (x + m + dx)
+        if (!isNd(sl(idx))) { sc += 1; ss += sl(idx) }
+        dx += 1
+      }
+      dy += 1
+    }
+    if (sc > 0) ss / sc else 0.0
+  }
+
+  /** Pass-A step of one pixel from its C2 window sums s over n > 0 cells: the
+   * window-mean Stokes g1 = c11 - c22, g2 = 2 Re c12, g3 = 2 Im c12, and
+   * g = (|g1|, |g2|, |g3| masked to 0 where the mean slope is over 15 degrees,
+   * then unmasked |g1|) (DPRBIOp.java:425-505). */
+  private def dpStokesPx(n: Int, s: Array[Double], slopeAvg: Double, g: Array[Double]): Unit = {
+    val g1 = s(0) / n - s(1) / n
+    val g2 = 2.0 * (s(2) / n)
+    val g3 = 2.0 * (s(3) / n)
+    val mask = if (slopeAvg > 15.0) 0.0 else 1.0
+    g(0) = math.abs(g1) * mask
+    g(1) = math.abs(g2) * mask
+    g(2) = math.abs(g3) * mask
+    g(3) = math.abs(g1)
+  }
+
   /**
    * Pass A of the DPRBI/DPRSI/Dp-Decomposition/Factorization family: per-pixel
    * slope-masked |Stokes| magnitudes over the margin-m windowed C2 (reference
@@ -4161,42 +4148,22 @@ object Kernels {
   def dpStokesTile(c11H: ArrayData, c22H: ArrayData, c12rH: ArrayData, c12iH: ArrayData,
       slH: ArrayData, w: Int, h: Int, m: Int): InternalRow = {
     val hw = w + 2 * m
-    val c11 = c11H.toDoubleArray(); val c22 = c22H.toDoubleArray()
-    val cr = c12rH.toDoubleArray(); val ci = c12iH.toDoubleArray()
-    val sl = slH.toDoubleArray()
+    val c11 = haloChannel(c11H, w, h, m); val c22 = haloChannel(c22H, w, h, m)
+    val cr = haloChannel(c12rH, w, h, m); val ci = haloChannel(c12iH, w, h, m)
+    val sl = haloChannel(slH, w, h, m)
     val g1a = new Array[Double](w * h); val g2a = new Array[Double](w * h)
     val g3a = new Array[Double](w * h); val g1s = new Array[Double](w * h)
+    val s = new Array[Double](4); val g = new Array[Double](4)
     var y = 0
     while (y < h) {
       var x = 0
       while (x < w) {
-        var n = 0; var m11 = 0.0; var m22 = 0.0; var mr = 0.0; var mi = 0.0
-        var sc = 0; var ss = 0.0
-        var dy = -m
-        while (dy <= m) {
-          var dx = -m
-          while (dx <= m) {
-            val idx = (y + m + dy) * hw + (x + m + dx)
-            if (!isNd(c11(idx))) {
-              n += 1; m11 += c11(idx); m22 += c22(idx); mr += cr(idx); mi += ci(idx)
-            }
-            if (!isNd(sl(idx))) { sc += 1; ss += sl(idx) }
-            dx += 1
-          }
-          dy += 1
-        }
+        val n = windowSums4(c11, c22, cr, ci, hw, x, y, m, s)
         val o = y * w + x
         if (n == 0) { g1a(o) = ND; g2a(o) = ND; g3a(o) = ND; g1s(o) = ND }
         else {
-          val g1 = m11 / n - m22 / n
-          val g2 = 2.0 * (mr / n)
-          val g3 = 2.0 * (mi / n)
-          val slopeAvg = if (sc > 0) ss / sc else 0.0
-          val mask = if (slopeAvg > 15.0) 0.0 else 1.0
-          g1s(o) = math.abs(g1)
-          g1a(o) = math.abs(g1) * mask
-          g2a(o) = math.abs(g2) * mask
-          g3a(o) = math.abs(g3) * mask
+          dpStokesPx(n, s, slopeMean(sl, hw, x, y, m), g)
+          g1a(o) = g(0); g2a(o) = g(1); g3a(o) = g(2); g1s(o) = g(3)
         }
         x += 1
       }
@@ -4220,43 +4187,23 @@ object Kernels {
       p5g3: Double, p95g3: Double, p5g1s: Double, p95g1s: Double,
       w: Int, h: Int, m: Int, mode: Int): InternalRow = {
     val hw = w + 2 * m
-    val c11 = c11H.toDoubleArray(); val c22 = c22H.toDoubleArray()
-    val cr = c12rH.toDoubleArray(); val ci = c12iH.toDoubleArray()
-    val sl = slH.toDoubleArray()
+    val c11 = haloChannel(c11H, w, h, m); val c22 = haloChannel(c22H, w, h, m)
+    val cr = haloChannel(c12rH, w, h, m); val ci = haloChannel(c12iH, w, h, m)
+    val sl = haloChannel(slH, w, h, m)
+    val s = new Array[Double](4); val g = new Array[Double](4)
     var cnt = 0L; var s1 = 0L; var s2 = 0L; var s3 = 0L; var s4 = 0L
     var y = 0
     while (y < h) {
       var x = 0
       while (x < w) {
-        var n = 0; var m11 = 0.0; var m22 = 0.0; var mr = 0.0; var mi = 0.0
-        var sc = 0; var ss = 0.0
-        var dy = -m
-        while (dy <= m) {
-          var dx = -m
-          while (dx <= m) {
-            val idx = (y + m + dy) * hw + (x + m + dx)
-            if (!isNd(c11(idx))) {
-              n += 1; m11 += c11(idx); m22 += c22(idx); mr += cr(idx); mi += ci(idx)
-            }
-            if (!isNd(sl(idx))) { sc += 1; ss += sl(idx) }
-            dx += 1
-          }
-          dy += 1
-        }
+        val n = windowSums4(c11, c22, cr, ci, hw, x, y, m, s)
         if (n > 0) {
-          val c11m = m11 / n; val c22m = m22 / n
-          val mrm = mr / n; val mim = mi / n
+          val c11m = s(0) / n; val c22m = s(1) / n
+          val mrm = s(2) / n; val mim = s(3) / n
           val tr = c11m + c22m
           if (c11m > 0.0 && tr > 0.0 && p95g1 > 0.0 && p95g2 > 0.0 && p95g3 > 0.0 && p95g1s > 0.0) {
-            val g1 = c11m - c22m
-            val g2 = 2.0 * mrm
-            val g3 = 2.0 * mim
-            val slopeAvg = if (sc > 0) ss / sc else 0.0
-            val mask = if (slopeAvg > 15.0) 0.0 else 1.0
-            val g1sAbs = math.abs(g1)
-            val g1A = math.abs(g1) * mask
-            val g2A = math.abs(g2) * mask
-            val g3A = math.abs(g3) * mask
+            dpStokesPx(n, s, slopeMean(sl, hw, x, y, m), g)
+            val g1A = g(0); val g2A = g(1); val g3A = g(2); val g1sAbs = g(3)
             // outlier clamp + p95 normalization (reference MANDATORY stage)
             val g1n = math.min(math.max(g1A, p5g1), p95g1) / p95g1
             val g2n = math.min(math.max(g2A, p5g2), p95g2) / p95g2
@@ -4529,8 +4476,8 @@ object Kernels {
             val p = (y0 + r) * w + (x0 + c)
             if (mask(p)) {
               val wt = (1.0 - math.abs(c - F / 2 + 0.5) / (F / 2)) * wy
-              accReQ(p) += q2l(wt * (bre(r * F + c) / (F * F).toDouble))
-              accImQ(p) += q2l(wt * (bim(r * F + c) / (F * F).toDouble))
+              accReQ(p) += quant(wt * (bre(r * F + c) / (F * F).toDouble), 1.0e2)
+              accImQ(p) += quant(wt * (bim(r * F + c) / (F * F).toDouble), 1.0e2)
               touched(p) = true
             }
             c += 1
@@ -4557,10 +4504,6 @@ object Kernels {
     }
     InternalRow(UnsafeArrayData.fromPrimitiveArray(n), UnsafeArrayData.fromPrimitiveArray(phQ))
   }
-
-  /** 0.031415926535897934 + x * 1e2 floor — the coarse accumulator grid. */
-  @inline private def q2l(v: Double): Long =
-    math.floor(0.031415926535897934 + v * 1.0e2).toLong
 
   // ------------------------------------------------- jlinda range filter (full)
 
@@ -4702,8 +4645,8 @@ object Kernels {
         val p = gy * w + gx
         if (mask(p) && gy >= firstLine && gy <= lastLine) {
           n(t) += 1
-          reQ(t) += q2l(mre(p))
-          imQ(t) += q2l(mim(p))
+          reQ(t) += quant(mre(p), 1.0e2)
+          imQ(t) += quant(mim(p), 1.0e2)
         }
         k += 1
       }
@@ -4807,8 +4750,8 @@ object Kernels {
         val p = gy * w + gx
         if (mask(p)) {
           n(t) += 1
-          reQ(t) += q2l(re(p))
-          imQ(t) += q2l(im(p))
+          reQ(t) += quant(re(p), 1.0e2)
+          imQ(t) += quant(im(p), 1.0e2)
         }
         k += 1
       }

@@ -31,7 +31,11 @@ import graft.model._
  */
 object Fixtures {
 
-  val Root = "/root/repo/fixtures"
+  /** The checkout the engine runs in: the fixtures, the tile writer's output
+   * and the bench history live under it. */
+  val RepoDir = "/root/repo"
+
+  val Root = s"$RepoDir/fixtures"
 
   final case class Scale(tag: String, nScenes: Int, nDocs: Int, nAois: Int)
 

@@ -5,6 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.exprs.Kernels.q6Sql
 import graft.gen.Fixtures
 import graft.model.Layout
 import graft.ops.{Calibration, InSAR, Raster, Spectral, Speckle, TerrainCorrection}
@@ -81,9 +82,6 @@ object ChainGraph {
    * frames) => frame. Every compiler is a pure plan transformation. */
   type OpCompiler = (SparkSession, String, Map[String, String], Seq[DataFrame]) => DataFrame
 
-  private val Dither = "0.031415926535897934"
-  private def q6(c: String) = s"CAST(floor($Dither + ($c) * 1.0E6) AS BIGINT)"
-
   /** Read: parameterized source-table scan. `table` picks the fixture table
    * (bursts for geometry chains, tiles for raster chains); `scenes` narrows to
    * the even (master) or odd (secondary) scene parity — the two-Read shape of
@@ -149,10 +147,10 @@ object ChainGraph {
       col("ox").as("ox_s"), col("oy").as("oy_s"), col("oz").as("oz_s"))
     m.join(s, Seq("pair", "subswath", "burst_idx"))
       .select(col("m_scene_id"), col("sec_scene_id"), col("subswath"), col("burst_idx"),
-        expr(q6("tm_s - tm_m")).as("az_dt_q"),
-        expr(q6("ox_s - ox_m")).as("bx_q"),
-        expr(q6("oz_s - oz_m")).as("bz_q"),
-        expr(q6("(oy_s - oy_m) - ovy_m * (tm_s - tm_m)")).as("ay_resid_q"))
+        expr(q6Sql("tm_s - tm_m")).as("az_dt_q"),
+        expr(q6Sql("ox_s - ox_m")).as("bx_q"),
+        expr(q6Sql("oz_s - oz_m")).as("bz_q"),
+        expr(q6Sql("(oy_s - oy_m) - ovy_m * (tm_s - tm_m)")).as("ay_resid_q"))
   }
 
   /** ThermalNoiseRemoval (ThermalNoiseRemovalOp — noise-LUT subtraction with

@@ -2,6 +2,7 @@ package graft.media
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.exprs.Kernels.q6Sql
 import graft.gen.Fixtures
 
 /**
@@ -64,7 +65,7 @@ object Multimodal {
       s"CAST((instr($hexDig, substring(h, ${j * 2 + 1}, 1)) - 1) * 16 + (instr($hexDig, substring(h, ${j * 2 + 2}, 1)) - 1) AS INT)"
     def fAt(j: Int): String = s"${byteAt(j)} / CAST(255.0 AS DOUBLE)"
     val checksum = (0 until 16)
-      .map(j => s"CAST(floor(0.031415926535897934 + (${fAt(j)}) * 1.0E6) AS BIGINT)")
+      .map(j => q6Sql(fAt(j)))
       .mkString(" + ")
     Fixtures.table(spark, dir, "media")
       .withColumn("h", md5(col("content").cast("string")))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.exprs.Kernels.q6Sql
 
 /**
  * Full-fidelity Back-Geocoding / DEM-assisted coregistration
@@ -64,22 +65,21 @@ object BackGeocoding {
         "lf_m", "xf_m", "lf_s", "xf_s", "remod_ph")
     val secTiles = tc.vvTiles(spark, sfDir).withColumnRenamed("scene_id", "sec_scene_id")
     val d = Raster.Dyadic
-    def q6(e: String) = s"CAST(floor(0.031415926535897934 + ($e) * 1.0E6) AS BIGINT)"
     secTiles
       .join(broadcast(corners), Seq("sec_scene_id", "subswath", "burst_idx", "tile_x", "tile_y"))
       .withColumn("pa", expr(s"floor(element_at(i, px + 1) * $d) / $d"))
       .withColumn("pb", expr(s"floor(element_at(q, px + 1) * $d) / $d"))
       .withColumn("re_t", expr(
         s"""if(element_at(i, px + 1) = -9999.0D or element_at(q, px + 1) = -9999.0D, CAST(null AS BIGINT),
-           |   ${q6("w * (pa * cos(ph_c) + pb * sin(ph_c))")})""".stripMargin))
+           |   ${q6Sql("w * (pa * cos(ph_c) + pb * sin(ph_c))")})""".stripMargin))
       .withColumn("im_t", expr(
         s"""if(element_at(i, px + 1) = -9999.0D or element_at(q, px + 1) = -9999.0D, CAST(null AS BIGINT),
-           |   ${q6("w * (pb * cos(ph_c) - pa * sin(ph_c))")})""".stripMargin))
+           |   ${q6Sql("w * (pb * cos(ph_c) - pa * sin(ph_c))")})""".stripMargin))
       .groupBy("scene_id", "ci", "cj", "m_subswath", "m_burst_idx")
       .agg(count(col("re_t")).as("n_corners"),
         sum(col("re_t")).as("re_q"), sum(col("im_t")).as("im_q"),
-        first(expr(q6("lf_s - lf_m"))).as("az_off_q"),
-        first(expr(q6("xf_s - xf_m"))).as("rg_off_q"),
-        first(expr(q6("remod_ph"))).as("remod_q"))
+        first(expr(q6Sql("lf_s - lf_m"))).as("az_off_q"),
+        first(expr(q6Sql("xf_s - xf_m"))).as("rg_off_q"),
+        first(expr(q6Sql("remod_ph"))).as("remod_q"))
   }
 }

@@ -105,7 +105,7 @@ object Bands {
    * the written dataset back and emit the per-partition manifest. */
   def tileWriterQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val tag = new java.io.File(sfDir).getName
-    val out = s"/root/repo/target/tile_writer/$tag"
+    val out = s"${Fixtures.RepoDir}/target/tile_writer/$tag"
     Fixtures.table(spark, sfDir, "tiles")
       .write.mode("overwrite").partitionBy("scene_id", "subswath").parquet(out)
     spark.read.parquet(out)

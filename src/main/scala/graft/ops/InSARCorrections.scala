@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.exprs.Kernels.q6Sql
 import graft.model.Layout
 
 /**
@@ -53,8 +54,6 @@ object InSARCorrections {
     s"(20.0 + 20.0 * ($gx) / CAST(128.0 AS DOUBLE))"
   def incAscSql(gx: String): String =
     s"(25.0 + 15.0 * ($gx) / CAST(128.0 AS DOUBLE))"
-
-  private def q6(e: String) = s"CAST(floor(0.031415926535897934 + ($e) * 1.0E6) AS BIGINT)"
 
   private val gxS = s"(tile_x * ${Layout.TileW} + k % ${Layout.TileW})"
   private val gyS = s"(tile_y * ${Layout.TileH} + k div ${Layout.TileW})"
@@ -135,7 +134,7 @@ object InSARCorrections {
       .select(col("scene_id"), col("subswath"), col("pol"), col("burst_idx"),
         col("tile_y"), col("tile_x"),
         expr(s"aggregate(sequence(0, ${N - 1}), 0L, (s, k) -> s + if($valid, 1L, 0L))").as("n_valid"),
-        expr(s"aggregate(sequence(0, ${N - 1}), 0L, (s, k) -> s + if($valid, ${q6(hm)}, 0L))").as("h_sum_q"),
-        expr(s"aggregate(sequence(0, ${N - 1}), 0L, (s, k) -> s + if($valid, ${q6(vm)}, 0L))").as("v_sum_q"))
+        expr(s"aggregate(sequence(0, ${N - 1}), 0L, (s, k) -> s + if($valid, ${q6Sql(hm)}, 0L))").as("h_sum_q"),
+        expr(s"aggregate(sequence(0, ${N - 1}), 0L, (s, k) -> s + if($valid, ${q6Sql(vm)}, 0L))").as("v_sum_q"))
   }
 }

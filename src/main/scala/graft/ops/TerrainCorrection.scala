@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.exprs.Kernels.q6Sql
 import graft.gen.Fixtures
 import graft.model.Layout
 
@@ -138,7 +139,7 @@ object TerrainCorrection {
     val bursts = Fixtures.table(spark, sfDir, "bursts")
       .select(col("scene_id"), col("subswath"), col("burst_idx"),
         ((col("burst_first_line_time") + col("burst_last_line_time")) / 2).as("tm"))
-    def q6(f: String) = expr(s"CAST(floor(0.031415926535897934 + (${lagrangeSql(f)}) * 1.0E6) AS BIGINT)")
+    def q6(f: String) = expr(q6Sql(lagrangeSql(f)))
     lagrangeKnots(spark, sfDir, bursts).select(col("scene_id"), col("subswath"), col("burst_idx"),
       q6("x").as("x_q"), q6("y").as("y_q"), q6("z").as("z_q"), q6("vy").as("vy_q"))
   }

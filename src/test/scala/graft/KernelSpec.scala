@@ -398,6 +398,74 @@ class KernelSpec extends AnyFunSuite {
       e.getMessage)
   }
 
+  test("windowed kernels name the halo layout invariant for a short channel") {
+    val m = 2; val n = (W + 2 * m) * (H + 2 * m)
+    val ok = arr(tile(41L, n)); val short = arr(tile(42L, n - 1))
+    def named(run: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](run)
+      assert(e.getMessage.contains(s"halo length ${n - 1} != (w + 2m) x (h + 2m) = $n"), e.getMessage)
+    }
+    named(Kernels.c2Window(ok, ok, ok, short, W, H, m, Kernels.C2_ENTROPY))
+    named(Kernels.coherence(ok, short, ok, ok, W, H, m))
+    named(Kernels.darkKs(short, W, H, m, 0.5))
+    named(Kernels.dpIndexTile(ok, ok, ok, ok, short, 0.0, 1.0, 0.0, 1.0, 0.0, 1.0, 0.0, 1.0,
+      W, H, m, Kernels.DP_RBI))
+  }
+
+  test("the shared Cardano step matches the eigenvalues of the real 6x6 embedding") {
+    import org.apache.commons.math3.linear.{Array2DRowRealMatrix, EigenDecomposition, MatrixUtils,
+      QRDecomposition}
+    // win(1..9) = (t11, t22, t33, t12r, t12i, t13r, t13i, t23r, t23i) of H = A + iB;
+    // [[A, -B], [B, A]] has each eigenvalue of H twice
+    def reference(w: Array[Double]): Array[Double] = {
+      val a = Array(Array(w(1), w(4), w(6)), Array(w(4), w(2), w(8)), Array(w(6), w(8), w(3)))
+      val b = Array(Array(0.0, w(5), w(7)), Array(-w(5), 0.0, w(9)), Array(-w(7), -w(9), 0.0))
+      val emb = Array.tabulate(6, 6) { (i, j) =>
+        val (ii, jj) = (i % 3, j % 3)
+        if (i / 3 == j / 3) a(ii)(jj) else if (i / 3 == 1) b(ii)(jj) else -b(ii)(jj)
+      }
+      val e = new EigenDecomposition(new Array2DRowRealMatrix(emb)).getRealEigenvalues.sorted.reverse
+      Array(e(0), e(2), e(4))
+    }
+    val r = new scala.util.Random(19)
+    // H = D Q diag(l) Q^T D^* for a random rotation Q and a random diagonal
+    // phase D = diag(exp(i th)): a complex Hermitian matrix with eigenvalues l
+    def withEigenvalues(l: Array[Double]): Array[Double] = {
+      val q = new QRDecomposition(MatrixUtils.createRealMatrix(Array.fill(3, 3)(r.nextGaussian()))).getQ
+      val s = q.multiply(MatrixUtils.createRealDiagonalMatrix(l)).multiply(q.transpose)
+      val th = Array.fill(3)(r.nextDouble() * 2 * math.Pi)
+      def re(i: Int, j: Int) = s.getEntry(i, j) * math.cos(th(i) - th(j))
+      def im(i: Int, j: Int) = s.getEntry(i, j) * math.sin(th(i) - th(j))
+      Array(0.0, s.getEntry(0, 0), s.getEntry(1, 1), s.getEntry(2, 2),
+        re(0, 1), im(0, 1), re(0, 2), im(0, 2), re(1, 2), im(1, 2))
+    }
+    val ev = new Array[Double](3)
+    def check(kind: String, w: Array[Double], rel: Double): Unit = {
+      val p1 = Kernels.eig3H(w, ev)
+      val exp = reference(w)
+      val scale = exp.map(math.abs).max
+      for (k <- 0 until 3)
+        assert(math.abs(ev(k) - exp(k)) <= rel * scale, s"$kind l${k + 1}: ${ev(k)} vs ${exp(k)}")
+      assert(ev(0) >= ev(1) - rel * scale && ev(1) >= ev(2) - rel * scale, s"$kind order: ${ev.toSeq}")
+      val offDiag = (4 to 9).exists(w(_) != 0.0)
+      assert((p1 == 0.0) == !offDiag, s"$kind p1 = $p1")
+    }
+    for (_ <- 0 until 500) {
+      val l = Array.fill(3)(r.nextDouble() * 10)
+      check("random entries", Array(0.0) ++ Array.fill(3)(5 + 5 * r.nextDouble()) ++
+        Array.fill(6)(r.nextGaussian()), 1e-9)
+      check("random eigenvalues", withEigenvalues(l), 1e-9)
+      check("diagonal", Array(0.0, l(0), l(1), l(2), 0, 0, 0, 0, 0, 0), 1e-9)
+      check("diagonal, repeated", Array(0.0, l(0), l(1), l(0), 0, 0, 0, 0, 0, 0), 1e-9)
+      check("triple", withEigenvalues(Array(l(0), l(0), l(0))), 1e-9)
+      // at a double root the cubic's acos argument sits at +-1, where acos
+      // turns a rounding error of the argument into its square root: the
+      // simple eigenvalue is then good to about 1e-8 of the scale
+      check("double, upper", withEigenvalues(Array(l(0), l(0), l(1))), 3e-8)
+      check("double, lower", withEigenvalues(Array(l(0), l(1), l(1))), 3e-8)
+    }
+  }
+
   test("rpcaTile returns the valid-pixel count and one change count per channel, for any channel count") {
     val tau = 0.5
     for (k <- Seq(2, 5, 7)) {
