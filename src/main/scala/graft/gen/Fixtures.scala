@@ -31,9 +31,10 @@ import graft.model._
  */
 object Fixtures {
 
-  /** The checkout the engine runs in: the fixtures, the tile writer's output
-   * and the bench history live under it. */
-  val RepoDir = "/root/repo"
+  /** The checkout the engine runs in (the JVM's working directory, which sbt
+   * and the benchmark set to the repository root): the fixtures, the tile
+   * writer's output and the bench history live under it. */
+  val RepoDir: String = System.getProperty("user.dir")
 
   val Root = s"$RepoDir/fixtures"
 
