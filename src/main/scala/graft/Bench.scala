@@ -29,14 +29,13 @@ object Bench {
     // the stages in isolation
     "q_chain_grd")
 
-  /** The benchmark session; BenchExtra uses it too, so its plans are the ones timed here. */
-  private[graft] def session(cpus: Int, appName: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+  /** A local session builder on `threads` threads and `partitions` shuffle
+   * partitions, with the settings that shape every graft plan. The benchmark,
+   * its scaling pair, Verify and PipelineRunner all start from it. */
+  private[graft] def builder(threads: Int, partitions: Int): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$threads]")
+      .config("spark.sql.shuffle.partitions", partitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // the sf fixtures are small files; the 128 MB default packs the whole tile
@@ -48,6 +47,13 @@ object Bench {
       // blowing the codegen method limit and falling back to interpreted joins —
       // measured 3.4 s of the 4.9 s TC query before disabling (round-3 probe)
       .config("spark.sql.constraintPropagation.enabled", "false")
+
+  /** The benchmark session; BenchExtra uses it too, so its plans are the ones timed here. */
+  private[graft] def session(cpus: Int, appName: String): SparkSession = {
+    val s = builder(cpus, cpus)
+      .appName(appName)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.local.dir", "/dev/shm/graft-tmp")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
@@ -199,19 +205,12 @@ object Bench {
         // aged 10+ GB old gen whose collection otherwise lands inside the timed
         // low-parallelism passes and skews the ratio run-to-run
         System.gc()
-        val s = SparkSession.builder()
-          .master(s"local[$n]")
+        val s = builder(n, scalePartitions)
           .appName(s"graft-scale-$n")
-          .config("spark.sql.shuffle.partitions", scalePartitions.toString)
           // AQE stays OFF for the scaling pair: its per-stage driver replanning
           // loop is pure fixed cost here (identical static plans at both sizes),
           // and the fixed cost is exactly what biases a small-input scaling ratio
           .config("spark.sql.adaptive.enabled", "false")
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-          .config("spark.sql.files.maxPartitionBytes", "4m")
-          .config("spark.sql.files.openCostInBytes", "131072")
-          .config("spark.sql.constraintPropagation.enabled", "false")
           .config("spark.local.dir", "/dev/shm/graft-tmp")
           .getOrCreate()
         s.sparkContext.setLogLevel("WARN")
@@ -227,14 +226,10 @@ object Bench {
       // whichever size ran last, swinging the ratio +-10% run-to-run; pairing
       // sessions in time symmetrizes the drift. Per size: median over both
       // sessions' timed passes.
-      def measure2(n: Int): (Double, Double, (Long, Long), Seq[Double]) = {
-        val (m, w, r) = measure(n)
-        (m, w, r, Seq(m))
-      }
-      val (tLo1, warmLo, rLo, _) = measure2(nLo)
-      val (tHi1, warmHi, rHi, _) = measure2(nHi)
-      val (tLo2, _, _, _) = measure2(nLo)
-      val (tHi2, _, _, _) = measure2(nHi)
+      val (tLo1, warmLo, rLo) = measure(nLo)
+      val (tHi1, warmHi, rHi) = measure(nHi)
+      val (tLo2, _, _) = measure(nLo)
+      val (tHi2, _, _) = measure(nHi)
       val tLo = (tLo1 + tLo2) / 2.0
       val tHi = (tHi1 + tHi2) / 2.0
       val identical = rLo == rHi

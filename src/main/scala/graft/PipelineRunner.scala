@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.lineage.Checkpoint
 
 /**
@@ -42,17 +41,13 @@ object PipelineRunner {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val runDir = if (args.length > 1) args(1) else "/tmp/graft_run"
-    val cpus = if (args.length > 2) args(2) else sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = (if (args.length > 2) args(2) else sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")).toInt
     val specText =
       if (args.length > 3) java.nio.file.Files.readString(java.nio.file.Paths.get(args(3)))
       else DefaultChainSpec
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = Bench.builder(cpus, cpus)
       .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -3,6 +3,7 @@ package graft.ann
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.exprs.Kernels.q6Sql
 
 /**
  * Similarity search over the `embeddings` table (FLOAT[64] vectors).
@@ -221,7 +222,6 @@ object Ann {
    * bit-identical assignments and centers. */
   val TrainIters = 2
 
-  private val Q6 = "CAST(floor(0.031415926535897934 + x * 1.0E6) AS BIGINT)"
 
   /** Trained IVF centroids: cosine assignment (the search machinery), exact
    * per-dim quantized mean update. Returns ("centroid_id", "cv" ARRAY<DOUBLE>). */
@@ -241,7 +241,7 @@ object Ann {
       cent = assign
         .select(col("centroid_id"), posexplode(col("va")).as(Seq("dim", "x")))
         .groupBy("centroid_id", "dim")
-        .agg(count(lit(1)).as("n"), sum(expr(Q6)).as("sq"))
+        .agg(count(lit(1)).as("n"), sum(expr(q6Sql("x"))).as("sq"))
         .withColumn("c", expr("CAST(sq AS DOUBLE) / 1.0E6 / CAST(n AS DOUBLE)"))
         .groupBy("centroid_id")
         .agg(expr("transform(array_sort(collect_list(struct(dim, c))), t -> t.c)").as("vb"))
@@ -278,7 +278,7 @@ object Ann {
       cb = assign
         .select(col("s"), col("c"), posexplode(col("sv")).as(Seq("dim", "x")))
         .groupBy("s", "c", "dim")
-        .agg(count(lit(1)).as("n"), sum(expr(Q6)).as("sq"))
+        .agg(count(lit(1)).as("n"), sum(expr(q6Sql("x"))).as("sq"))
         .withColumn("cc", expr("CAST(sq AS DOUBLE) / 1.0E6 / CAST(n AS DOUBLE)"))
         .groupBy("s", "c")
         .agg(expr("transform(array_sort(collect_list(struct(dim, cc))), t -> t.cc)").as("cw"))
@@ -360,7 +360,7 @@ object Ann {
         Window.partitionBy("query_id").orderBy(asc("adist"), asc("neighbor_id"))))
       .where(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"),
-        expr("CAST(floor(0.031415926535897934 + adist * 1.0E6) AS BIGINT)").as("adist_q"))
+        expr(q6Sql("adist")).as("adist_q"))
   }
 
   /**
@@ -397,7 +397,7 @@ object Ann {
         Window.partitionBy("query_id").orderBy(asc("adist"), asc("neighbor_id"))))
       .where(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"),
-        expr("CAST(floor(0.031415926535897934 + adist * 1.0E6) AS BIGINT)").as("adist_q"))
+        expr(q6Sql("adist")).as("adist_q"))
   }
 
   /**
@@ -501,7 +501,7 @@ object Ann {
         "transform(ve, x -> IF(mx = CAST(0 AS DOUBLE), 0L, CAST(floor(x * 127.0 / mx) AS BIGINT)))"))
       .select(
         col("vec_id"), size(col("ve")).as("n_dims"),
-        expr("CAST(floor(0.031415926535897934 + mx * 1.0E6) AS BIGINT)").as("mx_q"),
+        expr(q6Sql("mx")).as("mx_q"),
         expr("aggregate(codes, 0L, (a, c) -> a + c)").as("code_sum"),
         expr("aggregate(codes, 0L, (a, c) -> a + c * c)").as("code_l2"),
         expr("aggregate(zip_with(ve, codes, (x, c) -> " +

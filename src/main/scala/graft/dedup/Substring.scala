@@ -58,7 +58,7 @@ object Substring {
         coalesce(col("n_dup_pos"), lit(0L)).as("n_dup_pos"),
         coalesce(col("dup_mass"), lit(0L)).as("dup_mass"))
       .withColumn("dup_frac_q",
-        expr("CAST(floor(0.031415926535897934 + dup_mass * 1.0E6 / n_words) AS BIGINT)"))
+        expr(graft.exprs.Kernels.gridSql("dup_mass * 1.0E6 / n_words")))
       .withColumn("dup_heavy", expr("CAST(dup_frac_q >= 500000 AS BIGINT)"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.exprs
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, functions}
 import org.apache.spark.sql.catalyst.expressions.{CreateArray, Expression, Literal, RuntimeReplaceable}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.graftshim.GraftColumn
@@ -221,6 +221,11 @@ object KernelExprs {
 
   /** 16-entry minhash signature from a doc's base-hash array (one compiled pass). */
   def minhash16(hs: Column): Column = kernel("minhash16", Longs)(hs)
+
+  /** The Column form of the quantization grid: floor(Dither + c * scale) as a
+   * BIGINT, the tree that Kernels.gridSql(e, scale) parses to. */
+  def grid(c: Column, scale: Double): Column =
+    functions.floor(functions.lit(Kernels.Dither) + c * scale).cast("long")
 
   /** Integer-exact rollup struct (n, s, mn, mx) of a filtered array (one compiled pass). */
   def rollupQ(arr: Column, q: Double): Column =

@@ -31,7 +31,7 @@ object Kernels {
 
   /** The standard dither of every integer quantization grid: an irrational
    * offset that keeps dyadic values off the floor boundaries. */
-  private final val Dither = 0.031415926535897934
+  private[exprs] final val Dither = 0.031415926535897934
 
   /** x on the integer grid of quantum 1 / scale: floor(Dither + x * scale). Sums
    * of grid values are exact, so they do not depend on summation order. */
@@ -41,9 +41,24 @@ object Kernels {
   /** The 1e-6 grid, the quantum of the per-tile gate rollups. */
   @inline private def q6l(v: Double): Long = quant(v, 1.0e6)
 
-  /** SQL text of the 1e-6 grid over the SQL expression `e`, for the engine's
-   * SQL stages that quantize before an aggregate. */
-  def q6Sql(e: String): String = s"CAST(floor($Dither + ($e) * 1.0E6) AS BIGINT)"
+  /** `d` as a SQL DOUBLE literal, in exponent notation: a plain `1000000.0`
+   * parses as DECIMAL in Spark SQL (and DuckDB), which changes the plan. */
+  def sqlDouble(d: Double): String = {
+    val s = d.toString
+    if (s.contains("E")) s else s + "E0"
+  }
+
+  /** SQL text of the grid over the SQL expression `e` that already carries its
+   * scale: CAST(floor(Dither + e) AS BIGINT), for the engine's SQL stages that
+   * quantize before an aggregate. */
+  def gridSql(e: String): String = s"CAST(floor($Dither + $e) AS BIGINT)"
+
+  /** SQL text of the grid of quantum 1 / scale over the SQL expression `e`:
+   * the SQL form of quant(e, scale). */
+  def gridSql(e: String, scale: Double): String = gridSql(s"($e) * ${sqlDouble(scale)}")
+
+  /** SQL text of the 1e-6 grid over the SQL expression `e`. */
+  def q6Sql(e: String): String = gridSql(e, 1.0e6)
 
   // ------------------------------------------------------------------ speckle filters
 
@@ -1291,7 +1306,7 @@ object Kernels {
    * on the dyadic grid, so full-minus-guard equals the oracle's direct ring sums. */
   def cfar(halo: ArrayData, w: Int, h: Int, m: Int, g: Int, thr: Double): InternalRow = {
     val hw = w + 2 * m
-    val a = halo.toDoubleArray()
+    val a = haloChannel(halo, w, h, m)
     var nDetect = 0L
     var maxT = Double.NegativeInfinity
     var any = false
@@ -1337,10 +1352,14 @@ object Kernels {
    * against the (w + 2m) x (h + 2m) layout that every window read assumes. */
   private def haloChannel(d: ArrayData, w: Int, h: Int, m: Int): Array[Double] = {
     val a = d.toDoubleArray()
-    val len = (w + 2 * m) * (h + 2 * m)
-    require(a.length == len,
-      s"halo length ${a.length} != (w + 2m) x (h + 2m) = $len for w=$w, h=$h, m=$m")
+    requireHalo(a.length, w, h, m)
     a
+  }
+
+  private def requireHalo(length: Int, w: Int, h: Int, m: Int): Unit = {
+    val len = (w + 2 * m) * (h + 2 * m)
+    require(length == len,
+      s"halo length $length != (w + 2m) x (h + 2m) = $len for w=$w, h=$h, m=$m")
   }
 
   /** Window sums of four halo channels at pixel (x, y) over the cells where the
@@ -1760,7 +1779,7 @@ object Kernels {
       tileX: Int, tileY: Int, tilesX: Int, tilesY: Int,
       enl: Double, rho: Double, iters: Int,
       searchR: Int, patchR: Int, nlmH: Double): ArrayData = {
-    val halo = haloD.toDoubleArray()
+    val halo = haloChannel(haloD, w, h, m)
     val hw = w + 2 * m
     // clipped buffer extent in halo coords: columns bx with 0 <= tileX*w+bx-m < tilesX*w
     val bx0 = math.max(0, m - tileX * w)
@@ -2699,12 +2718,27 @@ object Kernels {
   }
 
   /** The 8 quad-pol channels (i/q x HH, HV, VH, VV) as primitive arrays, in the
-   * order that quadValid, t3Px and every quad-pol kernel index them. */
+   * order that quadValid, t3Px and every quad-pol kernel index them, checked to
+   * share one length. */
   private def quadChannels(hhI: ArrayData, hhQ: ArrayData, hvI: ArrayData, hvQ: ArrayData,
-      vhI: ArrayData, vhQ: ArrayData, vvI: ArrayData, vvQ: ArrayData): Array[Array[Double]] =
-    Array(hhI.toDoubleArray(), hhQ.toDoubleArray(), hvI.toDoubleArray(),
+      vhI: ArrayData, vhQ: ArrayData, vvI: ArrayData, vvQ: ArrayData): Array[Array[Double]] = {
+    val ch = Array(hhI.toDoubleArray(), hhQ.toDoubleArray(), hvI.toDoubleArray(),
       hvQ.toDoubleArray(), vhI.toDoubleArray(), vhQ.toDoubleArray(),
       vvI.toDoubleArray(), vvQ.toDoubleArray())
+    require(ch.forall(_.length == ch(0).length),
+      s"quad-pol channel lengths ${ch.map(_.length).mkString(", ")} differ")
+    ch
+  }
+
+  /** quadChannels of a margin-m windowed quad-pol kernel, checked against the
+   * (w + 2m) x (h + 2m) layout that its window reads assume. */
+  private def quadHalo(hhI: ArrayData, hhQ: ArrayData, hvI: ArrayData, hvQ: ArrayData,
+      vhI: ArrayData, vhQ: ArrayData, vvI: ArrayData, vvQ: ArrayData,
+      w: Int, h: Int, m: Int): Array[Array[Double]] = {
+    val ch = quadChannels(hhI, hhQ, hvI, hvQ, vhI, vhQ, vvI, vvQ)
+    requireHalo(ch(0).length, w, h, m)
+    ch
+  }
 
   @inline private def quadValid(a: Array[Array[Double]], idx: Int): Boolean = {
     var c = 0
@@ -2885,7 +2919,7 @@ object Kernels {
       vhI: ArrayData, vhQ: ArrayData, vvI: ArrayData, vvQ: ArrayData,
       w: Int, h: Int, m: Int): InternalRow = {
     val hw = w + 2 * m
-    val ch = quadChannels(hhI, hhQ, hvI, hvQ, vhI, vhQ, vvI, vvQ)
+    val ch = quadHalo(hhI, hhQ, hvI, hvQ, vhI, vhQ, vvI, vvQ, w, h, m)
     val t = new Array[Double](9)
     val win = new Array[Double](10)
     val haa = new Array[Double](3)
@@ -2938,7 +2972,7 @@ object Kernels {
       vhI: ArrayData, vhQ: ArrayData, vvI: ArrayData, vvQ: ArrayData,
       centersD: ArrayData, w: Int, h: Int, m: Int): ArrayData = {
     val hw = w + 2 * m
-    val ch = quadChannels(hhI, hhQ, hvI, hvQ, vhI, vhQ, vvI, vvQ)
+    val ch = quadHalo(hhI, hhQ, hvI, hvQ, vhI, vhQ, vvI, vvQ, w, h, m)
     val centers =
       if (centersD == null || centersD.numElements() == 0) null else centersD.toLongArray()
     // precompute per-zone ln det + inverse entries from the exact integer centers
@@ -3077,7 +3111,7 @@ object Kernels {
       vhI: ArrayData, vhQ: ArrayData, vvI: ArrayData, vvQ: ArrayData,
       w: Int, h: Int, m: Int, enl: Double): InternalRow = {
     val hw = w + 2 * m; val hh2 = h + 2 * m
-    val ch = quadChannels(hhI, hhQ, hvI, hvQ, vhI, vhQ, vvI, vvQ)
+    val ch = quadHalo(hhI, hhQ, hvI, hvQ, vhI, vhQ, vvI, vvQ, w, h, m)
     val nPix = hw * hh2
     val t = new Array[Double](9)
     val t3 = Array.ofDim[Double](9, nPix)
@@ -3208,7 +3242,7 @@ object Kernels {
       vhI: ArrayData, vhQ: ArrayData, vvI: ArrayData, vvQ: ArrayData,
       w: Int, h: Int, m: Int, mode: Int): InternalRow = {
     val hw = w + 2 * m
-    val ch = quadChannels(hhI, hhQ, hvI, hvQ, vhI, vhQ, vvI, vvQ)
+    val ch = quadHalo(hhI, hhQ, hvI, hvQ, vhI, vhQ, vvI, vvQ, w, h, m)
     val t = new Array[Double](9)
     val win = new Array[Double](10)
     val ev = new Array[Double](3); val v = new Array[Double](5)
@@ -3737,7 +3771,7 @@ object Kernels {
    * tap makes the output ND; taps read the margin-m halo. */
   def bisincRange(halo: ArrayData, w: Int, h: Int, m: Int, d: Double): ArrayData = {
     val hw = w + 2 * m
-    val a = halo.toDoubleArray()
+    val a = haloChannel(halo, w, h, m)
     val out = new Array[Double](w * h)
     val wts = new Array[Double](5)
     var sw = 0.0
@@ -3770,7 +3804,7 @@ object Kernels {
   def warpGather(halo: ArrayData, w: Int, h: Int, m: Int, tileX: Int, tileY: Int,
       a0: Double, a1: Double, a2: Double, b0: Double, b1: Double, b2: Double): ArrayData = {
     val hw = w + 2 * m
-    val a = halo.toDoubleArray()
+    val a = haloChannel(halo, w, h, m)
     val out = new Array[Double](w * h)
     var y = 0
     while (y < h) {

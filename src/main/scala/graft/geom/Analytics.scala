@@ -1,10 +1,12 @@
 package graft.geom
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.cells.CellIndex
+import graft.exprs.Kernels.gridSql
 import graft.gen.Fixtures
+import Geo.microdeg
 
 /**
  * Spatial analytics beyond joins: convex hulls, surface interpolation and
@@ -40,8 +42,6 @@ object Analytics {
   val Dirs: Seq[(Int, Int)] = Seq(
     (1, 0), (2, 1), (1, 1), (1, 2), (0, 1), (-1, 2), (-1, 1), (-2, 1),
     (-1, 0), (-2, -1), (-1, -1), (-1, -2), (0, -1), (1, -2), (1, -1), (2, -1))
-
-  private def microdeg(c: Column): Column = floor(c * 1e6).cast("long")
 
   /** Geolocated media-span points in integer microdegrees, keyed by scene. */
   private def scenePoints(spark: SparkSession, sfDir: String): DataFrame =
@@ -267,11 +267,11 @@ object Analytics {
       "OR (CAST(sum_x2 AS DOUBLE) / CAST(n AS DOUBLE) - (CAST(sum_x AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sum_x AS DOUBLE) / CAST(n AS DOUBLE))) <= 0.0 " +
       "OR (CAST(n AS DOUBLE) * CAST(n_local AS DOUBLE) - CAST(n_local AS DOUBLE) * CAST(n_local AS DOUBLE)) <= 0.0 " +
       "THEN CAST(0 AS BIGINT) ELSE " +
-    "CAST(floor(0.031415926535897934 + " +
+    gridSql(
       "((CAST(s_local AS DOUBLE) - (CAST(sum_x AS DOUBLE) / CAST(n AS DOUBLE)) * CAST(n_local AS DOUBLE)) / " +
       "(sqrt(CAST(sum_x2 AS DOUBLE) / CAST(n AS DOUBLE) - (CAST(sum_x AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sum_x AS DOUBLE) / CAST(n AS DOUBLE))) * " +
       "sqrt((CAST(n AS DOUBLE) * CAST(n_local AS DOUBLE) - CAST(n_local AS DOUBLE) * CAST(n_local AS DOUBLE)) / (CAST(n AS DOUBLE) - 1.0)))) " +
-      "* 1.0E6) AS BIGINT) END"
+      "* 1.0E6") + " END"
 
   /** The shared-text IEEE assembly of Moran's I from the integer statistics
    * (also embedded verbatim in the DuckDB oracle). */
@@ -281,10 +281,10 @@ object Analytics {
     "CASE WHEN CAST(w_sum AS BIGINT) <= 0 OR CAST(n AS BIGINT) <= 1 " +
       "OR (CAST(sum_x2 AS DOUBLE) - CAST(n AS DOUBLE) * (CAST(sum_x AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sum_x AS DOUBLE) / CAST(n AS DOUBLE))) <= 0.0 " +
       "THEN CAST(0 AS BIGINT) ELSE " +
-    "CAST(floor(0.031415926535897934 + " +
+    gridSql(
       "(CAST(n AS DOUBLE) / CAST(w_sum AS DOUBLE)) * " +
       "((CAST(cross_sum AS DOUBLE) - 2.0 * (CAST(sum_x AS DOUBLE) / CAST(n AS DOUBLE)) * CAST(deg_x_sum AS DOUBLE) " +
       "+ (CAST(sum_x AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sum_x AS DOUBLE) / CAST(n AS DOUBLE)) * CAST(w_sum AS DOUBLE)) / " +
       "(CAST(sum_x2 AS DOUBLE) - CAST(n AS DOUBLE) * (CAST(sum_x AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sum_x AS DOUBLE) / CAST(n AS DOUBLE)))) " +
-      "* 1.0E6) AS BIGINT) END"
+      "* 1.0E6") + " END"
 }

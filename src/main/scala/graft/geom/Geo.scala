@@ -42,6 +42,10 @@ object Geo {
     KernelExprs.quadIntersectsSAT(ax ++ ay ++ bx ++ by)
   }
 
+  /** A coordinate in integer microdegrees: floor(c * 1e6) as a BIGINT, the
+   * undithered grid of the exact spatial predicates and the spans' lon keys. */
+  def microdeg(c: Column): Column = floor(c * 1e6).cast("long")
+
   /** Axis-aligned-rect convenience: corners of (lonMin,latMin,lonMax,latMax). */
   def rectCorners(lonMin: Column, latMin: Column, lonMax: Column, latMax: Column)
       : (Seq[Column], Seq[Column]) =

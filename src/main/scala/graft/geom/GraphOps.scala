@@ -3,6 +3,7 @@ package graft.geom
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.gen.Fixtures
+import Geo.microdeg
 
 /**
  * Iterative graph analytics over the burst proximity graph (the
@@ -127,16 +128,15 @@ object GraphOps {
   /** BFS seed set: bursts whose footprint center lies in the lexicographically
    * first AOI's bbox (closed bounds, exact integer microdegrees). */
   private[geom] def seeds(spark: SparkSession, sfDir: String): DataFrame = {
-    val md = (c: org.apache.spark.sql.Column) => floor(c * 1e6).cast("long")
     val aoi = Fixtures.table(spark, sfDir, "aoi")
-      .select(col("aoi_id"), md(col("lon_min")).as("x0"), md(col("lat_min")).as("y0"),
-        md(col("lon_max")).as("x1"), md(col("lat_max")).as("y1"))
+      .select(col("aoi_id"), microdeg(col("lon_min")).as("x0"), microdeg(col("lat_min")).as("y0"),
+        microdeg(col("lon_max")).as("x1"), microdeg(col("lat_max")).as("y1"))
       .orderBy("aoi_id").limit(1)
     val lonC = (col("lon1") + col("lon2") + col("lon3") + col("lon4")) / 4
     val latC = (col("lat1") + col("lat2") + col("lat3") + col("lat4")) / 4
     Fixtures.table(spark, sfDir, "bursts")
       .select(nid("scene_id", "subswath", "burst_idx").as("node"),
-        md(lonC).as("px"), md(latC).as("py"))
+        microdeg(lonC).as("px"), microdeg(latC).as("py"))
       .crossJoin(broadcast(aoi))
       .where(col("px") >= col("x0") && col("px") <= col("x1") &&
              col("py") >= col("y0") && col("py") <= col("y1"))

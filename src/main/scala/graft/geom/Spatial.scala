@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.cells.CellIndex
+import graft.exprs.KernelExprs
 import graft.gen.Fixtures
+import Geo.microdeg
 
 /**
  * Spatial-join engine depth beyond the SAR operator chain — the north rule's
@@ -38,8 +40,6 @@ object Spatial {
 
   /** Max radius: covers the whole lon/lat plane; loop is guaranteed to certify. */
   val MaxRadiusUs = 1L << 30
-
-  private def microdeg(c: Column): Column = floor(c * 1e6).cast("long")
 
   /** Query points: AOI centers, integer microdegrees (+ double lon/lat for cells). */
   private def aoiCenters(spark: SparkSession, sfDir: String): DataFrame =
@@ -391,8 +391,7 @@ object Spatial {
       .where(col("iv") =!= col("no_data"))
       .groupBy("scene_id", "subswath", "burst_idx")
       .agg(count(lit(1)).as("n_px"),
-        sum(floor(lit(0.031415926535897934) +
-          (col("iv") * col("iv") + col("qv") * col("qv")) * 1e6).cast("long")).as("pow_q"))
+        sum(KernelExprs.grid(col("iv") * col("iv") + col("qv") * col("qv"), 1e6)).as("pow_q"))
       .withColumn("mean_pq", expr("pow_q div n_px"))
     val weights = clipAreaQuery(spark, sfDir)
       .withColumn("w", expr("area_q div 16777216"))
@@ -822,8 +821,7 @@ object Spatial {
       count(lit(1)).as("n_px"),
       countDistinct(col("scene_id"), col("subswath"), col("burst_idx"),
         col("tile_x"), col("tile_y")).as("n_tiles"),
-      sum(floor(lit(0.031415926535897934) + (col("iv") * col("iv") + col("qv") * col("qv")) * 1e6)
-        .cast("long")).as("pow_q"))
+      sum(KernelExprs.grid(col("iv") * col("iv") + col("qv") * col("qv"), 1e6)).as("pow_q"))
   }
 
   /** Polyfill grid level: 13 on the 2^25 x 2^24 fixed-point lattice — cell

@@ -205,7 +205,7 @@ object Checkpoint {
     val runDir = Files.createTempDirectory("graft_prune").toString
     val spans = graft.ops.Spans.geolocatedMediaSpans(spark, sfDir)
       .select(col("scene_id"), col("doc_id"), col("offset"), col("media_ref"),
-        floor(col("lon") * 1e6).cast("long").as("lon_q"))
+        graft.geom.Geo.microdeg(col("lon")).as("lon_q"))
     stageKeyed(spark, runDir, "spans", "scene_id", "v1")(spans)
     val stats = writeStatsManifest(spark, s"$runDir/spans", "scene_id", "lon_q")
     import spark.implicits._

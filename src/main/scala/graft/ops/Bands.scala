@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.exprs.Kernels.gridSql
 import graft.gen.Fixtures
 import graft.model.Layout
 
@@ -26,11 +27,10 @@ import graft.model.Layout
 object Bands {
 
   private val ND = Raster.ND
-  private val Off = "0.031415926535897934"
 
   /** per-pixel quantized BIGINT (n, s) of the valid intensities of one tile —
    * the compiled rollupQ kernel (its n/s fields are exactly the former
-   * interpreted aggregate() fold: same validity filter, same floor(Off + x*Q)
+   * interpreted aggregate() fold: same validity filter, same floor(Dither + x*Q)
    * quantizer; the extra mn/mx land in the same single pass and are unused). */
   private def tileSumQ(vCol: String) =
     graft.exprs.KernelExprs.rollupQ(col(vCol), 1.0e6)
@@ -93,7 +93,7 @@ object Bands {
         expr(
           s"""aggregate(blocks, struct(0L AS n, 0L AS s), (a, b) ->
              |  if(b.n <= 0, a, struct(a.n + 1L AS n,
-             |    a.s + CAST(floor($Off + (b.s / b.n) * 1.0E7) AS BIGINT) AS s)))""".stripMargin)
+             |    a.s + ${gridSql("b.s / b.n", 1.0e7)} AS s)))""".stripMargin)
           .as("bs"))
       .select(col("scene_id"), col("subswath"), col("pol"), col("burst_idx"),
         col("tile_y"), col("tile_x"),

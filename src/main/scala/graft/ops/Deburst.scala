@@ -77,7 +77,7 @@ object Deburst {
     val lastTy = Layout.TilesY - 1
     val m = WssMargin
     val wTotal = Layout.SamplesPerBurst
-    val q = Raster.quantum(1.0).toDouble
+    val q = 1.0e6
 
     // per-pixel dyadic intensity + dyadic i channel (same snap as the oracle)
     val tiles = Raster.intensityTiles(spark, sfDir)

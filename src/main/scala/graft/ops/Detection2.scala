@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.exprs.KernelExprs
+import graft.exprs.Kernels.gridSql
 import graft.model.Layout
 
 /**
@@ -89,7 +90,7 @@ object Detection2 {
     // per-scene centers (the reference clusters per product)
     val centers = binned.groupBy("scene_id", "cls")
       .agg(count(lit(1)).as("nc"),
-        sum(expr(s"CAST(floor(0.031415926535897934 + r * $dv) AS BIGINT)")).as("sq"))
+        sum(expr(gridSql("r", dv))).as("sq"))
       .withColumn("center", expr(s"CAST(sq AS DOUBLE) / CAST(nc AS DOUBLE) / $dv"))
       .groupBy("scene_id")
       .pivot("cls", Seq("1", "2", "3"))
@@ -113,28 +114,28 @@ object Detection2 {
     val vh = Raster.intensityTiles(spark, sfDir).where(col("pol") === "VH")
       .select(col("scene_id"), col("subswath"), col("burst_idx"),
         col("tile_x"), col("tile_y"), col("v").as("vb"))
-    val q = "1.0E4" // quantize pair products (v*v exceeds exact-sum range at scene size)
+    // quantize pair products on the 1e-4 grid (v*v exceeds exact-sum range at scene size)
     vv.join(vh, Seq("scene_id", "subswath", "burst_idx", "tile_x", "tile_y"))
       .withColumn("zz", expr(s"zip_with(va, vb, (a, b) -> struct(a AS a, b AS b))"))
       .groupBy("scene_id", "subswath")
       .agg(
         sum(expr(s"CAST(size(filter(zz, t -> t.a != $ND and t.b != $ND)) AS BIGINT)")).as("n"),
-        sum(expr(s"aggregate(zz, 0L, (s, t) -> s + if(t.a = $ND or t.b = $ND, 0L, CAST(floor(0.031415926535897934 + t.a * $q) AS BIGINT)))")).as("sa_q"),
-        sum(expr(s"aggregate(zz, 0L, (s, t) -> s + if(t.a = $ND or t.b = $ND, 0L, CAST(floor(0.031415926535897934 + t.b * $q) AS BIGINT)))")).as("sb_q"),
-        sum(expr(s"aggregate(zz, 0L, (s, t) -> s + if(t.a = $ND or t.b = $ND, 0L, CAST(floor(0.031415926535897934 + t.a * t.a * $q) AS BIGINT)))")).as("saa_q"),
-        sum(expr(s"aggregate(zz, 0L, (s, t) -> s + if(t.a = $ND or t.b = $ND, 0L, CAST(floor(0.031415926535897934 + t.b * t.b * $q) AS BIGINT)))")).as("sbb_q"),
-        sum(expr(s"aggregate(zz, 0L, (s, t) -> s + if(t.a = $ND or t.b = $ND, 0L, CAST(floor(0.031415926535897934 + t.a * t.b * $q) AS BIGINT)))")).as("sab_q"))
+        sum(expr(s"aggregate(zz, 0L, (s, t) -> s + if(t.a = $ND or t.b = $ND, 0L, ${gridSql("t.a", 1.0e4)}))")).as("sa_q"),
+        sum(expr(s"aggregate(zz, 0L, (s, t) -> s + if(t.a = $ND or t.b = $ND, 0L, ${gridSql("t.b", 1.0e4)}))")).as("sb_q"),
+        sum(expr(s"aggregate(zz, 0L, (s, t) -> s + if(t.a = $ND or t.b = $ND, 0L, ${gridSql("t.a * t.a", 1.0e4)}))")).as("saa_q"),
+        sum(expr(s"aggregate(zz, 0L, (s, t) -> s + if(t.a = $ND or t.b = $ND, 0L, ${gridSql("t.b * t.b", 1.0e4)}))")).as("sbb_q"),
+        sum(expr(s"aggregate(zz, 0L, (s, t) -> s + if(t.a = $ND or t.b = $ND, 0L, ${gridSql("t.a * t.b", 1.0e4)}))")).as("sab_q"))
       // covariance + eigen from the exact integer moments — identical staged
       // arithmetic both engines (caa/cbb/cab then trace/disc/lambdas)
-      .withColumn("ma", expr(s"sa_q / $q / n"))
-      .withColumn("mb", expr(s"sb_q / $q / n"))
-      .withColumn("caa", expr(s"saa_q / $q / n - ma * ma"))
-      .withColumn("cbb", expr(s"sbb_q / $q / n - mb * mb"))
-      .withColumn("cab", expr(s"sab_q / $q / n - ma * mb"))
+      .withColumn("ma", expr("sa_q / 1.0E4 / n"))
+      .withColumn("mb", expr("sb_q / 1.0E4 / n"))
+      .withColumn("caa", expr("saa_q / 1.0E4 / n - ma * ma"))
+      .withColumn("cbb", expr("sbb_q / 1.0E4 / n - mb * mb"))
+      .withColumn("cab", expr("sab_q / 1.0E4 / n - ma * mb"))
       .withColumn("disc", expr("sqrt((caa - cbb) * (caa - cbb) + 4D * cab * cab)"))
       .select(col("scene_id"), col("subswath"), col("n"),
-        expr("CAST(floor(0.031415926535897934 + (caa + cbb + disc) / 2D * 1.0E3) AS BIGINT)").as("lambda1_q"),
-        expr("CAST(floor(0.031415926535897934 + (caa + cbb - disc) / 2D * 1.0E3) AS BIGINT)").as("lambda2_q"))
+        expr(gridSql("(caa + cbb + disc) / 2D", 1.0e3)).as("lambda1_q"),
+        expr(gridSql("(caa + cbb - disc) / 2D", 1.0e3)).as("lambda2_q"))
   }
 
   /** Object discrimination: size-gate the CFAR detections per tile

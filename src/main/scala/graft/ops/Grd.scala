@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.exprs.KernelExprs
+import graft.exprs.Kernels.q6Sql
 import graft.gen.Fixtures
 import graft.model.Layout
 
@@ -41,7 +42,6 @@ object Grd {
       .groupBy((keys :+ "gy").map(col): _*)
       .agg(min("fg").as("lb"), max("lg").as("rb"))
     // kept pixels per (tile, row) from pure bound arithmetic + one in-array slice sum
-    val q = "0.031415926535897934"
     tiles
       .withColumn("r", explode(sequence(lit(0), lit(H - 1))))
       .withColumn("gy", col("tile_y") * H + col("r"))
@@ -51,7 +51,7 @@ object Grd {
       .withColumn("n_row", when(col("lb").isNull || col("b") < col("a"), lit(0L))
         .otherwise((col("b") - col("a") + 1).cast("long")))
       .withColumn("sum_row", when(col("n_row") === 0, lit(0L)).otherwise(expr(
-        s"aggregate(slice(v, r * $W + a + 1, b - a + 1), 0L, (s, x) -> s + CAST(floor($q + x * 1.0E6) AS BIGINT))")))
+        s"aggregate(slice(v, r * $W + a + 1, b - a + 1), 0L, (s, x) -> s + ${q6Sql("x")})")))
       .groupBy((keys ++ Seq("tile_y", "tile_x")).map(col): _*)
       .agg(sum("n_row").as("n_kept"), sum("sum_row").as("kept_sum_q"))
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.gen.Fixtures
 import graft.model.Layout
 import graft.exprs.KernelExprs
+import graft.exprs.Kernels.q6Sql
 
 /**
  * InSAR operators over the coregistered (tiles, tiles_sec) pair:
@@ -164,18 +165,17 @@ object InSAR {
       .withColumn("hseed", expr(hSql(s"tile_x * ${Layout.TileW}", "gy0")))
       .join(broadcast(alphaCol), Seq("scene_id", "gxg"))
       .select(col("scene_id"), col("alpha"), col("hseed"), col("phs"))
-    val q6 = "1.0E6"
     val sums = seeds
       .groupBy("scene_id")
       .agg(count(lit(1)).as("d"),
-        sum(expr(s"CAST(floor(0.031415926535897934 + (-(alpha * alpha)) * $q6) AS BIGINT)")).as("aq"),
-        sum(expr(s"CAST(floor(0.031415926535897934 + alpha * $q6) AS BIGINT)")).as("bq"),
-        sum(expr(s"CAST(floor(0.031415926535897934 + (alpha * (hseed - alpha * phs)) * $q6) AS BIGINT)")).as("eq"),
-        sum(expr(s"CAST(floor(0.031415926535897934 + (hseed - alpha * phs) * $q6) AS BIGINT)")).as("fq"))
-      .withColumn("denom", expr(s"(aq / $q6) * d - (-(bq / $q6)) * (bq / $q6)"))
+        sum(expr(q6Sql("-(alpha * alpha)"))).as("aq"),
+        sum(expr(q6Sql("alpha"))).as("bq"),
+        sum(expr(q6Sql("alpha * (hseed - alpha * phs)"))).as("eq"),
+        sum(expr(q6Sql("hseed - alpha * phs"))).as("fq"))
+      .withColumn("denom", expr("(aq / 1.0E6) * d - (-(bq / 1.0E6)) * (bq / 1.0E6)"))
       .where(col("d") > 0 && col("denom") =!= 0.0)
-      .withColumn("ref_h", expr(s"((aq / $q6) * (fq / $q6) - (-(bq / $q6)) * (eq / $q6)) / denom"))
-      .withColumn("ref_p", expr(s"((eq / $q6) * d - (bq / $q6) * (fq / $q6)) / denom"))
+      .withColumn("ref_h", expr("((aq / 1.0E6) * (fq / 1.0E6) - (-(bq / 1.0E6)) * (eq / 1.0E6)) / denom"))
+      .withColumn("ref_p", expr("((eq / 1.0E6) * d - (bq / 1.0E6) * (fq / 1.0E6)) / denom"))
       .select("scene_id", "ref_h", "ref_p")
     // per-pixel height (computeTile:503-521); alpha varies per range COLUMN, so
     // the tile's value array walks gxg + k % W through the broadcast column table

@@ -116,6 +116,10 @@ object Raster {
   def haloEl(dy: Int, dx: Int): String =
     s"element_at(halo, CAST((k div $W + 1 + $dy) * $HW + (k % $W + 1 + $dx) + 1 AS INT))"
 
+  /** Quantum literal used identically in the Spark plan and the DuckDB oracle SQL
+   * (exponent notation parses as DOUBLE in both engines). */
+  def quantum(scale: Double): String = graft.exprs.Kernels.sqlDouble(scale * 1e6)
+
   /** Per-tile rollup of a filtered array named `out` (no-data excluded). The compared
    * quantities are INTEGER-EXACT: each per-pixel value (a deterministic double both
    * engines compute identically) is quantized to BIGINT at quantum 1e-6/scale BEFORE
@@ -123,13 +127,6 @@ object Raster {
    * association order, unlike a rounded mean which can land on a rounding boundary
    * (the round-1 q_interferogram/q_change_detection hash failures). `scale` keeps
    * small-magnitude outputs (e.g. sigma0 ~1e-4) well above the quantization floor. */
-  /** Quantum literal used identically in the Spark plan and the DuckDB oracle SQL
-   * (exponent notation parses as DOUBLE in both engines). */
-  def quantum(scale: Double): String = {
-    val s = (scale * 1e6).toString
-    if (s.contains("E") || s.contains("e")) s else s + "E0"
-  }
-
   def rollup(df: DataFrame, scale: Double = 1.0): DataFrame =
     // one compiled pass (quantize + n/sum/min/max) — value-identical to the former
     // interpreted filter+aggregate SQL; min/max commute with the monotone quantizer

@@ -44,6 +44,6 @@ object SkewJoin {
       .groupBy("scene_id")
       .agg(count(lit(1)).as("n_spans"),
         sum(col("offset").cast("long")).as("offset_sum"),
-        sum(expr("CAST(floor(0.031415926535897934 + (lon0 + lat0) * 1.0E6) AS BIGINT)")).as("geo_sum_q"))
+        sum(expr(graft.exprs.Kernels.q6Sql("lon0 + lat0"))).as("geo_sum_q"))
   }
 }

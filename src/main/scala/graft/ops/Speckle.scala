@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.exprs.KernelExprs
+import graft.exprs.Kernels.q6Sql
 
 /**
  * Speckle filters (reference dispatcher SpeckleFilterOp.java:44-326; kernels in
@@ -134,7 +135,7 @@ object Speckle {
       // second moment via the exact integer-quantized sum (a 1024-term double sum of
       // v^2 would exceed 53 bits and become association-order-dependent)
       .withColumn("ts2", expr(
-        "CAST(aggregate(tile_valid, 0L, (a, x) -> a + CAST(floor(0.031415926535897934 + x * x * 1.0E6) AS BIGINT)) AS DOUBLE) / 1.0E6"))
+        s"CAST(aggregate(tile_valid, 0L, (a, x) -> a + ${q6Sql("x * x")}) AS DOUBLE) / 1.0E6"))
       .withColumn("tvar", expr("ts2 / tn - tm * tm"))
       .withColumn("enl_est", expr(
         """CASE WHEN tn < 2 THEN 1.0D

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.gen.Fixtures
 import graft.model.Layout
+import graft.exprs.Kernels.{gridSql, q6Sql}
 
 /**
  * Stack-family operators over the K-epoch coregistered stack fixture (tiles_stack):
@@ -158,14 +159,14 @@ object Stack {
       .drop("es")
     // pass 1 (computeThreshold, :441-555): per-scene mean + std of the dyadically
     // staged value over pixels never poisoned at ANY epoch
+    val v2 = gridSql("p.value0", 1.0e2)
     val thr = folded
       .withColumn("tp", expr(
         s"""aggregate(st, struct(0L AS n, 0L AS s, 0L AS s2),
            |  (acc, p) -> if(NOT p.np, acc,
            |    struct(acc.n + 1L AS n,
-           |      acc.s + CAST(floor(0.031415926535897934 + p.value0 * 1.0E2) AS BIGINT) AS s,
-           |      acc.s2 + CAST(floor(0.031415926535897934 + p.value0 * 1.0E2) AS BIGINT)
-           |             * CAST(floor(0.031415926535897934 + p.value0 * 1.0E2) AS BIGINT) AS s2)))""".stripMargin))
+           |      acc.s + $v2 AS s,
+           |      acc.s2 + $v2 * $v2 AS s2)))""".stripMargin))
       .groupBy("scene_id")
       .agg(sum(expr("tp.n")).as("tn"), sum(expr("tp.s")).as("ts"), sum(expr("tp.s2")).as("ts2"))
       .withColumn("threshold", expr(
@@ -180,9 +181,9 @@ object Stack {
         s"""aggregate(st, struct(0L AS n, 0L AS hq, 0L AS sq, 0L AS vq),
            |  (acc, p) -> if(p.tm = CAST(-1 AS DOUBLE), acc,
            |    struct(acc.n + 1L AS n,
-           |      acc.hq + CAST(floor(0.031415926535897934 + (0.9 * p.tm / ${EM1}) * 1.0E6) AS BIGINT) AS hq,
-           |      acc.sq + CAST(floor(0.031415926535897934 + least(CAST(1 AS DOUBLE), greatest(CAST(0 AS DOUBLE), (p.maxvc - 0.2286) / (10.0 * 0.1616) + 0.25)) * 1.0E6) AS BIGINT) AS sq,
-           |      acc.vq + CAST(floor(0.031415926535897934 + if(threshold > CAST(0 AS DOUBLE) AND p.value0 < threshold, p.value0 / threshold, CAST(1 AS DOUBLE)) * 1.0E6) AS BIGINT) AS vq)))""".stripMargin))
+           |      acc.hq + ${q6Sql(s"0.9 * p.tm / ${EM1}")} AS hq,
+           |      acc.sq + ${q6Sql("least(CAST(1 AS DOUBLE), greatest(CAST(0 AS DOUBLE), (p.maxvc - 0.2286) / (10.0 * 0.1616) + 0.25))")} AS sq,
+           |      acc.vq + ${q6Sql("if(threshold > CAST(0 AS DOUBLE) AND p.value0 < threshold, p.value0 / threshold, CAST(1 AS DOUBLE))")} AS vq)))""".stripMargin))
       .select(col("scene_id"), col("subswath"), col("burst_idx"), col("tile_y"), col("tile_x"),
         expr("rq.n").as("n_valid"), expr("rq.hq").as("hue_sum_q"),
         expr("rq.sq").as("sat_sum_q"), expr("rq.vq").as("val_sum_q"))
@@ -250,8 +251,8 @@ object Stack {
     esdDdSums(spark, sfDir)
       .join(broadcast(dfdc), Seq("scene_id", "subswath", "burst_a"))
       .select(col("scene_id"), col("subswath"), col("burst_a"), col("n_px"),
-        expr("CAST(floor(0.031415926535897934 + atan2(sim, sre) * 1.0E6) AS BIGINT)").as("phase_q"),
-        expr(s"CAST(floor(0.031415926535897934 + atan2(sim, sre) / (2 * pi() * dfdc * ${Layout.AzimuthTimeInterval}) * 1.0E6) AS BIGINT)")
+        expr(q6Sql("atan2(sim, sre)")).as("phase_q"),
+        expr(q6Sql(s"atan2(sim, sre) / (2 * pi() * dfdc * ${Layout.AzimuthTimeInterval})"))
           .as("az_shift_q"))
   }
 

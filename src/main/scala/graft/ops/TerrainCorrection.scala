@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.exprs.Kernels.q6Sql
+import graft.exprs.Kernels.{gridSql, q6Sql}
 import graft.gen.Fixtures
 import graft.model.Layout
 
@@ -165,8 +165,8 @@ object TerrainCorrection {
       .withColumn("slant", expr(
         "sqrt((orb_x - tx_m) * (orb_x - tx_m) + (orb_z - height) * (orb_z - height))"))
       .select(col("scene_id"), col("ci"), col("cj"),
-        expr("CAST(floor(0.031415926535897934 + t_zd * 1.0E4) AS BIGINT)").as("tzd_q"),
-        expr("CAST(floor(0.031415926535897934 + slant * 1.0E2) AS BIGINT)").as("slant_q"))
+        expr(gridSql("t_zd", 1.0e4)).as("tzd_q"),
+        expr(gridSql("slant", 1.0e2)).as("slant_q"))
 
   /** TerrainFlatteningOp.java:164 — pixels whose simulated area is below
    * threshold * aGamma are foreshortening/layover, written as no-data. */
@@ -278,8 +278,8 @@ object TerrainCorrection {
     val pxSums = bilinearCorners(resolved)
       .groupBy("scene_id", "subswath", "burst_idx", "tile_y", "tile_x", "px")
       .agg(count(lit(1)).as("n_facets"),
-        sum(expr("CAST(floor(0.031415926535897934 + w * gamma_area * 1.0E2) AS BIGINT)")).as("garea_q"),
-        sum(expr("CAST(floor(0.031415926535897934 + w * sigma_area * 1.0E2) AS BIGINT)")).as("sarea_q"))
+        sum(expr(gridSql("w * gamma_area", 1.0e2))).as("garea_q"),
+        sum(expr(gridSql("w * sigma_area", 1.0e2))).as("sarea_q"))
     // normalization (outputNormalizedImage:896-958): gamma0 = beta0 / (simVal/aBeta)
     // where simVal > threshold * aBeta / tan(inc); beta0 from the source tiles via
     // the rdGeocode gather discipline (broadcast the grid-bounded aggregate side)
@@ -296,8 +296,7 @@ object TerrainCorrection {
       .withColumn("g0_q", expr(
         s"""if($GatherNd
            |   or sim_val <= $TfThreshold * a_beta / tan_inc, CAST(null AS BIGINT),
-           |  CAST(floor(0.031415926535897934 + ($GatherI)
-           |    / (sim_val / a_beta) * 1.0E4) AS BIGINT))""".stripMargin))
+           |  ${gridSql(s"($GatherI) / (sim_val / a_beta)", 1.0e4)})""".stripMargin))
       .groupBy("scene_id", "subswath", "burst_idx", "tile_y", "tile_x")
       .agg(count(lit(1)).as("n_px"), sum("n_facets").as("n_facets"),
         sum("garea_q").as("garea_sum_q"), sum("sarea_q").as("sarea_sum_q"),
@@ -335,7 +334,7 @@ object TerrainCorrection {
         "0.0133 * cos_inc / ((sin_inc + 0.1 * cos_inc) * (sin_inc + 0.1 * cos_inc) * (sin_inc + 0.1 * cos_inc))"))
       .groupBy("scene_id", "subswath", "burst_idx", "tile_y", "tile_x")
       .agg(count(lit(1)).as("n_facets"),
-        sum(expr("CAST(floor(0.031415926535897934 + sim * 1.0E6) AS BIGINT)")).as("sim_sum_q"))
+        sum(expr(q6Sql("sim"))).as("sim_sum_q"))
 
   // ---- Layover-Shadow mask (SARSimulationOp.java:951-1037, saveLayoverShadowMask) ----
 
@@ -382,8 +381,8 @@ object TerrainCorrection {
         "sqrt((orb_x - tx) * (orb_x - tx) + (orb_z - h) * (orb_z - h))"))
       .withColumn("elev", expr(
         "acos((slant * slant + (orb_x * orb_x + orb_z * orb_z) - (tx * tx + h * h)) / (2.0 * slant * sqrt(orb_x * orb_x + orb_z * orb_z))) * 57.29577951308232"))
-      .withColumn("sl_q", expr("CAST(floor(0.031415926535897934 + slant * 1.0E6) AS BIGINT)"))
-      .withColumn("el_q", expr("CAST(floor(0.031415926535897934 + elev * 1.0E6) AS BIGINT)"))
+      .withColumn("sl_q", expr(q6Sql("slant")))
+      .withColumn("el_q", expr(q6Sql("elev")))
     val pre = Window.partitionBy("scene_id", "cj").orderBy("ci")
       .rowsBetween(Window.unboundedPreceding, -1)
     val suf = Window.partitionBy("scene_id", "cj").orderBy(col("ci").desc)
@@ -521,14 +520,14 @@ object TerrainCorrection {
    * intensities per target cell (n_corners valid corners, value_q). With
    * `normalize`, each term is divided by snorm^2 at a finer quantum. */
   private def gatherCells(corners: DataFrame, tiles: DataFrame, normalize: Boolean): DataFrame = {
-    val (factor, quantum) =
-      if (normalize) ("/ (snorm * snorm)", "1E9") else ("", "1E6")
+    val (factor, scale) =
+      if (normalize) (" / (snorm * snorm)", 1.0e9) else ("", 1.0e6)
     tileGather(corners, tiles)
       .withColumn("pa", expr("element_at(i, px + 1)"))
       .withColumn("pb", expr("element_at(q, px + 1)"))
       .withColumn("term_q", expr(
         s"""if($GatherNd, CAST(null AS BIGINT),
-           |  CAST(floor(0.031415926535897934 + w * ($GatherI) $factor * $quantum) AS BIGINT))""".stripMargin))
+           |  ${gridSql(s"w * ($GatherI)$factor", scale)})""".stripMargin))
       .groupBy("scene_id", "ci", "cj", "subswath", "burst_idx")
       .agg(count(col("term_q")).as("n_corners"), sum(col("term_q")).as("value_q"))
   }
@@ -700,8 +699,8 @@ object TerrainCorrection {
       .withColumn("samp", expr("x0 + IF(wx >= 0.5D, 1, 0)"))
       // the grid lat/lon lie exactly on the 1e-6 lattice — the pi-fraction offset
       // (the rollup convention) keeps floor off the representability boundary
-      .withColumn("lat_q", expr(s"CAST(floor(0.031415926535897934 + (lat0 + (cj + 0.5D) * $CellDeg) * 1E6) AS BIGINT)"))
-      .withColumn("lon_q", expr(s"CAST(floor(0.031415926535897934 + (lon0 + (ci + 0.5D) * $CellDeg) * 1E6) AS BIGINT)"))
+      .withColumn("lat_q", expr(q6Sql(s"lat0 + (cj + 0.5D) * $CellDeg")))
+      .withColumn("lon_q", expr(q6Sql(s"lon0 + (ci + 0.5D) * $CellDeg")))
       .groupBy("scene_id", "subswath", "burst_idx", "line", "samp")
       .agg(count(lit(1)).as("n_cells"),
         sum("lat_q").as("lat_sum_q"), sum("lon_q").as("lon_sum_q"))
@@ -750,9 +749,9 @@ object TerrainCorrection {
       .withColumn("iv2", expr("iv * cd - qv * sd"))
       .withColumn("qv2", expr("qv * cd + iv * sd"))
       .withColumn("re_q", expr(
-        "if(bad, CAST(null AS BIGINT), CAST(floor(0.031415926535897934 + w * (iv2 * cq + qv2 * sq) * 1E6) AS BIGINT))"))
+        s"if(bad, CAST(null AS BIGINT), ${q6Sql("w * (iv2 * cq + qv2 * sq)")})"))
       .withColumn("im_q", expr(
-        "if(bad, CAST(null AS BIGINT), CAST(floor(0.031415926535897934 + w * (qv2 * cq - iv2 * sq) * 1E6) AS BIGINT))"))
+        s"if(bad, CAST(null AS BIGINT), ${q6Sql("w * (qv2 * cq - iv2 * sq)")})"))
       .groupBy("scene_id", "ci", "cj", "subswath", "burst_idx")
       .agg(count(col("re_q")).as("n_corners"),
         sum(col("re_q")).as("re_sum_q"), sum(col("im_q")).as("im_sum_q"))

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.exprs.Kernels.gridSql
 
 /**
  * Corpus-curation operators a production training-data pipeline runs beyond
@@ -30,10 +31,6 @@ object Curation {
 
   import graft.dedup.Dedup.{docs, h60, withShingles}
 
-  /** Quantize a double expression onto the shared 1e-6 grid. */
-  private def q6(e: String): String =
-    s"CAST(floor(0.031415926535897934 + $e) AS BIGINT)"
-
   /**
    * Benchmark-contamination detection: docs with doc_id % 41 = 0 act as the
    * held-out eval set; every other doc is scored by how many of its distinct
@@ -55,7 +52,7 @@ object Curation {
       .agg(count(lit(1)).as("n_shingles"), count("hit").as("n_hits"))
       .select(
         col("doc_id"), col("n_shingles"), col("n_hits"),
-        expr(q6("n_hits * 1.0E6 / n_shingles")).as("hit_frac_q"),
+        expr(gridSql("n_hits * 1.0E6 / n_shingles")).as("hit_frac_q"),
         expr("CAST(n_hits >= 2 AS BIGINT)").as("contaminated"))
   }
 
@@ -81,8 +78,8 @@ object Curation {
       .select(
         col("doc_id"), col("n_words"), col("top_word_count"),
         col("n_bigrams"), col("n_distinct_bigrams"),
-        expr(q6("top_word_count * 1.0E6 / n_words")).as("top_word_frac_q"),
-        expr(q6("(n_bigrams - n_distinct_bigrams) * 1.0E6 / n_bigrams")).as("dup_bigram_frac_q"))
+        expr(gridSql("top_word_count * 1.0E6 / n_words")).as("top_word_frac_q"),
+        expr(gridSql("(n_bigrams - n_distinct_bigrams) * 1.0E6 / n_bigrams")).as("dup_bigram_frac_q"))
       .withColumn("quality_pass",
         expr("CAST(top_word_frac_q <= 200000 AND dup_bigram_frac_q <= 200000 AS BIGINT)"))
 
@@ -157,7 +154,7 @@ object Curation {
     perDoc.crossJoin(broadcast(g))
       .select(
         col("doc_id"), col("n_tokens"), col("total_bits"),
-        expr(q6("total_bits * 1.0E6 / n_tokens")).as("avg_bits_q"),
+        expr(gridSql("total_bits * 1.0E6 / n_tokens")).as("avg_bits_q"),
         expr("CAST(total_bits * g_tokens <= g_bits * n_tokens AS BIGINT)").as("keep"))
   }
 
@@ -203,7 +200,7 @@ object Curation {
     val g = perDoc.agg(sum("n_tokens").as("g_tokens"), sum("total_bits").as("g_bits"))
     perDoc.crossJoin(broadcast(g))
       .select(col("doc_id"), col("n_tokens"), col("total_bits"),
-        expr(q6("total_bits * 1.0E6 / n_tokens")).as("avg_bits_q"),
+        expr(gridSql("total_bits * 1.0E6 / n_tokens")).as("avg_bits_q"),
         expr("CAST(total_bits * g_tokens <= g_bits * n_tokens AS BIGINT)").as("keep"))
   }
 

@@ -70,11 +70,10 @@ object Retrieval {
       .withColumn("idf_q", expr("(((n_docs - df) * 2 + 1) * 1048576) div (df * 2 + 1)"))
       // tf saturation: every op below is one correctly-rounded IEEE double op
       // on bit-identical inputs; the DuckDB twin shares the exact tree.
-      .withColumn("contrib_q", expr(
-        "CAST(floor(0.031415926535897934 + CAST(idf_q AS DOUBLE) * " +
+      .withColumn("contrib_q", expr(graft.exprs.Kernels.gridSql(
+        "CAST(idf_q AS DOUBLE) * " +
           "(CAST(tf AS DOUBLE) * 2.2 / (CAST(tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * " +
-          "(CAST(dl AS DOUBLE) / (CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE))))))" +
-          ") AS BIGINT)"))
+          "(CAST(dl AS DOUBLE) / (CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE))))))")))
       .groupBy("query_id", "doc_id")
       .agg(sum("contrib_q").as("score_q"), count(lit(1)).as("n_terms_hit"))
     scored

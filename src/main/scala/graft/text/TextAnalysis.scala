@@ -103,7 +103,7 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_docs"),
         sum("n_words").as("words_sum"),
         sum("n_chars").as("chars_sum"),
-        sum(expr("CAST(floor(0.031415926535897934 + stopword_ratio * 1.0E6) AS BIGINT)"))
+        sum(expr(graft.exprs.Kernels.q6Sql("stopword_ratio")))
           .as("stop_ratio_sum_q"))
   }
 

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.scalatest.funsuite.AnyFunSuite
 import graft.exprs.Kernels
+import scala.jdk.CollectionConverters._
 
 /**
  * Direct property tests of the compiled kernel layer (exprs/Kernels.scala) against
@@ -410,6 +411,84 @@ class KernelSpec extends AnyFunSuite {
     named(Kernels.darkKs(short, W, H, m, 0.5))
     named(Kernels.dpIndexTile(ok, ok, ok, ok, short, 0.0, 1.0, 0.0, 1.0, 0.0, 1.0, 0.0, 1.0,
       W, H, m, Kernels.DP_RBI))
+    named(Kernels.cfar(short, W, H, m, 1, 2.0))
+    named(Kernels.bisincRange(short, W, H, m, 0.25))
+    named(Kernels.warpGather(short, W, H, m, 0, 0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0))
+    named(Kernels.mulogTile(short, W, H, m, 0, 0, 1, 1, 4.4, 0.5, 1, 1, 1, 0.5))
+    // the 8 quad-pol channels share one length, which each windowed quad-pol
+    // kernel checks against its layout
+    val s = short
+    named(Kernels.hAlphaTile(s, s, s, s, s, s, s, s, W, H, m))
+    named(Kernels.wishartTile(s, s, s, s, s, s, s, s, arr(Array.empty[Double]), W, H, m))
+    named(Kernels.polRefinedLee(s, s, s, s, s, s, s, s, W, H, m, 4.4))
+    named(Kernels.quadScalar(s, s, s, s, s, s, s, s, W, H, m, Kernels.QS_ORIENT))
+    val lens = (Seq.fill(7)(n) :+ (n - 1)).mkString(", ")
+    for (run <- Seq[() => Any](() => Kernels.t3Sums(ok, ok, ok, ok, ok, ok, ok, short),
+        () => Kernels.hAlphaTile(ok, ok, ok, ok, ok, ok, ok, short, W, H, m))) {
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains(s"quad-pol channel lengths $lens differ"), e.getMessage)
+    }
+  }
+
+  test("the SQL, Column and kernel forms of the quantization grid give the same Long") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.functions.{col, expr}
+    import org.apache.spark.sql.types.DecimalType
+    import graft.exprs.KernelExprs
+    val spark = TestSpark.spark
+    import spark.implicits._
+    // every scale the engine's grid sites pass, the Int DyadicV included
+    val scales = Seq(1.0e2, 1.0e3, 1.0e4, 1.0e6, 1.0e7, 1.0e9, graft.ops.Raster.DyadicV.toDouble)
+    val r = new scala.util.Random(23)
+    // the DECIMAL literals of the analyzed plan: the dither text is one (Spark SQL
+    // parses it as DECIMAL(18,18) and casts it to DOUBLE), the scale must not be
+    def decimals(df: DataFrame): Seq[String] = df.queryExecution.analyzed.expressions
+      .flatMap(_.collect { case l: Literal if l.dataType.isInstanceOf[DecimalType] => l.toString })
+    assert(decimals(Seq(1.0).toDF("x").select(expr("x * 1000000.0"))) == Seq("1000000.0"),
+      "a plain 1000000.0 is a DECIMAL literal")
+    for (scale <- scales) {
+      // negatives and random reals; exact grid points k / scale; the floor
+      // boundaries (k - Dither) / scale; and each of those one ulp either side
+      val ks = Seq.fill(60)((r.nextInt(2000001) - 1000000).toDouble)
+      val points = Seq.fill(60)((r.nextDouble() - 0.5) * 200.0) ++ ks.map(_ / scale) ++
+        ks.map(k => (k - 0.031415926535897934) / scale)
+      val xs = points.flatMap(x => Seq(Math.nextDown(x), x, Math.nextUp(x))).filterNot(isNd)
+      val expected = xs.map(x => Kernels.rollupQ(arr(Array(x)), scale).getLong(1))
+      val df = xs.toDF("x").select(
+        expr(Kernels.gridSql(s"x * ${Kernels.sqlDouble(scale)}")).as("base"),
+        expr(Kernels.gridSql("x", scale)).as("scaled"),
+        KernelExprs.grid(col("x"), scale).as("column"))
+      assert(decimals(df).forall(_ == "0.031415926535897934"), s"scale $scale: ${df.queryExecution.analyzed}")
+      TestSpark.onBothEvalPaths {
+        val got = df.as[(Long, Long, Long)].collect().toSeq
+        val diff = xs.zip(expected).zip(got).collect {
+          case ((x, e), g) if g != ((e, e, e)) => s"x=$x: kernel $e, (base, scaled, column) $g"
+        }
+        assert(diff.isEmpty, s"scale $scale:\n" + diff.take(10).mkString("\n"))
+      }
+    }
+  }
+
+  test("the standard dither is written only in Kernels, the oracles and SparkEntry") {
+    val root = java.nio.file.Paths.get(graft.gen.Fixtures.RepoDir, "src", "main", "scala")
+    val files = {
+      val w = java.nio.file.Files.walk(root)
+      try w.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally w.close()
+    }
+    assert(files.exists(_.endsWith("graft/exprs/Kernels.scala")), s"no sources under $root")
+    val allowed = (f: java.nio.file.Path) => {
+      val name = f.getFileName.toString
+      f.endsWith("graft/exprs/Kernels.scala") || name.contains("Oracle") || name == "SparkEntry.scala"
+    }
+    val offenders = files.filterNot(allowed).flatMap { f =>
+      val lines = java.nio.file.Files.readAllLines(f).asScala
+      lines.zipWithIndex.collect {
+        case (l, i) if l.contains("0.031415926535897934") => s"${root.relativize(f)}:${i + 1}"
+      }
+    }
+    assert(offenders.isEmpty, "quantize through Kernels.gridSql / KernelExprs.grid:\n" +
+      offenders.mkString("\n"))
   }
 
   test("the shared Cardano step matches the eigenvalues of the real 6x6 embedding") {
