@@ -1,6 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+import org.apache.spark.sql.DataFrame
 
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
@@ -25,6 +30,12 @@ import org.apache.spark.sql.execution.streaming.sources.MemoryPlan
  *     times each named query (default: the Bench headline) with the noop sink —
  *     full evaluation of every column, no sink cost — and prints one JSON line
  *     {"name": [secs...]} per query.
+ *   sbt "runMain graft.BenchExtra phases <reps> [q1 q2 ...]"
+ *     splits each named query (default: the Bench headline) into its DataFrame
+ *     build, physical planning and execution of that plan, after one untimed
+ *     run, and prints one JSON line per query: the median seconds of each phase
+ *     over <reps> runs and the distinct stage counts of the executions, taken
+ *     from a listener.
  */
 object BenchExtra {
 
@@ -45,6 +56,14 @@ object BenchExtra {
       case LessThanOrEqual(l, r) if outOfOrder(l, r) => GreaterThanOrEqual(r, l)
     }
   }
+
+  /** A query's optimized plan, canonicalized (expression ids normalized) with
+   * commutative operands in text order: equal for two builds of one plan. */
+  private[graft] def canonical(df: DataFrame): LogicalPlan =
+    textOrdered(df.queryExecution.optimizedPlan.canonicalized)
+
+  private[graft] def canonText(plan: LogicalPlan): String =
+    plan.treeString(verbose = true, maxFields = Int.MaxValue)
 
   /** Whether a canonical plan only reads a result computed before the query
    * returned (a checkpointed RDD, a local relation or a memory sink), under at
@@ -80,9 +99,8 @@ object BenchExtra {
             val plan = df.queryExecution.explainString(
               org.apache.spark.sql.execution.FormattedMode)
             Files.writeString(outDir.resolve(s"$name.txt"), plan)
-            val canon = textOrdered(df.queryExecution.optimizedPlan.canonicalized)
-            Files.writeString(outDir.resolve(s"$name.canon.txt"),
-              canon.treeString(verbose = true, maxFields = Int.MaxValue))
+            val canon = canonical(df)
+            Files.writeString(outDir.resolve(s"$name.canon.txt"), canonText(canon))
             materialized(canon)
           } catch {
             case e: Exception =>
@@ -114,27 +132,50 @@ object BenchExtra {
           println(s"""{"$name":{"warm":$warm,"warm_gc_ms":$gw,"times":[$ts],"gc_ms":[$gs]}}""")
         }
 
-      // phase split per query: DataFrame build (analysis), physical planning
-      // (executedPlan force), then first/second execution — separates driver-side
-      // plan+codegen cost from executor work (guide §7.3).
       case "phases" =>
-        val names = if (args.length > 1) args.drop(1).toSeq else Bench.Headline
+        val reps = if (args.length > 1) args(1).toInt else 3
+        val names = if (args.length > 2) args.drop(2).toSeq else Bench.Headline
+        val sc = spark.sparkContext
+        val marker = "graft.phases.marker"
+        val stages = new AtomicInteger
+        @volatile var flushed = new CountDownLatch(0)
+        sc.addSparkListener(new SparkListener {
+          private def marked(p: java.util.Properties) =
+            p != null && p.getProperty(marker) != null
+          override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+            if (!marked(e.properties)) stages.incrementAndGet()
+          override def onJobStart(e: SparkListenerJobStart): Unit =
+            if (marked(e.properties)) flushed.countDown()
+        })
+        // the listener bus delivers events in order, so once a marker job's
+        // start has arrived, so has every stage submitted before it
+        def stageCount(): Int = {
+          flushed = new CountDownLatch(1)
+          sc.setLocalProperty(marker, "1")
+          try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
+          require(flushed.await(60, TimeUnit.SECONDS), "listener never saw the marker job")
+          stages.get
+        }
+        def t[T](f: => T): (Double, T) = {
+          val t0 = System.nanoTime(); val r = f; ((System.nanoTime() - t0) / 1e9, r)
+        }
+        def median(xs: Seq[Double]): Double = {
+          val s = xs.sorted; val n = s.length
+          if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2
+        }
         names.foreach { name =>
-          def t[T](f: => T): (Double, T) = {
-            val t0 = System.nanoTime(); val r = f; ((System.nanoTime() - t0) / 1e9, r)
-          }
-          val (tBuild, df) = t(SparkEntry.queries(name)(spark, sfDir))
-          val (tPlan, _) = t(df.queryExecution.executedPlan)
-          def exec() = df.write.format("noop").mode("overwrite").save()
-          val (tE1, _) = t(exec())
-          val (tE2, _) = t(exec())
-          val (tE3, _) = t(exec())
-          // a REBUILT identical query (fresh plan objects, codegen cache warm):
-          // what a repeat Bench pass actually pays
-          val (tRebuild, _) = t {
-            SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-          }
-          println(f"""{"$name":{"build":$tBuild%.3f,"plan":$tPlan%.3f,"exec1":$tE1%.3f,"exec2":$tE2%.3f,"exec3":$tE3%.3f,"rebuild_exec":$tRebuild%.3f}}""")
+          // one untimed run first: the first build of a query compiles its code
+          val runs = (0 to reps).map { _ =>
+            val (build, df) = t(SparkEntry.queries(name)(spark, sfDir))
+            val (plan, _) = t(df.queryExecution.executedPlan)
+            val before = stageCount()
+            val (exec, _) = t(df.queryExecution.toRdd.foreach(_ => ()))
+            (build, plan, exec, stageCount() - before)
+          }.tail
+          val ss = runs.map(_._4).distinct.mkString(",")
+          println(f"""{"$name":{"reps":$reps,"build_s":${median(runs.map(_._1))}%.3f,""" +
+            f""""plan_s":${median(runs.map(_._2))}%.3f,"exec_s":${median(runs.map(_._3))}%.3f,""" +
+            s""""stages":[$ss]}}""")
         }
 
       case other =>

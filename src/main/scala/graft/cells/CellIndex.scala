@@ -61,4 +61,15 @@ object CellIndex {
     flatten(transform(sequence(y0, y1), yy =>
       transform(sequence(x0, x1), xx => packCol(level, yy, xx))))
   }
+
+  /** Reference cell of two bbox covers: the minimum corner of their intersection,
+   * in the clamped indices `coverCol` uses. Each cover is an index rectangle, so
+   * when the covers share a cell this one is shared, and it is unique: a
+   * cover-cell equi-join that keeps only the rows whose `cell` equals it keeps
+   * exactly one row per intersecting pair, with no distinct pass (the
+   * reference-point rule of partition-based spatial joins). */
+  def referenceCellCol(aLonMin: Column, aLatMin: Column, bLonMin: Column, bLatMin: Column,
+      level: Int = DefaultLevel): Column =
+    packCol(level, greatest(iyCol(aLatMin, level), iyCol(bLatMin, level)),
+      greatest(ixCol(aLonMin, level), ixCol(bLonMin, level)))
 }

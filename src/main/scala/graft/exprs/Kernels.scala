@@ -2640,37 +2640,35 @@ object Kernels {
    * Returns (t_zd, slant = |S(t_zd) - P|). The identical iteration arithmetic
    * (mid = (lo+hi)/2, branch on f < 0, uniform-grid bracket index
    * floor((t-ts0)/dt)+1 clamped to [2, n-2]) is unrolled in the DuckDB oracle —
-   * bit-identical trajectories on both engines.
+   * bit-identical trajectories on both engines. The orbit arrays are read in
+   * place: the kernel runs once per target cell, and copying the seven per-scene
+   * arrays out on every call was most of its allocation.
    */
-  def zeroDopplerBisect(tsD: ArrayData, xsD: ArrayData, ysD: ArrayData, zsD: ArrayData,
-      vxsD: ArrayData, vysD: ArrayData, vzsD: ArrayData,
+  def zeroDopplerBisect(ts: ArrayData, xs: ArrayData, ys: ArrayData, zs: ArrayData,
+      vxs: ArrayData, vys: ArrayData, vzs: ArrayData,
       tx: Double, ty: Double, h: Double): InternalRow = {
-    val ts = tsD.toDoubleArray(); val xs = xsD.toDoubleArray(); val ys = ysD.toDoubleArray()
-    val zs = zsD.toDoubleArray(); val vxs = vxsD.toDoubleArray()
-    val vys = vysD.toDoubleArray(); val vzs = vzsD.toDoubleArray()
-    val n = ts.length
-    val ts0 = ts(0)
-    val dt = ts(1) - ts(0)
+    val n = ts.numElements()
+    val ts0 = ts.getDouble(0)
+    val dt = ts.getDouble(1) - ts.getDouble(0)
     // Lagrange-interpolated (X, Y, Z, VX, VY, VZ) at t into out(0..5)
     val s = new Array[Double](6)
     def interp(t: Double): Unit = {
       var k = math.floor((t - ts0) / dt).toInt + 1
       if (k < 2) k = 2
       if (k > n - 2) k = n - 2
-      val t1 = ts(k - 2); val t2 = ts(k - 1); val t3 = ts(k); val t4 = ts(k + 1)
+      val t1 = ts.getDouble(k - 2); val t2 = ts.getDouble(k - 1)
+      val t3 = ts.getDouble(k); val t4 = ts.getDouble(k + 1)
       val w1 = ((t - t2) * (t - t3) * (t - t4)) / ((t1 - t2) * (t1 - t3) * (t1 - t4))
       val w2 = ((t - t1) * (t - t3) * (t - t4)) / ((t2 - t1) * (t2 - t3) * (t2 - t4))
       val w3 = ((t - t1) * (t - t2) * (t - t4)) / ((t3 - t1) * (t3 - t2) * (t3 - t4))
       val w4 = ((t - t1) * (t - t2) * (t - t3)) / ((t4 - t1) * (t4 - t2) * (t4 - t3))
-      s(0) = w1 * xs(k - 2) + w2 * xs(k - 1) + w3 * xs(k) + w4 * xs(k + 1)
-      s(1) = w1 * ys(k - 2) + w2 * ys(k - 1) + w3 * ys(k) + w4 * ys(k + 1)
-      s(2) = w1 * zs(k - 2) + w2 * zs(k - 1) + w3 * zs(k) + w4 * zs(k + 1)
-      s(3) = w1 * vxs(k - 2) + w2 * vxs(k - 1) + w3 * vxs(k) + w4 * vxs(k + 1)
-      s(4) = w1 * vys(k - 2) + w2 * vys(k - 1) + w3 * vys(k) + w4 * vys(k + 1)
-      s(5) = w1 * vzs(k - 2) + w2 * vzs(k - 1) + w3 * vzs(k) + w4 * vzs(k + 1)
+      def lerp(a: ArrayData): Double =
+        w1 * a.getDouble(k - 2) + w2 * a.getDouble(k - 1) + w3 * a.getDouble(k) + w4 * a.getDouble(k + 1)
+      s(0) = lerp(xs); s(1) = lerp(ys); s(2) = lerp(zs)
+      s(3) = lerp(vxs); s(4) = lerp(vys); s(5) = lerp(vzs)
     }
-    var lo = ts(0)
-    var hi = ts(n - 1)
+    var lo = ts0
+    var hi = ts.getDouble(n - 1)
     var it = 0
     while (it < 40) {
       val mid = (lo + hi) / 2

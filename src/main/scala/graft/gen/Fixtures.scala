@@ -5,7 +5,9 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.StructType
 import graft.model._
 
@@ -24,7 +26,8 @@ import graft.model._
  *  - scenes, bursts, aoi, cal_vectors, noise_vectors, orbit, gcps, dem : dimension tables
  *  - tiles, tiles_sec : complex raster tiles (reference + planted-shift secondary)
  *
- * `table` reads with a schema inferred once per JVM and table path (see `schemas`).
+ * `table` reads with a schema inferred once per JVM and table path (see `schemas`),
+ * through a relation resolved once per session and path (see `relations`).
  * `Root` and `verifiedDirs` keep their names and types: the benchmark
  * (perfbench/src/graftbench/FixtureRoot.scala) rewrites both by reflection, to
  * point the root at its own work dir and to mark a dir verified or forget it.
@@ -120,6 +123,7 @@ object Fixtures {
     }
     if (!ok) {
       schemas.keySet.removeIf(_.startsWith(s"$d/"))
+      relations.keySet.removeIf(_._2.startsWith(s"$d/"))
       generate(spark, sc, d)
       Files.createDirectories(Paths.get(d))
       Files.writeString(marker, s"gen=$generatorHash\n${fingerprintAll(spark, d)}")
@@ -134,9 +138,23 @@ object Fixtures {
    * regenerates its dir, which drops that dir's entries. */
   private val schemas = new ConcurrentHashMap[String, StructType]()
 
+  /** Each fixture table's resolved relation (its file listing included) by
+   * session and path, as a catalog's relation cache keeps one per table:
+   * resolving a read lists the files, starts a glob pool and copies the Hadoop
+   * conf on every call. Each `table` call wraps the relation in a plan of its
+   * own with fresh attribute ids, so two reads of one table still self-join.
+   * `ensure` drops a dir's entries when it regenerates the dir, and entries of
+   * a stopped session are dropped on the next call. */
+  private val relations = new ConcurrentHashMap[(SparkSession, String), BaseRelation]()
+
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"${ensure(spark, sfDir)}/$name.parquet"
-    spark.read.schema(schemas.computeIfAbsent(path, p => spark.read.parquet(p).schema)).parquet(path)
+    relations.keySet.removeIf(_._1.sparkContext.isStopped)
+    spark.baseRelationToDataFrame(relations.computeIfAbsent((spark, path), _ =>
+      spark.read.schema(schemas.computeIfAbsent(path, p => spark.read.parquet(p).schema))
+        .parquet(path).queryExecution.analyzed.collectFirst {
+          case r: LogicalRelation => r.relation
+        }.get))
   }
 
   // ---------------------------------------------------------------- geometry helpers

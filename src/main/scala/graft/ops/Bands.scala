@@ -108,10 +108,7 @@ object Bands {
     val out = s"${Fixtures.RepoDir}/target/tile_writer/$tag"
     Fixtures.table(spark, sfDir, "tiles")
       .write.mode("overwrite").partitionBy("scene_id", "subswath").parquet(out)
-    spark.read.parquet(out)
-      .groupBy("scene_id", "subswath")
-      .agg(count(lit(1)).as("n_tiles"),
-        countDistinct("burst_idx").as("n_bursts"),
-        countDistinct("pol").as("n_pols"))
+    Distinct.counts(spark.read.parquet(out), Seq("scene_id", "subswath"), "n_tiles",
+      "n_bursts" -> Seq("burst_idx"), "n_pols" -> Seq("pol"))
   }
 }

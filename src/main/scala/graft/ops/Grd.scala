@@ -80,11 +80,9 @@ object Grd {
    * product (name SLC_ -> GRDH_, type GRD), carrying every band through. Output:
    * per-scene band inventory + precondition flags + the renamed identifiers. */
   def grdPostQuery(spark: SparkSession, sfDir: String): DataFrame =
-    Fixtures.table(spark, sfDir, "tiles_grd")
-      .groupBy("scene_id")
-      .agg(countDistinct("subswath").as("n_swaths"),
-        countDistinct("pol").as("n_bands"),
-        count(lit(1)).as("n_tiles"))
+    Distinct.counts(Fixtures.table(spark, sfDir, "tiles_grd"), Seq("scene_id"), "n_tiles",
+        "n_swaths" -> Seq("subswath"), "n_bands" -> Seq("pol"))
+      .select("scene_id", "n_swaths", "n_bands", "n_tiles")
       .withColumn("swaths_merged", col("n_swaths") === 1)
       .withColumn("product", expr("replace(concat('SLC_', scene_id), 'SLC_', 'GRDH_')"))
       .withColumn("product_type", lit("GRD"))

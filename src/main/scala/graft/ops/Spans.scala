@@ -25,16 +25,22 @@ object Spans {
         col("span.kind").as("kind"), col("span.text").as("text"),
         col("span.media_ref").as("media_ref"), col("span.offset").as("offset"))
 
-  /** Parse media_ref into its tiling key; non-media rows pass through with nulls. */
+  /** Parse media_ref into its tiling key; non-media rows pass through with nulls.
+   * The ref is split once, in a projection of its own: a split written inside
+   * each field's CASE WHEN is evaluated once per field, because Spark shares no
+   * subexpression across conditional branches, and CollapseProject does not
+   * inline a non-cheap expression that the projection above reads six times. */
   def parseMediaRef(spans: DataFrame): DataFrame = {
-    val p = split(col("media_ref"), "/")
+    val p = col("media_ref_parts")
     spans
-      .withColumn("scene_id", when(col("kind") === "media", element_at(p, 3)))
-      .withColumn("subswath", when(col("kind") === "media", element_at(p, 4)))
-      .withColumn("pol", when(col("kind") === "media", element_at(p, 5)))
-      .withColumn("burst_idx", when(col("kind") === "media", element_at(p, 6).cast("int")))
-      .withColumn("tile_y", when(col("kind") === "media", element_at(p, 7).cast("int")))
-      .withColumn("tile_x", when(col("kind") === "media", element_at(p, 8).cast("int")))
+      .withColumn("media_ref_parts", when(col("kind") === "media", split(col("media_ref"), "/")))
+      .withColumn("scene_id", element_at(p, 3))
+      .withColumn("subswath", element_at(p, 4))
+      .withColumn("pol", element_at(p, 5))
+      .withColumn("burst_idx", element_at(p, 6).cast("int"))
+      .withColumn("tile_y", element_at(p, 7).cast("int"))
+      .withColumn("tile_x", element_at(p, 8).cast("int"))
+      .drop("media_ref_parts")
   }
 
   /**

@@ -22,11 +22,12 @@ object Split {
   private def burstYs = Seq(col("lat1"), col("lat2"), col("lat3"), col("lat4"))
 
   /** Query: burst selection per (aoi, scene, subswath) with min..max contiguity.
-   * The cover-cell duplicates are collapsed INSIDE the aggregation (distinct
-   * burst_idx per group) rather than by a standalone .distinct(): one exchange
-   * instead of two back-to-back (distinct's on the 4-col key, then the
-   * groupBy's on 3 of the same columns) — min/max are duplicate-insensitive
-   * and n_hit = distinct bursts per group, so the result is unchanged. */
+   * A (burst, AOI) pair whose covers share k cells meets k times in the cell
+   * equi-join; the join keeps only the row at the pair's reference cell
+   * (`CellIndex.referenceCellCol`), so every intersecting pair reaches the SAT
+   * refine and the aggregation exactly once. The selection is then one plain
+   * aggregation: min, max and the pair count, which is the number of bursts
+   * hit (`n_hit`), with no distinct aggregate. */
   def topsarSplitQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val aoi = Fixtures.table(spark, sfDir, "aoi")
     val bursts = Fixtures.table(spark, sfDir, "bursts")
@@ -42,12 +43,14 @@ object Split {
         col("lon_min"), col("lat_min"), col("lon_max"), col("lat_max"))))
     val (rx, ry) = Geo.rectCorners(col("lon_min"), col("lat_min"), col("lon_max"), col("lat_max"))
     burstCells.join(broadcast(aoiCells), Seq("cell"))
+      .where(col("cell") === CellIndex.referenceCellCol(
+        col("blon_min"), col("blat_min"), col("lon_min"), col("lat_min")))
       .where(Geo.quadIntersectsSAT(rx, ry, burstXs, burstYs))
       .groupBy("aoi_id", "scene_id", "subswath")
       .agg(
         min("burst_idx").as("first_burst"),
         max("burst_idx").as("last_burst"),
-        countDistinct("burst_idx").as("n_hit"))
+        count(lit(1)).as("n_hit"))
   }
 
   /**
@@ -73,24 +76,10 @@ object Split {
       .select(col("aoi_id"), spans("scene_id").as("scene_id"),
         spans("subswath").as("subswath"), col("doc_id"),
         col("burst_idx"), col("tile_y"), col("tile_x"))
-    // two distinct counts on DIFFERENT keys: a single agg with two
-    // countDistincts over the raw span stream plans as an Expand (x2 row
-    // multiplication of 10^12 spans feeding the shuffle). Instead reduce ONCE
-    // to the finest key (group x doc x tile) — ONE scan of the join output,
-    // map-side combine collapsing repeated (doc, tile) hits — and run both
-    // distinct counts on the reduced frame: the Expand still happens, but on
-    // post-combine distinct combos (orders of magnitude fewer than raw spans),
-    // and the span stream is scanned exactly once (a two-legged restatement
-    // would recompute the broadcast join per leg).
-    val g = Seq("aoi_id", "scene_id", "subswath")
-    hit
-      .groupBy((g ++ Seq("doc_id", "burst_idx", "tile_y", "tile_x")).map(col): _*)
-      .agg(count(lit(1)).as("c"))
-      .groupBy(g.map(col): _*)
-      .agg(
-        countDistinct(col("doc_id")).as("n_docs"),
-        sum("c").as("n_spans"),
-        countDistinct(col("burst_idx"), col("tile_y"), col("tile_x")).as("n_tiles"))
+    // n_docs and n_tiles are distinct counts on different keys: one fixed plan
+    // (`Distinct.counts`), with no Expand over the span stream
+    Distinct.counts(hit, Seq("aoi_id", "scene_id", "subswath"), "n_spans",
+        "n_docs" -> Seq("doc_id"), "n_tiles" -> Seq("burst_idx", "tile_y", "tile_x"))
       .select(col("aoi_id"), col("scene_id"), col("subswath"),
         col("n_docs"), col("n_spans"), col("n_tiles"))
   }

@@ -9,11 +9,13 @@ import scala.jdk.CollectionConverters._
 import org.apache.commons.io.FileUtils
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.scalatest.funsuite.AnyFunSuite
 import graft.gen.Fixtures
 
-/** Fixture reads: each table's schema is inferred once per JVM and path, and a
- * regeneration of the fixture dir drops the cached schemas. */
+/** Fixture reads: each table's schema is inferred once per JVM and path, its
+ * relation is resolved once per session and path, and a regeneration of the
+ * fixture dir drops both. */
 class FixturesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -83,6 +85,44 @@ class FixturesSpec extends AnyFunSuite {
       Fixtures.ensure(spark, sf)
       assert(jobsDuring(Fixtures.table(spark, sf, "docs")) == 1)
       assert(jobsDuring(Fixtures.table(spark, sf, "docs")) == 0)
+    } finally {
+      rmDir()
+      forgetVerified(dir.toString)
+    }
+  }
+
+  test("a fixture table's relation is resolved once per session; regeneration drops it") {
+    def relation(df: DataFrame) =
+      df.queryExecution.analyzed.collectFirst { case r: LogicalRelation => r.relation }.get
+    val src = Paths.get(Fixtures.ensure(spark, TestSpark.Sf))
+    val sf = "/tmp/sf_relation_probe"
+    val dir = Paths.get(Fixtures.dir(sf))
+    def rmDir(): Unit = if (Files.exists(dir)) FileUtils.deleteDirectory(dir.toFile)
+    rmDir()
+    FileUtils.copyDirectory(src.toFile, dir.toFile)
+    try {
+      val a = Fixtures.table(spark, sf, "docs")
+      val b = Fixtures.table(spark, sf, "docs")
+      assert(relation(a) eq relation(b))
+      // each read is a plan of its own, with fresh attribute ids: a self-join resolves
+      assert(a.queryExecution.analyzed.output.map(_.exprId).intersect(
+        b.queryExecution.analyzed.output.map(_.exprId)).isEmpty)
+      val n = a.count()
+      assert(a.join(b, a("doc_id") === b("doc_id")).count() == n)
+      assert(relation(Fixtures.table(spark, sf, "aoi")) ne relation(a))
+      // re-verifying the fingerprints keeps the relation
+      forgetVerified(dir.toString)
+      Fixtures.ensure(spark, sf)
+      assert(relation(Fixtures.table(spark, sf, "docs")) eq relation(a))
+      // a marker that no longer matches regenerates the dir, which drops it
+      Files.list(dir).iterator.asScala.filter(_.getFileName.toString.startsWith("_COMPLETE"))
+        .foreach(Files.writeString(_, "stale"))
+      forgetVerified(dir.toString)
+      Fixtures.ensure(spark, sf)
+      val c = Fixtures.table(spark, sf, "docs")
+      assert(relation(c) ne relation(a))
+      assert(relation(Fixtures.table(spark, sf, "docs")) eq relation(c))
+      assert(c.count() == n) // a frame built before the regeneration lists deleted files
     } finally {
       rmDir()
       forgetVerified(dir.toString)

@@ -430,6 +430,77 @@ class KernelSpec extends AnyFunSuite {
     }
   }
 
+  test("zeroDopplerBisect reads the orbit in place: bit-identical to the copying solve") {
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.functions.col
+    import graft.exprs.KernelExprs
+    /** The solve as written over copied arrays (the copying form it replaced). */
+    def copying(ts: Array[Double], xs: Array[Double], ys: Array[Double], zs: Array[Double],
+        vxs: Array[Double], vys: Array[Double], vzs: Array[Double],
+        tx: Double, ty: Double, h: Double): (Double, Double) = {
+      val n = ts.length; val ts0 = ts(0); val dt = ts(1) - ts(0)
+      val s = new Array[Double](6)
+      def interp(t: Double): Unit = {
+        var k = math.floor((t - ts0) / dt).toInt + 1
+        if (k < 2) k = 2
+        if (k > n - 2) k = n - 2
+        val t1 = ts(k - 2); val t2 = ts(k - 1); val t3 = ts(k); val t4 = ts(k + 1)
+        val w1 = ((t - t2) * (t - t3) * (t - t4)) / ((t1 - t2) * (t1 - t3) * (t1 - t4))
+        val w2 = ((t - t1) * (t - t3) * (t - t4)) / ((t2 - t1) * (t2 - t3) * (t2 - t4))
+        val w3 = ((t - t1) * (t - t2) * (t - t4)) / ((t3 - t1) * (t3 - t2) * (t3 - t4))
+        val w4 = ((t - t1) * (t - t2) * (t - t3)) / ((t4 - t1) * (t4 - t2) * (t4 - t3))
+        for ((a, j) <- Seq(xs, ys, zs, vxs, vys, vzs).zipWithIndex)
+          s(j) = w1 * a(k - 2) + w2 * a(k - 1) + w3 * a(k) + w4 * a(k + 1)
+      }
+      var lo = ts(0); var hi = ts(n - 1)
+      for (_ <- 0 until 40) {
+        val mid = (lo + hi) / 2
+        interp(mid)
+        val f = s(3) * (s(0) - tx) + s(4) * (s(1) - ty) + s(5) * (s(2) - h)
+        if (f < 0.0) lo = mid else hi = mid
+      }
+      val tzd = (lo + hi) / 2
+      interp(tzd)
+      (tzd, math.sqrt((s(0) - tx) * (s(0) - tx) + (s(1) - ty) * (s(1) - ty) + (s(2) - h) * (s(2) - h)))
+    }
+    val r = new scala.util.Random(31)
+    val spark = TestSpark.spark
+    import spark.implicits._
+    // circular-ish orbits of 8..16 state vectors, targets inside and outside the span
+    val cases = (0 until 60).map { _ =>
+      val n = 8 + r.nextInt(9); val w = 1.0e-3 * (1 + r.nextDouble())
+      val ts = Array.tabulate(n)(i => 5000.0 + 10.0 * i)
+      val rad = 7.0e6 + r.nextDouble() * 1.0e4
+      val xs = ts.map(t => rad * math.cos(w * t)); val ys = ts.map(t => rad * math.sin(w * t))
+      val zs = ts.map(t => 1.0e3 * (t - 5000.0) + r.nextDouble())
+      val vxs = ts.map(t => -rad * w * math.sin(w * t)); val vys = ts.map(t => rad * w * math.cos(w * t))
+      val vzs = Array.fill(n)(1.0e2 + r.nextDouble())
+      val i = r.nextInt(n)
+      (ts, xs, ys, zs, vxs, vys, vzs,
+        xs(i) * 0.9 + r.nextGaussian() * 1.0e5, ys(i) * 0.9 + r.nextGaussian() * 1.0e5, r.nextDouble() * 1.0e3)
+    }
+    def bits(t: (Double, Double)) = (java.lang.Double.doubleToRawLongBits(t._1),
+      java.lang.Double.doubleToRawLongBits(t._2))
+    val want = cases.map(c => bits(copying(c._1, c._2, c._3, c._4, c._5, c._6, c._7, c._8, c._9, c._10)))
+    // direct calls, on both array layouts a kernel is handed
+    for (layout <- Seq[Array[Double] => org.apache.spark.sql.catalyst.util.ArrayData](
+        arr, a => new GenericArrayData(a.toArray[Any]))) {
+      val got = cases.map { c =>
+        val o = Kernels.zeroDopplerBisect(layout(c._1), layout(c._2), layout(c._3), layout(c._4),
+          layout(c._5), layout(c._6), layout(c._7), c._8, c._9, c._10)
+        bits((o.getDouble(0), o.getDouble(1)))
+      }
+      assert(got == want)
+    }
+    val df = cases.toDF("ts", "xs", "ys", "zs", "vxs", "vys", "vzs", "tx", "ty", "h")
+      .select(KernelExprs.zeroDoppler(col("ts"), col("xs"), col("ys"), col("zs"), col("vxs"),
+        col("vys"), col("vzs"), col("tx"), col("ty"), col("h")).as("zd"))
+      .select(col("zd.tzd"), col("zd.slant"))
+    TestSpark.onBothEvalPaths {
+      assert(df.as[(Double, Double)].collect().toSeq.map(bits) == want)
+    }
+  }
+
   test("the SQL, Column and kernel forms of the quantization grid give the same Long") {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.catalyst.expressions.Literal

@@ -6,7 +6,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.cells.CellIndex
 import graft.exprs.CellId
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, StringSplit}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -49,6 +49,41 @@ class PlanSpec extends AnyFunSuite {
     val p = plan(ops.Split.topsarSplitQuery(spark, sf))
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastExchange"), p.take(2000))
     assert(!p.contains("CartesianProduct"))
+  }
+
+  test("docs path: one shuffle per aggregation, no Expand, one media_ref split per span") {
+    // the cover join keeps one row per (burst, AOI) pair, so the selection is one
+    // plain aggregation; the rollup's two distinct counts are Distinct.counts'
+    // two reductions, and its broadcast side is the selection's plan
+    for ((name, shuffles, broadcasts) <- Seq(("q_topsar_split", 1, 1), ("q_aoi_doc_tiles", 3, 2))) {
+      val p = plan(SparkEntry.queries(name)(spark, sf))
+      assert(ShuffleRe.findAllIn(p).length == shuffles, s"$name:\n${p.take(4000)}")
+      assert("BroadcastExchange".r.findAllIn(p).length == broadcasts, s"$name:\n${p.take(4000)}")
+      assert(!p.contains("Expand"), s"$name:\n${p.take(4000)}")
+    }
+    // under the engine's sessions' setting (Bench.builder): with constraint
+    // propagation on, the inner join's inferred isnotnull filters are pushed
+    // below the parse and copy the split into a filter of their own
+    val key = "spark.sql.constraintPropagation.enabled"
+    val saved = spark.conf.getAll.get(key)
+    try {
+      spark.conf.set(key, "false")
+      for (name <- Seq("q_span_cells", "q_aoi_doc_tiles")) {
+        val optimized = SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan
+        val splits = optimized.collectWithSubqueries { case p => p.expressions }.flatten
+          .map(_.collect { case s: StringSplit => s }.size).sum
+        assert(splits == 1, s"$name: $splits splits of media_ref\n${optimized.toString.take(3000)}")
+      }
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("queries with several distinct counts give one canonical plan on every build") {
+    for (name <- Seq("q_aoi_doc_tiles", "q_grd_post", "q_tile_writer")) {
+      val plans = Seq.fill(8)(BenchExtra.canonText(BenchExtra.canonical(
+        SparkEntry.queries(name)(spark, sf)))).distinct
+      assert(plans.size == 1, s"$name: ${plans.size} plans over 8 builds")
+      assert(!plans.head.contains("Expand"), s"$name:\n${plans.head.take(3000)}")
+    }
   }
 
   test("terrain correction pushes the pol filter into the parquet scan") {
